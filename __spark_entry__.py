@@ -240,11 +240,11 @@ def q_offset_policy_contains(spark, sf_dir):
     count, bucket_policies.cuh:190-351) through the shard-routed
     distributed path: zero false negatives on inserted document
     keys. State stays on executors; no driver collect."""
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
-
     docs = _docs(spark, sf_dir)
     n = docs.count()
-    filt = ShardedOffsetFilter.build(docs, "key", _capacity(n), 8)
+    filt = ShardedCuckooFilter.build(
+        docs, "key", _capacity(n), 8, CuckooConfig(bucket_policy="offset")
+    )
     out = filt.contains(docs.select("key").distinct())
     return out.join(docs.select("doc_id", "key"), "key").select(
         "doc_id", "member"

@@ -66,7 +66,9 @@ class CuckooConfig:
     #: 'xor' — partial-key XOR displacement, pow2 buckets
     #: (bucket_policies.cuh:14-84); 'addsub' — two-block add/sub
     #: displacement, any even bucket count (ASCF paper,
-    #: bucket_policies.cuh:96-182).
+    #: bucket_policies.cuh:96-182); 'offset' — choice-bit offset
+    #: displacement, exact bucket count (bucket_policies.cuh:190-351),
+    #: run by ``core.offset.OffsetCuckooFilter``, not ``CuckooFilter``.
     bucket_policy: str = "xor"
 
     def __post_init__(self) -> None:
@@ -81,8 +83,13 @@ class CuckooConfig:
             raise ValueError("bucket_size must be <= 64")
         if self.eviction_policy not in ("dfs", "bfs"):
             raise ValueError("eviction_policy must be 'dfs' or 'bfs'")
-        if self.bucket_policy not in ("xor", "addsub"):
-            raise ValueError("bucket_policy must be 'xor' or 'addsub'")
+        if self.bucket_policy not in ("xor", "addsub", "offset"):
+            raise ValueError(
+                "bucket_policy must be 'xor', 'addsub' or 'offset'"
+            )
+        if self.bucket_policy == "offset" and self.bits_per_tag > 16:
+            # the offset kernel's eager 2^(f-1)-entry offset table
+            raise ValueError("bucket_policy 'offset' needs bits_per_tag <= 16")
 
     @property
     def tag_dtype(self) -> np.dtype:
@@ -101,8 +108,11 @@ class CuckooConfig:
         (``bucket_policies.cuh:80-83``) — pow2 is REQUIRED by the
         XOR displacement. AddSub policy: next even count
         (``bucket_policies.cuh:172-181``) — no pow2 rounding, so
-        memory is within 1 bucket of the request."""
+        memory is within 1 bucket of the request. Offset policy: the
+        exact count (``bucket_policies.cuh:347-350``)."""
         required = max(1, -(-capacity // self.bucket_size))
+        if self.bucket_policy == "offset":
+            return required
         if self.bucket_policy == "addsub":
             return required + (required & 1)
         return next_power_of_two(required)

@@ -118,6 +118,11 @@ class CuckooFilter:
 
     def __init__(self, capacity: int, config: CuckooConfig | None = None):
         self.config = config or CuckooConfig()
+        if self.config.bucket_policy not in _BUCKET_POLICIES:
+            raise ValueError(
+                f"bucket_policy {self.config.bucket_policy!r} runs on its "
+                "own kernel (core.offset.OffsetCuckooFilter)"
+            )
         self.capacity = int(capacity)
         self.num_buckets = self.config.num_buckets_for(capacity)
         self._mask = np.uint64(self.num_buckets - 1)
@@ -824,10 +829,10 @@ class CuckooFilter:
     #: so v1 blobs MUST be rejected (probing them with the new family
     #: yields false negatives). v3 keeps the v2 hash family and adds
     #: a 1-byte payload-layout flag after the header: 0 = dense
-    #: bucket table (v2 payload), 1/2 = sparse (uint32/uint64 bucket
-    #: indices + stored tags) — the format partial-aggregation blobs
-    #: ship when the table is mostly empty. v2 blobs (same family)
-    #: remain readable.
+    #: bucket table, 1/2 = sparse (uint32/uint64 bucket indices +
+    #: stored tags) — the format partial-aggregation blobs ship when
+    #: the table is mostly empty. Nothing writes v2, so only v3 is
+    #: read.
     BLOB_VERSION = 3
     _LAYOUT_DENSE, _LAYOUT_SPARSE32, _LAYOUT_SPARSE64 = 0, 1, 2
 
@@ -874,7 +879,7 @@ class CuckooFilter:
         )
         if magic != _MAGIC:
             raise ValueError("bad cuckoo filter blob")
-        if ver not in (2, cls.BLOB_VERSION):
+        if ver != cls.BLOB_VERSION:
             raise ValueError(
                 f"cuckoo blob version {ver} not supported (expected "
                 f"{cls.BLOB_VERSION}; the hash family changed — rebuild "
@@ -889,10 +894,7 @@ class CuckooFilter:
         flt.capacity = cap
         flt.num_buckets = nb
         flt._mask = np.uint64(nb - 1)
-        if ver == 2:  # legacy dense payload, no layout byte
-            layout, off = cls._LAYOUT_DENSE, _HEADER.size
-        else:
-            layout, off = blob[_HEADER.size], _HEADER.size + 1
+        layout, off = blob[_HEADER.size], _HEADER.size + 1
         if layout == cls._LAYOUT_DENSE:
             flt.buckets = (
                 np.frombuffer(blob, dtype=cfg.tag_dtype, offset=off)

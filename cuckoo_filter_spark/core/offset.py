@@ -15,10 +15,12 @@ the fingerprint's MSB choice bit (``bucket_policies.cuh:199-205``):
   changes across buckets, which is what buys exact (asymmetric)
   addressing without pow2 constraints.
 
-This is a correctness-parity class (used standalone and in tests),
-not the distributed hot path — the XOR policy filter in
-``core/cuckoo.py`` is the scale path. Hashing uses the library's
-chained family, not the reference's exact bit layout.
+This is a correctness-parity class — the per-shard kernel of
+``ShardedCuckooFilter`` and ``stream_apply_ops`` under
+``CuckooConfig(bucket_policy="offset")``, but not the hot path; the
+XOR policy filter in ``core/cuckoo.py`` is the scale path. Hashing
+uses the library's chained family, not the reference's exact bit
+layout.
 """
 
 from __future__ import annotations
@@ -250,12 +252,19 @@ class OffsetCuckooFilter:
                 f"(expected {cls.BLOB_VERSION})"
             )
         flt = cls(cap, bits_per_tag=f, bucket_size=b, max_kicks=maxk)
-        assert flt.num_buckets == nb
-        flt.buckets = (
-            np.frombuffer(blob, dtype=flt.buckets.dtype, offset=_HEADER.size)
-            .reshape(nb, b)
-            .copy()
+        if flt.num_buckets != nb:
+            raise ValueError(
+                f"offset blob records {nb} buckets, its capacity "
+                f"{cap} gives {flt.num_buckets}"
+            )
+        tags = np.frombuffer(
+            blob, dtype=flt.buckets.dtype, offset=_HEADER.size
         )
+        if len(tags) != nb * b:
+            raise ValueError(
+                f"offset blob holds {len(tags)} tags, expected {nb * b}"
+            )
+        flt.buckets = tags.reshape(nb, b).copy()
         # prefix-fill invariant holds (insert fills first-empty,
         # delete compacts) and stored tags are never zero
         flt.fill = np.count_nonzero(flt.buckets, axis=1).astype(np.int8)

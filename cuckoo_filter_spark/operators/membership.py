@@ -17,7 +17,10 @@ shapes:
   the multi-GPU layout (``CuckooFilterMultiGPU.cuh:44-51,168-323``:
   partition → all-to-all → local op). Spark's Exchange IS the
   multisplit+all2all. This is the 10^12-key path: state never
-  concentrates on one node.
+  concentrates on one node. The per-shard kernel follows
+  ``CuckooConfig.bucket_policy`` (:func:`shard_kernel`), as the
+  reference's one ``CuckooFilter`` template takes its bucket policy
+  as a parameter (``bucket_policies.cuh:14-351``).
 
 Scale notes (100 TB / 1000 executors):
 * build is map-side only in merged mode — no shuffle of raw keys;
@@ -37,7 +40,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import Iterator, Optional
+from typing import Callable, Iterator, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
@@ -76,14 +79,78 @@ def _keys_from_pdf(pdf: pd.DataFrame, col: str) -> np.ndarray:
     return keys_to_unsigned(pdf[col].to_numpy(dtype=np.int64, copy=False))
 
 
-class _SortedInsertFilter(CuckooFilter):
-    """``add_many`` via the in-batch-sorted insert path
-    (insertManySorted) — lets :meth:`DistributedCuckooFilter.build`
-    reuse the generic mergeable-sketch aggregation with the sorted
-    placement kernel."""
+class ShardKernel(NamedTuple):
+    """The per-shard filter kernel of one bucket policy."""
 
-    def add_many(self, keys: np.ndarray) -> None:
-        self.insert_many_sorted(keys)
+    #: ``new(capacity)`` makes an empty shard filter
+    new: Callable[[int], object]
+    #: the kernel class; ``cls.from_bytes`` decodes a shard blob
+    cls: type
+    #: the kernel has the ``*_packed`` fast path fed by the JVM-side
+    #: hash chain (``hashing.packed_expr``)
+    packed: bool
+
+
+def shard_kernel(cfg: CuckooConfig) -> ShardKernel:
+    """Per-shard kernel for ``cfg.bucket_policy`` — the reference's
+    ``AltBucketPolicy`` template parameter as a runtime choice. XOR
+    and AddSub run on :class:`CuckooFilter`, whose candidates the JVM
+    can pack. Offset runs on
+    :class:`~cuckoo_filter_spark.core.offset.OffsetCuckooFilter`: its
+    choice-bit fingerprint changes on relocation, so it has no JVM
+    packing twin and its ops ship the 8-byte keys."""
+    if cfg.bucket_policy == "offset":
+        from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
+
+        def new(capacity: int):
+            return OffsetCuckooFilter(
+                capacity, bits_per_tag=cfg.bits_per_tag,
+                bucket_size=cfg.bucket_size, max_kicks=cfg.max_kicks,
+            )
+
+        return ShardKernel(new, OffsetCuckooFilter, False)
+    return ShardKernel(
+        lambda capacity: CuckooFilter(capacity, cfg), CuckooFilter, True
+    )
+
+
+def _group_by_shard(sids: np.ndarray, *arrays: np.ndarray):
+    """Yield ``(shard id, *arrays restricted to that shard)`` once per
+    distinct shard id in ``sids``; rows keep their input order within
+    a shard."""
+    if len(sids) == 0:
+        return
+    order = np.argsort(sids, kind="stable")
+    ss = sids[order]
+    grouped = [a[order] for a in arrays]
+    bounds = np.flatnonzero(np.r_[True, ss[1:] != ss[:-1]])
+    for b0, b1 in zip(bounds, np.r_[bounds[1:], len(ss)]):
+        yield (int(ss[b0]), *(a[b0:b1] for a in grouped))
+
+
+def _shard_rows(parts, new_shard, insert: str):
+    """Fill one new filter per shard from ``(shard ids, values)``
+    batches with ``insert`` (a kernel method name); yield one
+    ``_SHARD_SCHEMA`` row dict per shard."""
+    per_shard: dict[int, list[np.ndarray]] = {}
+    for sids, vals in parts:
+        for sid, chunk in _group_by_shard(sids, vals):
+            per_shard.setdefault(sid, []).append(chunk)
+    for sid, chunks in per_shard.items():
+        flt = new_shard()
+        rows = 0
+        inserted = 0
+        for chunk in chunks:
+            rows += len(chunk)
+            inserted += int(getattr(flt, insert)(chunk).sum())
+        yield {
+            "shard_id": [sid],
+            "blob": [flt.to_bytes()],
+            "rows": [rows],
+            "inserted": [inserted],
+            "kicks": [flt.kicks],
+            "failures": [flt.failures],
+        }
 
 
 def _arrow_shard_builder(
@@ -99,41 +166,22 @@ def _arrow_shard_builder(
     def build_shards(batches):
         import pyarrow as pa
 
-        local_mask = None if shard_shift is None else np.int64(
-            (1 << shard_shift) - 1
-        )
-        per_shard: dict[int, list[np.ndarray]] = {}
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            if shard_shift is not None:
-                v = rb.column(0).to_numpy(zero_copy_only=False)
-                sids = v >> np.int64(shard_shift)
-                packed = v & local_mask
-            else:
-                sids = rb.column(0).to_numpy(zero_copy_only=False)
-                packed = rb.column(1).to_numpy(zero_copy_only=False)
-            order = np.argsort(sids, kind="stable")
-            sp = packed[order]
-            ss = sids[order]
-            bounds = np.flatnonzero(np.r_[True, ss[1:] != ss[:-1]])
-            for b0, b1 in zip(bounds, np.r_[bounds[1:], len(ss)]):
-                per_shard.setdefault(int(ss[b0]), []).append(sp[b0:b1])
-        for sid, chunks in per_shard.items():
-            flt = CuckooFilter(per_shard_cap, cfg)
-            rows = 0
-            inserted = 0
-            for chunk in chunks:
-                rows += len(chunk)
-                inserted += int(flt.insert_packed(chunk).sum())
-            yield pa.RecordBatch.from_pydict({
-                "shard_id": [sid],
-                "blob": [flt.to_bytes()],
-                "rows": [rows],
-                "inserted": [inserted],
-                "kicks": [flt.kicks],
-                "failures": [flt.failures],
-            })
+        def parts():
+            for rb in batches:
+                if shard_shift is not None:
+                    v = rb.column(0).to_numpy(zero_copy_only=False)
+                    local_mask = np.int64((1 << shard_shift) - 1)
+                    yield v >> np.int64(shard_shift), v & local_mask
+                else:
+                    yield (
+                        rb.column(0).to_numpy(zero_copy_only=False),
+                        rb.column(1).to_numpy(zero_copy_only=False),
+                    )
+
+        for row in _shard_rows(
+            parts(), lambda: CuckooFilter(per_shard_cap, cfg), "insert_packed"
+        ):
+            yield pa.RecordBatch.from_pydict(row)
 
     return build_shards
 
@@ -149,6 +197,41 @@ def _packed_shard_shift(
     shift = cfg.bits_per_tag + (nb - 1).bit_length()
     shard_bits = max(1, (num_shards - 1).bit_length())
     return shift if shift + shard_bits <= 62 else None
+
+
+def _packed_keys(
+    df: DataFrame, key_col: str, num_shards: int, per_shard_cap: int,
+    cfg: CuckooConfig,
+) -> tuple[DataFrame, Optional[int]]:
+    """Keys hashed JVM-side into the reference pack-kernel layout
+    (``CuckooFilter.cuh:1185-1207``) and hash-partitioned by shard:
+    ONE long ``(shard << shift) | (i1 << f) | fp`` per key, the shard
+    id riding the spare upper bits, or the two-column
+    ``(__shard, __packed)`` layout when shard+i1+f exceed 62 bits
+    (per-shard bucket counts beyond ~2^40 at f=16). Returns
+    ``(frame, shift)``, shift None for the two-column layout."""
+    from cuckoo_filter_spark.hashing import packed_expr
+
+    packed = packed_expr(
+        key_col, cfg.num_buckets_for(per_shard_cap), cfg.bits_per_tag,
+        cfg.bucket_policy,
+    )
+    shift = _packed_shard_shift(per_shard_cap, num_shards, cfg)
+    if shift is None:
+        return (
+            df.select(
+                shard_expr(key_col, num_shards).alias("__shard"),
+                packed.alias("__packed"),
+            ).repartition(num_shards, "__shard"),
+            None,
+        )
+    one = F.shiftleft(shard_expr(key_col, num_shards), shift).bitwiseOR(packed)
+    return (
+        df.select(one.alias("__packed")).repartition(
+            num_shards, F.shiftrightunsigned(F.col("__packed"), shift)
+        ),
+        shift,
+    )
 
 
 def _words_frame(
@@ -242,7 +325,6 @@ class DistributedCuckooFilter:
         capacity: int,
         config: Optional[CuckooConfig] = None,
         fan_in: int = 8,
-        sorted_insert: bool = False,
     ) -> "DistributedCuckooFilter":
         """Per-partition partial build + executor-side fan-in merge.
 
@@ -261,12 +343,11 @@ class DistributedCuckooFilter:
         from cuckoo_filter_spark.operators.sketch_agg import aggregate_sketch
 
         cfg = config or CuckooConfig()
-        make = (
-            (lambda: _SortedInsertFilter(capacity, cfg)) if sorted_insert
-            else (lambda: CuckooFilter(capacity, cfg))
-        )
         return DistributedCuckooFilter(
-            aggregate_sketch(df, key_col, make, fan_in=fan_in)
+            aggregate_sketch(
+                df, key_col, lambda: CuckooFilter(capacity, cfg),
+                fan_in=fan_in,
+            )
         )
 
     # -- query ----------------------------------------------------------
@@ -303,10 +384,6 @@ class DistributedCuckooFilter:
         hash joins + codegen'd bit math — zero Python in the probe
         path (the fingerprint family is the JVM-parity chained hash,
         see ``hashing.chained_hash``)."""
-        if self.config.bucket_policy not in ("xor", "addsub"):
-            raise NotImplementedError(
-                "SQL probe implements XOR/AddSub addressing"
-            )
         spark = df.sparkSession
         if self._words is None:
             self._words = _words_frame(
@@ -325,15 +402,6 @@ class DistributedCuckooFilter:
     def config(self) -> CuckooConfig:
         return self.filter.config
 
-    def delete_local(self, keys_i64: np.ndarray) -> np.ndarray:
-        """Driver-side batch delete against the merged filter (the
-        merged filter lives on the driver by construction). For
-        distributed deletes at scale use :class:`ShardedCuckooFilter`.
-        Invalidates the broadcast blob and the SQL words table."""
-        self._bc = None
-        self._words = None
-        return self.filter.delete_many(keys_to_unsigned(keys_i64))
-
 
 # ---------------------------------------------------------------------------
 # sharded mode (multi-GPU analog)
@@ -346,45 +414,105 @@ def shard_expr(key_col: str, num_shards: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_shards)).cast("long")
 
 
-def _check_broadcast_size(flt, op: str) -> bool:
-    """Shared broadcast-lane size guard for the sharded filter
-    classes. Collecting + broadcasting every shard blob only makes
-    sense while the whole serialized filter fits the driver and
-    executors comfortably; past ``flt.max_broadcast_bytes`` the
-    caller must take the shard-routed lane instead (state stays on
-    executors). Returns True when the broadcast may proceed; on
-    oversize either warns and returns False (``on_oversize_broadcast
-    == "fallback"``) or raises (``"raise"``). Caches the size
-    aggregate on the instance (shards are immutable — deletes return
-    a NEW filter)."""
-    if not flt.shards.is_cached:
-        # the size aggregate materializes the shard state; cache it
-        # so the broadcast collect (or the routed fallback) reads the
-        # built filter instead of rebuilding it
-        flt.persist()
-    size = flt.total_blob_bytes()
-    if size <= flt.max_broadcast_bytes:
-        return True
-    if flt.on_oversize_broadcast == "raise":
-        raise ValueError(
-            f"{op}: filter state is {size >> 20} MiB serialized, over "
-            f"the {flt.max_broadcast_bytes >> 20} MiB broadcast "
-            "guard — use the shard-routed op (state stays on "
-            "executors), or raise max_broadcast_bytes if the cluster "
-            "can take it"
+def _apply_op(flt, op: str, left: pd.DataFrame, key_col: str, packed: bool):
+    """Run batch ``op`` ('contains'/'count'/'delete') of a shard
+    kernel over one shard's routed rows: the ``*_packed`` fast path on
+    the JVM-packed ``__packed`` column when routed with it, else
+    ``*_many`` on the keys."""
+    if packed:
+        return getattr(flt, op + "_packed")(
+            left["__packed"].to_numpy(np.int64, copy=False)
         )
-    import warnings
+    return getattr(flt, op + "_many")(_keys_from_pdf(left, key_col))
 
-    warnings.warn(
-        f"{op}: filter state is {size >> 20} MiB serialized, over the "
-        f"{flt.max_broadcast_bytes >> 20} MiB broadcast guard; "
-        "falling back to the shard-routed lane (set "
-        "on_oversize_broadcast='raise' or raise max_broadcast_bytes "
-        "to override)",
-        RuntimeWarning,
-        stacklevel=4,
-    )
-    return False
+
+def _stacked_probe_udf(bc, nb: int, bs: int, dtype_name: str,
+                       num_shards: int, cfg: CuckooConfig):
+    """XOR broadcast probe over every shard's buckets stacked into ONE
+    (num_shards*nb, bs) array: shard s occupies bucket rows
+    [s*nb, (s+1)*nb), so a whole Arrow batch is answered in a single
+    vectorized pass — per-key shard routing (xxhash64 seed 42,
+    bit-exact with the JVM build-time router) just offsets the bucket
+    index by shard_id*nb."""
+    tag_mask = cfg.tag_mask
+    bits = cfg.bits_per_tag
+
+    @F.pandas_udf(BooleanType())
+    def member(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        from cuckoo_filter_spark.config import DISP_SALT, FP_SALT
+        from cuckoo_filter_spark.core.cuckoo import CuckooFilter, probe_rows
+        from cuckoo_filter_spark.hashing import (
+            chained_hash, xxhash64_u64, xxhash64_const_vseed,
+        )
+
+        big = np.frombuffer(bc.value, dtype=np.dtype(dtype_name)).reshape(
+            -1, bs
+        )
+        mask = np.uint64(nb - 1)
+        # L2-resident alt-displacement table (h(fp) & mask)
+        alt_tab = None
+        if bits <= 16:
+            all_fp = np.arange(1 << bits, dtype=np.uint64)
+            alt_tab = (chained_hash(all_fp, DISP_SALT) & mask).astype(
+                np.int64
+            )
+        CH = CuckooFilter.CHUNK
+        for s in batches:
+            keys = s.to_numpy(dtype=np.int64, copy=False).view(np.uint64)
+            n = len(keys)
+            res = np.empty(n, dtype=bool)
+            for lo in range(0, n, CH):
+                kc = keys[lo:lo + CH]
+                hr = xxhash64_u64(kc, seed=42)  # router hash
+                shard = (hr.view(np.int64) % num_shards).astype(np.int64)
+                h = xxhash64_const_vseed(FP_SALT, hr)
+                fp = ((h >> np.uint64(32)) & np.uint64(tag_mask)).astype(
+                    big.dtype
+                )
+                fp[fp == 0] = 1
+                i1 = (h & mask).astype(np.int64)
+                if alt_tab is not None:
+                    alt = alt_tab[fp.astype(np.int64)]
+                else:
+                    alt = (
+                        chained_hash(fp.astype(np.uint64), DISP_SALT)
+                        & mask
+                    ).astype(np.int64)
+                base = shard * nb
+                probe_rows(
+                    big, base + i1, base + (i1 ^ alt), fp, bits,
+                    out=res[lo:lo + len(kc)],
+                )
+            yield pd.Series(res)
+
+    return member
+
+
+def _per_shard_probe_udf(bc, num_shards: int, kernel_cls: type):
+    """Broadcast probe over a ``{shard_id: blob}`` broadcast: each
+    task decodes every shard once, routes its keys to their shard
+    locally and probes each shard's kernel — any bucket policy."""
+
+    @F.pandas_udf(BooleanType())
+    def member(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        from cuckoo_filter_spark.hashing import xxhash64_u64
+
+        filters = {
+            sid: kernel_cls.from_bytes(b) for sid, b in bc.value.items()
+        }
+        for s in batches:
+            keys = s.to_numpy(np.int64, copy=False).view(np.uint64)
+            sids = xxhash64_u64(keys, seed=42).view(np.int64) % num_shards
+            res = np.zeros(len(keys), dtype=bool)
+            for sid, pos, sk in _group_by_shard(
+                sids, np.arange(len(keys)), keys
+            ):
+                flt = filters.get(sid)
+                if flt is not None:
+                    res[pos] = flt.contains_many(sk)
+            yield pd.Series(res)
+
+    return member
 
 
 @dataclass
@@ -393,7 +521,8 @@ class ShardedCuckooFilter:
 
     ``shards`` schema: (shard_id, blob, rows, inserted, kicks,
     failures). State stays distributed; queries and deletes shuffle
-    only their 8-byte keys to the owning shard.
+    only their 8-byte keys to the owning shard. The per-shard kernel
+    follows ``config.bucket_policy`` (:func:`shard_kernel`).
     """
 
     shards: DataFrame
@@ -413,9 +542,8 @@ class ShardedCuckooFilter:
     max_broadcast_bytes: int = 512 << 20
     #: "fallback" (default) routes the op instead; "raise" errors.
     on_oversize_broadcast: str = "fallback"
-    _stacked: object = None  # cached (broadcast, nb, bs, dtype_name)
+    _bcast: object = None    # cached (broadcast, probe UDF)
     _words: object = None    # cached (words DF, wpb, nb) for SQL probe
-    _del_state: object = None  # cached (full_rows, broadcast) for delete_broadcast
     _blob_bytes: object = None  # cached total blob bytes (size guard)
 
     @staticmethod
@@ -425,53 +553,66 @@ class ShardedCuckooFilter:
         capacity: int,
         num_shards: int,
         config: Optional[CuckooConfig] = None,
-        sorted_insert: bool = False,
-        jvm_pack: bool = True,
     ) -> "ShardedCuckooFilter":
+        """Shuffled build: one hash Exchange sends each key to its
+        shard's partition, where one Python stage fills the shard
+        filters. When the kernel has the packed fast path the whole
+        hash chain runs JVM-side: the Exchange carries
+        ``(shard << (f+log2(nb))) | (i1 << f) | fp`` in a SINGLE long
+        (:func:`_packed_keys`), so the shuffled UnsafeRow is one field
+        (16 bytes) instead of two (24 bytes), and the Python stage is
+        pure placement (``insert_packed``) — same filters bit-for-bit
+        as the key-shipping build (chained hash family parity).
+        Otherwise (Offset) the Exchange carries the 8-byte keys
+        (:meth:`_build_keys`)."""
         cfg = config or CuckooConfig()
-        per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
-        if (jvm_pack and cfg.bucket_policy in ("xor", "addsub")
-                and not sorted_insert):
-            return ShardedCuckooFilter._build_packed(
-                df, key_col, num_shards, cfg, per_shard_cap
+        if not shard_kernel(cfg).packed:
+            return ShardedCuckooFilter._build_keys(
+                df, key_col, capacity, num_shards, cfg
             )
+        per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
+        frame, shard_shift = _packed_keys(
+            df, key_col, num_shards, per_shard_cap, cfg
+        )
+        shards = frame.mapInArrow(
+            _arrow_shard_builder(per_shard_cap, cfg, shard_shift),
+            schema=_SHARD_SCHEMA,
+        )
+        return ShardedCuckooFilter(
+            shards, num_shards, cfg, key_col,
+            shard_num_buckets=cfg.num_buckets_for(per_shard_cap),
+        )
+
+    @staticmethod
+    def _build_keys(
+        df: DataFrame, key_col: str, capacity: int, num_shards: int,
+        cfg: CuckooConfig,
+    ) -> "ShardedCuckooFilter":
+        """Key-shipping build, for any kernel: the Exchange carries
+        ONLY the 8-byte key and each shard filter runs ``insert_many``
+        on its keys."""
+        per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
+        new = shard_kernel(cfg).new
 
         def build_shards(batches: "Iterator[pd.DataFrame]"):
             # one partition may hold several shards (hash of the shard
             # id decides placement); group pandas-side — this avoids
             # the sort groupBy().applyInPandas() would inject, so the
-            # Exchange is the only data movement, and it carries ONLY
-            # the 8-byte key: the shard id is recomputed from the key
-            # in numpy (bit-exact with the JVM router).
+            # Exchange is the only data movement; the shard id is
+            # recomputed from the key in numpy (bit-exact with the JVM
+            # router).
             from cuckoo_filter_spark.hashing import xxhash64_u64
 
-            per_shard: dict[int, list[np.ndarray]] = {}
-            for pdf in batches:
-                keys = _keys_from_pdf(pdf, key_col)
-                sids = xxhash64_u64(keys, seed=42).view(np.int64) % num_shards
-                order = np.argsort(sids, kind="stable")
-                sk, ss = keys[order], sids[order]
-                bounds = np.flatnonzero(np.r_[True, ss[1:] != ss[:-1]])
-                for b0, b1 in zip(bounds, np.r_[bounds[1:], len(ss)]):
-                    per_shard.setdefault(int(ss[b0]), []).append(sk[b0:b1])
-            for sid, chunks in per_shard.items():
-                flt = CuckooFilter(per_shard_cap, cfg)
-                insert = (
-                    flt.insert_many_sorted if sorted_insert else flt.insert_many
-                )
-                rows = 0
-                inserted = 0
-                for chunk in chunks:
-                    rows += len(chunk)
-                    inserted += int(insert(chunk).sum())
-                yield pd.DataFrame({
-                    "shard_id": [sid],
-                    "blob": [flt.to_bytes()],
-                    "rows": [rows],
-                    "inserted": [inserted],
-                    "kicks": [flt.kicks],
-                    "failures": [flt.failures],
-                })
+            def parts():
+                for pdf in batches:
+                    keys = _keys_from_pdf(pdf, key_col)
+                    sids = xxhash64_u64(keys, seed=42).view(np.int64)
+                    yield sids % num_shards, keys
+
+            for row in _shard_rows(
+                parts(), lambda: new(per_shard_cap), "insert_many"
+            ):
+                yield pd.DataFrame(row)
 
         shards = (
             df.select(F.col(key_col))
@@ -481,62 +622,6 @@ class ShardedCuckooFilter:
         return ShardedCuckooFilter(
             shards, num_shards, cfg, key_col,
             shard_num_buckets=cfg.num_buckets_for(per_shard_cap),
-        )
-
-    @staticmethod
-    def _build_packed(
-        df: DataFrame, key_col: str, num_shards: int, cfg: CuckooConfig,
-        per_shard_cap: int,
-    ) -> "ShardedCuckooFilter":
-        """Build variant where the whole hash chain runs JVM-side:
-        the Exchange carries ``(shard << (f+log2(nb))) | (i1 << f) |
-        fp`` in a SINGLE long — the reference's pack-kernel layout
-        (``CuckooFilter.cuh:1185-1207``) with the shard id riding the
-        spare upper bits, so the shuffled UnsafeRow is one field (16
-        bytes) instead of two (24 bytes). The Python stage is pure
-        placement (``insert_packed``). Same filters bit-for-bit as
-        the key-shipping build (chained hash family parity). Falls
-        back to the two-column layout when shard+i1+f exceed 62 bits
-        (per-shard bucket counts beyond ~2^40 at f=16)."""
-        from cuckoo_filter_spark.hashing import packed_expr
-
-        nb = cfg.num_buckets_for(per_shard_cap)
-        f = cfg.bits_per_tag
-        # pow2 (xor) or even (addsub) bucket counts both fit
-        shard_shift = _packed_shard_shift(per_shard_cap, num_shards, cfg)
-        if shard_shift is not None:
-            one = F.shiftleft(
-                shard_expr(key_col, num_shards), shard_shift
-            ).bitwiseOR(packed_expr(key_col, nb, f, cfg.bucket_policy))
-            shards = (
-                df.select(one.alias("__packed"))
-                .repartition(
-                    num_shards,
-                    F.shiftrightunsigned(F.col("__packed"), shard_shift),
-                )
-                .mapInArrow(
-                    _arrow_shard_builder(
-                        per_shard_cap, cfg, shard_shift=shard_shift
-                    ),
-                    schema=_SHARD_SCHEMA,
-                )
-            )
-        else:
-            shards = (
-                df.select(
-                    shard_expr(key_col, num_shards).alias("__shard"),
-                    packed_expr(
-                        key_col, nb, f, cfg.bucket_policy
-                    ).alias("__packed"),
-                )
-                .repartition(num_shards, "__shard")
-                .mapInArrow(
-                    _arrow_shard_builder(per_shard_cap, cfg),
-                    schema=_SHARD_SCHEMA,
-                )
-            )
-        return ShardedCuckooFilter(
-            shards, num_shards, cfg, key_col, shard_num_buckets=nb
         )
 
     #: sidecar file recording the packed-layout parameters inside a
@@ -595,6 +680,7 @@ class ShardedCuckooFilter:
         """
         cfg = config or CuckooConfig()
         per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
+        shard_shift = _packed_shard_shift(per_shard_cap, num_shards, cfg)
         if path is not None:
             from cuckoo_filter_spark.sources.parquet_io import (
                 read_json_sidecar,
@@ -605,8 +691,7 @@ class ShardedCuckooFilter:
             )
             if recorded is not None:
                 derived = ShardedCuckooFilter._layout_payload(
-                    num_shards, per_shard_cap, cfg,
-                    _packed_shard_shift(per_shard_cap, num_shards, cfg),
+                    num_shards, per_shard_cap, cfg, shard_shift,
                 )
                 diffs = {
                     k: (recorded.get(k), v)
@@ -620,25 +705,19 @@ class ShardedCuckooFilter:
                         "capacity/num_shards/config or re-write the table"
                     )
         if "__shard" in df.columns:
-            shards = df.select("__shard", "__packed").mapInArrow(
-                _arrow_shard_builder(per_shard_cap, cfg), schema=_SHARD_SCHEMA
+            frame, shard_shift = df.select("__shard", "__packed"), None
+        elif shard_shift is None:
+            raise ValueError(
+                "single-column bucketed layout requires "
+                "shard+bucket+tag <= 62 bits; re-write the table "
+                "with the (__shard, __packed) layout"
             )
         else:
-            shard_shift = _packed_shard_shift(
-                per_shard_cap, num_shards, cfg
-            )
-            if shard_shift is None:
-                raise ValueError(
-                    "single-column bucketed layout requires "
-                    "shard+bucket+tag <= 62 bits; re-write the table "
-                    "with the (__shard, __packed) layout"
-                )
-            shards = df.select("__packed").mapInArrow(
-                _arrow_shard_builder(
-                    per_shard_cap, cfg, shard_shift=shard_shift
-                ),
-                schema=_SHARD_SCHEMA,
-            )
+            frame = df.select("__packed")
+        shards = frame.mapInArrow(
+            _arrow_shard_builder(per_shard_cap, cfg, shard_shift),
+            schema=_SHARD_SCHEMA,
+        )
         return ShardedCuckooFilter(
             shards, num_shards, cfg, key_col,
             shard_num_buckets=cfg.num_buckets_for(per_shard_cap),
@@ -661,38 +740,14 @@ class ShardedCuckooFilter:
         ``_cuckoo_layout.json`` sidecar records the layout
         parameters so :meth:`build_bucketed` can validate instead of
         trusting caller-supplied geometry."""
-        from cuckoo_filter_spark.hashing import packed_expr
         from cuckoo_filter_spark.sources.parquet_io import write_json_sidecar
 
         cfg = config or CuckooConfig()
         per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
-        nb = cfg.num_buckets_for(per_shard_cap)
-        shard_shift = _packed_shard_shift(per_shard_cap, num_shards, cfg)
-        if shard_shift is not None:
-            one = F.shiftleft(
-                shard_expr(key_col, num_shards), shard_shift
-            ).bitwiseOR(
-                packed_expr(key_col, nb, cfg.bits_per_tag, cfg.bucket_policy)
-            )
-            (
-                df.select(one.alias("__packed"))
-                .repartition(
-                    num_shards,
-                    F.shiftrightunsigned(F.col("__packed"), shard_shift),
-                )
-                .write.mode("overwrite").parquet(path)
-            )
-        else:
-            (
-                df.select(
-                    shard_expr(key_col, num_shards).alias("__shard"),
-                    packed_expr(
-                        key_col, nb, cfg.bits_per_tag, cfg.bucket_policy
-                    ).alias("__packed"),
-                )
-                .repartition(num_shards, "__shard")
-                .write.mode("overwrite").parquet(path)
-            )
+        frame, shard_shift = _packed_keys(
+            df, key_col, num_shards, per_shard_cap, cfg
+        )
+        frame.write.mode("overwrite").parquet(path)
         write_json_sidecar(
             df.sparkSession, path, ShardedCuckooFilter.LAYOUT_SIDECAR,
             ShardedCuckooFilter._layout_payload(
@@ -735,46 +790,101 @@ class ShardedCuckooFilter:
         """Total serialized filter bytes across shards (one cheap
         aggregate; cached — shards are immutable)."""
         if self._blob_bytes is None:
-            object.__setattr__(
-                self, "_blob_bytes",
-                int(
-                    self.shards.agg(
-                        F.sum(F.length("blob")).alias("b")
-                    ).collect()[0]["b"] or 0
-                ),
+            self._blob_bytes = int(
+                self.shards.agg(
+                    F.sum(F.length("blob")).alias("b")
+                ).collect()[0]["b"] or 0
             )
         return self._blob_bytes
 
     def _broadcast_guard(self, op: str) -> bool:
-        """True when the broadcast lane may proceed. Oversized state
-        either falls back (caller routes instead) or raises,
-        depending on ``on_oversize_broadcast``. Skipped once a
-        broadcast cache already exists (the bytes are already
-        shipped)."""
-        if self._stacked is not None or self._del_state is not None:
+        """Broadcast-lane size guard. Collecting + broadcasting every
+        shard blob only makes sense while the whole serialized filter
+        fits the driver and executors comfortably; past
+        ``max_broadcast_bytes`` the caller must take the shard-routed
+        lane instead (state stays on executors). Returns True when
+        the broadcast may proceed — always once a broadcast cache
+        exists (the bytes are already shipped); on oversize either
+        warns and returns False (``on_oversize_broadcast ==
+        "fallback"``) or raises (``"raise"``)."""
+        if self._bcast is not None:
             return True
-        return _check_broadcast_size(self, op)
+        if not self.shards.is_cached:
+            # the size aggregate materializes the shard state; cache it
+            # so the broadcast collect (or the routed fallback) reads the
+            # built filter instead of rebuilding it
+            self.persist()
+        size = self.total_blob_bytes()
+        if size <= self.max_broadcast_bytes:
+            return True
+        if self.on_oversize_broadcast == "raise":
+            raise ValueError(
+                f"{op}: filter state is {size >> 20} MiB serialized, over "
+                f"the {self.max_broadcast_bytes >> 20} MiB broadcast "
+                "guard — use the shard-routed op (state stays on "
+                "executors), or raise max_broadcast_bytes if the cluster "
+                "can take it"
+            )
+        import warnings
+
+        warnings.warn(
+            f"{op}: filter state is {size >> 20} MiB serialized, over the "
+            f"{self.max_broadcast_bytes >> 20} MiB broadcast guard; "
+            "falling back to the shard-routed lane (set "
+            "on_oversize_broadcast='raise' or raise max_broadcast_bytes "
+            "to override)",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+        return False
 
     # -- routed batch ops -------------------------------------------------
 
+    @property
+    def _packed(self) -> bool:
+        """Routed ops ship the JVM-packed candidates (and the kernel
+        runs its ``*_packed`` fast path) instead of the raw keys."""
+        return (
+            self.shard_num_buckets is not None
+            and shard_kernel(self.config).packed
+        )
+
+    def _route(self, queries: DataFrame, fn, schema: StructType) -> DataFrame:
+        """Route query keys to their shard and run ``fn(key, probe
+        rows, shard row)`` once per shard — the Spark expression of
+        the reference's multisplit → all2all → local kernel round
+        trip (``CuckooFilterMultiGPU.cuh:168-323``). Probe rows are
+        the key, its shard id (``__shard``) and, on the packed lane,
+        its JVM-packed candidates (``__packed``)."""
+        key_col = self.key_col
+        routed = queries.select(key_col)
+        if self._packed:
+            from cuckoo_filter_spark.hashing import packed_expr
+
+            cfg = self.config
+            routed = routed.withColumn(
+                "__packed",
+                packed_expr(key_col, self.shard_num_buckets, cfg.bits_per_tag,
+                            cfg.bucket_policy),
+            )
+        return (
+            routed.withColumn("__shard", shard_expr(key_col, self.num_shards))
+            .groupBy("__shard")
+            .cogroup(self.shards.groupBy(F.col("shard_id").alias("__shard")))
+            .applyInPandas(fn, schema=schema)
+        )
+
     def _routed(
         self, queries: DataFrame, op: str, out_col: str,
-        res_spark_type=None, res_np_dtype=bool,
+        res_spark_type=BooleanType(), res_np_dtype=bool,
     ) -> DataFrame:
-        """Route query keys to their shard and run a local batch op —
-        the Spark expression of the reference's multisplit → all2all
-        → local kernel → reverse all2all round trip
-        (``CuckooFilterMultiGPU.cuh:168-323``). Results come back
-        keyed (no order restoration needed — the reference restores
-        input offsets because its API is positional; ours is
-        relational)."""
+        """Shard-routed batch query (``op`` is 'contains' or 'count').
+        Results come back keyed (no order restoration needed — the
+        reference restores input offsets because its API is
+        positional; ours is relational)."""
         key_col = self.key_col
-        cfg = self.config
-        res_spark_type = res_spark_type or BooleanType()
-        packed = (
-            self.shard_num_buckets is not None
-            and cfg.bucket_policy in ("xor", "addsub")
-        )
+        packed = self._packed
+        kernel_cls = shard_kernel(self.config).cls
 
         # one row per shard with list columns (exploded JVM-side):
         # the Python→JVM boundary carries num_shards rows, not
@@ -787,50 +897,28 @@ class ShardedCuckooFilter:
         chunk_rows = ROUTED_CHUNK_ROWS
 
         def probe(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if len(left) == 0:
-                # dtype=object, NOT the float64 pandas defaults for
-                # empty columns — Arrow cannot convert float64 to the
-                # list<int64>/list<bool> output schema (hit whenever a
-                # shard receives zero probe keys)
-                return pd.DataFrame({
-                    "__keys": pd.Series([], dtype=object),
-                    "__res": pd.Series([], dtype=object),
-                })
-            if len(right) == 0:
+            if len(left) == 0 or len(right) == 0:
                 res = np.zeros(len(left), dtype=res_np_dtype)
             else:
-                flt = CuckooFilter.from_bytes(right["blob"].iloc[0])
-                if packed:
-                    res = getattr(flt, op + "_packed")(
-                        left["__packed"].to_numpy(np.int64, copy=False)
-                    )
-                else:
-                    res = getattr(flt, op + "_many")(
-                        _keys_from_pdf(left, key_col)
-                    )
+                flt = kernel_cls.from_bytes(right["blob"].iloc[0])
+                res = _apply_op(flt, op, left, key_col, packed)
             keys = left[key_col].to_numpy(np.int64, copy=False)
             bounds = range(0, len(keys), chunk_rows)
+            # dtype=object, NOT the float64 pandas default for empty
+            # columns — Arrow cannot convert float64 to the
+            # list<int64>/list<bool> output schema (hit whenever a
+            # shard receives zero probe keys)
             return pd.DataFrame({
-                "__keys": [keys[lo: lo + chunk_rows] for lo in bounds],
-                "__res": [res[lo: lo + chunk_rows] for lo in bounds],
+                "__keys": pd.Series(
+                    [keys[lo: lo + chunk_rows] for lo in bounds], dtype=object
+                ),
+                "__res": pd.Series(
+                    [res[lo: lo + chunk_rows] for lo in bounds], dtype=object
+                ),
             })
 
-        routed = queries.select(key_col)
-        if packed:
-            from cuckoo_filter_spark.hashing import packed_expr
-
-            routed = routed.withColumn(
-                "__packed",
-                packed_expr(key_col, self.shard_num_buckets, cfg.bits_per_tag,
-                            cfg.bucket_policy),
-            )
-        routed = routed.withColumn(
-            "__shard", shard_expr(key_col, self.num_shards)
-        )
         return (
-            routed.groupBy("__shard")
-            .cogroup(self.shards.groupBy(F.col("shard_id").alias("__shard")))
-            .applyInPandas(probe, schema=pack_schema)
+            self._route(queries, probe, pack_schema)
             .select(F.explode(F.arrays_zip("__keys", "__res")).alias("z"))
             .select(
                 F.col("z.__keys").alias(key_col),
@@ -865,116 +953,81 @@ class ShardedCuckooFilter:
         are multiset (each duplicate occupies a slot), this returns
         the per-key instance count, and multiset deletes decrement
         it. Over-counts only on full fingerprint+bucket-pair
-        collisions (probability ≈ the membership FPR)."""
+        collisions (probability ≈ the membership FPR). XOR/AddSub
+        kernels only."""
+        if self.config.bucket_policy == "offset":
+            raise NotImplementedError(
+                "the Offset kernel has no counting query"
+            )
         return self._routed(
             queries, "count", out_col,
             res_spark_type=LongType(), res_np_dtype=np.int64,
         )
 
+    def _stacked_buckets(self) -> np.ndarray:
+        """Collect every shard and stack their bucket arrays into ONE
+        (num_shards*nb, bucket_size) array on the driver: shard s
+        occupies bucket rows [s*nb, (s+1)*nb)."""
+        kernel_cls = shard_kernel(self.config).cls
+        filters = {
+            r.shard_id: kernel_cls.from_bytes(bytes(r.blob))
+            for r in self.shards.collect()
+        }
+        any_f = next(iter(filters.values()))
+        nb = any_f.num_buckets
+        big = np.zeros(
+            (self.num_shards * nb, any_f.buckets.shape[1]),
+            dtype=any_f.buckets.dtype,
+        )
+        for sid, f in filters.items():
+            if f.num_buckets != nb:
+                raise ValueError("heterogeneous shard geometry")
+            big[sid * nb : (sid + 1) * nb] = f.buckets
+        return big
+
     def contains_broadcast(
         self, queries: DataFrame, key_col: str | None = None,
         out_col: str = "member",
     ) -> DataFrame:
-        """Zero-shuffle membership: ALL shard blobs are broadcast and
-        stacked into ONE (num_shards*num_buckets, bucket_size) array,
-        so a whole Arrow batch is answered in a single vectorized
-        pass — per-key shard routing (xxhash64 seed 42, bit-exact
-        with the JVM build-time router; verified in tests) just
-        offsets the bucket index by shard_id*num_buckets. Use when
-        the total filter size is broadcastable (it is whenever the
-        merged filter would be); :meth:`contains` is the
-        shuffle-routed alternative for filters too big to ship.
-        Appends `out_col` to the query DataFrame (all columns kept).
+        """Zero-shuffle membership: the shard state is broadcast and
+        each task routes its keys to their shard locally. For XOR all
+        shard buckets are stacked into ONE array so a whole Arrow
+        batch is answered in a single vectorized pass
+        (:func:`_stacked_probe_udf`); other policies broadcast the
+        shard blobs and probe each shard's kernel
+        (:func:`_per_shard_probe_udf`). The broadcast is built once
+        and cached on the instance — shards are immutable (delete
+        returns a NEW ShardedCuckooFilter). Use when the total filter
+        size is broadcastable (it is whenever the merged filter would
+        be); :meth:`contains` is the shuffle-routed alternative for
+        filters too big to ship, and the lane this falls back to past
+        :attr:`max_broadcast_bytes`. Appends `out_col` to the query
+        DataFrame (all columns kept).
         """
-        if self.config.bucket_policy != "xor":
-            raise NotImplementedError(
-                "stacked-broadcast probing implements XOR addressing; "
-                "use .contains() (shard-routed) for other policies"
-            )
         key_col = key_col or self.key_col
         if not self._broadcast_guard("contains_broadcast"):
             return self._routed_with_columns(queries, key_col, out_col)
-        spark = queries.sparkSession
-        tag_mask = self.config.tag_mask
-        if self._stacked is None:
-            # stack ONCE on the driver: shard s occupies bucket rows
-            # [s*nb, (s+1)*nb). Workers view the broadcast bytes
-            # zero-copy; nothing O(filter-size) happens per task.
-            # Cached on the instance — shards are immutable (delete
-            # returns a NEW ShardedCuckooFilter).
-            filters = {
-                r.shard_id: CuckooFilter.from_bytes(bytes(r.blob))
-                for r in self.shards.collect()
-            }
-            any_f = next(iter(filters.values()))
-            nb, bs = any_f.num_buckets, any_f.config.bucket_size
-            dtype_name = any_f.buckets.dtype.name
-            big = np.zeros(
-                (self.num_shards * nb, bs), dtype=any_f.buckets.dtype
-            )
-            for sid, f in filters.items():
-                if f.num_buckets != nb:
-                    raise ValueError("heterogeneous shard geometry")
-                big[sid * nb : (sid + 1) * nb] = f.buckets
-            object.__setattr__(
-                self, "_stacked",
-                (spark.sparkContext.broadcast(big.tobytes()), nb, bs,
-                 dtype_name),
-            )
-        bc, nb, bs, dtype_name = self._stacked
-        num_shards = self.num_shards
-
-        bits = self.config.bits_per_tag
-
-        @F.pandas_udf(BooleanType())
-        def member(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            from cuckoo_filter_spark.config import DISP_SALT, FP_SALT
-            from cuckoo_filter_spark.core.cuckoo import CuckooFilter, probe_rows
-            from cuckoo_filter_spark.hashing import (
-                chained_hash, xxhash64_u64, xxhash64_const_vseed,
-            )
-
-            big = np.frombuffer(bc.value, dtype=np.dtype(dtype_name)).reshape(
-                -1, bs
-            )
-            mask = np.uint64(nb - 1)
-            # L2-resident alt-displacement table (h(fp) & mask)
-            alt_tab = None
-            if bits <= 16:
-                all_fp = np.arange(1 << bits, dtype=np.uint64)
-                alt_tab = (chained_hash(all_fp, DISP_SALT) & mask).astype(
-                    np.int64
+        if self._bcast is None:
+            sc = queries.sparkSession.sparkContext
+            if self.config.bucket_policy == "xor":
+                # stack ONCE on the driver; workers view the broadcast
+                # bytes zero-copy, nothing O(filter-size) per task
+                big = self._stacked_buckets()
+                bc = sc.broadcast(big.tobytes())
+                member = _stacked_probe_udf(
+                    bc, len(big) // self.num_shards, big.shape[1],
+                    big.dtype.name, self.num_shards, self.config,
                 )
-            CH = CuckooFilter.CHUNK
-            for s in batches:
-                keys = s.to_numpy(dtype=np.int64, copy=False).view(np.uint64)
-                n = len(keys)
-                res = np.empty(n, dtype=bool)
-                for lo in range(0, n, CH):
-                    kc = keys[lo:lo + CH]
-                    hr = xxhash64_u64(kc, seed=42)  # router hash
-                    shard = (hr.view(np.int64) % num_shards).astype(np.int64)
-                    h = xxhash64_const_vseed(FP_SALT, hr)
-                    fp = ((h >> np.uint64(32)) & np.uint64(tag_mask)).astype(
-                        big.dtype
-                    )
-                    fp[fp == 0] = 1
-                    i1 = (h & mask).astype(np.int64)
-                    if alt_tab is not None:
-                        alt = alt_tab[fp.astype(np.int64)]
-                    else:
-                        alt = (
-                            chained_hash(fp.astype(np.uint64), DISP_SALT)
-                            & mask
-                        ).astype(np.int64)
-                    base = shard * nb
-                    probe_rows(
-                        big, base + i1, base + (i1 ^ alt), fp, bits,
-                        out=res[lo:lo + len(kc)],
-                    )
-                yield pd.Series(res)
-
-        return queries.withColumn(out_col, member(F.col(key_col)))
+            else:
+                bc = sc.broadcast({
+                    int(r.shard_id): bytes(r.blob)
+                    for r in self.shards.select("shard_id", "blob").collect()
+                })
+                member = _per_shard_probe_udf(
+                    bc, self.num_shards, shard_kernel(self.config).cls
+                )
+            self._bcast = (bc, member)
+        return queries.withColumn(out_col, self._bcast[1](F.col(key_col)))
 
     def contains_sql(
         self, queries: DataFrame, key_col: str | None = None,
@@ -993,22 +1046,11 @@ class ShardedCuckooFilter:
         if self._words is None and not self._broadcast_guard("contains_sql"):
             return self._routed_with_columns(queries, key_col, out_col)
         spark = queries.sparkSession
-        if getattr(self, "_words", None) is None:
-            filters = {
-                r.shard_id: CuckooFilter.from_bytes(bytes(r.blob))
-                for r in self.shards.collect()
-            }
-            any_f = next(iter(filters.values()))
-            nb = any_f.num_buckets
-            big = np.zeros(
-                (self.num_shards * nb, any_f.config.bucket_size),
-                dtype=any_f.buckets.dtype,
-            )
-            for sid, f in filters.items():
-                big[sid * nb : (sid + 1) * nb] = f.buckets
-            object.__setattr__(
-                self, "_words",
-                (*_words_frame(spark, big, self.config.bits_per_tag), nb),
+        if self._words is None:
+            big = self._stacked_buckets()
+            self._words = (
+                *_words_frame(spark, big, self.config.bits_per_tag),
+                len(big) // self.num_shards,
             )
         words, wpb, nb = self._words
         fp, i1, i2 = candidate_exprs(
@@ -1035,7 +1077,8 @@ class ShardedCuckooFilter:
         nullable object columns dominated delete wall time). The
         per-key result DataFrame is recovered with a codegen'd
         explode, and persisting the cogroup output caches only the
-        shard rows.
+        shard rows. Multiset semantics for every kernel (Offset's
+        choice-bit flips are handled by its core kernel).
 
         ``per_key=False`` mirrors the reference's delete contract
         exactly: ``deleteMany`` writes per-key outcomes into device
@@ -1049,16 +1092,11 @@ class ShardedCuckooFilter:
         ``(None, new_filter)``; read the count with
         :meth:`delete_success_count`)."""
         key_col = self.key_col
-        cfg = self.config
+        packed = self._packed
+        kernel_cls = shard_kernel(self.config).cls
 
-        fields = [
-            StructField("shard_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("rows", LongType()),
-            StructField("inserted", LongType()),
-            StructField("kicks", LongType()),
-            StructField("failures", LongType()),
-            StructField("n_ok", LongType()),
+        fields = list(_SHARD_SCHEMA.fields) + [
+            StructField("n_ok", LongType())
         ]
         if per_key:
             fields += [
@@ -1067,23 +1105,13 @@ class ShardedCuckooFilter:
             ]
         schema = StructType(fields)
 
-        packed = (
-            self.shard_num_buckets is not None
-            and cfg.bucket_policy in ("xor", "addsub")
-        )
-
         def apply_delete(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             shard_id = int(key[0])
             keys_arr = left[key_col].to_numpy(np.int64, copy=False)
             if len(right):
-                flt = CuckooFilter.from_bytes(right["blob"].iloc[0])
+                flt = kernel_cls.from_bytes(right["blob"].iloc[0])
                 if len(left):
-                    if packed:
-                        ok = flt.delete_packed(
-                            left["__packed"].to_numpy(np.int64, copy=False)
-                        )
-                    else:
-                        ok = flt.delete_many(_keys_from_pdf(left, key_col))
+                    ok = _apply_op(flt, "delete", left, key_col, packed)
                 else:
                     ok = np.zeros(0, dtype=bool)
                 out = {
@@ -1091,41 +1119,22 @@ class ShardedCuckooFilter:
                     "rows": [int(right["rows"].iloc[0])],
                     "inserted": [flt.occupied],
                     "kicks": [flt.kicks], "failures": [flt.failures],
-                    "n_ok": [int(ok.sum())],
                 }
-                if per_key:
-                    out["del_keys"] = [keys_arr]
-                    out["del_ok"] = [ok]
-                return pd.DataFrame(out)
-            # keys routed to a shard that never existed: all misses,
-            # no blob row (filtered out of new_shards below)
-            out = {
-                "shard_id": [shard_id], "blob": [None], "rows": [0],
-                "inserted": [0], "kicks": [0], "failures": [0],
-                "n_ok": [0],
-            }
+            else:
+                # keys routed to a shard that never existed: all
+                # misses, no blob row (filtered out of new_shards below)
+                ok = np.zeros(len(keys_arr), dtype=bool)
+                out = {
+                    "shard_id": [shard_id], "blob": [None], "rows": [0],
+                    "inserted": [0], "kicks": [0], "failures": [0],
+                }
+            out["n_ok"] = [int(ok.sum())]
             if per_key:
                 out["del_keys"] = [keys_arr]
-                out["del_ok"] = [np.zeros(len(keys_arr), dtype=bool)]
+                out["del_ok"] = [ok]
             return pd.DataFrame(out)
 
-        routed = deletes.select(key_col)
-        if packed:
-            from cuckoo_filter_spark.hashing import packed_expr
-
-            routed = routed.withColumn(
-                "__packed",
-                packed_expr(key_col, self.shard_num_buckets, cfg.bits_per_tag,
-                            cfg.bucket_policy),
-            )
-        merged = (
-            routed
-            .withColumn("__shard", shard_expr(key_col, self.num_shards))
-            .groupBy("__shard")
-            .cogroup(self.shards.groupBy(F.col("shard_id").alias("__shard")))
-            .applyInPandas(apply_delete, schema=schema)
-            .persist()
-        )
+        merged = self._route(deletes, apply_delete, schema).persist()
         results = None
         if per_key:
             results = merged.select(
@@ -1135,168 +1144,15 @@ class ShardedCuckooFilter:
                 F.col("z.del_ok").alias("ok"),
             )
         new_shards = merged.filter(F.col("blob").isNotNull()).select(
-            "shard_id", "blob", "rows", "inserted", "kicks", "failures"
+            *_SHARD_SCHEMA.names
         )
         # shard geometry is unchanged by deletes — keep the packed
         # JVM fast path alive on the returned filter
         out = ShardedCuckooFilter(
-            new_shards, self.num_shards, cfg, key_col,
+            new_shards, self.num_shards, self.config, key_col,
             shard_num_buckets=self.shard_num_buckets,
         )
         out._delete_src = merged  # release() drops the persisted plan
-        return results, out
-
-    def delete_broadcast(
-        self, deletes: DataFrame
-    ) -> tuple[DataFrame, "ShardedCuckooFilter"]:
-        """Zero-sort functional delete for broadcastable state (the
-        same regime as :meth:`contains_broadcast`): shard blobs ride
-        a broadcast variable, delete keys take ONE hash Exchange to
-        their shard's partition (plain repartition — no cogroup, so
-        no per-partition sort of the key stream), and each task
-        applies the batch delete for the shards it owns, emitting
-        one row per touched shard (new blob + packed results).
-        Untouched shards pass through driver-side. Use :meth:`delete`
-        (cogroup-routed) when the filter is too big to broadcast.
-
-        Measured (16M keys, 64 shards ~34 MB state, local[32],
-        best-of-3): routed 3.38M deletes/s vs broadcast 2.23M/s —
-        the per-call state collect+broadcast costs more than the
-        cogroup sort it avoids, so the routed path stays the bench
-        default. This path wins when several independent delete sets
-        probe the SAME filter snapshot: the collect+broadcast is
-        cached on the instance (shards are immutable; delete returns
-        a NEW filter) so only the first call pays it. For a long
-        stream of mutating micro-batches, use
-        ``streaming.membership.stream_apply_ops`` — state there
-        lives on the executors and is never re-shipped."""
-        if not self._broadcast_guard("delete_broadcast"):
-            return self.delete(deletes, per_key=True)
-        key_col = self.key_col
-        cfg = self.config
-        spark = deletes.sparkSession
-        num_shards = self.num_shards
-        packed = (
-            self.shard_num_buckets is not None
-            and cfg.bucket_policy in ("xor", "addsub")
-        )
-        if self._del_state is None:
-            full_rows = {
-                int(r.shard_id): (
-                    bytes(r.blob), int(r.rows), int(r.inserted),
-                    int(r.kicks), int(r.failures),
-                )
-                for r in self.shards.collect()
-            }
-            # workers only need (blob, rows); metrics stay driver-side
-            self._del_state = (
-                full_rows,
-                spark.sparkContext.broadcast(
-                    {sid: (v[0], v[1]) for sid, v in full_rows.items()}
-                ),
-            )
-        full_rows, bc = self._del_state
-
-        schema = StructType([
-            StructField("shard_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("rows", LongType()),
-            StructField("inserted", LongType()),
-            StructField("kicks", LongType()),
-            StructField("failures", LongType()),
-            StructField("n_ok", LongType()),
-            StructField("del_keys", ArrayType(LongType())),
-            StructField("del_ok", ArrayType(BooleanType())),
-        ])
-
-        def apply_delete(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            per_shard: dict[int, list[tuple[np.ndarray, np.ndarray]]] = {}
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                sids = pdf["__shard"].to_numpy(np.int64, copy=False)
-                keys = pdf[key_col].to_numpy(np.int64, copy=False)
-                vals = (
-                    pdf["__packed"].to_numpy(np.int64, copy=False)
-                    if packed else keys
-                )
-                order = np.argsort(sids, kind="stable")
-                ss = sids[order]
-                bounds = np.flatnonzero(np.r_[True, ss[1:] != ss[:-1]])
-                for b0, b1 in zip(bounds, np.r_[bounds[1:], len(ss)]):
-                    per_shard.setdefault(int(ss[b0]), []).append(
-                        (keys[order[b0:b1]], vals[order[b0:b1]])
-                    )
-            state = bc.value
-            for sid, chunks in per_shard.items():
-                keys_arr = np.concatenate([k for k, _ in chunks])
-                vals_arr = np.concatenate([v for _, v in chunks])
-                if sid in state:
-                    flt = CuckooFilter.from_bytes(state[sid][0])
-                    ok = (
-                        flt.delete_packed(vals_arr) if packed
-                        else flt.delete_many(keys_to_unsigned(vals_arr))
-                    )
-                    yield pd.DataFrame({
-                        "shard_id": [sid], "blob": [flt.to_bytes()],
-                        "rows": [state[sid][1]], "inserted": [flt.occupied],
-                        "kicks": [flt.kicks], "failures": [flt.failures],
-                        "n_ok": [int(ok.sum())],
-                        "del_keys": [keys_arr], "del_ok": [ok],
-                    })
-                else:
-                    yield pd.DataFrame({
-                        "shard_id": [sid], "blob": [None], "rows": [0],
-                        "inserted": [0], "kicks": [0], "failures": [0],
-                        "n_ok": [0],
-                        "del_keys": [keys_arr],
-                        "del_ok": [np.zeros(len(keys_arr), dtype=bool)],
-                    })
-
-        routed = deletes.select(key_col)
-        if packed:
-            from cuckoo_filter_spark.hashing import packed_expr
-
-            routed = routed.withColumn(
-                "__packed",
-                packed_expr(key_col, self.shard_num_buckets, cfg.bits_per_tag,
-                            cfg.bucket_policy),
-            )
-        touched = (
-            routed.withColumn("__shard", shard_expr(key_col, num_shards))
-            .repartition(num_shards, "__shard")
-            .mapInPandas(apply_delete, schema=schema)
-            .persist()
-        )
-        results = touched.select(
-            F.explode(F.arrays_zip("del_keys", "del_ok")).alias("z")
-        ).select(
-            F.col("z.del_keys").alias(key_col), F.col("z.del_ok").alias("ok")
-        )
-        touched_ids = {
-            int(r.shard_id)
-            for r in touched.select("shard_id").distinct().collect()
-        }
-        untouched = [
-            (sid, bytearray(v[0]), v[1], v[2], v[3], v[4])
-            for sid, v in full_rows.items()
-            if sid not in touched_ids
-        ]
-        new_shards = touched.filter(F.col("blob").isNotNull()).select(
-            "shard_id", "blob", "rows", "inserted", "kicks", "failures"
-        )
-        if untouched:
-            extra = spark.createDataFrame(
-                untouched,
-                "shard_id long, blob binary, rows long, inserted long, "
-                "kicks long, failures long",
-            )
-            new_shards = new_shards.unionByName(extra)
-        out = ShardedCuckooFilter(
-            new_shards, num_shards, cfg, key_col,
-            shard_num_buckets=self.shard_num_buckets,
-        )
-        out._delete_src = touched
         return results, out
 
     def delete_success_count(self) -> int:
@@ -1318,17 +1174,14 @@ class ShardedCuckooFilter:
         """Drop the cached resources backing this filter: the
         persisted delete plan (if this filter came from
         :meth:`delete`) and any broadcast state created by
-        :meth:`contains_broadcast` / :meth:`delete_broadcast`."""
+        :meth:`contains_broadcast`."""
         src = getattr(self, "_delete_src", None)
         if src is not None:
             src.unpersist()
             self._delete_src = None
-        if self._stacked is not None:
-            self._stacked[0].unpersist()
-            self._stacked = None
-        if self._del_state is not None:
-            self._del_state[1].unpersist()
-            self._del_state = None
+        if self._bcast is not None:
+            self._bcast[0].unpersist()
+            self._bcast = None
 
     # -- aggregates (CuckooFilterMultiGPU.cuh:520-592) --------------------
 
@@ -1345,296 +1198,3 @@ class ShardedCuckooFilter:
         """Parallel-sum of shard occupancy
         (``CuckooFilterMultiGPU.cuh:558-565``)."""
         return self.metrics().collect()[0]["occupied"]
-
-
-@dataclass
-class ShardedOffsetFilter:
-    """Distributed OffsetAltBucketPolicy filter
-    (``bucket_policies.cuh:190-351``): disjoint key-sharded
-    :class:`~cuckoo_filter_spark.core.offset.OffsetCuckooFilter`
-    blobs, same multisplit → all2all → local-op dataflow as
-    :class:`ShardedCuckooFilter`. Offset addressing has no JVM
-    packing twin (the choice-bit fp mutates on relocation), so build
-    and probe ship the 8-byte keys — still a single Exchange each,
-    with state living on executors."""
-
-    shards: DataFrame
-    num_shards: int
-    key_col: str = "key"
-    #: broadcast-lane size guard — same contract as
-    #: :attr:`ShardedCuckooFilter.max_broadcast_bytes`: past this
-    #: many serialized blob bytes, :meth:`contains_broadcast` falls
-    #: back to the shard-routed :meth:`contains` (or raises, per
-    #: ``on_oversize_broadcast``) instead of collecting every shard
-    #: blob onto the driver.
-    max_broadcast_bytes: int = 512 << 20
-    #: "fallback" (default) routes the op instead; "raise" errors.
-    on_oversize_broadcast: str = "fallback"
-    _blob_bytes: object = None  # cached total blob bytes (size guard)
-
-    def persist(self) -> "ShardedOffsetFilter":
-        self.shards = self.shards.persist()
-        return self
-
-    def total_blob_bytes(self) -> int:
-        """Total serialized filter bytes across shards (one cheap
-        aggregate; cached — shards are immutable)."""
-        if self._blob_bytes is None:
-            object.__setattr__(
-                self, "_blob_bytes",
-                int(
-                    self.shards.agg(
-                        F.sum(F.length("blob")).alias("b")
-                    ).collect()[0]["b"] or 0
-                ),
-            )
-        return self._blob_bytes
-
-    def _broadcast_guard(self, op: str) -> bool:
-        return _check_broadcast_size(self, op)
-
-    @staticmethod
-    def build(
-        df: DataFrame,
-        key_col: str,
-        capacity: int,
-        num_shards: int,
-        bits_per_tag: int = 16,
-        bucket_size: int = 4,
-    ) -> "ShardedOffsetFilter":
-        from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
-
-        per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
-
-        def build_shards(batches: "Iterator[pd.DataFrame]"):
-            from cuckoo_filter_spark.hashing import xxhash64_u64
-
-            per_shard: dict[int, list[np.ndarray]] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keys = _keys_from_pdf(pdf, key_col)
-                sids = xxhash64_u64(keys, seed=42).view(np.int64) % num_shards
-                order = np.argsort(sids, kind="stable")
-                sk, ss = keys[order], sids[order]
-                bounds = np.flatnonzero(np.r_[True, ss[1:] != ss[:-1]])
-                for b0, b1 in zip(bounds, np.r_[bounds[1:], len(ss)]):
-                    per_shard.setdefault(int(ss[b0]), []).append(sk[b0:b1])
-            for sid, chunks in per_shard.items():
-                flt = OffsetCuckooFilter(
-                    per_shard_cap, bits_per_tag=bits_per_tag,
-                    bucket_size=bucket_size,
-                )
-                rows = 0
-                inserted = 0
-                for chunk in chunks:
-                    rows += len(chunk)
-                    inserted += int(flt.insert_many(chunk).sum())
-                yield pd.DataFrame({
-                    "shard_id": [sid], "blob": [flt.to_bytes()],
-                    "rows": [rows], "inserted": [inserted],
-                    "kicks": [flt.kicks], "failures": [flt.failures],
-                })
-
-        shards = (
-            df.select(F.col(key_col))
-            .repartition(num_shards, shard_expr(key_col, num_shards))
-            .mapInPandas(build_shards, schema=_SHARD_SCHEMA)
-        )
-        return ShardedOffsetFilter(shards, num_shards, key_col)
-
-    def contains(self, queries: DataFrame, out_col: str = "member") -> DataFrame:
-        """Shard-routed batch membership (key → bool); per-shard
-        list-column results exploded JVM-side (see
-        :meth:`ShardedCuckooFilter._routed`)."""
-        from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
-
-        key_col = self.key_col
-        pack_schema = StructType([
-            StructField("__keys", ArrayType(LongType())),
-            StructField("__res", ArrayType(BooleanType())),
-        ])
-
-        def probe(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if len(left) == 0:
-                # dtype=object, NOT the float64 pandas defaults for
-                # empty columns — Arrow cannot convert float64 to the
-                # list<int64>/list<bool> output schema (hit whenever a
-                # shard receives zero probe keys)
-                return pd.DataFrame({
-                    "__keys": pd.Series([], dtype=object),
-                    "__res": pd.Series([], dtype=object),
-                })
-            if len(right) == 0:
-                res = np.zeros(len(left), dtype=bool)
-            else:
-                flt = OffsetCuckooFilter.from_bytes(right["blob"].iloc[0])
-                res = flt.contains_many(_keys_from_pdf(left, key_col))
-            return pd.DataFrame({
-                "__keys": [left[key_col].to_numpy(np.int64, copy=False)],
-                "__res": [res],
-            })
-
-        return (
-            queries.select(key_col)
-            .withColumn("__shard", shard_expr(key_col, self.num_shards))
-            .groupBy("__shard")
-            .cogroup(self.shards.groupBy(F.col("shard_id").alias("__shard")))
-            .applyInPandas(probe, schema=pack_schema)
-            .select(F.explode(F.arrays_zip("__keys", "__res")).alias("z"))
-            .select(
-                F.col("z.__keys").alias(key_col),
-                F.col("z.__res").alias(out_col),
-            )
-        )
-
-    def contains_broadcast(
-        self, queries: DataFrame, out_col: str = "member"
-    ) -> DataFrame:
-        """Zero-shuffle batched membership: every shard blob is
-        broadcast once (offset filters are small per shard — the
-        whole point of sharding) and each task routes its keys to
-        the right shard locally, mirroring
-        :meth:`ShardedCuckooFilter.contains_broadcast`. Use when the
-        probe stream dwarfs the filter; the routed :meth:`contains`
-        is the path when the filter dwarfs executor memory. Guarded
-        by :attr:`max_broadcast_bytes` exactly like the main filter:
-        oversized state falls back to the routed lane (identical
-        answers) or raises, per ``on_oversize_broadcast``."""
-        from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
-
-        if not self._broadcast_guard("contains_broadcast"):
-            # routed fallback with the broadcast lane's output shape
-            # (all query columns kept + out_col): probe the distinct
-            # keys, join the answers back on
-            probes = queries.select(self.key_col).distinct()
-            res = self.contains(probes, out_col)
-            return queries.join(res, self.key_col)
-
-        spark = queries.sparkSession
-        key_col = self.key_col
-        num_shards = self.num_shards
-        blobs = {
-            int(r.shard_id): bytes(r.blob)
-            for r in self.shards.select("shard_id", "blob").collect()
-        }
-        bc = spark.sparkContext.broadcast(blobs)
-
-        @F.pandas_udf(BooleanType())
-        def member(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            from cuckoo_filter_spark.hashing import xxhash64_u64
-
-            filters = {
-                sid: OffsetCuckooFilter.from_bytes(b)
-                for sid, b in bc.value.items()
-            }
-            for s in batches:
-                keys = s.to_numpy(np.int64, copy=False).view(np.uint64)
-                sids = xxhash64_u64(keys, seed=42).view(np.int64) % num_shards
-                res = np.zeros(len(keys), dtype=bool)
-                order = np.argsort(sids, kind="stable")
-                sk, ss = keys[order], sids[order]
-                bounds = np.flatnonzero(np.r_[True, ss[1:] != ss[:-1]])
-                for b0, b1 in zip(bounds, np.r_[bounds[1:], len(ss)]):
-                    flt = filters.get(int(ss[b0]))
-                    if flt is not None:
-                        res[order[b0:b1]] = flt.contains_many(sk[b0:b1])
-                yield pd.Series(res)
-
-        return queries.withColumn(out_col, member(F.col(key_col)))
-
-    def delete(
-        self, deletes: DataFrame
-    ) -> tuple[DataFrame, "ShardedOffsetFilter"]:
-        """Functional shard-routed batch delete, completing the
-        reference's per-policy op set for Offset addressing
-        (``deleteMany`` over ``OffsetAltBucketPolicy``,
-        ``bucket_policies.cuh:190-351``): one cogroup pass
-        per-shard, multiset semantics with fp choice-bit flips
-        handled by the core kernel. Returns (per-key success DF,
-        new filter)."""
-        from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
-
-        key_col = self.key_col
-        schema = StructType([
-            StructField("shard_id", LongType()),
-            StructField("blob", BinaryType()),
-            StructField("rows", LongType()),
-            StructField("inserted", LongType()),
-            StructField("kicks", LongType()),
-            StructField("failures", LongType()),
-            StructField("n_ok", LongType()),
-            StructField("del_keys", ArrayType(LongType())),
-            StructField("del_ok", ArrayType(BooleanType())),
-        ])
-
-        def apply_delete(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            shard_id = int(key[0])
-            keys_arr = left[key_col].to_numpy(np.int64, copy=False)
-            if len(right):
-                flt = OffsetCuckooFilter.from_bytes(right["blob"].iloc[0])
-                ok = (
-                    flt.delete_many(_keys_from_pdf(left, key_col))
-                    if len(left) else np.zeros(0, dtype=bool)
-                )
-                return pd.DataFrame({
-                    "shard_id": [shard_id], "blob": [flt.to_bytes()],
-                    "rows": [int(right["rows"].iloc[0])],
-                    "inserted": [flt.occupied],
-                    "kicks": [flt.kicks], "failures": [flt.failures],
-                    "n_ok": [int(ok.sum())],
-                    "del_keys": [keys_arr], "del_ok": [ok],
-                })
-            return pd.DataFrame({
-                "shard_id": [shard_id], "blob": [None], "rows": [0],
-                "inserted": [0], "kicks": [0], "failures": [0],
-                "n_ok": [0], "del_keys": [keys_arr],
-                "del_ok": [np.zeros(len(keys_arr), dtype=bool)],
-            })
-
-        merged = (
-            deletes.select(key_col)
-            .withColumn("__shard", shard_expr(key_col, self.num_shards))
-            .groupBy("__shard")
-            .cogroup(self.shards.groupBy(F.col("shard_id").alias("__shard")))
-            .applyInPandas(apply_delete, schema=schema)
-            .persist()
-        )
-        results = merged.select(
-            F.explode(F.arrays_zip("del_keys", "del_ok")).alias("z")
-        ).select(
-            F.col("z.del_keys").alias(key_col), F.col("z.del_ok").alias("ok")
-        )
-        new_shards = merged.filter(F.col("blob").isNotNull()).select(
-            "shard_id", "blob", "rows", "inserted", "kicks", "failures"
-        )
-        out = ShardedOffsetFilter(new_shards, self.num_shards, key_col)
-        out._delete_src = merged  # release() drops the persisted plan
-        return results, out
-
-    def delete_success_count(self) -> int:
-        """Total successful removals from the delete that produced
-        this filter (scalar ``deleteMany`` return contract — see
-        :meth:`ShardedCuckooFilter.delete_success_count`)."""
-        if getattr(self, "_delete_src", None) is None:
-            raise ValueError("this filter was not produced by delete()")
-        return int(
-            self._delete_src.agg(F.sum("n_ok")).collect()[0][0] or 0
-        )
-
-    def release(self) -> None:
-        """Unpersist the cached delete plan backing this filter (if
-        any)."""
-        src = getattr(self, "_delete_src", None)
-        if src is not None:
-            src.unpersist()
-            self._delete_src = None
-
-    def metrics(self) -> DataFrame:
-        return self.shards.agg(
-            F.sum("rows").alias("rows"),
-            F.sum("inserted").alias("occupied"),
-            F.sum("kicks").alias("kicks"),
-            F.sum("failures").alias("failures"),
-            F.count("*").alias("num_shards"),
-        )

@@ -269,8 +269,6 @@ def stream_apply_ops(
     num_shards: int,
     config=None,
     seq_col: str | None = None,
-    filter_factory=None,
-    filter_cls=None,
 ):
     """Stateful streaming application of a mixed insert/delete op
     stream — the full reference op set (``insertMany`` /
@@ -291,13 +289,12 @@ def stream_apply_ops(
     regardless of partition layout. Consecutive same-op runs are
     applied as one vectorized kernel call either way.
 
-    Any filter exposing the kernel protocol (``insert_many`` /
-    ``delete_many`` / ``to_bytes`` / ``from_bytes``) can hold the
-    state: pass ``filter_factory`` (per-shard constructor, sized by
-    the caller) with ``filter_cls`` — e.g. the Offset-policy
-    ``OffsetCuckooFilter``, giving all three bucket policies the
-    same streaming surface. Defaults to the XOR-policy
-    :class:`~cuckoo_filter_spark.core.cuckoo.CuckooFilter`."""
+    The per-shard state kernel follows ``config.bucket_policy``
+    (``operators.membership.shard_kernel``, as for
+    ``ShardedCuckooFilter``): XOR and AddSub state is a
+    :class:`~cuckoo_filter_spark.core.cuckoo.CuckooFilter`, Offset
+    state an ``OffsetCuckooFilter`` — all three bucket policies share
+    the same streaming surface."""
     import math
 
     import numpy as np
@@ -309,19 +306,14 @@ def stream_apply_ops(
     )
 
     from cuckoo_filter_spark.config import CuckooConfig
-    from cuckoo_filter_spark.core.cuckoo import CuckooFilter
     from cuckoo_filter_spark.hashing import keys_to_unsigned
     from cuckoo_filter_spark.operators.membership import (
-        OVERPROVISION, shard_expr,
+        OVERPROVISION, shard_expr, shard_kernel,
     )
 
     cfg = config or CuckooConfig()
     per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
-    if filter_factory is None:
-        filter_factory = lambda: CuckooFilter(per_shard_cap, cfg)
-        filter_cls = CuckooFilter
-    elif filter_cls is None:
-        raise ValueError("filter_factory requires filter_cls")
+    new_shard, kernel_cls, _ = shard_kernel(cfg)
     out_schema = StructType([
         StructField(key_col, LongType()),
         StructField("op", StringType()),
@@ -346,9 +338,9 @@ def stream_apply_ops(
     def update(key, pdfs, state: GroupState):
         shard_id = int(key[0])
         if state.exists:
-            flt = filter_cls.from_bytes(bytes(state.get[0]))
+            flt = kernel_cls.from_bytes(bytes(state.get[0]))
         else:
-            flt = filter_factory()
+            flt = new_shard(per_shard_cap)
         if seq_col is not None:
             # deterministic total order: gather the shard's batch and
             # sort by the caller's sequence column before applying

@@ -281,7 +281,7 @@ def test_blob_version_guard():
     """Regression (ADVICE r1): v1 blobs were written with the old
     xxhash64+FINGERPRINT_SEED family; probing them with the current
     chained family would yield false negatives, so from_bytes must
-    reject v1. v2 (same family as v3, dense payload) stays readable."""
+    reject v1."""
     f = CuckooFilter(1024, CuckooConfig())
     f.insert_many(rand_keys(500))
     blob = f.to_bytes()
@@ -291,23 +291,17 @@ def test_blob_version_guard():
         CuckooFilter.from_bytes(stale)
 
 
-def test_blob_v2_dense_compat():
-    """A v2 blob (header + dense table, no layout byte) round-trips:
-    the hash family is unchanged, only the v3 layout byte is new."""
+def test_blob_v2_rejected():
+    """Nothing writes v2 blobs (header + dense table, no layout byte)
+    any more, so from_bytes rejects them instead of guessing the
+    payload layout."""
     f = CuckooFilter(1024, CuckooConfig())
-    keys = rand_keys(900)
-    f.insert_many(keys)
+    f.insert_many(rand_keys(900))
     blob = f.to_bytes()
     assert blob[4] == 3
-    if blob[_HEADER_SIZE] == 0:  # dense v3 -> v2 = drop layout byte
-        v2 = blob[:4] + bytes([2]) + blob[5:_HEADER_SIZE] + blob[
-            _HEADER_SIZE + 1:
-        ]
-    else:  # sparse v3: rebuild the dense v2 payload from the table
-        v2 = blob[:4] + bytes([2]) + blob[5:_HEADER_SIZE] + f.buckets.tobytes()
-    g = CuckooFilter.from_bytes(v2)
-    assert g.contains_many(keys).all()
-    assert np.array_equal(g.buckets, f.buckets)
+    v2 = blob[:4] + bytes([2]) + blob[5:_HEADER_SIZE] + f.buckets.tobytes()
+    with pytest.raises(ValueError, match="version"):
+        CuckooFilter.from_bytes(v2)
 
 
 def test_blob_sparse_roundtrip_and_size():

@@ -190,32 +190,6 @@ def test_merged_build_empty_input(spark):
     ).any()
 
 
-def test_delete_broadcast_matches_routed(spark, repo_df):
-    """delete_broadcast (zero-sort, broadcast state) must agree with
-    the cogroup-routed delete: same per-key outcomes, same surviving
-    membership, untouched shards pass through with metrics intact."""
-    sharded = ShardedCuckooFilter.build(repo_df, "key", CAPACITY, 8, CFG).persist()
-    # delete only keys of ~half the shards so some shards are untouched
-    evens = repo_df.filter(F.pmod(F.xxhash64("key"), 4) == 0).select("key")
-    n_even = evens.count()
-    odds = repo_df.join(evens, "key", "left_anti").select("key")
-
-    r1, f1 = sharded.delete(evens)
-    r2, f2 = sharded.delete_broadcast(evens)
-    assert f2.shard_num_buckets == sharded.shard_num_buckets
-    ok1 = {(r.key, r.ok) for r in r1.collect()}
-    ok2 = {(r.key, r.ok) for r in r2.collect()}
-    assert ok1 == ok2 and len(ok2) == n_even
-    assert f1.total_occupied() == f2.total_occupied()
-    m2 = f2.metrics().collect()[0]
-    assert m2["num_shards"] == 8 and m2["rows"] == repo_df.count()
-    # surviving keys all still found through the new filter
-    still = f2.contains(odds)
-    assert still.filter(~F.col("member")).count() == 0
-    f1.release()
-    f2.release()
-
-
 def test_delete_scalar_mode(spark, repo_df):
     """per_key=False must produce the same new filter and success
     count as the default mode, without per-key result columns (the
@@ -233,23 +207,6 @@ def test_delete_scalar_mode(spark, repo_df):
     assert r1.filter(F.col("ok")).count() == n
     f1.release()
     f2.release()
-
-
-def test_delete_broadcast_state_cached(spark, repo_df):
-    """Two delete_broadcast calls against the SAME filter snapshot
-    reuse one collected+broadcast state (regression: every call
-    re-collected and re-broadcast the full shard state)."""
-    sharded = ShardedCuckooFilter.build(repo_df, "key", CAPACITY, 8, CFG).persist()
-    evens = repo_df.filter(F.pmod(F.xxhash64("key"), 4) == 0).select("key")
-    odds = repo_df.filter(F.pmod(F.xxhash64("key"), 4) == 1).select("key")
-    r1, f1 = sharded.delete_broadcast(evens)
-    state_after_first = sharded._del_state
-    assert state_after_first is not None
-    r2, f2 = sharded.delete_broadcast(odds)
-    assert sharded._del_state is state_after_first  # no re-broadcast
-    assert r1.count() == evens.count() and r2.count() == odds.count()
-    sharded.release()
-    assert sharded._del_state is None
 
 
 def test_sharded_counts_exact(spark, repo_df):
@@ -296,8 +253,6 @@ def test_broadcast_guard_raises_and_falls_back(spark, repo_df):
         sharded.contains_broadcast(probes)
     with pytest.raises(ValueError, match="broadcast guard"):
         sharded.contains_sql(probes)
-    with pytest.raises(ValueError, match="broadcast guard"):
-        sharded.delete_broadcast(probes)
 
     object.__setattr__(sharded, "on_oversize_broadcast", "fallback")
     with warnings.catch_warnings(record=True) as w:
@@ -308,8 +263,6 @@ def test_broadcast_guard_raises_and_falls_back(spark, repo_df):
         }
         assert any("broadcast guard" in str(x.message) for x in w)
     assert got == want
-    res, _ = sharded.delete_broadcast(probes.limit(50))
-    assert res.filter(F.col("ok")).count() == 50
 
 
 def test_routed_chunked_output_rows(spark, repo_df, monkeypatch):
@@ -340,3 +293,50 @@ def test_routed_chunked_output_rows(spark, repo_df, monkeypatch):
     bcast = sharded.contains_broadcast(mixed, "key").select("key", "member")
     assert routed.exceptAll(bcast).count() == 0
     assert bcast.exceptAll(routed).count() == 0
+
+
+@pytest.mark.parametrize("policy", ["xor", "addsub", "offset"])
+def test_lanes_agree_per_bucket_policy(spark, repo_df, monkeypatch, policy):
+    """Every lane of the sharded filter gives the same answers under
+    each bucket policy: routed and broadcast contains agree per key
+    on mixed positives and negatives (routed output chunked small),
+    both delete modes remove the same keys, a delete that touches
+    only some shards keeps every shard and its rows, and no key that
+    was not deleted goes missing."""
+    from cuckoo_filter_spark.operators import membership as mem
+
+    monkeypatch.setattr(mem, "ROUTED_CHUNK_ROWS", 257)
+    cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy=policy)
+    sharded = ShardedCuckooFilter.build(
+        repo_df, "key", CAPACITY, 8, cfg
+    ).persist()
+    keys = repo_df.select("key")
+    mixed = keys.unionByName(
+        synthetic_repo_files(spark, 5_000, num_partitions=4, seed=4242)
+        .select("key")
+    ).distinct()
+    routed = sharded.contains(mixed).select("key", "member")
+    bcast = sharded.contains_broadcast(mixed, "key").select("key", "member")
+    assert routed.count() == mixed.count()
+    assert routed.exceptAll(bcast).count() == 0
+    assert bcast.exceptAll(routed).count() == 0
+    assert routed.join(keys, "key").filter(~F.col("member")).count() == 0
+
+    # F.xxhash64 is the seed-42 router hash: this keeps shards 0 and 4
+    part = keys.filter(F.pmod(F.xxhash64("key"), 4) == 0)
+    rest = keys.join(part, "key", "left_anti")
+    n_part = part.count()
+    res, by_key = sharded.delete(part)
+    none, scalar = sharded.delete(part, per_key=False)
+    assert none is None
+    assert res.filter(F.col("ok")).count() == n_part
+    assert by_key.delete_success_count() == n_part
+    assert scalar.delete_success_count() == n_part
+    for after in (by_key, scalar):
+        m = after.metrics().collect()[0]
+        assert m["num_shards"] == 8 and m["rows"] == N_ROWS
+        assert m["occupied"] == N_ROWS - n_part
+        assert after.contains(rest).filter(~F.col("member")).count() == 0
+        after.release()
+    sharded.release()
+    sharded.shards.unpersist()

@@ -5,7 +5,11 @@ forward/backward displacement."""
 import numpy as np
 import pytest
 
+from cuckoo_filter_spark.config import CuckooConfig
 from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
+
+OFFSET_CFG = CuckooConfig(bits_per_tag=16, bucket_size=4,
+                          bucket_policy="offset")
 
 
 def _keys(n, seed=42):
@@ -81,6 +85,13 @@ def test_offset_parameter_guards():
         OffsetCuckooFilter(1024, bits_per_tag=32)
     with pytest.raises(ValueError, match="bucket_size"):
         OffsetCuckooFilter(1024, bucket_size=128)
+    with pytest.raises(ValueError, match="bits_per_tag"):
+        CuckooConfig(bits_per_tag=32, bucket_policy="offset")
+    # the XOR/AddSub kernel must not silently run offset addressing
+    from cuckoo_filter_spark.core.cuckoo import CuckooFilter
+
+    with pytest.raises(ValueError, match="offset"):
+        CuckooFilter(1024, OFFSET_CFG)
 
 
 def test_offset_serialization_roundtrip():
@@ -97,6 +108,17 @@ def test_offset_serialization_roundtrip():
     stale = blob[:4] + bytes([1]) + blob[5:]
     with pytest.raises(ValueError, match="version"):
         OffsetCuckooFilter.from_bytes(stale)
+    # corrupt blobs raise even under python -O: a bucket count that
+    # disagrees with the capacity, and a truncated tag payload
+    from cuckoo_filter_spark.core.offset import _HEADER
+
+    hdr = list(_HEADER.unpack_from(blob))
+    hdr[4] += 1  # num_buckets
+    bad_nb = _HEADER.pack(*hdr) + blob[_HEADER.size:]
+    with pytest.raises(ValueError, match="buckets"):
+        OffsetCuckooFilter.from_bytes(bad_nb)
+    with pytest.raises(ValueError, match="tags"):
+        OffsetCuckooFilter.from_bytes(blob[:-2 * flt.bucket_size])
 
 
 def test_sharded_offset_filter_spark(spark):
@@ -105,11 +127,11 @@ def test_sharded_offset_filter_spark(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
     keys = _keys(20_000).view(np.int64)
     df = spark.createDataFrame(pd.DataFrame({"key": keys}))
-    filt = ShardedOffsetFilter.build(df, "key", 30_000, 8)
+    filt = ShardedCuckooFilter.build(df, "key", 30_000, 8, OFFSET_CFG)
     m = filt.metrics().collect()[0]
     assert m["num_shards"] == 8 and m["failures"] == 0
     assert m["occupied"] == len(set(keys.tolist()))
@@ -121,37 +143,9 @@ def test_sharded_offset_filter_spark(spark):
     assert fpr <= 2.5 * (2 * 4 * 1.0 / (1 << 15))
 
 
-def test_sharded_offset_contains_broadcast(spark):
-    """Zero-shuffle broadcast probe parity: same answers as the
-    shard-routed contains on positives (no FN) and negatives (same
-    FP set — identical filters, identical probes)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
-
-    keys = _keys(20_000).view(np.int64)
-    df = spark.createDataFrame(pd.DataFrame({"key": keys}))
-    filt = ShardedOffsetFilter.build(df, "key", 30_000, 8)
-    filt.shards.persist().count()
-    pos = filt.contains_broadcast(df.select("key"))
-    assert pos.filter(~F.col("member")).count() == 0
-    neg_keys = (_keys(20_000, seed=3) | np.uint64(1 << 63)).view(np.int64)
-    neg = spark.createDataFrame(pd.DataFrame({"key": neg_keys}))
-    bc_hits = {
-        r.key for r in
-        filt.contains_broadcast(neg).filter(F.col("member")).collect()
-    }
-    routed_hits = {
-        r.key for r in filt.contains(neg).filter(F.col("member")).collect()
-    }
-    assert bc_hits == routed_hits
-    filt.shards.unpersist()
-
-
 def test_sharded_offset_broadcast_guard(spark):
-    """VERDICT r4 task 1: guard parity with ShardedCuckooFilter —
-    an oversized offset filter must not be silently collected and
+    """VERDICT r4 task 1: guard parity with the XOR policy — an
+    oversized offset filter must not be silently collected and
     broadcast. raise mode errors; fallback mode warns and answers
     bit-identically through the routed lane (per-key join, not just
     aggregate counts)."""
@@ -160,11 +154,11 @@ def test_sharded_offset_broadcast_guard(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
     keys = _keys(20_000).view(np.int64)
     df = spark.createDataFrame(pd.DataFrame({"key": keys}))
-    filt = ShardedOffsetFilter.build(df, "key", 30_000, 8)
+    filt = ShardedCuckooFilter.build(df, "key", 30_000, 8, OFFSET_CFG)
     probes = df.select("key").distinct()
     routed = filt.contains(probes, "routed").persist()
 
@@ -207,14 +201,13 @@ def test_sharded_offset_delete(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
     keys = np.unique(_keys(20_000)).view(np.int64)
     df = spark.createDataFrame(pd.DataFrame({"key": keys}))
-    built = ShardedOffsetFilter.build(df, "key", 30_000, 8)
-    sharded = ShardedOffsetFilter(
-        built.shards.persist(), built.num_shards, built.key_col
-    )
+    sharded = ShardedCuckooFilter.build(
+        df, "key", 30_000, 8, OFFSET_CFG
+    ).persist()
     n = len(keys)
     evens = df.filter(F.pmod(F.col("key"), 2) == 0).select("key")
     odds = df.join(evens, "key", "left_anti").select("key")
@@ -239,11 +232,11 @@ def test_sharded_offset_delete_count_and_release(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.operators.membership import ShardedOffsetFilter
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
     keys = np.unique(_keys(5_000)).view(np.int64)
     df = spark.createDataFrame(pd.DataFrame({"key": keys}))
-    sharded = ShardedOffsetFilter.build(df, "key", 8_000, 4)
+    sharded = ShardedCuckooFilter.build(df, "key", 8_000, 4, OFFSET_CFG)
     evens = df.filter(F.pmod(F.col("key"), 2) == 0).select("key")
     _res, newf = sharded.delete(evens)
     assert newf.delete_success_count() == evens.count()

@@ -50,3 +50,70 @@ def test_plan_has_no_scale_killers(spark, sf_dir, name):
         f"{name}: pandas group-apply fed by a single-partition "
         f"exchange (whole input in one task):\n{m.group(0)}"
     )
+
+
+# ---------------------------------------------------------------------------
+# plan shape of the benchmarked sharded-filter ops
+# ---------------------------------------------------------------------------
+
+
+def _executed_plan(df) -> str:
+    """Physical plan of a not-yet-executed DataFrame (one tree: AQE
+    prints its initial and final plans only after execution)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def shape_filter(spark, tmp_path_factory):
+    from pyspark.sql import functions as F
+
+    from cuckoo_filter_spark.config import CuckooConfig
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
+
+    cfg = CuckooConfig(bits_per_tag=16, bucket_size=4)
+    keys = spark.range(0, 4000).select((F.col("id") * 7919).alias("key"))
+    path = str(tmp_path_factory.mktemp("plan_shape") / "bucketed")
+    ShardedCuckooFilter.write_bucketed_keys(keys, "key", 6000, 4, path, cfg)
+    return keys, path, cfg
+
+
+def _shape_op(spark, shape_filter, op):
+    from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
+
+    keys, path, cfg = shape_filter
+    if op == "build_bucketed":
+        return ShardedCuckooFilter.build_bucketed(
+            spark.read.parquet(path), 6000, 4, cfg, path=path
+        ).shards
+    filt = ShardedCuckooFilter.build(keys, "key", 6000, 4, cfg)
+    if op == "build":
+        return filt.shards
+    if op == "contains_broadcast":
+        return filt.contains_broadcast(keys, "key")
+    if op == "contains":
+        return filt.contains(keys)
+    _, after = filt.delete(keys, per_key=False)
+    return after._delete_src
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["build", "build_bucketed", "contains_broadcast", "contains", "delete"],
+)
+def test_sharded_op_plan_shape(spark, shape_filter, op):
+    """The executed plan of each benchmarked sharded-filter op keeps
+    its shape: the shuffled build is one hash Exchange feeding the
+    Arrow placement stage, the bucketed build and the broadcast probe
+    move no rows, and the routed ops are one co-grouped apply."""
+    plan = _executed_plan(_shape_op(spark, shape_filter, op))
+    if op == "build":
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert re.search(
+            r"MapInArrow[^\n]*\n\s*\+- Exchange hashpartitioning", plan
+        ), plan
+    elif op == "build_bucketed":
+        assert "Exchange" not in plan and "MapInArrow" in plan, plan
+    elif op == "contains_broadcast":
+        assert "Exchange" not in plan and "ArrowEvalPython" in plan, plan
+    else:
+        assert plan.count("FlatMapCoGroupsInPandas") == 1, plan

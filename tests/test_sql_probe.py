@@ -82,8 +82,8 @@ def test_contains_sql_merged(spark, keys_df):
 
 def test_packed_build_matches_key_build(spark, keys_df):
     df, keys = keys_df
-    a = ShardedCuckooFilter.build(df, "key", 6000, 8, CFG, jvm_pack=True)
-    b = ShardedCuckooFilter.build(df, "key", 6000, 8, CFG, jvm_pack=False)
+    a = ShardedCuckooFilter.build(df, "key", 6000, 8, CFG)
+    b = ShardedCuckooFilter._build_keys(df, "key", 6000, 8, CFG)
     blobs_a = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
                for r in a.shards.collect()}
     blobs_b = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
@@ -158,10 +158,8 @@ def test_packed_build_matches_key_build_addsub(spark, keys_df):
     (nb/2) in codegen (bucket_policies.cuh:126-143), alt bucket
     resolved numpy-side — bit-identical to the key-shipping build."""
     df, keys = keys_df
-    a = ShardedCuckooFilter.build(df, "key", 6000, 8, ADDSUB_CFG,
-                                  jvm_pack=True)
-    b = ShardedCuckooFilter.build(df, "key", 6000, 8, ADDSUB_CFG,
-                                  jvm_pack=False)
+    a = ShardedCuckooFilter.build(df, "key", 6000, 8, ADDSUB_CFG)
+    b = ShardedCuckooFilter._build_keys(df, "key", 6000, 8, ADDSUB_CFG)
     blobs_a = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
                for r in a.shards.collect()}
     blobs_b = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)

@@ -205,9 +205,7 @@ def test_stream_apply_ops_offset_policy(spark, tmp_path):
     """All three bucket policies share the streaming op-stream
     surface: the same mixed insert/delete run as
     test_stream_apply_ops, with OffsetCuckooFilter state (choice-bit
-    fingerprints, non-pow2 bucket counts) via filter_factory."""
-    from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
-
+    fingerprints, non-pow2 bucket counts) chosen by the config."""
     src_dir = str(tmp_path / "offsetopsrc")
     (
         spark.range(0, 1000)
@@ -225,9 +223,7 @@ def test_stream_apply_ops_offset_policy(spark, tmp_path):
         .parquet(src_dir + "/*")
     )
     out = sm.stream_apply_ops(
-        stream, "key", "op", 4096, 4,
-        filter_factory=lambda: OffsetCuckooFilter(1100),
-        filter_cls=OffsetCuckooFilter,
+        stream, "key", "op", 4096, 4, CuckooConfig(bucket_policy="offset"),
     )
     q = (
         out.writeStream.format("memory").queryName("offset_ops_t")
