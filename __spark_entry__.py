@@ -190,16 +190,17 @@ def q_cuckoo_shard_metrics(spark, sf_dir):
 
 
 def q_cuckoo_contains_sql(spark, sf_dir):
-    """Pure-JVM probe: filter as a broadcast words table + codegen
-    bit math (zero Python in the probe). Zero false negatives on all
-    inserted keys; disjoint negatives almost all rejected."""
+    """Broadcast probe of the merged filter, keyed by document: the
+    blob is broadcast once and every task answers its rows with one
+    vectorized ``contains_many`` per Arrow batch. Zero false negatives
+    on all inserted keys; disjoint negatives almost all rejected."""
     docs = _docs(spark, sf_dir)
     n = docs.count()
     filt = DistributedCuckooFilter.build(docs, "key", _capacity(n), CFG)
-    pos = filt.contains_sql(docs.select("doc_id", "key"), "key")
+    pos = filt.contains(docs.select("doc_id", "key"), "key")
     n_neg = 10000
     neg_hits = (
-        filt.contains_sql(_negatives(spark, n_neg), "key")
+        filt.contains(_negatives(spark, n_neg), "key")
         .filter(F.col("member")).count()
     )
     eps = CFG.theoretical_fpr(filt.filter.occupied / filt.filter.slot_capacity)
@@ -254,14 +255,15 @@ def q_offset_policy_contains(spark, sf_dir):
 def q_addsub_policy_contains(spark, sf_dir):
     """AddSubAltBucketPolicy (two-block displacement, non-pow2 even
     bucket counts, bucket_policies.cuh:96-182): JVM-packed sharded
-    build + pure-SQL stacked-words probe — the whole policy's hash
-    chain, including the unsigned-64 displacement mod, runs in
-    whole-stage codegen."""
+    build + shard-routed probe. Both ship the packed candidates, so
+    the policy's hash chain, including the unsigned-64 displacement
+    mod, runs in whole-stage codegen and the shard kernels only
+    place and probe."""
     docs = _docs(spark, sf_dir)
     n = docs.count()
     cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy="addsub")
     filt = ShardedCuckooFilter.build(docs, "key", _capacity(n), 8, cfg)
-    out = filt.contains_sql(docs.select("key").distinct())
+    out = filt.contains(docs.select("key").distinct())
     return out.join(docs.select("doc_id", "key"), "key").select(
         "doc_id", "member"
     )
@@ -995,8 +997,9 @@ def q_events_json_extract(spark, sf_dir):
 def q_bloom_semijoin_orders(spark, sf_dir):
     """Cuckoo/Bloom as approximate semi-join pre-filter, then exact
     verification — the reference's membership-sketch use-case
-    expressed relationally (SURVEY §2.7). Result is exactly the
-    true semi-join because candidates are verified."""
+    expressed relationally (SURVEY §2.7). The pre-filter is the
+    merged filter's broadcast probe over the orders; the result is
+    exactly the true semi-join because candidates are verified."""
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     seg = cust.filter(F.col("c_nationkey") < 10)
@@ -1004,7 +1007,7 @@ def q_bloom_semijoin_orders(spark, sf_dir):
     filt = DistributedCuckooFilter.build(
         seg.select(F.col("c_custkey").alias("key")), "key", _capacity(n_seg), CFG
     )
-    pre = filt.contains_sql(
+    pre = filt.contains(
         orders.select("o_orderkey", F.col("o_custkey").alias("key")), "key"
     ).filter(F.col("member"))
     verified = pre.join(

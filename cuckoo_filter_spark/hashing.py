@@ -129,8 +129,8 @@ def chained_hash(keys: np.ndarray, salt: int) -> np.ndarray:
     """The library's fingerprint-family hash:
     ``XXH64(salt, seed=XXH64(key, 42))`` — exactly Spark's
     ``F.xxhash64(key_col, F.lit(salt).cast('long'))``, so the same
-    value is computable JVM-side in whole-stage codegen (pure-SQL
-    probes, build-side packing) and numpy-side (the kernel),
+    value is computable JVM-side in whole-stage codegen (packed
+    builds and routed ops) and numpy-side (the kernel),
     bit-for-bit."""
     return xxhash64_const_vseed(salt, xxhash64_u64(keys, seed=42))
 
@@ -192,8 +192,7 @@ def candidate_exprs(
     (``bucket_policies.cuh:45-74`` for XOR, ``:126-143`` for
     AddSub), expressed as whole-stage-codegen JVM expressions via
     the chained hash family. Bit-exact with the kernel (verified in
-    tests), which is what makes pure-SQL probes against
-    python-built filters possible.
+    tests).
 
     AddSub's displacement is an unsigned 64-bit mod of a non-pow2
     block count; signed pmod is wrong there, so it is computed via a

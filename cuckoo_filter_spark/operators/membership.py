@@ -52,7 +52,7 @@ from pyspark.sql.types import (
 
 from cuckoo_filter_spark.config import CuckooConfig
 from cuckoo_filter_spark.core.cuckoo import CuckooFilter
-from cuckoo_filter_spark.hashing import candidate_exprs, keys_to_unsigned
+from cuckoo_filter_spark.hashing import keys_to_unsigned
 
 #: per-shard capacity slack for hash imbalance, as in the reference
 #: multi-GPU layer (``CuckooFilterMultiGPU.cuh:337``).
@@ -234,75 +234,6 @@ def _packed_keys(
     )
 
 
-def _words_frame(
-    spark: SparkSession, buckets: np.ndarray, bits_per_tag: int
-) -> tuple[DataFrame, int]:
-    """The filter's bucket array as a (bid, w0..w{k-1}) DataFrame of
-    64-bit words — the filter *as a broadcast dimension table*, so a
-    membership probe becomes a broadcast hash join + bit math in
-    whole-stage codegen (no Python, no shuffle)."""
-    b = buckets.shape[1]
-    if (b * bits_per_tag) % 64 != 0:
-        raise NotImplementedError(
-            "SQL probe requires word-aligned buckets (b*f % 64 == 0)"
-        )
-    wpb = (b * bits_per_tag) // 64
-    words = buckets.view(np.uint64).reshape(-1, wpb).view(np.int64)
-    pdf = pd.DataFrame({"bid": np.arange(len(words), dtype=np.int64)})
-    for j in range(wpb):
-        pdf[f"w{j}"] = words[:, j]
-    return spark.createDataFrame(pdf), wpb
-
-
-def _lane_match(wcol, fp_col, bits_per_tag: int):
-    """OR of per-lane tag equality on one 64-bit bucket word — the
-    SQL form of the SWAR probe (``helpers.cuh:78-151``), unrolled to
-    comparisons so long arithmetic never overflows under ANSI mode."""
-    lanes = 64 // bits_per_tag
-    tag_mask = (1 << bits_per_tag) - 1
-    cond = None
-    for lane in range(lanes):
-        c = (
-            F.shiftrightunsigned(wcol, lane * bits_per_tag)
-            .bitwiseAND(F.lit(tag_mask)) == fp_col
-        )
-        cond = c if cond is None else (cond | c)
-    return cond
-
-
-def _sql_probe(
-    queries: DataFrame, words: DataFrame, wpb: int, b1, b2, fp,
-    bits_per_tag: int, out_col: str,
-) -> DataFrame:
-    """Two broadcast hash joins of the probe set against the
-    filter-words dimension (primary + alternate bucket), then lane
-    matching — fully JVM-side."""
-    p = (
-        queries.withColumn("__fp", fp)
-        .withColumn("__b1", b1)
-        .withColumn("__b2", b2)
-    )
-    w1 = words.select(
-        F.col("bid").alias("__b1"),
-        *[F.col(f"w{j}").alias(f"__x{j}") for j in range(wpb)],
-    )
-    w2 = words.select(
-        F.col("bid").alias("__b2"),
-        *[F.col(f"w{j}").alias(f"__y{j}") for j in range(wpb)],
-    )
-    j = p.join(F.broadcast(w1), "__b1", "left").join(
-        F.broadcast(w2), "__b2", "left"
-    )
-    cond = None
-    for jcol in [f"__x{k}" for k in range(wpb)] + [f"__y{k}" for k in range(wpb)]:
-        c = _lane_match(F.col(jcol), F.col("__fp"), bits_per_tag)
-        cond = c if cond is None else (cond | c)
-    return j.withColumn(out_col, F.coalesce(cond, F.lit(False))).drop(
-        "__fp", "__b1", "__b2",
-        *[f"__x{k}" for k in range(wpb)], *[f"__y{k}" for k in range(wpb)],
-    )
-
-
 # ---------------------------------------------------------------------------
 # merged mode
 # ---------------------------------------------------------------------------
@@ -314,7 +245,6 @@ class DistributedCuckooFilter:
     def __init__(self, filter_: CuckooFilter):
         self.filter = filter_
         self._bc = None
-        self._words = None  # cached (words DataFrame, wpb) for SQL probe
 
     # -- build ----------------------------------------------------------
 
@@ -375,28 +305,6 @@ class DistributedCuckooFilter:
     def contains(self, df: DataFrame, key_col: str, out_col: str = "member") -> DataFrame:
         spark = df.sparkSession
         return df.withColumn(out_col, self.contains_udf(spark)(F.col(key_col)))
-
-    def contains_sql(
-        self, df: DataFrame, key_col: str, out_col: str = "member"
-    ) -> DataFrame:
-        """Pure-JVM membership: the filter is shipped as a broadcast
-        (bid, words) dimension table and probed with two broadcast
-        hash joins + codegen'd bit math — zero Python in the probe
-        path (the fingerprint family is the JVM-parity chained hash,
-        see ``hashing.chained_hash``)."""
-        spark = df.sparkSession
-        if self._words is None:
-            self._words = _words_frame(
-                spark, self.filter.buckets, self.config.bits_per_tag
-            )
-        words, wpb = self._words
-        fp, i1, i2 = candidate_exprs(
-            key_col, self.filter.num_buckets, self.config.bits_per_tag,
-            self.config.bucket_policy,
-        )
-        return _sql_probe(
-            df, words, wpb, i1, i2, fp, self.config.bits_per_tag, out_col
-        )
 
     @property
     def config(self) -> CuckooConfig:
@@ -543,7 +451,6 @@ class ShardedCuckooFilter:
     #: "fallback" (default) routes the op instead; "raise" errors.
     on_oversize_broadcast: str = "fallback"
     _bcast: object = None    # cached (broadcast, probe UDF)
-    _words: object = None    # cached (words DF, wpb, nb) for SQL probe
     _blob_bytes: object = None  # cached total blob bytes (size guard)
 
     @staticmethod
@@ -1028,39 +935,6 @@ class ShardedCuckooFilter:
                 )
             self._bcast = (bc, member)
         return queries.withColumn(out_col, self._bcast[1](F.col(key_col)))
-
-    def contains_sql(
-        self, queries: DataFrame, key_col: str | None = None,
-        out_col: str = "member",
-    ) -> DataFrame:
-        """Pure-JVM membership against the stacked shard words table:
-        bucket id = shard * nb + i1 (shard from the seed-42 router,
-        candidates from the chained family — all codegen
-        expressions), probed with two broadcast hash joins. Zero
-        Python and zero shuffle in the probe path."""
-        if self.config.bucket_policy not in ("xor", "addsub"):
-            raise NotImplementedError(
-                "SQL probe implements XOR/AddSub addressing"
-            )
-        key_col = key_col or self.key_col
-        if self._words is None and not self._broadcast_guard("contains_sql"):
-            return self._routed_with_columns(queries, key_col, out_col)
-        spark = queries.sparkSession
-        if self._words is None:
-            big = self._stacked_buckets()
-            self._words = (
-                *_words_frame(spark, big, self.config.bits_per_tag),
-                len(big) // self.num_shards,
-            )
-        words, wpb, nb = self._words
-        fp, i1, i2 = candidate_exprs(
-            key_col, nb, self.config.bits_per_tag, self.config.bucket_policy
-        )
-        base = shard_expr(key_col, self.num_shards) * nb
-        return _sql_probe(
-            queries, words, wpb, base + i1, base + i2, fp,
-            self.config.bits_per_tag, out_col,
-        )
 
     def delete(
         self, deletes: DataFrame, per_key: bool = True

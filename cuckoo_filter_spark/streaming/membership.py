@@ -275,7 +275,9 @@ def stream_apply_ops(
     ``deleteMany``, multiset semantics) against long-lived sharded
     filter state (``applyInPandasWithState``). Input rows are
     ``(key, op)`` with op in {'insert','delete'}; output is
-    ``(key, op, shard, ok)``.
+    ``(key, op, shard, ok)``. A row whose op is anything else
+    (another case, a typo, null) leaves the filter untouched and
+    comes back ``ok = false``.
 
     Ordering: ops for one shard are applied in the order they are
     DELIVERED to the state function. When a micro-batch's ops for
@@ -331,7 +333,7 @@ def stream_apply_ops(
             seg = keys[b0:b1]
             if ops[b0] == "insert":
                 ok[b0:b1] = flt.insert_many(seg)
-            else:
+            elif ops[b0] == "delete":
                 ok[b0:b1] = flt.delete_many(seg)
         return ok
 

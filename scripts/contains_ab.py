@@ -1,4 +1,4 @@
-"""Same-phase interleaved A/B of the batched-contains lanes.
+"""Same-phase interleaved A/B of probe-table reads for `contains_broadcast`.
 
 Round-3 VERDICT flagged a possible ~20-25% probe-path regression
 (round-1 code hit 26.1M probes/s in-phase vs HEAD best-of-3 20.9M).
@@ -15,7 +15,6 @@ Variants:
   matched   — read_matched_splits(probes)  (HEAD bench behavior)
   default   — default 128MB/4MB split confs (round-1 bench behavior)
   matched2x — matched splits at 2x parallelism (finer waves)
-  sql       — pure-JVM contains_sql lane over the matched read
 
 Usage: python scripts/contains_ab.py [reps]
 """
@@ -99,17 +98,14 @@ def main():
         "matched2x": lambda: read_matched_splits(
             spark, probes_path, target_splits=2 * cpus
         ),
-        "sql": lambda: read_matched_splits(spark, probes_path),
     }
 
-    # warm each lane's instance caches (stacked broadcast / words DF)
-    # once, outside the timed reps — steady-state serving is what the
-    # reference benchmark times (the filter is built once, queried
-    # repeatedly)
+    # warm the stacked-broadcast cache once, outside the timed reps —
+    # steady-state serving is what the reference benchmark times (the
+    # filter is built once, queried repeatedly)
     probes0 = read_matched_splits(spark, probes_path)
     n_probes = probes0.count()
     filt.contains_broadcast(probes0.limit(1000), "key").count()
-    filt.contains_sql(probes0.limit(1000), "key").count()
 
     times: dict[str, list] = {k: [] for k in variants}
     splits: dict[str, int] = {}
@@ -119,11 +115,7 @@ def main():
             df = reader()
             splits[name] = df.rdd.getNumPartitions()
             t0 = time.time()
-            if name == "sql":
-                res = filt.contains_sql(df, "key")
-            else:
-                res = filt.contains_broadcast(df, "key")
-            res.filter(F.col("member")).count()
+            filt.contains_broadcast(df, "key").filter(F.col("member")).count()
             times[name].append(round(time.time() - t0, 3))
 
     out = {}

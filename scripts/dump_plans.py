@@ -80,16 +80,6 @@ def main():
         cap_explain(probe),
     ))
 
-    sqlp = filt.contains_sql(keys)
-    sections.append((
-        "Pure-SQL contains: two BroadcastHashJoins against the "
-        "filter-as-words dimension + per-lane bit math — all inside "
-        "WholeStageCodegen, zero Python. Look for: "
-        "`BroadcastHashJoin ... BuildRight`, `ReusedExchange` for "
-        "the second probe side.",
-        cap_explain(sqlp),
-    ))
-
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     q1 = (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))

@@ -46,11 +46,18 @@ def test_key_invariant_vs_hashlib(repo_df):
 
 
 def test_merged_zero_false_negatives(spark, repo_df, merged):
-    out = merged.contains(repo_df.select("key"), "key")
-    n_found = out.filter(F.col("member")).count()
-    assert n_found == N_ROWS
-    assert merged.filter.occupied == N_ROWS
-    assert merged.filter.failures == 0
+    # AddSub at a non-pow2 bucket count (7,500) rides the same check
+    addsub = DistributedCuckooFilter.build(
+        repo_df, "key", 30_000,
+        CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy="addsub"),
+    )
+    assert addsub.filter.num_buckets == 7_500
+    for filt in (merged, addsub):
+        out = filt.contains(repo_df.select("key"), "key")
+        n_found = out.filter(F.col("member")).count()
+        assert n_found == N_ROWS
+        assert filt.filter.occupied == N_ROWS
+        assert filt.filter.failures == 0
 
 
 def test_merged_fpr_bound(spark, merged):
@@ -251,8 +258,6 @@ def test_broadcast_guard_raises_and_falls_back(spark, repo_df):
     object.__setattr__(sharded, "on_oversize_broadcast", "raise")
     with pytest.raises(ValueError, match="broadcast guard"):
         sharded.contains_broadcast(probes)
-    with pytest.raises(ValueError, match="broadcast guard"):
-        sharded.contains_sql(probes)
 
     object.__setattr__(sharded, "on_oversize_broadcast", "fallback")
     with warnings.catch_warnings(record=True) as w:

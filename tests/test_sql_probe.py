@@ -1,5 +1,5 @@
-"""JVM↔numpy parity of the chained hash family and the pure-SQL
-membership probe (filter-as-broadcast-dimension + codegen bit math).
+"""JVM↔numpy parity of the chained hash family, and the JVM-packed
+builds and routed ops that rest on it.
 
 The whole design rests on bit-exactness between
 ``hashing.chained_hash`` (numpy) and ``F.xxhash64(col, lit(salt))``
@@ -15,11 +15,11 @@ from cuckoo_filter_spark.hashing import (
     candidate_exprs, chained_hash, chained_hash_expr, chained_hash_scalar,
     keys_to_unsigned,
 )
-from cuckoo_filter_spark.operators.membership import (
-    DistributedCuckooFilter, ShardedCuckooFilter,
-)
+from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
 CFG = CuckooConfig(bits_per_tag=16, bucket_size=4)
+ADDSUB_CFG = CuckooConfig(bits_per_tag=16, bucket_size=4,
+                          bucket_policy="addsub")
 
 
 @pytest.fixture(scope="module")
@@ -53,31 +53,25 @@ def test_chained_hash_scalar_matches_vector():
         assert chained_hash_scalar(int(k), DISP_SALT) == int(v)
 
 
-def test_candidate_exprs_match_kernel(spark, keys_df):
+@pytest.mark.parametrize("policy", ["xor", "addsub"])
+def test_candidate_exprs_match_kernel(spark, keys_df, policy):
+    """JVM candidates == numpy kernel candidates per key. AddSub runs
+    at a non-pow2 bucket count (1,500), where its unsigned-64
+    displacement mod is no bit mask."""
     df, keys = keys_df
-    flt = CuckooFilter(4096, CFG)
+    flt = CuckooFilter(6000, CFG if policy == "xor" else ADDSUB_CFG)
+    if policy == "addsub":
+        assert flt.num_buckets == 1500
     i1n, i2n, fpn = flt.candidates(keys_to_unsigned(keys))
-    fp, i1, i2 = candidate_exprs("key", flt.num_buckets, CFG.bits_per_tag)
+    fp, i1, i2 = candidate_exprs(
+        "key", flt.num_buckets, CFG.bits_per_tag, policy
+    )
     rows = df.select(
         "key", fp.alias("fp"), i1.alias("i1"), i2.alias("i2")
     ).collect()
     by_key = {r.key: (r.fp, r.i1, r.i2) for r in rows}
     for k, a, b, c in zip(keys, fpn, i1n, i2n):
         assert by_key[int(k)] == (int(a), int(b), int(c))
-
-
-def test_contains_sql_merged(spark, keys_df):
-    df, keys = keys_df
-    filt = DistributedCuckooFilter.build(df, "key", 6000, CFG)
-    out = filt.contains_sql(df, "key")
-    assert out.filter(~F.col("member")).count() == 0  # zero false negatives
-    # parity with the pandas-UDF broadcast path on mixed probes
-    probes = df.unionByName(
-        spark.range(4096).select((F.col("id") + 2**40).alias("key"))
-    )
-    sql_res = {r.key: r.member for r in filt.contains_sql(probes, "key").collect()}
-    udf_res = {r.key: r.member for r in filt.contains(probes, "key").collect()}
-    assert sql_res == udf_res
 
 
 def test_packed_build_matches_key_build(spark, keys_df):
@@ -89,20 +83,6 @@ def test_packed_build_matches_key_build(spark, keys_df):
     blobs_b = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
                for r in b.shards.collect()}
     assert blobs_a == blobs_b  # bit-identical filters
-
-
-def test_contains_sql_sharded(spark, keys_df):
-    df, keys = keys_df
-    sh = ShardedCuckooFilter.build(df, "key", 6000, 8, CFG).persist()
-    probes = df.unionByName(
-        spark.range(4096).select((F.col("id") + 2**41).alias("key"))
-    )
-    sql_res = {r.key: r.member for r in sh.contains_sql(probes).collect()}
-    bc_res = {
-        r.key: r.member for r in sh.contains_broadcast(probes, "key").collect()
-    }
-    assert sql_res == bc_res
-    assert all(sql_res[int(k)] for k in keys)  # zero false negatives
 
 
 def test_bucketed_build_matches(spark, keys_df, tmp_path):
@@ -149,10 +129,6 @@ def test_read_bucketed_keys_split_parallelism(spark, keys_df, tmp_path):
         spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
 
 
-ADDSUB_CFG = CuckooConfig(bits_per_tag=16, bucket_size=4,
-                          bucket_policy="addsub")
-
-
 def test_packed_build_matches_key_build_addsub(spark, keys_df):
     """AddSub policy through the JVM-packed lane: i1 = low-32 %
     (nb/2) in codegen (bucket_policies.cuh:126-143), alt bucket
@@ -187,29 +163,6 @@ def test_addsub_routed_contains_delete_packed_lane(spark, keys_df):
     after = {r.key: r.member for r in sh2.contains(df).collect()}
     kept = keys[len(keys) // 2:]
     assert all(after[int(k)] for k in kept)
-
-
-def test_contains_sql_addsub_parity(spark, keys_df):
-    """AddSub addressing fully in codegen: unsigned-64 displacement
-    via hi/lo split, add/cross vs subtract/return blocks — parity
-    with the numpy broadcast probe on mixed positives/negatives."""
-    df, keys = keys_df
-    filt = DistributedCuckooFilter.build(df, "key", 6000, ADDSUB_CFG)
-    probes = df.unionByName(
-        spark.range(4096).select((F.col("id") + 2**44).alias("key"))
-    )
-    sql_res = {r.key: r.member
-               for r in filt.contains_sql(probes, "key").collect()}
-    udf_res = {r.key: r.member
-               for r in filt.contains(probes, "key").collect()}
-    assert sql_res == udf_res
-    assert all(sql_res[int(k)] for k in keys)
-
-    sh = ShardedCuckooFilter.build(df, "key", 6000, 8, ADDSUB_CFG).persist()
-    sh_sql = {r.key: r.member for r in sh.contains_sql(probes).collect()}
-    sh_routed = {r.key: r.member for r in sh.contains(probes).collect()}
-    assert sh_sql == sh_routed
-    assert all(sh_sql[int(k)] for k in keys)
 
 
 def test_bucketed_layout_sidecar_validation(spark, keys_df, tmp_path):

@@ -131,7 +131,10 @@ def test_stream_apply_ops(spark, tmp_path):
     """Mixed insert/delete op stream against stateful sharded
     filters: batch 1 inserts, batch 2 deletes half — deletes
     succeed for inserted keys and the state reflects removals in a
-    later batch (re-inserting a deleted key succeeds)."""
+    later batch (re-inserting a deleted key succeeds). Batch 3 sends
+    unknown ops ("INSERT", "remove", null) for resident keys: each
+    comes back ok = false and leaves the key in the filter, so the
+    "delete" batch 4 for the same keys succeeds."""
     src_dir = str(tmp_path / "opsrc")
     (
         spark.range(0, 1000)
@@ -143,6 +146,18 @@ def test_stream_apply_ops(spark, tmp_path):
         .select(F.col("id").alias("key"), F.lit("delete").alias("op"))
         .write.parquet(src_dir + "/b2")
     )
+    bad_op = (
+        F.when(F.col("id") % 3 == 0, F.lit("INSERT"))
+        .when(F.col("id") % 3 == 1, F.lit("remove"))
+        .otherwise(F.lit(None).cast("string"))
+    )
+    resident = spark.range(500, 530).coalesce(1)
+    resident.select(
+        F.col("id").alias("key"), bad_op.alias("op")
+    ).write.parquet(src_dir + "/b3")
+    resident.select(
+        F.col("id").alias("key"), F.lit("delete").alias("op")
+    ).write.parquet(src_dir + "/b4")
     stream = (
         spark.readStream.schema("key long, op string")
         # one file per micro-batch: inserts land (and are committed
@@ -159,11 +174,14 @@ def test_stream_apply_ops(spark, tmp_path):
     )
     q.awaitTermination(180)
     rows = spark.table("apply_ops_t").collect()
-    assert len(rows) == 1500
+    assert len(rows) == 1560
     ins = [r for r in rows if r.op == "insert"]
     dels = [r for r in rows if r.op == "delete"]
+    bad = [r for r in rows if r.op not in ("insert", "delete")]
     assert len(ins) == 1000 and all(r.ok for r in ins)
-    assert len(dels) == 500 and all(r.ok for r in dels)
+    assert len(bad) == 30 and not any(r.ok for r in bad)
+    assert {r.op for r in bad} == {"INSERT", "remove", None}
+    assert len(dels) == 530 and all(r.ok for r in dels)
 
 
 def test_stream_apply_ops_seq_order(spark, tmp_path):
