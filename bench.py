@@ -12,9 +12,10 @@ queries (TPC-H Q1 ints, HLL distinct, t-digest quantiles, exact
 dedup, token stats, ANN top-k).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_KEYS (default
-2^24 filter slots' worth, ~16M keys; snapped to pow2 geometry
-so true slot load is 0.95).
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
+SPARK_GRAFT_BENCH_KEYS (default 2^24 filter slots' worth, ~16M keys;
+snapped to pow2 geometry so true slot load is 0.95). The driver heap
+is 40% of the host's MemTotal.
 """
 
 import json
@@ -41,30 +42,17 @@ CFG = CuckooConfig(bits_per_tag=16, bucket_size=4)
 TARGET_LOAD = 0.95
 
 
-def prefault_memory(target_gb: int = 12) -> None:
-    """Populate host backing for guest-physical pages before timing.
+def host_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
-    This sandbox serves guest memory lazily from the host: the first
-    touch of a cold region runs at ~10-100 MB/s (measured), then the
-    same physical pages are fast for every process. Touch memory
-    until the observed rate is healthy so the JVM / python workers
-    don't pay that cost inside timed regions."""
-    import numpy as np
 
-    gb = 1 << 30
-    touched = 0
-    budget = time.time() + float(
-        os.environ.get("SPARK_GRAFT_PREFAULT_BUDGET_S", "90")
-    )
-    while touched < target_gb and time.time() < budget:
-        t0 = time.time()
-        a = np.empty(gb, dtype=np.uint8)
-        a[::4096] = 1
-        rate = 1.0 / max(time.time() - t0, 1e-9)  # GB/s
-        del a
-        touched += 1
-        if rate > 2.0 and touched >= 3:
-            break
+def driver_memory() -> str:
+    """Driver heap for local mode (every executor lives in it): 40%
+    of the host's MemTotal, leaving the rest to Python workers."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{max(1, (kb * 2 // 5) >> 20)}g"
 
 
 def build_session(cpus: int) -> SparkSession:
@@ -77,27 +65,16 @@ def build_session(cpus: int) -> SparkSession:
         # a 3s scheduler stall per stage otherwise (cached-block
         # locality preference is meaningless in local mode)
         .config("spark.locality.wait", "0ms")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "262144"),
-        )
+        .config("spark.driver.memory", driver_memory())
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "262144")
         .getOrCreate()
     )
 
 
 def reclaim(spark: SparkSession) -> None:
-    """Return freed pages to the guest pool between reps: JVM GC
-    (drops finished shuffle files via the ContextCleaner) + page
-    cache drop. The sandbox faults NEW guest-physical pages from the
-    host at ~10-100 MB/s, so recycling already-resident pages is the
-    difference between 3 s and 90 s for the same job (measured)."""
-    try:
-        spark.sparkContext._jvm.System.gc()
-        with open("/proc/sys/vm/drop_caches", "w") as f:
-            f.write("1")
-    except Exception:
-        pass
+    """Free the previous rep's memory between reps: a JVM GC also
+    drops finished shuffle files via the ContextCleaner."""
+    spark.sparkContext._jvm.System.gc()
     time.sleep(0.5)
 
 
@@ -155,10 +132,9 @@ def run_bench(spark: SparkSession, sf_dir: str, n_keys: int) -> dict:
     # costs ~7 s against a visibly better best-of sample
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "4"))
 
-    # best-of-reps, as in the reference's google-benchmark repetitions
-    # (benchmark_common.cuh:377-384) — the sandbox has noisy-neighbor
-    # CPU steal and lazily-faulted memory, so min is the honest
-    # steady-state figure
+    # best-of-reps within this run, as in the reference's
+    # google-benchmark repetitions (benchmark_common.cuh:377-384) —
+    # noisy-neighbor CPU steal only ever slows a rep down
     best = None
     filt = None
     for _ in range(reps):
@@ -218,7 +194,7 @@ def run_bench(spark: SparkSession, sf_dir: str, n_keys: int) -> dict:
         .write.mode("overwrite").parquet(probes_path)
     )
     # probes: DEFAULT split confs, not matched splits. Measured
-    # same-phase interleaved A/B (scripts/contains_ab.py, 5 reps):
+    # same-phase interleaved A/B (BENCH/NOTES.md, 5 reps):
     # default sizing yields exactly one split per file (32 splits,
     # best 30.7M probes/s, median 1.12s) while the matched read's
     # bin-packing doubles the split count (64 splits, best 24.3M/s)
@@ -333,12 +309,11 @@ def OVER() -> float:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     n_keys = int(os.environ.get(
         "SPARK_GRAFT_BENCH_KEYS", str(int((1 << 24) * TARGET_LOAD))
     ))
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    prefault_memory(int(os.environ.get("SPARK_GRAFT_PREFAULT_GB", "12")))
     spark = build_session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     try:
@@ -354,6 +329,7 @@ def main():
         "queries": {k: round(v, 3) for k, v in out["timings"].items()},
         "sf": sf,
         "cpus": cpus,
+        "driver_memory": driver_memory(),
         "n_keys": out["n_keys"],
         "inserts_per_sec": round(out["info"]["inserts_per_sec"]),
         "inserts_bucketed_per_sec": round(
@@ -361,12 +337,6 @@ def main():
         ),
         "queries_per_sec": round(out["info"]["queries_per_sec"]),
         "deletes_per_sec": round(out["info"]["deletes_per_sec"]),
-        # delete protocol 2 (round 2): delete EVERY inserted key,
-        # scalar success count (reference benchmark_common.cuh:280).
-        # proto-1 history rows deleted a 50% sample + exploded
-        # per-key results — not rate-comparable, so the history
-        # merge only compares like-for-like (scaling_bench.py)
-        "delete_proto": 2,
         "load_factor": round(out["info"]["load_factor"], 4),
         "insert_success_rate": round(out["info"]["insert_success_rate"], 6),
         "delete_success_rate": round(out["info"]["delete_success_rate"], 6),

@@ -32,11 +32,6 @@ FINGERPRINT_SEED = 0x9747B28C
 FP_SALT = 0xA0761D6478BD642F
 DISP_SALT = 0xE7037ED1A0B428DB
 
-#: Independent seed for shard routing so shard id never correlates
-#: with bucket index / fingerprint bits (SURVEY §2.3: the reference
-#: reuses one hash via ``% numGPUs``; we use a separate seed).
-SHARD_SEED = 0x5BD1E995
-
 
 def next_power_of_two(n: int) -> int:
     """Smallest power of two >= n (reference: ``helpers.cuh:31-45``)."""

@@ -835,6 +835,14 @@ class CuckooFilter:
     #: read.
     BLOB_VERSION = 3
     _LAYOUT_DENSE, _LAYOUT_SPARSE32, _LAYOUT_SPARSE64 = 0, 1, 2
+    #: every blob starts with a fixed-size header
+    HEADER_BYTES = _HEADER.size
+
+    @staticmethod
+    def blob_num_buckets(header: bytes) -> int:
+        """Bucket count of a blob, read from its first
+        :attr:`HEADER_BYTES` alone."""
+        return _HEADER.unpack_from(header)[6]
 
     def to_bytes(self) -> bytes:
         """Serialize, choosing the smaller of the dense table and the

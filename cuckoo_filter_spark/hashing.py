@@ -184,25 +184,20 @@ def keys_to_unsigned(keys_i64: np.ndarray) -> np.ndarray:
     return np.asarray(keys_i64, dtype=np.int64).view(np.uint64)
 
 
-def candidate_exprs(
-    key_col, num_buckets: int, bits_per_tag: int, policy: str = "xor"
-):
-    """Spark Columns (fp, i1, i2) — the same arithmetic
-    ``CuckooFilter.candidates`` runs in numpy
-    (``bucket_policies.cuh:45-74`` for XOR, ``:126-143`` for
-    AddSub), expressed as whole-stage-codegen JVM expressions via
-    the chained hash family. Bit-exact with the kernel (verified in
-    tests).
-
-    AddSub's displacement is an unsigned 64-bit mod of a non-pow2
-    block count; signed pmod is wrong there, so it is computed via a
-    hi/lo 32-bit split (both halves non-negative):
-    ``u % m = (pmod(hi, m) * (2^32 % m) + pmod(lo, m)) % m``.
-    Products stay < 2^62 for block counts up to 2^30 (per-shard
-    bucket counts far beyond any deployment's)."""
+def packed_expr(key_col, num_buckets: int, bits_per_tag: int,
+                policy: str = "xor"):
+    """Spark Column packing ``(i1 << bits_per_tag) | fp`` — the
+    JVM-side analog of the reference's pack kernel
+    (``CuckooFilter.cuh:1185-1207``). ``fp`` and the primary bucket
+    ``i1`` are the same arithmetic ``CuckooFilter.candidates`` runs in
+    numpy (``bucket_policies.cuh:45-74`` for XOR, ``:126-143`` for
+    AddSub), expressed as whole-stage-codegen JVM expressions via the
+    chained hash family — bit-exact with the kernel (verified in
+    tests). Consumed by ``CuckooFilter.insert_packed`` so shard builds
+    ship pre-hashed candidates instead of raw keys."""
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.config import DISP_SALT, FP_SALT
+    from cuckoo_filter_spark.config import FP_SALT
 
     tag_mask = (1 << bits_per_tag) - 1
     h = chained_hash_expr(F.col(key_col) if isinstance(key_col, str) else key_col,
@@ -213,42 +208,9 @@ def candidate_exprs(
     if policy == "addsub":
         # i1 = (h & 0xFFFFFFFF) % (nb/2): the low-32 slice is
         # non-negative, so signed pmod == unsigned mod
-        bpb = num_buckets // 2
-        if bpb >= (1 << 30):
-            raise NotImplementedError(
-                "JVM addsub addressing supports block counts < 2^30"
-            )
-        i1 = F.pmod(h.bitwiseAND(F.lit(0xFFFFFFFF)), F.lit(bpb))
-        hd = chained_hash_expr(fp, DISP_SALT)
-        disp = F.pmod(
-            F.pmod(F.shiftrightunsigned(hd, 32), F.lit(bpb))
-            * F.lit((1 << 32) % bpb)
-            + F.pmod(hd.bitwiseAND(F.lit(0xFFFFFFFF)), F.lit(bpb)),
-            F.lit(bpb),
-        )
-        # block 0 adds and crosses, block 1 subtracts and returns
-        # (bucket_policies.cuh:156-166); pmod absorbs the negative
-        i2 = F.when(
-            i1 < bpb, F.pmod(i1 + disp, F.lit(bpb)) + F.lit(bpb)
-        ).otherwise(F.pmod(i1 - disp, F.lit(bpb)))
-        return fp, i1, i2
-    mask = num_buckets - 1
-    i1 = h.bitwiseAND(F.lit(mask))
-    disp = chained_hash_expr(fp, DISP_SALT).bitwiseAND(F.lit(mask))
-    i2 = i1.bitwiseXOR(disp)
-    return fp, i1, i2
-
-
-def packed_expr(key_col, num_buckets: int, bits_per_tag: int,
-                policy: str = "xor"):
-    """Spark Column packing ``(i1 << bits_per_tag) | fp`` — the
-    JVM-side analog of the reference's pack kernel
-    (``CuckooFilter.cuh:1185-1207``). Consumed by
-    ``CuckooFilter.insert_packed`` so shard builds ship pre-hashed
-    candidates instead of raw keys."""
-    from pyspark.sql import functions as F
-
-    fp, i1, _ = candidate_exprs(key_col, num_buckets, bits_per_tag, policy)
+        i1 = F.pmod(h.bitwiseAND(F.lit(0xFFFFFFFF)), F.lit(num_buckets // 2))
+    else:
+        i1 = h.bitwiseAND(F.lit(num_buckets - 1))
     return F.shiftleft(i1, bits_per_tag).bitwiseOR(fp)
 
 

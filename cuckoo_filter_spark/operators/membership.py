@@ -58,6 +58,13 @@ from cuckoo_filter_spark.hashing import keys_to_unsigned
 #: multi-GPU layer (``CuckooFilterMultiGPU.cuh:337``).
 OVERPROVISION = 1.02
 
+
+def per_shard_capacity(capacity: int, num_shards: int) -> int:
+    """Key capacity of each shard filter of a ``capacity``-key filter
+    split ``num_shards`` ways, with the :data:`OVERPROVISION` slack."""
+    return int(math.ceil(capacity / num_shards * OVERPROVISION))
+
+
 #: routed-lane output rows carry at most this many keys per Arrow
 #: list: one row per shard is fine at 10^5 keys/shard, but at genome
 #: scale (10^7+ keys/shard) a single multi-megaword array row
@@ -442,16 +449,16 @@ class ShardedCuckooFilter:
     #: shard sets.
     shard_num_buckets: Optional[int] = None
     #: broadcast-lane size guard: collecting + broadcasting every
-    #: shard blob only makes sense while the whole filter fits the
-    #: driver and executors comfortably. Past this many blob bytes
-    #: the broadcast lanes fall back to the shard-routed ops (state
-    #: stays on executors) with a warning — or raise, see
-    #: ``on_oversize_broadcast``.
+    #: shard only makes sense while the whole filter fits the driver
+    #: and executors comfortably. Past this many broadcast bytes
+    #: (``_broadcast_bytes``) the broadcast lanes fall back to the
+    #: shard-routed ops (state stays on executors) with a warning —
+    #: or raise, see ``on_oversize_broadcast``.
     max_broadcast_bytes: int = 512 << 20
     #: "fallback" (default) routes the op instead; "raise" errors.
     on_oversize_broadcast: str = "fallback"
     _bcast: object = None    # cached (broadcast, probe UDF)
-    _blob_bytes: object = None  # cached total blob bytes (size guard)
+    _blob_bytes: object = None  # cached total_blob_bytes()
 
     @staticmethod
     def build(
@@ -477,7 +484,7 @@ class ShardedCuckooFilter:
             return ShardedCuckooFilter._build_keys(
                 df, key_col, capacity, num_shards, cfg
             )
-        per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
+        per_shard_cap = per_shard_capacity(capacity, num_shards)
         frame, shard_shift = _packed_keys(
             df, key_col, num_shards, per_shard_cap, cfg
         )
@@ -498,7 +505,7 @@ class ShardedCuckooFilter:
         """Key-shipping build, for any kernel: the Exchange carries
         ONLY the 8-byte key and each shard filter runs ``insert_many``
         on its keys."""
-        per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
+        per_shard_cap = per_shard_capacity(capacity, num_shards)
         new = shard_kernel(cfg).new
 
         def build_shards(batches: "Iterator[pd.DataFrame]"):
@@ -586,7 +593,7 @@ class ShardedCuckooFilter:
         it and raises on any mismatch instead of corrupting.
         """
         cfg = config or CuckooConfig()
-        per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
+        per_shard_cap = per_shard_capacity(capacity, num_shards)
         shard_shift = _packed_shard_shift(per_shard_cap, num_shards, cfg)
         if path is not None:
             from cuckoo_filter_spark.sources.parquet_io import (
@@ -650,7 +657,7 @@ class ShardedCuckooFilter:
         from cuckoo_filter_spark.sources.parquet_io import write_json_sidecar
 
         cfg = config or CuckooConfig()
-        per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
+        per_shard_cap = per_shard_capacity(capacity, num_shards)
         frame, shard_shift = _packed_keys(
             df, key_col, num_shards, per_shard_cap, cfg
         )
@@ -704,29 +711,46 @@ class ShardedCuckooFilter:
             )
         return self._blob_bytes
 
+    def _broadcast_bytes(self) -> int:
+        """Bytes :meth:`contains_broadcast` ships. XOR broadcasts the
+        dense stacked table (:meth:`_stacked_buckets`), which the
+        sparse blobs of lightly loaded shards under-state several
+        times over; the other policies broadcast the blobs."""
+        cfg = self.config
+        if cfg.bucket_policy != "xor":
+            return self.total_blob_bytes()
+        nb = self.shard_num_buckets
+        if nb is None:
+            header = self.shards.select(
+                F.substring("blob", 1, CuckooFilter.HEADER_BYTES)
+            ).first()[0]
+            nb = CuckooFilter.blob_num_buckets(bytes(header))
+        return self.num_shards * nb * cfg.bucket_size * cfg.tag_dtype.itemsize
+
     def _broadcast_guard(self, op: str) -> bool:
         """Broadcast-lane size guard. Collecting + broadcasting every
-        shard blob only makes sense while the whole serialized filter
-        fits the driver and executors comfortably; past
-        ``max_broadcast_bytes`` the caller must take the shard-routed
-        lane instead (state stays on executors). Returns True when
-        the broadcast may proceed — always once a broadcast cache
-        exists (the bytes are already shipped); on oversize either
-        warns and returns False (``on_oversize_broadcast ==
-        "fallback"``) or raises (``"raise"``)."""
+        shard only makes sense while the whole filter fits the driver
+        and executors comfortably; past ``max_broadcast_bytes`` of
+        broadcast state (:meth:`_broadcast_bytes`) the caller must
+        take the shard-routed lane instead (state stays on
+        executors). Returns True when the broadcast may proceed —
+        always once a broadcast cache exists (the bytes are already
+        shipped); on oversize either warns and returns False
+        (``on_oversize_broadcast == "fallback"``) or raises
+        (``"raise"``)."""
         if self._bcast is not None:
             return True
         if not self.shards.is_cached:
-            # the size aggregate materializes the shard state; cache it
-            # so the broadcast collect (or the routed fallback) reads the
-            # built filter instead of rebuilding it
+            # cache the shard state so the broadcast collect (or the
+            # routed fallback) reads the built filter instead of
+            # rebuilding it after the size check
             self.persist()
-        size = self.total_blob_bytes()
+        size = self._broadcast_bytes()
         if size <= self.max_broadcast_bytes:
             return True
         if self.on_oversize_broadcast == "raise":
             raise ValueError(
-                f"{op}: filter state is {size >> 20} MiB serialized, over "
+                f"{op}: filter state is {size >> 20} MiB to broadcast, over "
                 f"the {self.max_broadcast_bytes >> 20} MiB broadcast "
                 "guard — use the shard-routed op (state stays on "
                 "executors), or raise max_broadcast_bytes if the cluster "
@@ -735,7 +759,7 @@ class ShardedCuckooFilter:
         import warnings
 
         warnings.warn(
-            f"{op}: filter state is {size >> 20} MiB serialized, over the "
+            f"{op}: filter state is {size >> 20} MiB to broadcast, over the "
             f"{self.max_broadcast_bytes >> 20} MiB broadcast guard; "
             "falling back to the shard-routed lane (set "
             "on_oversize_broadcast='raise' or raise max_broadcast_bytes "

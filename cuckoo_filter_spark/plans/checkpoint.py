@@ -82,11 +82,8 @@ def build_resumable(
     the filtered input, and the union is re-written.
     """
     cfg = config or CuckooConfig()
-    from cuckoo_filter_spark.operators.membership import OVERPROVISION
-    import math as _math
-    snb = cfg.num_buckets_for(
-        int(_math.ceil(capacity / num_shards * OVERPROVISION))
-    )
+    from cuckoo_filter_spark.operators.membership import per_shard_capacity
+    snb = cfg.num_buckets_for(per_shard_capacity(capacity, num_shards))
     expected = _lineage(num_shards, cfg, input_desc, snb)
     done_df = None
     done_ids: set[int] = set()

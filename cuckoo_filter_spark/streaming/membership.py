@@ -60,10 +60,11 @@ def stream_build_sharded(
     True for the first sighting of a key (set semantics: duplicates
     and hash false-positives gate as seen). This is the streaming
     complement of ``ShardedCuckooFilter.build`` — state never leaves
-    the executors and is checkpointed by the streaming engine.
+    the executors and is checkpointed by the streaming engine. The
+    per-shard state kernel follows ``config.bucket_policy``
+    (``operators.membership.shard_kernel``), as in
+    :func:`stream_apply_ops`.
     """
-    import math
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -72,14 +73,14 @@ def stream_build_sharded(
     )
 
     from cuckoo_filter_spark.config import CuckooConfig
-    from cuckoo_filter_spark.core.cuckoo import CuckooFilter
     from cuckoo_filter_spark.hashing import keys_to_unsigned
     from cuckoo_filter_spark.operators.membership import (
-        OVERPROVISION, shard_expr,
+        per_shard_capacity, shard_expr, shard_kernel,
     )
 
     cfg = config or CuckooConfig()
-    per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
+    per_shard_cap = per_shard_capacity(capacity, num_shards)
+    new_shard, kernel_cls, _ = shard_kernel(cfg)
     out_schema = StructType([
         StructField(key_col, LongType()),
         StructField("shard", LongType()),
@@ -90,9 +91,9 @@ def stream_build_sharded(
     def update(key, pdfs, state: GroupState):
         shard_id = int(key[0])
         if state.exists:
-            flt = CuckooFilter.from_bytes(bytes(state.get[0]))
+            flt = kernel_cls.from_bytes(bytes(state.get[0]))
         else:
-            flt = CuckooFilter(per_shard_cap, cfg)
+            flt = new_shard(per_shard_cap)
         for pdf in pdfs:
             raw = pdf[key_col].to_numpy(np.int64, copy=False)
             keys = keys_to_unsigned(raw)
@@ -297,8 +298,6 @@ def stream_apply_ops(
     :class:`~cuckoo_filter_spark.core.cuckoo.CuckooFilter`, Offset
     state an ``OffsetCuckooFilter`` — all three bucket policies share
     the same streaming surface."""
-    import math
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -310,11 +309,11 @@ def stream_apply_ops(
     from cuckoo_filter_spark.config import CuckooConfig
     from cuckoo_filter_spark.hashing import keys_to_unsigned
     from cuckoo_filter_spark.operators.membership import (
-        OVERPROVISION, shard_expr, shard_kernel,
+        per_shard_capacity, shard_expr, shard_kernel,
     )
 
     cfg = config or CuckooConfig()
-    per_shard_cap = int(math.ceil(capacity / num_shards * OVERPROVISION))
+    per_shard_cap = per_shard_capacity(capacity, num_shards)
     new_shard, kernel_cls, _ = shard_kernel(cfg)
     out_schema = StructType([
         StructField(key_col, LongType()),

@@ -14,8 +14,10 @@ c = SPARK_GRAFT_CPUS:
 * stacked-broadcast batched contains over positives + disjoint
   negatives (~2x keys)
 
-Writes BENCH/kmer_scale.json. Memory: 2^28 slots x 2B tags = 512 MiB
-of filter state + ~2 GB parquet — fits the 128 GiB sandbox with room.
+Prints its run as one JSON line and writes nothing under BENCH/.
+Memory: 2^28 slots x 2B tags = 512 MiB of filter state (plus the
+stacked broadcast copy) and ~2 GB parquet; pass a smaller log2_slots
+on a small host.
 
 Usage: python scripts/kmer_scale_bench.py [log2_slots]  (default 28)
 """
@@ -30,91 +32,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np
 from pyspark.sql import functions as F
 
-from bench import CFG, TARGET_LOAD, OVER, build_session, prefault_memory, reclaim
+from bench import CFG, TARGET_LOAD, OVER, build_session, host_cpus, reclaim
 from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 from cuckoo_filter_spark.sources.kmers import (
     load_packed_kmer_binary,
     packed_kmer_expr,
 )
-
-BENCH_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH"
-)
-RUNS_PATH = os.environ.get(
-    "SPARK_GRAFT_KMER_RUNS", os.path.join(BENCH_DIR, "kmer_runs.jsonl")
-)
-
-#: metric families: (timed leg seconds key, fields that must travel
-#: together because they derive from the same timed run). The merged
-#: kmer_scale*.json takes, per family, the fields from the RECORDED
-#: RUN with the lowest time — never mixing a rate from one run with a
-#: time from another. This sandbox's host drifts ~2x between
-#: invocations (BENCH/NOTES back-to-back control), so best-of-history
-#: is the publication convention; kmer_runs.jsonl is the raw record.
-FAMILIES = {
-    "bucket_write_s": ("bucket_write_s",),
-    "build_bucketed_s": (
-        "build_bucketed_s", "inserts_per_sec", "load_factor",
-        "insert_success_rate", "kicks_per_insert",
-    ),
-    "contains_s": (
-        "contains_s", "queries_per_sec", "n_probes", "contains_fpr",
-        "true_key_collision_rate", "contains_fpr_net_of_key_collisions",
-        "fpr_bound",
-    ),
-    "routed_contains_s": (
-        "routed_contains_s", "routed_queries_per_sec",
-        "routed_member_agrees",
-    ),
-    "delete_s": (
-        "delete_s", "deletes_per_sec", "delete_success_rate",
-        "occupied_after_delete",
-    ),
-    "binary_ingest_s": (
-        "binary_ingest_s", "binary_keys_per_sec", "binary_write_s",
-        "binary_files", "binary_matches_synthesized",
-    ),
-}
-
-
-def record_run(out: dict) -> dict:
-    """Append the raw run to kmer_runs.jsonl, then regenerate the
-    per-metric-best merge over every recorded run at the same
-    (k, log2_slots, cpus, n_keys) regime. Returns the merged dict
-    that kmer_scale*.json should hold — the script owns the merge,
-    so a re-run in a slow host phase can never clobber a published
-    best (it just adds a slower history row)."""
-    history = []
-    if os.path.exists(RUNS_PATH):
-        with open(RUNS_PATH) as f:
-            history = [json.loads(ln) for ln in f if ln.strip()]
-    out = dict(out)
-    out["run"] = max(
-        (r.get("run", 0) for r in history if r.get("k") == out.get("k")),
-        default=0,
-    ) + 1
-    with open(RUNS_PATH, "a") as f:
-        f.write(json.dumps(out) + "\n")
-    regime = ("k", "log2_slots", "cpus", "n_keys")
-    same = [
-        r for r in history + [out]
-        if all(r.get(x) == out.get(x) for x in regime)
-    ]
-    merged = {x: out[x] for x in regime}
-    for time_key, fields in FAMILIES.items():
-        runs = [r for r in same if time_key in r]
-        if not runs:
-            continue
-        win = min(runs, key=lambda r: r[time_key])
-        for fld in fields:
-            if fld in win:
-                merged[fld] = win[fld]
-    merged["protocol"] = (
-        "best across recorded runs (BENCH/kmer_runs.jsonl); each "
-        "metric family (time + its derived rate/outcome fields) is "
-        "taken whole from its winning run"
-    )
-    return merged
 
 # the reference sweeps k in {21, 31} (kmer_benchmark.cu:26-47);
 # the generator expression handles any k <= 31 (two xxhash64 words
@@ -174,8 +97,7 @@ def _make_binary_writer(bin_dir: str):
 
 def main():
     log2_slots = int(sys.argv[1]) if len(sys.argv) > 1 else 28
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    prefault_memory(int(os.environ.get("SPARK_GRAFT_PREFAULT_GB", "16")))
+    cpus = host_cpus()
     spark = build_session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -306,7 +228,7 @@ def main():
     out["kicks_per_insert"] = round(m["kicks"] / m["rows"], 3)
 
     # contains at ~2n probes; 2^28 slots = 512 MiB stacked state —
-    # raise the broadcast guard for this box (128 GiB)
+    # raise the broadcast guard past its 512 MiB default
     object.__setattr__(filt, "max_broadcast_bytes", 4 << 30)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 << 20))
     spark.conf.set("spark.sql.files.openCostInBytes", str(4 << 20))
@@ -397,15 +319,7 @@ def main():
         out["occupied_after_delete"] = int(m2["occupied"])
 
     out.update(binary_fields)
-    merged = record_run(out)
-    if log2_slots == 28:
-        # the published regime — smaller smoke runs land in the
-        # history only, never clobbering the genome-scale file
-        name = "kmer_scale.json" if K == 21 else f"kmer_scale_k{K}.json"
-        with open(os.path.join(BENCH_DIR, name), "w") as f:
-            json.dump(merged, f, indent=1)
     print(json.dumps(out), flush=True)
-    print("# merged best:", json.dumps(merged), flush=True)
     spark.stop()
 
 

@@ -1,30 +1,19 @@
-"""Scaling-efficiency evidence (north_rule: throughput scaling
-efficiency >= 0.8 going from N to 4N parallelism; sandbox protocol =
-same job at two parallelism levels).
+"""Scaling efficiency from one same-invocation N -> 4N pair.
 
-Three layers of evidence, written to BENCH/BASELINE.md:
+The reference sweeps strong and weak scaling in one invocation
+(``benchmark/multi_gpu_scaling_benchmark.cu:15-98``). Host speed
+drifts between invocations, so the two sides of a ratio are run back
+to back here, each a ``bench.py`` subprocess pinned by ``taskset``:
 
-1. **Kernel scaling** (scripts/kernel_scaling.py): the per-executor
-   compute — P independent processes each building/probing a private
-   filter at 0.95 load (the reference's single-GPU items/sec
-   protocol). Shows the software scales; any loss is the machine.
-2. **Spark end-to-end at N=2 → 4N=8 cores** (primary criterion
-   evidence): below this box's shared-memory saturation point, so
-   the distributed pipeline's own scaling is visible.
-3. **Spark end-to-end at N=8 → 4N=32 cores** (context): this
-   single box's memory system saturates near 8 active cores for
-   Arrow/shuffle transport — independent-process microbenches cap at
-   the same aggregate — so this pair reports the machine ceiling,
-   not the software. On a real 1000-executor cluster each executor
-   owns its memory bus, which is the regime layer 1 models.
+* N cores on ``n_keys`` keys;
+* 4N cores on the same keys (strong scaling);
+* 4N cores on 4 x ``n_keys`` keys (weak scaling: same keys per core).
 
-Usage: python scripts/scaling_bench.py [n_keys_base]
-    --merge-only   regenerate BASELINE.md from recorded history
-    --pair-only    run only the c8/c32 strong legs back-to-back
-                   (extra 8→32 same-invocation pairs per unit time)
-    --weak-pair-only  run c2_weak/c8/c8_big_weak/c32 back-to-back
-                   (a 2→8 weak + 8→32 weak + 8→32 strong pair per
-                   invocation, no kernel layer)
+N is the host's CPU count // 4 (1 -> 4 on a 4-core host). Efficiency
+is the 4N rate over 4x the N rate, per op; 1.0 is linear. Prints one
+JSON line and writes nothing.
+
+Usage: python scripts/scaling_bench.py [n_keys]   (default ~1M)
 """
 
 import json
@@ -48,7 +37,8 @@ def run(cpus: int, n_keys: int, reps: int = 4) -> dict:
     # HARD-cap the cpu budget: local[N] only limits Spark task slots,
     # while python workers / JVM service threads would still spread
     # over all machine cores — taskset makes "N executors" honest.
-    cmd = ["taskset", "-c", f"0-{cpus - 1}",
+    cores = sorted(os.sched_getaffinity(0))[:cpus]
+    cmd = ["taskset", "-c", ",".join(map(str, cores)),
            sys.executable, os.path.join(REPO, "bench.py")]
     out = subprocess.run(
         cmd, capture_output=True, text=True, env=env, cwd=REPO, timeout=3600,
@@ -62,516 +52,23 @@ def run(cpus: int, n_keys: int, reps: int = 4) -> dict:
     return json.loads(stdout.splitlines()[-1])
 
 
-def batch_effs(history, small, big, op) -> list[tuple[float, int]]:
-    """All N→4N ratios taken WITHIN one invocation (same ``batch``):
-    both sides sampled in the same machine phase, so the ~2x
-    cross-invocation drift mostly cancels instead of poisoning the
-    ratio (a ratio > 1 means the phase still shifted between the two
-    sides — that is why the median is reported next to the best).
-    For deletes only protocol-matched pairs are compared."""
-    s_recs = {r["batch"]: r for r in history.get(small, [])}
-    b_recs = {r["batch"]: r for r in history.get(big, [])}
-    out = []
-    for batch in s_recs.keys() & b_recs.keys():
-        s, b = s_recs[batch], b_recs[batch]
-        if op == "deletes_per_sec" and (
-            s.get("delete_proto", 1) != b.get("delete_proto", 1)
-        ):
-            continue
-        out.append((b[op] / (4 * s[op]), batch))
-    return sorted(out)
-
-
-def pair_table(runs, history, small, big, label_small, label_big):
-    lines = [
-        f"| op | {label_small} | {label_big} | strong eff "
-        "| same-batch eff best (median) | weak input | weak eff "
-        "| same-batch weak eff best (median) |",
-        "|---|---|---|---|---|---|---|---|",
-    ]
-    effs = {}
-    for op in OPS:
-        s, b = runs[small][op], runs[big][op]
-        w = runs[small + "_weak"][op]
-        strong_eff = b / (4 * s)
-        weak_eff = b / (4 * w)
-        bes = batch_effs(history, small, big, op)
-        if bes:
-            best, bb = bes[-1]
-            med = bes[len(bes) // 2][0]
-            bb_cell = f"{best:.2f} (med {med:.2f}, b{bb})"
-        else:
-            best = med = None
-            bb_cell = "—"
-        # weak pairs taken within one invocation too: the flat
-        # "weak eff" cell divides two cross-invocation bests, which
-        # understates weak scaling whenever the small side's best
-        # landed in a faster host phase than the big side's
-        wbes = batch_effs(history, small + "_weak", big, op)
-        if wbes:
-            wbest, wb = wbes[-1]
-            wmed = wbes[len(wbes) // 2][0]
-            wb_cell = f"{wbest:.2f} (med {wmed:.2f}, b{wb})"
-        else:
-            wbest = wmed = None
-            wb_cell = "—"
-        effs[op] = (round(strong_eff, 3),
-                    round(best, 3) if best is not None else None,
-                    round(med, 3) if med is not None else None,
-                    round(weak_eff, 3),
-                    round(wbest, 3) if wbest is not None else None,
-                    round(wmed, 3) if wmed is not None else None)
-        lines.append(
-            f"| {op} | {s:,} | {b:,} | {strong_eff:.2f} | {bb_cell} "
-            f"| {w:,} | {weak_eff:.2f} | {wb_cell} |"
-        )
-    return lines, effs
-
-
-def kmer_regime_section() -> list[str]:
-    """§3b: genome-regime evidence from the latest
-    scripts/kmer_scale_bench.py run (the reference's n = 2^28 sweep
-    point, benchmark_common.cuh:377-384) — regenerated from
-    BENCH/kmer_scale.json so BASELINE.md rebuilds keep it."""
-    import glob
-    out: list[str] = []
-    for path in sorted(glob.glob(
-            os.path.join(REPO, "BENCH", "kmer_scale*.json"))):
-        d = json.load(open(path))
-        if d.get("log2_slots", 0) < 26:  # smoke runs aren't evidence
-            continue
-        out += _kmer_regime_block(d, os.path.basename(path))
-    return out
-
-
-def _kmer_regime_block(d: dict, fname: str) -> list[str]:
-    fpr_net = d.get("contains_fpr_net_of_key_collisions")
-    bound = d.get("fpr_bound")
-    # an FPR estimate from n_neg negative probes has binomial std
-    # sqrt(p(1-p)/n_neg) — "met" means within 3 sigma of the bound
-    verdict = "?"
-    if fpr_net is not None and bound is not None:
-        n_neg = max(d["n_probes"] - d["n_keys"], 1)
-        sigma = (bound * (1 - bound) / n_neg) ** 0.5
-        if fpr_net <= bound:
-            verdict = "met"
-        elif fpr_net <= bound + 3 * sigma:
-            verdict = (f"met within sampling noise "
-                       f"(+{(fpr_net - bound) / sigma:.1f}σ, "
-                       f"σ={sigma:.2})")
-        else:
-            verdict = "NOT met"
-    return [
-        "",
-        f"## 3b. Genome-regime k-mer workload (k={d['k']}) — the "
-        f"reference's n = 2^{d['log2_slots']} point",
-        "",
-        "The reference's real-data benchmark sweeps 2^24..2^28 keys",
-        "(`benchmark/benchmark_common.cuh:377-384`) with k∈{21,31}",
-        "k-mers from E. coli → human-T2T (`kmer_benchmark.cu:26-47`).",
-        "`scripts/kmer_scale_bench.py` synthesizes distinct packed",
-        f"{d['k']}-mers JVM-side through the same 2-bit pack codegen the",
-        "real ingest uses (`sources/kmers.py`), materializes to",
-        "parquet, then runs the bucketed zero-Exchange build and",
-        f"stacked-broadcast contains at c{d['cpus']} (BENCH/{fname}):",
-        "",
-        "| metric | value |",
-        "|---|---|",
-        f"| keys ({d['k']}-mers) | {d['n_keys']:,} "
-        f"(2^{d['log2_slots']} slots, load {d['load_factor']}) |",
-        f"| one-time bucket shuffle write | {d['bucket_write_s']} s |",
-        f"| build (best of reps) | {d['build_bucketed_s']} s → "
-        f"**{d['inserts_per_sec']:,} inserts/s** |",
-        f"| insert success rate | {d['insert_success_rate']} "
-        f"(kicks/insert {d['kicks_per_insert']}) |",
-        f"| contains, {d['n_probes']:,} probes | {d['contains_s']} s → "
-        f"**{d['queries_per_sec']:,} probes/s** |",
-        f"| measured contains FPR | {d['contains_fpr']} |",
-        f"| − true key collisions (n/4^{d['k']} = "
-        f"{d.get('true_key_collision_rate')})* | **{fpr_net} net** |",
-        f"| FPR bound 2bα/2^f | {bound} — **{verdict}** |",
-        *([
-            f"| routed contains (big-filter lane, one key Exchange + "
-            f"cogroup) | {d['routed_contains_s']} s → "
-            f"**{d['routed_queries_per_sec']:,} probes/s**, answers "
-            f"{'AGREE' if d.get('routed_member_agrees') else 'DISAGREE'}"
-            f" with the broadcast lane |",
-        ] if "routed_contains_s" in d else []),
-        *([
-            f"| delete every key (reference protocol, per_key=False) "
-            f"| {d['delete_s']} s → **{d['deletes_per_sec']:,} "
-            f"deletes/s**, success {d['delete_success_rate']}, "
-            f"occupancy after {d['occupied_after_delete']} |",
-        ] if "delete_s" in d else []),
-        *([
-            f"| binary k-mer ingest (loadKmerFile layout, "
-            f"{d.get('binary_files')} files) | {d['binary_ingest_s']} s → "
-            f"**{d['binary_keys_per_sec']:,} keys/s**, key multiset "
-            f"{'MATCHES' if d.get('binary_matches_synthesized') else 'DIFFERS FROM'}"
-            f" the synthesized parquet (count + xor-of-hashes) |",
-        ] if "binary_ingest_s" in d else []),
-        *([f"", f"_{d['protocol']}._"] if "protocol" in d else []),
-        "",
-        f"*At k={d['k']} the packed key space is 4^{d['k']}, so a",
-        "disjoint-seed negative population truly contains ~n/4^k",
-        "members of the positive set — value collisions, not filter",
-        "errors; the filter's intrinsic FPR is the net figure. 512 MiB",
-        "of filter state streams through the same broadcast-probe lane",
-        "(guard raised for the run).",
-    ]
-
-
-def streaming_section() -> list[str]:
-    """§3c: micro-batch serving throughput from
-    scripts/streaming_bench.py (BENCH/streaming.json — per-family
-    best over BENCH/streaming_runs.jsonl). The streaming operators
-    are the IPC-analog surface (CuckooFilterIPC.cuh:190-445): filter
-    state lives in applyInPandasWithState group state, every
-    micro-batch applies its ops."""
-    path = os.path.join(REPO, "BENCH", "streaming.json")
-    if not os.path.exists(path):
-        return []
-    d = json.load(open(path))
-    total = d["n_batches"] * d["rows_per_batch"]
-    return [
-        "",
-        "## 3c. Streaming serving throughput (IPC-analog surface)",
-        "",
-        "Long-lived sharded filter state in `applyInPandasWithState`",
-        "group state; a file-source stream delivers one micro-batch",
-        "per pre-written file (`maxFilesPerTrigger=1`), drained with",
-        "`trigger(availableNow=True)` into a `foreachBatch` sink that",
-        "verifies per-op success tallies. Sustained = total ops /",
-        "drain wall (includes checkpointing + state serde); best",
-        "batch = the warm steady-state ceiling from the engine's",
-        "progress metrics. `scripts/streaming_bench.py`,",
-        "BENCH/streaming.json:",
-        "",
-        "| metric | value |",
-        "|---|---|",
-        f"| workload | {d['n_batches']} micro-batches × "
-        f"{d['rows_per_batch']:,} rows, {d['num_shards']} shards, "
-        f"c{d['cpus']} |",
-        f"| stream_build_sharded sustained | {d['build_wall_s']} s → "
-        f"**{d['build_ops_per_sec']:,} inserts/s** (best batch "
-        f"{d['build_best_batch_ops_per_sec']:,}/s) |",
-        f"| novelty gating (fresh rate, distinct keys) | "
-        f"{d['build_fresh_rate']} (non-fresh = filter FPs, ~2bα/2^f) |",
-        f"| stream_apply_ops sustained (90/10 insert/delete) | "
-        f"{d['apply_wall_s']} s → **{d['apply_ops_per_sec']:,} ops/s** "
-        f"(best batch {d['apply_best_batch_ops_per_sec']:,}/s) |",
-        f"| insert / delete success | {d['apply_insert_ok_rate']} / "
-        f"{d['apply_delete_ok_rate']} (deletes target keys inserted "
-        f"by the previous micro-batch) |",
-        *([f"", f"_{d['protocol']}._"] if "protocol" in d else []),
-        "",
-        f"Total streamed: {total:,} ops per surface. State stays on",
-        "executors and is engine-checkpointed — on a real cluster the",
-        "same query scales by shard count, and the restart-from-",
-        "checkpoint test (tests/test_streaming.py) pins recovery.",
-    ]
-
-
-HIST_PATH = os.path.join(REPO, "BENCH", "scaling_runs.jsonl")
-KERNEL_PATH = os.path.join(REPO, "BENCH", "kernel_scaling.json")
-KERNEL_HIST = os.path.join(REPO, "BENCH", "kernel_runs.jsonl")
-KOPS = ["inserts_per_sec", "contains_per_sec", "deletes_per_sec"]
-
-
-def kernel_history_tables() -> tuple[list[str], dict]:
-    """Kernel table (element-wise best per proc count across
-    invocations) + efficiencies as the best SAME-invocation ratio
-    (both sides of each N→4N pair measured minutes apart in one run,
-    so cross-invocation machine drift cancels)."""
-    recs = [json.loads(l) for l in open(KERNEL_HIST)]
-    by_batch: dict[int, dict[int, dict]] = {}
-    by_procs: dict[int, list] = {}
-    for r in recs:
-        by_batch.setdefault(r["batch"], {})[r["procs"]] = r
-        by_procs.setdefault(r["procs"], []).append(r)
-    lines = [
-        "| procs | inserts/s | contains/s | deletes/s |",
-        "|---|---|---|---|",
-    ]
-    for procs in sorted(by_procs):
-        cells = [f"{max(r[op] for r in by_procs[procs]):,.0f}"
-                 for op in KOPS]
-        lines.append(f"| {procs} | " + " | ".join(cells) + " |")
-    effs: dict[str, dict[str, str]] = {op: {} for op in KOPS}
-    for lo, hi, tag in ((2, 8, "eff_2_to_8"), (8, 32, "eff_8_to_32")):
-        for op in KOPS:
-            es = sorted(
-                runs[hi][op] / (4 * runs[lo][op])
-                for runs in by_batch.values()
-                if lo in runs and hi in runs
-            )
-            effs[op][tag] = (
-                f"{es[-1]:.2f} (med {es[len(es) // 2]:.2f})"
-                if es else "—"
-            )
-    return lines, effs
-
-
-def append_history(runs: dict) -> None:
-    os.makedirs(os.path.dirname(HIST_PATH), exist_ok=True)
-    stamp = (
-        len(open(HIST_PATH).readlines()) if os.path.exists(HIST_PATH) else 0
-    )
-    with open(HIST_PATH, "a") as f:
-        for key, rec in runs.items():
-            rec = {k: v for k, v in rec.items()
-                   if k not in ("metric", "queries")}
-            f.write(json.dumps({"config": key, "batch": stamp, **rec}) + "\n")
-
-
-def load_history() -> dict:
-    history = {}
-    with open(HIST_PATH) as f:
-        for line in f:
-            rec = json.loads(line)
-            history.setdefault(rec["config"], []).append(rec)
-    return history
-
-
-def merged_history() -> dict:
-    """Per-config element-wise best across all recorded runs.
-
-    This sandbox's absolute throughput drifts up to ~2x between
-    invocations minutes apart (host noisy neighbors + lazily
-    faulted guest memory), which poisons any ratio taken from one
-    sequential sweep. Comparing each config at its own best
-    observed machine state is the same best-of principle the
-    per-run reps already use, extended across invocations. Raw
-    history: BENCH/scaling_runs.jsonl."""
-    history = load_history()
-    runs = {}
-    for key, recs in history.items():
-        merged = dict(recs[-1])
-        # deletes are only rate-comparable within one delete
-        # protocol (proto 2 = reference full-keyset scalar-count;
-        # proto 1 deleted a 50% sample + exploded per-key results)
-        cur_proto = max(r.get("delete_proto", 1) for r in recs)
-        for op in OPS:
-            pool = recs if op != "deletes_per_sec" else [
-                r for r in recs
-                if r.get("delete_proto", 1) == cur_proto
-            ]
-            merged[op] = max(r[op] for r in pool)
-        runs[key] = merged
-    return runs
-
-
 def main():
-    merge_only = "--merge-only" in sys.argv
-    # --pair-only: run ONLY the c8/c32 legs back-to-back (skipping
-    # the kernel layer and the 2-core legs) — the 8→32 same-batch
-    # efficiency is the scarcest pair in history because a full
-    # batch yields one per ~11 min, and back-to-back sampling puts
-    # both sides in the closest possible machine phase. Partial
-    # batches merge safely: merged_history() is per-config best and
-    # batch_effs() intersects batches where both configs exist.
-    pair_only = "--pair-only" in sys.argv
-    # --weak-pair-only: sample the weak pairs (c2_weak/c8 and
-    # c8_big_weak/c32) back-to-back — one invocation yields a 2→8
-    # weak pair, an 8→32 weak pair, and an 8→32 strong pair (c8 and
-    # c32 both run at 16x base) in ~1/3 of a full batch's wall time,
-    # skipping the kernel layer and the 16M-key c2 leg.
-    weak_pair_only = "--weak-pair-only" in sys.argv
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    base = int(args[0]) if args else int((1 << 20) * 0.95)
+    n_keys = int(sys.argv[1]) if len(sys.argv) > 1 else int((1 << 20) * 0.95)
+    n = max(1, len(os.sched_getaffinity(0)) // 4)
     t0 = time.time()
-
-    if pair_only and not merge_only:
-        fresh = {}
-        fresh["c8"] = run(8, base * 16)
-        fresh["c32"] = run(32, base * 16)
-        append_history(fresh)
-
-    if weak_pair_only and not merge_only and not pair_only:
-        fresh = {}
-        fresh["c2_weak"] = run(2, base * 4)
-        fresh["c8"] = run(8, base * 16)
-        fresh["c8_big_weak"] = run(8, base * 4)
-        fresh["c32"] = run(32, base * 16)
-        append_history(fresh)
-
-    if not merge_only and not pair_only and not weak_pair_only:
-        # kernel scaling (layer 1)
-        kout = subprocess.run(
-            [sys.executable,
-             os.path.join(REPO, "scripts", "kernel_scaling.py"), "1000000"],
-            capture_output=True, text=True, cwd=REPO, timeout=1200,
-        )
-        kernel = json.loads(kout.stdout.strip().splitlines()[-1])
-        with open(KERNEL_PATH, "w") as f:
-            json.dump(kernel, f)
-        stamp = (
-            len(open(HIST_PATH).readlines())
-            if os.path.exists(HIST_PATH) else 0
-        )
-        if os.path.exists(KERNEL_HIST):
-            # the spark-history line count alone can repeat when a
-            # previous invocation appended kernel rows but died
-            # before its spark runs — and a stamp collision makes
-            # kernel_history_tables() overwrite one invocation's
-            # rows with another's, corrupting the same-invocation
-            # efficiency pairs. Force uniqueness.
-            stamp = max(
-                stamp,
-                max(
-                    json.loads(ln)["batch"]
-                    for ln in open(KERNEL_HIST) if ln.strip()
-                ) + 1,
-            )
-        with open(KERNEL_HIST, "a") as f:
-            for r in kernel["runs"]:
-                f.write(json.dumps({"batch": stamp, **r}) + "\n")
-
-        # Both pairs run STRONG at 16x base (16M keys): smaller jobs
-        # are dominated by fixed job overhead (measured: bucketed
-        # build at 4M keys showed 0.33 "efficiency" purely from
-        # ~0.5 s of per-job overhead against ~0.5 s of actual work;
-        # at 16M keys the same code measures 0.86). Weak pairs hold
-        # work/core at 2M keys.
-        fresh = {}
-        fresh["c8"] = run(8, base * 16)
-        fresh["c2"] = run(2, base * 16)
-        fresh["c2_weak"] = run(2, base * 4)
-        fresh["c32"] = run(32, base * 16)
-        fresh["c8_big_weak"] = run(8, base * 4)
-        append_history(fresh)
-
-    runs = merged_history()
-    runs["c8_big"] = runs["c8"]
-    history = load_history()
-    history["c8_big"] = history["c8"]
-    klines, keffs = kernel_history_tables()
-    wall = time.time() - t0
-
-    t2, e2 = pair_table(runs, history, "c2", "c8", "local[2] 16M keys",
-                        "local[8] 16M keys")
-    t8, e8 = pair_table(runs, history, "c8_big", "c32", "local[8] 16M keys",
-                        "local[32] 16M keys")
-    t64 = None
-    if "c2_64M" in runs and "c8_64M" in runs:
-        t64 = [
-            "| op | local[2] 64M keys | local[8] 64M keys | strong eff |",
-            "|---|---|---|---|",
-        ]
-        for op in OPS:
-            s_, b_ = runs["c2_64M"][op], runs["c8_64M"][op]
-            t64.append(f"| {op} | {s_:,} | {b_:,} | {b_ / (4 * s_):.2f} |")
-
-    lines = [
-        "# BENCH/BASELINE.md — throughput + scaling evidence",
-        "",
-        "Workload: cuckoo filter f=16, b=4, built to slot load 0.95",
-        "(kicks ~0.9/insert, measured FPR at the 2bα/2^f bound);",
-        "sha256-derived keys from the synthetic Iceberg-shaped repo",
-        "table. All timings best-of-reps with page reclaim between",
-        "reps, and best-of-RUNS across recorded invocations",
-        "(BENCH/scaling_runs.jsonl): this sandbox faults fresh guest",
-        "memory from the host at 10-100 MB/s, absolute throughput",
-        "drifts up to ~2x between invocations minutes apart, and the",
-        "shared memory system saturates near 8 active cores —",
-        "independent identical numpy processes cap at the same",
-        "aggregate, bounding ANY software's 8→32 efficiency.",
-        "Throughput cells are each config's best observed machine",
-        "state; efficiency ratios are additionally reported from the",
-        "best SAME-invocation pair (both sides minutes apart in one",
-        "run — drift cancels out of the ratio; deletes only compare",
-        "within one delete protocol).",
-        "",
-        "## 1. Kernel scaling — per-executor compute, private filters",
-        "(reference single-GPU protocol, 996,147 keys/proc @0.95 load)",
-        "",
-        *klines,
-        "",
-        "Efficiency N→4N (best same-invocation pair, "
-        "BENCH/kernel_runs.jsonl): inserts 2→8: "
-        f"{keffs['inserts_per_sec']['eff_2_to_8']}, "
-        f"8→32: {keffs['inserts_per_sec']['eff_8_to_32']}; "
-        f"contains 2→8: {keffs['contains_per_sec']['eff_2_to_8']}, "
-        f"8→32: {keffs['contains_per_sec']['eff_8_to_32']}; "
-        f"deletes 2→8: {keffs['deletes_per_sec']['eff_2_to_8']}, "
-        f"8→32: {keffs['deletes_per_sec']['eff_8_to_32']}.",
-        "",
-        "## 2. Spark end-to-end, N=2 → 4N=8 cores (primary evidence)",
-        "",
-        *t2,
-        "",
-        *([
-            "## 2b. Strong 2→8 at 64M keys — the host-fault wall",
-            "",
-            "Strong efficiency at 16M keys is diluted by ~3 s of",
-            "fixed per-job cost against ~15 core-seconds of work",
-            "(fit from the c2/c8 times). Quadrupling the job to",
-            "amortize that instead runs into the OTHER sandbox",
-            "ceiling: fresh guest memory faults from the host at",
-            "10-100 MB/s, and at 64M keys the c8 pipeline's input",
-            "rate (~2.5M rows/s x 16 B = 40 MB/s) sits ON that",
-            "fault bandwidth, so both sides of the pair are",
-            "bandwidth-bound and the ratio compresses. The honest",
-            "per-criterion evidence is therefore: kernel strong",
-            "2→8 AND 8→32 (medians ≥0.83, §1) + Spark WEAK 2→8",
-            "(same-invocation medians in §2's last column — work/core",
-            "held constant, the faithful model of growing a cluster",
-            "with its data). The",
-            "local[2] side additionally pays JVM service threads +",
-            "Python workers out of its 2-core taskset budget,",
-            "overhead a real 2-executor cluster would not bear.",
-            "",
-            *t64,
-            "",
-        ] if t64 else []),
-        "## 3. Spark end-to-end, N=8 → 4N=32 cores (machine-ceiling context)",
-        "",
-        *t8,
-        *kmer_regime_section(),
-        *streaming_section(),
-        "",
-        "## Correctness at every size",
-        "",
-        "| metric | c2 16M | c8 16M | c2 4M weak | c8 4M weak | c32 16M |",
-        "|---|---|---|---|---|---|",
-    ]
-    for metric in ["insert_success_rate", "delete_success_rate",
-                   "contains_fpr", "load_factor"]:
-        lines.append(
-            f"| {metric} | {runs['c2'][metric]} | {runs['c8'][metric]} "
-            f"| {runs['c2_weak'][metric]} | {runs['c8_big_weak'][metric]} "
-            f"| {runs['c32'][metric]} |"
-        )
-    lines += [
-        "",
-        "Raw JSON (c2 / c8 / c2_weak / c8_weak / c32):",
-        "```json",
-        json.dumps(runs["c2"]),
-        json.dumps(runs["c8"]),
-        json.dumps(runs["c2_weak"]),
-        json.dumps(runs["c8_big_weak"]),
-        json.dumps(runs["c32"]),
-        "```",
-        "",
-        "Kernel history: BENCH/kernel_runs.jsonl (per-invocation "
-        "runs; table above is per-proc-count best, efficiencies are "
-        "best same-invocation pairs).",
-        "",
-        ("_Regenerated from history (merge-only); timings are best-of-recorded-runs._"
-         if merge_only else
-         f"_Total scaling-bench wall time: {wall:.0f}s._"),
-    ]
-    notes = os.path.join(REPO, "BENCH", "NOTES.md")
-    if os.path.exists(notes):
-        lines += ["", open(notes).read().rstrip()]
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
+    legs = {
+        f"c{n}": run(n, n_keys),
+        f"c{4 * n}": run(4 * n, n_keys),
+        f"c{4 * n}_weak": run(4 * n, 4 * n_keys),
+    }
+    small, strong, weak = legs.values()
     print(json.dumps({
-        "spark_2_to_8": {k: v for k, v in e2.items()},
-        "spark_8_to_32": {k: v for k, v in e8.items()},
-        "kernel": keffs,
-        "wall_sec": round(wall, 1),
+        "n_cpus": [n, 4 * n],
+        "n_keys": {k: r["n_keys"] for k, r in legs.items()},
+        "rates": {k: {op: r[op] for op in OPS} for k, r in legs.items()},
+        "strong_eff": {op: round(strong[op] / (4 * small[op]), 3) for op in OPS},
+        "weak_eff": {op: round(weak[op] / (4 * small[op]), 3) for op in OPS},
+        "wall_s": round(time.time() - t0, 1),
     }))
 
 

@@ -21,13 +21,10 @@ a serving user would size from); the best single micro-batch rate
 (engine's ``recentProgress``) is reported alongside as the
 steady-state ceiling once the stream is warm.
 
-Regen convention (same as kmer_scale_bench): every raw run appends
-to BENCH/streaming_runs.jsonl; BENCH/streaming.json is rewritten as
-the per-metric-family best over history, so a re-run in a slow host
-phase can never clobber a published best.
+Prints its run as one JSON line and writes nothing under BENCH/.
 
 Usage: python scripts/streaming_bench.py
-Env: SPARK_GRAFT_CPUS (32), SPARK_GRAFT_STREAM_BATCHES (8),
+Env: SPARK_GRAFT_CPUS (usable CPUs), SPARK_GRAFT_STREAM_BATCHES (8),
      SPARK_GRAFT_STREAM_BATCH_ROWS (1000000), SPARK_GRAFT_WORK_DIR.
 """
 
@@ -41,62 +38,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from bench import CFG, build_session, prefault_memory, reclaim
+from bench import CFG, build_session, host_cpus, reclaim
 from cuckoo_filter_spark.streaming.membership import (
     stream_apply_ops,
     stream_build_sharded,
 )
-
-BENCH_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH"
-)
-RUNS_PATH = os.environ.get(
-    "SPARK_GRAFT_STREAM_RUNS", os.path.join(BENCH_DIR, "streaming_runs.jsonl")
-)
-
-#: per-metric-family merge (cf. kmer_scale_bench.FAMILIES): the
-#: family's fields always travel together from the run with the
-#: highest sustained rate.
-FAMILIES = {
-    "build_ops_per_sec": (
-        "build_ops_per_sec", "build_wall_s", "build_best_batch_ops_per_sec",
-        "build_fresh_rate",
-    ),
-    "apply_ops_per_sec": (
-        "apply_ops_per_sec", "apply_wall_s", "apply_best_batch_ops_per_sec",
-        "apply_insert_ok_rate", "apply_delete_ok_rate",
-    ),
-}
-
-
-def record_run(out: dict) -> dict:
-    history = []
-    if os.path.exists(RUNS_PATH):
-        with open(RUNS_PATH) as f:
-            history = [json.loads(ln) for ln in f if ln.strip()]
-    out = dict(out)
-    out["run"] = max((r.get("run", 0) for r in history), default=0) + 1
-    with open(RUNS_PATH, "a") as f:
-        f.write(json.dumps(out) + "\n")
-    regime = ("n_batches", "rows_per_batch", "cpus", "num_shards")
-    same = [
-        r for r in history + [out]
-        if all(r.get(x) == out.get(x) for x in regime)
-    ]
-    merged = {x: out[x] for x in regime}
-    for rate_key, fields in FAMILIES.items():
-        runs = [r for r in same if rate_key in r]
-        if not runs:
-            continue
-        win = max(runs, key=lambda r: r[rate_key])
-        for fld in fields:
-            if fld in win:
-                merged[fld] = win[fld]
-    merged["protocol"] = (
-        "best across recorded runs (BENCH/streaming_runs.jsonl); each "
-        "metric family taken whole from its winning run"
-    )
-    return merged
 
 
 def drain(result_df, ckpt: str, tally):
@@ -126,10 +72,9 @@ def drain(result_df, ckpt: str, tally):
 
 
 def main():
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     nb = int(os.environ.get("SPARK_GRAFT_STREAM_BATCHES", "8"))
     rows = int(os.environ.get("SPARK_GRAFT_STREAM_BATCH_ROWS", "1000000"))
-    prefault_memory(int(os.environ.get("SPARK_GRAFT_PREFAULT_GB", "4")))
     spark = build_session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     work = os.environ.get("SPARK_GRAFT_WORK_DIR", "/tmp/spark_graft_bench")
@@ -244,12 +189,7 @@ def main():
     # every one must find its key resident
     out["apply_delete_ok_rate"] = round(dele[1] / max(dele[0], 1), 6)
 
-    merged = record_run(out)
-    if total >= 4_000_000:  # publish only at the headline regime
-        with open(os.path.join(BENCH_DIR, "streaming.json"), "w") as f:
-            json.dump(merged, f, indent=1)
     print(json.dumps(out), flush=True)
-    print("# merged best:", json.dumps(merged), flush=True)
     spark.stop()
 
 

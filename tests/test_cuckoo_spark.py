@@ -269,6 +269,29 @@ def test_broadcast_guard_raises_and_falls_back(spark, repo_df):
         assert any("broadcast guard" in str(x.message) for x in w)
     assert got == want
 
+    # a lightly loaded filter serializes sparse blobs, but the XOR
+    # lane broadcasts the dense stacked table: the guard must weigh
+    # the table, not the blobs
+    light = ShardedCuckooFilter.build(
+        repo_df.limit(2_000), "key", CAPACITY, 8, CFG
+    ).persist()
+    blob_sum = light.total_blob_bytes()
+    dense = sum(
+        CuckooFilter.from_bytes(bytes(r.blob)).buckets.nbytes
+        for r in light.shards.collect()
+    )
+    assert 2 * blob_sum < dense
+    object.__setattr__(light, "max_broadcast_bytes", (blob_sum + dense) // 2)
+    object.__setattr__(light, "on_oversize_broadcast", "raise")
+    with pytest.raises(ValueError, match="broadcast guard"):
+        light.contains_broadcast(probes)
+    # externally loaded shards carry no bucket count: read it from a blob
+    loaded = ShardedCuckooFilter(light.shards, 8, CFG)
+    object.__setattr__(loaded, "max_broadcast_bytes", (blob_sum + dense) // 2)
+    object.__setattr__(loaded, "on_oversize_broadcast", "raise")
+    with pytest.raises(ValueError, match="broadcast guard"):
+        loaded.contains_broadcast(probes)
+
 
 def test_routed_chunked_output_rows(spark, repo_df, monkeypatch):
     """At genome scale one list row per shard becomes a multi-

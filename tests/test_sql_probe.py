@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from cuckoo_filter_spark.config import DISP_SALT, FP_SALT, CuckooConfig
 from cuckoo_filter_spark.core.cuckoo import CuckooFilter
 from cuckoo_filter_spark.hashing import (
-    candidate_exprs, chained_hash, chained_hash_expr, chained_hash_scalar,
-    keys_to_unsigned,
+    chained_hash, chained_hash_expr, chained_hash_scalar, keys_to_unsigned,
+    packed_expr,
 )
 from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
@@ -54,24 +54,22 @@ def test_chained_hash_scalar_matches_vector():
 
 
 @pytest.mark.parametrize("policy", ["xor", "addsub"])
-def test_candidate_exprs_match_kernel(spark, keys_df, policy):
-    """JVM candidates == numpy kernel candidates per key. AddSub runs
-    at a non-pow2 bucket count (1,500), where its unsigned-64
-    displacement mod is no bit mask."""
+def test_packed_expr_matches_kernel(spark, keys_df, policy):
+    """JVM packed candidates ``(i1 << f) | fp`` == numpy kernel
+    candidates per key. AddSub runs at a non-pow2 bucket count
+    (1,500), where its primary bucket is a mod, not a bit mask."""
     df, keys = keys_df
     flt = CuckooFilter(6000, CFG if policy == "xor" else ADDSUB_CFG)
     if policy == "addsub":
         assert flt.num_buckets == 1500
-    i1n, i2n, fpn = flt.candidates(keys_to_unsigned(keys))
-    fp, i1, i2 = candidate_exprs(
-        "key", flt.num_buckets, CFG.bits_per_tag, policy
-    )
-    rows = df.select(
-        "key", fp.alias("fp"), i1.alias("i1"), i2.alias("i2")
-    ).collect()
-    by_key = {r.key: (r.fp, r.i1, r.i2) for r in rows}
-    for k, a, b, c in zip(keys, fpn, i1n, i2n):
-        assert by_key[int(k)] == (int(a), int(b), int(c))
+    i1n, _, fpn = flt.candidates(keys_to_unsigned(keys))
+    f = CFG.bits_per_tag
+    packed = packed_expr("key", flt.num_buckets, f, policy)
+    by_key = {
+        r.key: r.p for r in df.select("key", packed.alias("p")).collect()
+    }
+    for k, fp, i1 in zip(keys, fpn, i1n):
+        assert by_key[int(k)] == (int(i1) << f) | int(fp)
 
 
 def test_packed_build_matches_key_build(spark, keys_df):

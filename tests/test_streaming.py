@@ -88,10 +88,11 @@ def test_stream_exact_dedup(spark, tmp_path):
     assert set(ks) == set(range(100))
 
 
-def test_stream_build_sharded_stateful(spark, tmp_path):
+@pytest.mark.parametrize("policy", ["xor", "offset"])
+def test_stream_build_sharded_stateful(spark, tmp_path, policy):
     """applyInPandasWithState: per-shard filter state across
     micro-batches; duplicates (within and across batches) gate as
-    not-fresh."""
+    not-fresh. The state kernel follows the config's bucket policy."""
     src_dir = str(tmp_path / "statesrc")
     # batch 1: keys 0..999; batch 2: keys 500..1499 (500 repeats)
     (
@@ -107,15 +108,17 @@ def test_stream_build_sharded_stateful(spark, tmp_path):
         .option("maxFilesPerTrigger", "2")
         .parquet(src_dir + "/*")
     )
-    out = sm.stream_build_sharded(stream, "key", 4096, 4, CFG)
+    cfg = CuckooConfig(16, 4, bucket_policy=policy)
+    out = sm.stream_build_sharded(stream, "key", 4096, 4, cfg)
+    name = f"state_build_{policy}"
     q = (
-        out.writeStream.format("memory").queryName("state_build_t")
+        out.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.awaitTermination(180)
-    rows = spark.table("state_build_t").collect()
+    rows = spark.table(name).collect()
     assert len(rows) == 2000
     fresh = sum(1 for r in rows if r.fresh)
     # 1500 distinct keys; tiny FP slack allowed (fresh undercount)
@@ -644,11 +647,9 @@ def test_stream_apply_ops_concurrent_producers(spark, tmp_path):
 
     # serialized replay: per shard, apply the merged log in seq order
     # against a single-node filter of the same per-shard geometry
-    import math
+    from cuckoo_filter_spark.operators.membership import per_shard_capacity
 
-    from cuckoo_filter_spark.operators.membership import OVERPROVISION
-
-    per_shard_cap = int(math.ceil(8192 / num_shards * OVERPROVISION))
+    per_shard_cap = per_shard_capacity(8192, num_shards)
     merged = pd.concat([a_pdf, b_pdf]).sort_values("seq")
     keys_u = keys_to_unsigned(merged["key"].to_numpy(np.int64))
     shards = xxhash64_u64(keys_u, seed=42).view(np.int64) % num_shards
