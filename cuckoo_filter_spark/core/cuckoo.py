@@ -44,7 +44,7 @@ from typing import Tuple
 import numpy as np
 
 from cuckoo_filter_spark.config import DISP_SALT, EMPTY, FP_SALT, CuckooConfig
-from cuckoo_filter_spark.hashing import chained_hash, chained_hash_scalar, xxhash64_u64
+from cuckoo_filter_spark.hashing import chained_hash
 
 _MAGIC = b"CKFS"
 #: magic, version, bits_per_tag, bucket_size, eviction policy,
@@ -421,30 +421,39 @@ class CuckooFilter:
         self.failures += 1
         return False
 
+    def _key_cand(self, keys: np.ndarray):
+        """``(n, cand)`` for uint64 keys: ``cand(lo, hi)`` hashes one
+        chunk to its (i1, i2, fp)."""
+        keys = np.ascontiguousarray(keys, dtype=np.uint64)
+        return len(keys), lambda lo, hi: self.candidates(keys[lo:hi])
+
+    def _packed_cand(self, packed: np.ndarray):
+        """``(n, cand)`` for JVM-packed ``(i1 << bits_per_tag) | fp``
+        values (the pack-kernel layout of ``insertManySorted``,
+        ``CuckooFilter.cuh:1185-1207``): the hashing already happened
+        in whole-stage codegen, so ``cand(lo, hi)`` only splits the
+        value and derives i2."""
+        packed = np.ascontiguousarray(packed, dtype=np.int64)
+        cfg = self.config
+
+        def cand(lo, hi):
+            pc = packed[lo:hi]
+            fp = (pc & cfg.tag_mask).astype(cfg.tag_dtype)
+            i1 = (pc >> cfg.bits_per_tag).astype(self._index_dtype)
+            return i1, self.alt_bucket(i1, fp), fp
+
+        return len(packed), cand
+
     def insert_many(self, keys: np.ndarray) -> np.ndarray:
         """Batch insert; returns per-key success (multiset semantics —
         duplicates each occupy a slot, ``tests/test_cuckoo_filter.cu:
         147-170``). Mirrors insertMany → insertKernel
         (``CuckooFilter.cuh:457-464,1119-1141``)."""
-        keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        return self._insert_chunked(len(keys), lambda lo, hi: self.candidates(keys[lo:hi]))
+        return self._insert_chunked(*self._key_cand(keys))
 
     def insert_packed(self, packed: np.ndarray) -> np.ndarray:
-        """Insert from JVM-packed ``(i1 << bits_per_tag) | fp`` values
-        (the pack-kernel layout of ``insertManySorted``,
-        ``CuckooFilter.cuh:1185-1207``): the hashing already happened
-        in whole-stage codegen, so the Python side is placement only."""
-        packed = np.ascontiguousarray(packed, dtype=np.int64)
-        f = self.config.bits_per_tag
-        tag_mask = self.config.tag_mask
-
-        def cand(lo, hi):
-            pc = packed[lo:hi]
-            fp = (pc & tag_mask).astype(self.config.tag_dtype)
-            i1 = (pc >> f).astype(self._index_dtype)
-            return i1, self.alt_bucket(i1, fp), fp
-
-        return self._insert_chunked(len(packed), cand)
+        """Insert from JVM-packed values (see :meth:`_packed_cand`)."""
+        return self._insert_chunked(*self._packed_cand(packed))
 
     def _insert_chunked(self, n: int, cand) -> np.ndarray:
         self.inserts += n
@@ -485,34 +494,6 @@ class CuckooFilter:
         ``occupied``/``failures`` metrics."""
         self.insert_many(keys)
 
-    def insert_many_sorted(self, keys: np.ndarray) -> np.ndarray:
-        """Locality-optimized insert: sort the batch by primary bucket
-        before placement (the in-batch analog of insertManySorted's
-        radix sort, ``CuckooFilter.cuh:475-508``). Semantics differ
-        only in intra-batch order, which membership can't observe."""
-        keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        h = chained_hash(keys, FP_SALT)
-        order = np.argsort(h & self._mask, kind="stable")
-        out = np.zeros(len(keys), dtype=bool)
-        out[order] = self.insert_many(keys[order])
-        return out
-
-    #: adaptiveInsert cutoff (reference: 2^29 keys switches to the
-    #: sorted path, benchmark_common.cuh:113-126). MEASURED on CPU
-    #: (BENCH/sorted_vs_unsorted.json): the in-batch sort costs more
-    #: than the locality it buys at every size (0.63-0.81x) — the
-    #: GPU's memory-coalescing win does not transfer to cache-
-    #: hierarchy CPUs with chunked placement, so the adaptive path
-    #: never switches by default.
-    ADAPTIVE_SORT_THRESHOLD = 1 << 62
-
-    def adaptive_insert(self, keys: np.ndarray) -> np.ndarray:
-        """insert_many below the threshold, insert_many_sorted above
-        (adaptiveInsert, ``benchmark_common.cuh:113-126``)."""
-        if len(keys) >= self.ADAPTIVE_SORT_THRESHOLD:
-            return self.insert_many_sorted(keys)
-        return self.insert_many(keys)
-
     # ------------------------------------------------------------------
     # contains
     # ------------------------------------------------------------------
@@ -525,12 +506,17 @@ class CuckooFilter:
         vectorized over the batch — see :func:`probe_rows` — in
         cache-resident chunks.
         """
-        keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        n = len(keys)
+        return self._contains_chunked(*self._key_cand(keys))
+
+    def contains_packed(self, packed: np.ndarray) -> np.ndarray:
+        """Membership from JVM-packed values (see :meth:`_packed_cand`)."""
+        return self._contains_chunked(*self._packed_cand(packed))
+
+    def _contains_chunked(self, n: int, cand) -> np.ndarray:
         out = np.empty(n, dtype=bool)
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
-            i1, i2, fp = self.candidates(keys[lo:hi])
+            i1, i2, fp = cand(lo, hi)
             probe_rows(
                 self.buckets, i1, i2, fp, self.config.bits_per_tag,
                 out=out[lo:hi],
@@ -554,30 +540,19 @@ class CuckooFilter:
         2*bucket_size — size ``bucket_size`` >= half the largest
         expected multiplicity (a GQF counter has no such cap; it
         trades this for approximate membership on deletion)."""
-        keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        n = len(keys)
+        return self._count_chunked(*self._key_cand(keys))
+
+    def count_packed(self, packed: np.ndarray) -> np.ndarray:
+        """Counting query from JVM-packed values (see
+        :meth:`_packed_cand`)."""
+        return self._count_chunked(*self._packed_cand(packed))
+
+    def _count_chunked(self, n: int, cand) -> np.ndarray:
         out = np.zeros(n, dtype=np.int64)
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
-            i1, i2, fp = self.candidates(keys[lo:hi])
+            i1, i2, fp = cand(lo, hi)
             self._count_rows(i1, i2, fp, out[lo:hi])
-        return out
-
-    def count_packed(self, packed_vals: np.ndarray) -> np.ndarray:
-        """Counting query from JVM-packed ``(i1 << bits_per_tag) |
-        fp`` values (hashing stays in codegen; see
-        :meth:`insert_packed`)."""
-        packed_vals = np.ascontiguousarray(packed_vals, dtype=np.int64)
-        f = self.config.bits_per_tag
-        tag_mask = self.config.tag_mask
-        n = len(packed_vals)
-        out = np.zeros(n, dtype=np.int64)
-        for lo in range(0, n, self.CHUNK):
-            pc = packed_vals[lo:min(lo + self.CHUNK, n)]
-            fp = (pc & tag_mask).astype(self.config.tag_dtype)
-            i1 = (pc >> f).astype(self._index_dtype)
-            self._count_rows(i1, self.alt_bucket(i1, fp), fp,
-                             out[lo:lo + len(pc)])
         return out
 
     def _count_rows(
@@ -596,22 +571,6 @@ class CuckooFilter:
     # delete
     # ------------------------------------------------------------------
 
-    def _remove_one(self, bucket: int, fp: int) -> bool:
-        """Remove exactly one instance of fp from bucket, compacting
-        to keep the prefix-fill invariant
-        (tryRemoveAtBucket, ``CuckooFilter.cuh:805-848``)."""
-        f = self.fill[bucket]
-        row = self.buckets[bucket]
-        hits = np.flatnonzero(row[:f] == fp)
-        if hits.size == 0:
-            return False
-        hole = hits[0]
-        last = f - 1
-        row[hole] = row[last]
-        row[last] = EMPTY
-        self.fill[bucket] = last
-        return True
-
     def delete_many(self, keys: np.ndarray) -> np.ndarray:
         """Batch delete with multiset semantics: each successful
         delete removes one stored instance; deleting k duplicates
@@ -627,42 +586,11 @@ class CuckooFilter:
         retire their key immediately. Duplicate deletes consume one
         stored instance per round.
         """
-        keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        return self._delete_chunked(
-            len(keys), lambda lo, hi: self.candidates(keys[lo:hi])
-        )
+        return self._delete_chunked(*self._key_cand(keys))
 
-    def delete_packed(self, packed_vals: np.ndarray) -> np.ndarray:
-        """Delete from JVM-packed ``(i1 << bits_per_tag) | fp`` values
-        (see :meth:`insert_packed`) — hashing stays in codegen."""
-        packed_vals = np.ascontiguousarray(packed_vals, dtype=np.int64)
-        f = self.config.bits_per_tag
-        tag_mask = self.config.tag_mask
-
-        def cand(lo, hi):
-            pc = packed_vals[lo:hi]
-            fp = (pc & tag_mask).astype(self.config.tag_dtype)
-            i1 = (pc >> f).astype(self._index_dtype)
-            return i1, self.alt_bucket(i1, fp), fp
-
-        return self._delete_chunked(len(packed_vals), cand)
-
-    def contains_packed(self, packed_vals: np.ndarray) -> np.ndarray:
-        """Membership from JVM-packed ``(i1 << bits_per_tag) | fp``."""
-        packed_vals = np.ascontiguousarray(packed_vals, dtype=np.int64)
-        f = self.config.bits_per_tag
-        tag_mask = self.config.tag_mask
-        n = len(packed_vals)
-        out = np.empty(n, dtype=bool)
-        for lo in range(0, n, self.CHUNK):
-            pc = packed_vals[lo:min(lo + self.CHUNK, n)]
-            fp = (pc & tag_mask).astype(self.config.tag_dtype)
-            i1 = (pc >> f).astype(self._index_dtype)
-            probe_rows(
-                self.buckets, i1, self.alt_bucket(i1, fp), fp,
-                self.config.bits_per_tag, out=out[lo:lo + len(pc)],
-            )
-        return out
+    def delete_packed(self, packed: np.ndarray) -> np.ndarray:
+        """Delete from JVM-packed values (see :meth:`_packed_cand`)."""
+        return self._delete_chunked(*self._packed_cand(packed))
 
     def _delete_chunked(self, n: int, cand_fn) -> np.ndarray:
         if n == 0:
@@ -882,6 +810,14 @@ class CuckooFilter:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "CuckooFilter":
+        """Decode a :meth:`to_bytes` blob. Blobs come back from tables
+        and checkpoints, so every length, index and count is checked
+        and a malformed blob raises ``ValueError``."""
+        if len(blob) < _HEADER.size + 1:
+            raise ValueError(
+                f"cuckoo blob of {len(blob)} bytes is shorter than its "
+                f"{_HEADER.size + 1}-byte header"
+            )
         magic, ver, f, b, pol, bpol, nb, cap, occ, kicks, fails, inserts = (
             _HEADER.unpack_from(blob)
         )
@@ -893,6 +829,10 @@ class CuckooFilter:
                 f"{cls.BLOB_VERSION}; the hash family changed — rebuild "
                 "the filter from source keys)"
             )
+        if pol >= len(_POLICIES) or bpol >= len(_BUCKET_POLICIES):
+            raise ValueError(
+                f"cuckoo blob has unknown policy codes ({pol}, {bpol})"
+            )
         cfg = CuckooConfig(
             bits_per_tag=f, bucket_size=b, eviction_policy=_POLICIES[pol],
             bucket_policy=_BUCKET_POLICIES[bpol],
@@ -903,23 +843,36 @@ class CuckooFilter:
         flt.num_buckets = nb
         flt._mask = np.uint64(nb - 1)
         layout, off = blob[_HEADER.size], _HEADER.size + 1
+        tag_size = np.dtype(cfg.tag_dtype).itemsize
         if layout == cls._LAYOUT_DENSE:
+            if len(blob) - off != nb * b * tag_size:
+                raise ValueError(
+                    f"dense cuckoo blob payload is {len(blob) - off} bytes, "
+                    f"expected {nb} x {b} x {tag_size}"
+                )
             flt.buckets = (
                 np.frombuffer(blob, dtype=cfg.tag_dtype, offset=off)
                 .reshape(nb, b)
                 .copy()
             )
-            flt.fill = np.count_nonzero(flt.buckets, axis=1).astype(np.int8)
-        else:
+        elif layout in (cls._LAYOUT_SPARSE32, cls._LAYOUT_SPARSE64):
             idx_dtype = (
                 np.uint32 if layout == cls._LAYOUT_SPARSE32 else np.uint64
             )
+            idx_size = np.dtype(idx_dtype).itemsize
+            if len(blob) - off < 8:
+                raise ValueError("sparse cuckoo blob has no stored count")
             (stored,) = struct.unpack_from("<Q", blob, off)
             off += 8
+            if stored * (idx_size + tag_size) != len(blob) - off:
+                raise ValueError(
+                    f"sparse cuckoo blob lists {stored} tags but its "
+                    f"payload is {len(blob) - off} bytes"
+                )
             bi = np.frombuffer(
                 blob, dtype=idx_dtype, count=stored, offset=off
             ).astype(np.int64)
-            off += stored * np.dtype(idx_dtype).itemsize
+            off += stored * idx_size
             tags = np.frombuffer(
                 blob, dtype=cfg.tag_dtype, count=stored, offset=off
             )
@@ -927,13 +880,24 @@ class CuckooFilter:
             # bi is sorted (np.nonzero is row-major): slot within each
             # bucket = position minus the bucket run's start
             if stored:
-                starts = np.r_[
-                    0, np.flatnonzero(np.diff(bi)) + 1
-                ]
+                steps = np.diff(bi)
+                if bi[0] < 0 or bi[-1] >= nb or (steps < 0).any():
+                    raise ValueError(
+                        "sparse cuckoo blob bucket indices must be "
+                        f"non-decreasing and within [0, {nb})"
+                    )
+                starts = np.r_[0, np.flatnonzero(steps) + 1]
                 counts = np.diff(np.r_[starts, stored])
+                if counts.max() > b:
+                    raise ValueError(
+                        f"sparse cuckoo blob puts {counts.max()} tags in "
+                        f"one bucket of {b} slots"
+                    )
                 slot = np.arange(stored) - np.repeat(starts, counts)
                 flt.buckets[bi, slot] = tags
-            flt.fill = np.count_nonzero(flt.buckets, axis=1).astype(np.int8)
+        else:
+            raise ValueError(f"cuckoo blob has unknown layout {layout}")
+        flt.fill = np.count_nonzero(flt.buckets, axis=1).astype(np.int8)
         flt._alt_tab = None
         flt._claim = None
         flt._win_scratch = None

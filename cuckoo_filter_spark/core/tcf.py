@@ -167,8 +167,7 @@ class TwoChoiceFilter(CuckooFilter):
         self.failures += n - n_ok
         return success
 
-    # sorted/adaptive variants inherit (they call _insert_chunked via
-    # insert_many); BFS/DFS eviction entry points are unreachable.
+    # the BFS/DFS eviction entry points are unreachable here.
 
     def merge_in_place(self, other: "CuckooFilter") -> "TwoChoiceFilter":
         """Fold ``other`` into ``self`` by two-choice re-placement of

@@ -28,11 +28,6 @@ _P5 = np.uint64(0x27D4EB2F165667C5)
 _U64 = np.uint64
 
 
-def _rotl(x: np.ndarray, r: int) -> np.ndarray:
-    r = np.uint64(r)
-    return (x << r) | (x >> (np.uint64(64) - r))
-
-
 #: hot-path chunk size: keeps every temporary L2-resident so the
 #: only DRAM traffic is the input read + output write. Measured 3x
 #: over whole-batch temporaries on 2M-key batches (and it
@@ -172,11 +167,6 @@ def xxhash64_u64_scalar(key: int, seed: int = 0) -> int:
 def key_from_content(content: str) -> int:
     """Driver-side oracle for the key derivation (uint64 as python int)."""
     return int(hashlib.sha256(content.encode("utf-8")).hexdigest()[:16], 16)
-
-
-def keys_to_signed(keys_u64: np.ndarray) -> np.ndarray:
-    """Reinterpret uint64 keys as int64 (Spark LongType container)."""
-    return np.asarray(keys_u64, dtype=np.uint64).view(np.int64)
 
 
 def keys_to_unsigned(keys_i64: np.ndarray) -> np.ndarray:

@@ -289,25 +289,14 @@ class DistributedCuckooFilter:
 
     # -- query ----------------------------------------------------------
 
-    def _broadcast(self, spark: SparkSession):
-        if self._bc is None:
-            self._bc = spark.sparkContext.broadcast(self.filter.to_bytes())
-        return self._bc
-
     def contains_udf(self, spark: SparkSession):
         """Vectorized membership UDF against the broadcast blob
-        (containsMany, ``CuckooFilter.cuh:518-523``). Iterator form
-        deserializes the blob once per task, not per batch."""
-        bc = self._broadcast(spark)
-
-        @F.pandas_udf(BooleanType())
-        def member(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            flt = CuckooFilter.from_bytes(bc.value)
-            for s in batches:
-                keys = keys_to_unsigned(s.to_numpy(dtype=np.int64, copy=False))
-                yield pd.Series(flt.contains_many(keys))
-
-        return member
+        (containsMany, ``CuckooFilter.cuh:518-523``): the sharded
+        filter's broadcast probe with this filter as its one shard, so
+        each task deserializes the blob once, not per batch."""
+        if self._bc is None:
+            self._bc = spark.sparkContext.broadcast({0: self.filter.to_bytes()})
+        return _per_shard_probe_udf(self._bc, 1, type(self.filter))
 
     def contains(self, df: DataFrame, key_col: str, out_col: str = "member") -> DataFrame:
         spark = df.sparkSession
@@ -406,7 +395,8 @@ def _stacked_probe_udf(bc, nb: int, bs: int, dtype_name: str,
 def _per_shard_probe_udf(bc, num_shards: int, kernel_cls: type):
     """Broadcast probe over a ``{shard_id: blob}`` broadcast: each
     task decodes every shard once, routes its keys to their shard
-    locally and probes each shard's kernel — any bucket policy."""
+    locally and probes each shard's kernel — any bucket policy. The
+    merged filter's ``contains_udf`` is its one-shard case."""
 
     @F.pandas_udf(BooleanType())
     def member(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:

@@ -77,7 +77,9 @@ def load_packed_kmer_binary(spark: SparkSession, path: str) -> DataFrame:
     """Read the reference benchmark's binary k-mer format (uint64
     count, then N little-endian packed uint64s — ``loadKmerFile``)
     into a (key long) DataFrame. Distributed one task per file;
-    decoding is a zero-copy numpy view."""
+    decoding is a zero-copy numpy view. A 0-byte file yields no rows;
+    a truncated or ragged file, or one whose count differs from its
+    payload, raises ``ValueError`` naming the file."""
     import numpy as np
     import pyarrow as pa
 
@@ -86,12 +88,22 @@ def load_packed_kmer_binary(spark: SparkSession, path: str) -> DataFrame:
     def unpack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             tbl = rb.to_pydict()
-            for blob in tbl["content"]:
-                buf = np.frombuffer(blob, dtype="<u8")
-                if len(buf) == 0:
+            for name, blob in zip(tbl["path"], tbl["content"]):
+                if not blob:
                     continue
+                if len(blob) < 8 or len(blob) % 8:
+                    raise ValueError(
+                        f"{name}: {len(blob)} bytes is not a uint64 count "
+                        "followed by whole uint64 k-mers"
+                    )
+                buf = np.frombuffer(blob, dtype="<u8")
                 n = int(buf[0])
-                keys = buf[1 : 1 + n].view(np.int64)
+                if n != len(buf) - 1:
+                    raise ValueError(
+                        f"{name}: header counts {n} k-mers but the "
+                        f"payload holds {len(buf) - 1}"
+                    )
+                keys = buf[1:].view(np.int64)
                 yield pa.RecordBatch.from_arrays([pa.array(keys)], ["key"])
 
-    return files.select("content").mapInArrow(unpack, "key long")
+    return files.select("path", "content").mapInArrow(unpack, "key long")

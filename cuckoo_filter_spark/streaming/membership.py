@@ -46,6 +46,47 @@ def stream_novel_keys(
     return annotated.filter(~F.col("__member")).drop("__member")
 
 
+def _sharded_state_stream(
+    stream_df: DataFrame, key_col: str, capacity: int, num_shards: int,
+    config, out_schema, step,
+):
+    """The state plumbing both stateful cuckoo stream ops share: key
+    rows go to ``shard_expr`` groups, each group's state is one
+    ``blob binary`` row holding its shard filter (new when absent, its
+    kernel following ``config.bucket_policy`` via
+    ``operators.membership.shard_kernel``), and
+    ``step(flt, shard_id, pdfs)`` yields the output frames of one
+    micro-batch while it mutates ``flt``."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.types import BinaryType, StructField, StructType
+
+    from cuckoo_filter_spark.config import CuckooConfig
+    from cuckoo_filter_spark.operators.membership import (
+        per_shard_capacity, shard_expr, shard_kernel,
+    )
+
+    per_shard_cap = per_shard_capacity(capacity, num_shards)
+    new_shard, kernel_cls, _ = shard_kernel(config or CuckooConfig())
+    state_schema = StructType([StructField("blob", BinaryType())])
+
+    def update(key, pdfs, state: GroupState):
+        if state.exists:
+            flt = kernel_cls.from_bytes(bytes(state.get[0]))
+        else:
+            flt = new_shard(per_shard_cap)
+        yield from step(flt, int(key[0]), pdfs)
+        state.update((flt.to_bytes(),))
+
+    return (
+        stream_df.withColumn("__shard", shard_expr(key_col, num_shards))
+        .groupBy("__shard")
+        .applyInPandasWithState(
+            update, out_schema, state_schema, "append",
+            GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
 def stream_build_sharded(
     stream_df: DataFrame,
     key_col: str,
@@ -67,33 +108,19 @@ def stream_build_sharded(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
-        BinaryType, BooleanType, LongType, StructField, StructType,
+        BooleanType, LongType, StructField, StructType,
     )
 
-    from cuckoo_filter_spark.config import CuckooConfig
     from cuckoo_filter_spark.hashing import keys_to_unsigned
-    from cuckoo_filter_spark.operators.membership import (
-        per_shard_capacity, shard_expr, shard_kernel,
-    )
 
-    cfg = config or CuckooConfig()
-    per_shard_cap = per_shard_capacity(capacity, num_shards)
-    new_shard, kernel_cls, _ = shard_kernel(cfg)
     out_schema = StructType([
         StructField(key_col, LongType()),
         StructField("shard", LongType()),
         StructField("fresh", BooleanType()),
     ])
-    state_schema = StructType([StructField("blob", BinaryType())])
 
-    def update(key, pdfs, state: GroupState):
-        shard_id = int(key[0])
-        if state.exists:
-            flt = kernel_cls.from_bytes(bytes(state.get[0]))
-        else:
-            flt = new_shard(per_shard_cap)
+    def step(flt, shard_id, pdfs):
         for pdf in pdfs:
             raw = pdf[key_col].to_numpy(np.int64, copy=False)
             keys = keys_to_unsigned(raw)
@@ -111,15 +138,9 @@ def stream_build_sharded(
             yield pd.DataFrame({
                 key_col: raw, "shard": shard_id, "fresh": fresh,
             })
-        state.update((flt.to_bytes(),))
 
-    return (
-        stream_df.withColumn("__shard", shard_expr(key_col, num_shards))
-        .groupBy("__shard")
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _sharded_state_stream(
+        stream_df, key_col, capacity, num_shards, config, out_schema, step,
     )
 
 
@@ -300,28 +321,18 @@ def stream_apply_ops(
     the same streaming surface."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
-        BinaryType, BooleanType, LongType, StringType, StructField,
-        StructType,
+        BooleanType, LongType, StringType, StructField, StructType,
     )
 
-    from cuckoo_filter_spark.config import CuckooConfig
     from cuckoo_filter_spark.hashing import keys_to_unsigned
-    from cuckoo_filter_spark.operators.membership import (
-        per_shard_capacity, shard_expr, shard_kernel,
-    )
 
-    cfg = config or CuckooConfig()
-    per_shard_cap = per_shard_capacity(capacity, num_shards)
-    new_shard, kernel_cls, _ = shard_kernel(cfg)
     out_schema = StructType([
         StructField(key_col, LongType()),
         StructField("op", StringType()),
         StructField("shard", LongType()),
         StructField("ok", BooleanType()),
     ])
-    state_schema = StructType([StructField("blob", BinaryType())])
 
     def _apply(flt, raw, ops):
         keys = keys_to_unsigned(raw)
@@ -336,44 +347,24 @@ def stream_apply_ops(
                 ok[b0:b1] = flt.delete_many(seg)
         return ok
 
-    def update(key, pdfs, state: GroupState):
-        shard_id = int(key[0])
-        if state.exists:
-            flt = kernel_cls.from_bytes(bytes(state.get[0]))
-        else:
-            flt = new_shard(per_shard_cap)
+    def step(flt, shard_id, pdfs):
+        frames = (pdf for pdf in pdfs if len(pdf))
         if seq_col is not None:
             # deterministic total order: gather the shard's batch and
             # sort by the caller's sequence column before applying
-            chunks = [pdf for pdf in pdfs if len(pdf)]
-            if chunks:
-                batch = (
-                    pd.concat(chunks, ignore_index=True)
-                    .sort_values(seq_col, kind="stable", ignore_index=True)
-                )
-                raw = batch[key_col].to_numpy(np.int64, copy=False)
-                ops = batch[op_col].to_numpy()
-                ok = _apply(flt, raw, ops)
-                yield pd.DataFrame({
-                    key_col: raw, "op": ops, "shard": shard_id, "ok": ok,
-                })
-        else:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                raw = pdf[key_col].to_numpy(np.int64, copy=False)
-                ops = pdf[op_col].to_numpy()
-                ok = _apply(flt, raw, ops)
-                yield pd.DataFrame({
-                    key_col: raw, "op": ops, "shard": shard_id, "ok": ok,
-                })
-        state.update((flt.to_bytes(),))
+            chunks = list(frames)
+            frames = [
+                pd.concat(chunks, ignore_index=True)
+                .sort_values(seq_col, kind="stable", ignore_index=True)
+            ] if chunks else []
+        for pdf in frames:
+            raw = pdf[key_col].to_numpy(np.int64, copy=False)
+            ops = pdf[op_col].to_numpy()
+            ok = _apply(flt, raw, ops)
+            yield pd.DataFrame({
+                key_col: raw, "op": ops, "shard": shard_id, "ok": ok,
+            })
 
-    return (
-        stream_df.withColumn("__shard", shard_expr(key_col, num_shards))
-        .groupBy("__shard")
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _sharded_state_stream(
+        stream_df, key_col, capacity, num_shards, config, out_schema, step,
     )

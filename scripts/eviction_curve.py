@@ -1,7 +1,10 @@
 """Eviction-cost curve, mirroring the reference's
 eviction_benchmark.cu (loads 0.76 -> 0.999 with 75% prefill, DFS vs
 BFS): kicks per insert and insert success as the filter approaches
-capacity. Writes BENCH/eviction_curve.json.
+capacity. Prints its run as one JSON line and writes nothing under
+BENCH/.
+
+Usage: python scripts/eviction_curve.py
 """
 
 import json
@@ -47,10 +50,7 @@ def main():
                     "failures": int(flt.failures),
                     "inserts_per_sec": round(extra / dt) if extra else None,
                 })
-                print(rows[-1])
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/eviction_curve.json", "w") as fh:
-        json.dump(rows, fh, indent=1)
+    print(json.dumps({"bench": "eviction_curve", "rows": rows}), flush=True)
 
 
 if __name__ == "__main__":

@@ -3,7 +3,10 @@
 vs the published bound eps = 2*b*alpha/2^f, on the single-node
 kernel (the per-partition unit the distributed paths compose).
 
-Writes BENCH/fpr_sweep.json.
+Prints its run as one JSON line and writes nothing under BENCH/;
+exits 1 when a cell lies above the eps bound.
+
+Usage: python scripts/fpr_sweep.py
 """
 
 import json
@@ -56,12 +59,11 @@ def main():
                     "inserts_per_sec": round(n / dt),
                     "kicks_per_insert": round(flt.kicks / n, 4),
                 })
-                print(rows[-1])
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/fpr_sweep.json", "w") as fh:
-        json.dump(rows, fh, indent=1)
     bad = [r for r in rows if not r["within_bound"]]
-    print(f"\n{len(rows)} cells, {len(bad)} above the eps bound")
+    print(json.dumps({
+        "bench": "fpr_sweep", "cells": len(rows), "above_bound": len(bad),
+        "rows": rows,
+    }), flush=True)
     return 0 if not bad else 1
 
 

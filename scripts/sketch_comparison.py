@@ -14,7 +14,8 @@ rate, insert/query(/delete) throughput (best of reps, kernel-level
 measured FPR (count-min "FPR" = fraction of never-added negatives
 with estimate > 0).
 
-Writes BENCH/sketch_comparison.json and BENCH/sketch_comparison.md.
+Prints its run as one JSON line (progress goes to stderr) and writes
+nothing under BENCH/.
 
 Usage: python scripts/sketch_comparison.py [log2_bytes ...]
        (default budgets 2^18 2^21 2^24)
@@ -190,45 +191,11 @@ def main():
     rows = []
     for lb in budgets:
         rows.extend(bench_budget(1 << lb))
-        print(f"2^{lb} bytes done", flush=True)
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "sketch_comparison.json"), "w") as f:
-        json.dump(rows, f, indent=1)
-
-    lines = [
-        "# BENCH/sketch_comparison.md — cuckoo vs TCF vs Bloom vs "
-        "count-min at matched memory",
-        "",
-        "Reference protocol (`fpr_benchmark.cu`, `cuckoo_vs_bloom.cu`):",
-        "same state bytes per sketch, same 0.95-slot-load key stream "
-        f"from [1, 2^32], {N_NEG:,} disjoint negatives (2^32, 2^64], "
-        f"best of {REPS} reps (single-process kernel layer).",
-        "",
-        "| bytes | sketch | n_keys | ins ok | inserts/s | queries/s "
-        "| deletes/s | FPR | bound |",
-        "|---|---|---|---|---|---|---|---|---|",
-    ]
-    for r in rows:
-        dl = f"{r['deletes_per_sec']:,}" if r["deletes_per_sec"] else "—"
-        eb = f"{r['eps_bound']:.2e}" if r["eps_bound"] is not None else "—"
-        lines.append(
-            f"| 2^{int(np.log2(r['bytes']))} | {r['sketch']} | "
-            f"{r['n_keys']:,} | {r['insert_success']:.4f} | "
-            f"{r['inserts_per_sec']:,} | {r['queries_per_sec']:,} | "
-            f"{dl} | {r['fpr']:.2e} | {eb} |"
-        )
-    lines += [
-        "",
-        "Takeaways mirror the reference's: the cuckoo filter holds the "
-        "2bα/2^f FPR bound at 0.95 load with full insert success and "
-        "supports deletes; the TCF trades FPR (wide b=32 blocks) for "
-        "eviction-free inserts; Bloom at the same bytes cannot delete; "
-        "count-min answers frequency, not membership, so its negative "
-        "hit rate is the price of counting.",
-    ]
-    with open(os.path.join(REPO, "BENCH", "sketch_comparison.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(json.dumps(rows[-4:], indent=1))
+        print(f"2^{lb} bytes done", file=sys.stderr, flush=True)
+    print(json.dumps({
+        "bench": "sketch_comparison", "n_neg": N_NEG, "reps": REPS,
+        "rows": rows,
+    }), flush=True)
 
 
 if __name__ == "__main__":

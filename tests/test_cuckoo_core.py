@@ -224,17 +224,6 @@ def test_merge_associativity(config):
     assert ref[: sum(len(p) for p in parts)].all()
 
 
-def test_insert_sorted_equivalent(config):
-    f1 = CuckooFilter(1 << 14, config)
-    f2 = CuckooFilter(1 << 14, config)
-    keys = rand_keys(10_000, hi=2**62)
-    s1 = f1.insert_many(keys)
-    s2 = f2.insert_many_sorted(keys)
-    assert s1.sum() == len(keys) and s2.sum() == len(keys)
-    probes = rand_keys(20_000, hi=2**63, seed=5)
-    assert (f1.contains_many(probes) == f2.contains_many(probes)).all()
-
-
 def test_delete_many_multi_chunk():
     """Regression: deletes spanning multiple kernel chunks (>CHUNK
     keys) must not clobber the candidate callback (the inner round
@@ -338,6 +327,55 @@ def test_blob_sparse_roundtrip_and_size():
     )
     assert merged.contains_many(keys).all()
     assert merged.contains_many(more).all()
+
+
+def _sparse_parts(blob):
+    """(prefix through the stored count, uint32 bucket indices, tags)
+    of a sparse32 blob."""
+    assert blob[_HEADER_SIZE] == 1
+    off = _HEADER_SIZE + 1
+    stored = int(np.frombuffer(blob, "<u8", 1, off)[0])
+    bi = np.frombuffer(blob, "<u4", stored, off + 8).copy()
+    return blob[:off + 8], bi, blob[off + 8 + 4 * stored:]
+
+
+def _corrupt(defect):
+    f = CuckooFilter(200_000, CuckooConfig(16, 4))
+    f.insert_many(rand_keys(4000))
+    sparse = f.to_bytes()
+    head, bi, tags = _sparse_parts(sparse)
+    if defect == "short_header":
+        return sparse[:_HEADER_SIZE - 3]
+    if defect == "dense_length":
+        g = CuckooFilter(4096, CuckooConfig(16, 4))
+        g.insert_many(rand_keys(3800))
+        dense = g.to_bytes()
+        assert dense[_HEADER_SIZE] == 0
+        return dense[:-2]
+    if defect == "sparse_count":
+        n = len(bi) + 1
+        return head[:-8] + np.uint64(n).tobytes() + bi.tobytes() + tags
+    if defect == "index_range":
+        bi[-1] = f.num_buckets
+    elif defect == "index_order":
+        j = int(np.flatnonzero(np.diff(bi))[0])
+        bi[j], bi[j + 1] = bi[j + 1], bi[j]
+    elif defect == "overfull_bucket":
+        bi[:5] = bi[0]
+    return head + bi.tobytes() + tags
+
+
+@pytest.mark.parametrize("defect", [
+    "short_header", "dense_length", "sparse_count", "index_range",
+    "index_order", "overfull_bucket",
+])
+def test_blob_corruption_rejected(defect):
+    """Shard blobs are read back from tables and checkpoints, so a
+    malformed one must fail with a ValueError that names the defect —
+    never a struct/Index error, and never a filter with overwritten
+    tags."""
+    with pytest.raises(ValueError, match="cuckoo blob"):
+        CuckooFilter.from_bytes(_corrupt(defect))
 
 
 def test_count_many_multiset(config):

@@ -66,6 +66,33 @@ def test_load_packed_kmer_binary_roundtrip(spark, tmp_path):
     assert np.array_equal(got, np.sort(keys.view(np.int64)))
 
 
+def _kmer_file(path, defect):
+    keys = np.arange(1, 6, dtype=np.uint64)
+    body = {
+        "empty": b"",
+        "short": b"\x05" * 5,
+        "count_mismatch": np.uint64(10).tobytes() + keys.tobytes(),
+        "ragged": np.uint64(5).tobytes() + keys.tobytes() + b"\x01\x02\x03",
+    }[defect]
+    path.write_bytes(body)
+
+
+@pytest.mark.parametrize("defect", ["short", "count_mismatch", "ragged"])
+def test_load_packed_kmer_binary_rejects_truncation(spark, tmp_path, defect):
+    """A file that is not a count plus exactly that many uint64 k-mers
+    fails naming the file instead of yielding fewer keys."""
+    p = tmp_path / f"bad_{defect}.bin"
+    _kmer_file(p, defect)
+    with pytest.raises(Exception, match=f"bad_{defect}.bin"):
+        load_packed_kmer_binary(spark, str(p)).collect()
+
+
+def test_load_packed_kmer_binary_empty_file(spark, tmp_path):
+    p = tmp_path / "empty.bin"
+    _kmer_file(p, "empty")
+    assert load_packed_kmer_binary(spark, str(p)).count() == 0
+
+
 def test_packed_kmer_no_k_rejects_over_31(spark):
     """Without a fixed k, rows longer than 31 chars must null out
     (regression: they silently overflowed the int64 and collided

@@ -1,0 +1,21 @@
+"""Importing the package loads no Spark, Py4J or pandas module, so a
+Python worker can import it before any Spark machinery starts."""
+
+import os
+import subprocess
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_package_import_loads_no_spark():
+    code = (
+        "import sys, cuckoo_filter_spark\n"
+        "print(sorted(m for m in sys.modules\n"
+        "             if m.split('.')[0] in ('pyspark', 'py4j', 'pandas')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True,
+        text=True, check=True,
+    )
+    assert out.stdout.strip() == "[]"
