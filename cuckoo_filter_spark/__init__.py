@@ -26,8 +26,18 @@ runs vectorized over Arrow batches (pandas UDF / applyInPandas /
 mapInPandas) — never per row.
 """
 
+import sys
+
 from cuckoo_filter_spark.config import CuckooConfig
 from cuckoo_filter_spark.core.cuckoo import CuckooFilter
+
+# Inside a Spark Python worker (which unpickles a library UDF), stop
+# every later task from re-reading pyspark.zip; 3.13+ no longer
+# re-reads eagerly.
+if "pyspark.worker" in sys.modules and sys.version_info < (3, 13):
+    from cuckoo_filter_spark import _worker
+
+    _worker.install()
 
 __all__ = ["CuckooConfig", "CuckooFilter"]
 __version__ = "0.1.0"

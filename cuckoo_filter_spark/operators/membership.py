@@ -216,9 +216,12 @@ def _packed_keys(
     id riding the spare upper bits, or the two-column
     ``(__shard, __packed)`` layout when shard+i1+f exceed 62 bits
     (per-shard bucket counts beyond ~2^40 at f=16). Returns
-    ``(frame, shift)``, shift None for the two-column layout."""
+    ``(frame, shift)``, shift None for the two-column layout. Null
+    keys are dropped: ``xxhash64`` skips nulls, so they would hash
+    like a real key."""
     from cuckoo_filter_spark.hashing import packed_expr
 
+    df = df.filter(F.col(key_col).isNotNull())
     packed = packed_expr(
         key_col, cfg.num_buckets_for(per_shard_cap), cfg.bits_per_tag,
         cfg.bucket_policy,
@@ -494,7 +497,7 @@ class ShardedCuckooFilter:
     ) -> "ShardedCuckooFilter":
         """Key-shipping build, for any kernel: the Exchange carries
         ONLY the 8-byte key and each shard filter runs ``insert_many``
-        on its keys."""
+        on its keys. Null keys are dropped, as in :func:`_packed_keys`."""
         per_shard_cap = per_shard_capacity(capacity, num_shards)
         new = shard_kernel(cfg).new
 
@@ -520,6 +523,7 @@ class ShardedCuckooFilter:
 
         shards = (
             df.select(F.col(key_col))
+            .filter(F.col(key_col).isNotNull())
             .repartition(num_shards, shard_expr(key_col, num_shards))
             .mapInPandas(build_shards, schema=_SHARD_SCHEMA)
         )
@@ -966,7 +970,8 @@ class ShardedCuckooFilter:
         per-key result DataFrame is recovered with a codegen'd
         explode, and persisting the cogroup output caches only the
         shard rows. Multiset semantics for every kernel (Offset's
-        choice-bit flips are handled by its core kernel).
+        choice-bit flips are handled by its core kernel). Null keys
+        are dropped before routing, so they neither remove nor count.
 
         ``per_key=False`` mirrors the reference's delete contract
         exactly: ``deleteMany`` writes per-key outcomes into device
@@ -1022,7 +1027,9 @@ class ShardedCuckooFilter:
                 out["del_ok"] = [ok]
             return pd.DataFrame(out)
 
-        merged = self._route(deletes, apply_delete, schema).persist()
+        merged = self._route(
+            deletes.filter(F.col(key_col).isNotNull()), apply_delete, schema
+        ).persist()
         results = None
         if per_key:
             results = merged.select(

@@ -368,3 +368,18 @@ def test_lanes_agree_per_bucket_policy(spark, repo_df, monkeypatch, policy):
         after.release()
     sharded.release()
     sharded.shards.unpersist()
+
+
+@pytest.mark.parametrize("policy", ["xor", "addsub", "offset"])
+def test_sharded_build_and_delete_skip_null_keys(spark, policy):
+    """A null key is not a key: the sharded build does not insert it
+    (as the merged build does not) and a null-only delete removes
+    nothing, under each bucket policy."""
+    cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy=policy)
+    keys = spark.createDataFrame([(1,), (2,), (None,)], "key long")
+    sharded = ShardedCuckooFilter.build(keys, "key", 1000, 2, cfg)
+    assert sharded.total_occupied() == 2
+    _, after = sharded.delete(keys.filter(F.col("key").isNull()), per_key=False)
+    assert after.delete_success_count() == 0
+    assert after.total_occupied() == 2
+    after.release()
