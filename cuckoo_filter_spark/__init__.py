@@ -31,10 +31,10 @@ import sys
 from cuckoo_filter_spark.config import CuckooConfig
 from cuckoo_filter_spark.core.cuckoo import CuckooFilter
 
-# Inside a Spark Python worker (which unpickles a library UDF), stop
-# every later task from re-reading pyspark.zip; 3.13+ no longer
-# re-reads eagerly.
-if "pyspark.worker" in sys.modules and sys.version_info < (3, 13):
+# Inside a Spark Python worker (which unpickles a library UDF), freeze
+# the long-lived heap at the next task start and stop every later task
+# from re-reading pyspark.zip.
+if "pyspark.worker" in sys.modules:
     from cuckoo_filter_spark import _worker
 
     _worker.install()

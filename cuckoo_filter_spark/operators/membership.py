@@ -72,6 +72,47 @@ def per_shard_capacity(capacity: int, num_shards: int) -> int:
 #: probes) — chunked rows explode to the same relation
 ROUTED_CHUNK_ROWS = 1 << 20
 
+
+def pack_lists(lists: dict, chunk_rows: int, **scalars) -> pd.DataFrame:
+    """Per-row numpy results as list-column rows: each array of
+    ``lists`` is cut into chunks of ``chunk_rows`` (callers pass
+    :data:`ROUTED_CHUNK_ROWS` as read when the plan is built), one row
+    per chunk, and each ``scalars`` value repeats on every row. The
+    Python→JVM boundary then carries a row per chunk, not per key;
+    :func:`explode_lists` restores the flat relation JVM-side."""
+    n = len(next(iter(lists.values())))
+    bounds = range(0, n, chunk_rows)
+    # dtype=object, NOT the float64 pandas default for empty columns:
+    # Arrow cannot convert float64 to a list output type (hit whenever
+    # a shard receives zero keys)
+    out = {
+        name: pd.Series([a[lo: lo + chunk_rows] for lo in bounds], dtype=object)
+        for name, a in lists.items()
+    }
+    for name, value in scalars.items():
+        out[name] = np.full(len(bounds), value)
+    return pd.DataFrame(out)
+
+
+def explode_lists(packed: DataFrame, columns: dict) -> DataFrame:
+    """One row per list element of ``packed`` (a codegen'd
+    ``explode(arrays_zip(...))``): ``columns`` maps each output column,
+    in order, to its packed column; the array columns are zipped
+    element-wise and the others repeat on every element's row."""
+    lists = [
+        src for src in columns.values()
+        if isinstance(packed.schema[src].dataType, ArrayType)
+    ]
+    rows = packed.select(
+        *(c for c in columns.values() if c not in lists),
+        F.explode(F.arrays_zip(*lists)).alias("__z"),
+    )
+    return rows.select(*(
+        F.col(f"__z.{src}" if src in lists else src).alias(name)
+        for name, src in columns.items()
+    ))
+
+
 _SHARD_SCHEMA = StructType([
     StructField("shard_id", LongType()),
     StructField("blob", BinaryType()),
@@ -828,27 +869,11 @@ class ShardedCuckooFilter:
                 flt = kernel_cls.from_bytes(right["blob"].iloc[0])
                 res = _apply_op(flt, op, left, key_col, packed)
             keys = left[key_col].to_numpy(np.int64, copy=False)
-            bounds = range(0, len(keys), chunk_rows)
-            # dtype=object, NOT the float64 pandas default for empty
-            # columns — Arrow cannot convert float64 to the
-            # list<int64>/list<bool> output schema (hit whenever a
-            # shard receives zero probe keys)
-            return pd.DataFrame({
-                "__keys": pd.Series(
-                    [keys[lo: lo + chunk_rows] for lo in bounds], dtype=object
-                ),
-                "__res": pd.Series(
-                    [res[lo: lo + chunk_rows] for lo in bounds], dtype=object
-                ),
-            })
+            return pack_lists({"__keys": keys, "__res": res}, chunk_rows)
 
-        return (
-            self._route(queries, probe, pack_schema)
-            .select(F.explode(F.arrays_zip("__keys", "__res")).alias("z"))
-            .select(
-                F.col("z.__keys").alias(key_col),
-                F.col("z.__res").alias(out_col),
-            )
+        return explode_lists(
+            self._route(queries, probe, pack_schema),
+            {key_col: "__keys", out_col: "__res"},
         )
 
     def contains(self, queries: DataFrame, out_col: str = "member") -> DataFrame:
@@ -1032,11 +1057,8 @@ class ShardedCuckooFilter:
         ).persist()
         results = None
         if per_key:
-            results = merged.select(
-                F.explode(F.arrays_zip("del_keys", "del_ok")).alias("z")
-            ).select(
-                F.col("z.del_keys").alias(key_col),
-                F.col("z.del_ok").alias("ok"),
+            results = explode_lists(
+                merged, {key_col: "del_keys", "ok": "del_ok"}
             )
         new_shards = merged.filter(F.col("blob").isNotNull()).select(
             *_SHARD_SCHEMA.names

@@ -50,41 +50,57 @@ def _sharded_state_stream(
     stream_df: DataFrame, key_col: str, capacity: int, num_shards: int,
     config, out_schema, step,
 ):
-    """The state plumbing both stateful cuckoo stream ops share: key
-    rows go to ``shard_expr`` groups, each group's state is one
-    ``blob binary`` row holding its shard filter (new when absent, its
-    kernel following ``config.bucket_policy`` via
-    ``operators.membership.shard_kernel``), and
-    ``step(flt, shard_id, pdfs)`` yields the output frames of one
-    micro-batch while it mutates ``flt``."""
+    """The state plumbing both stateful cuckoo stream ops share: rows
+    with a non-null key go to ``shard_expr`` groups, each group's state
+    is one ``blob binary`` row holding its shard filter (new when
+    absent, its kernel following ``config.bucket_policy`` via
+    ``operators.membership.shard_kernel``), and ``step(flt, pdfs)``
+    yields, per input chunk of one micro-batch, a tuple of per-row
+    arrays for the ``out_schema`` fields other than ``shard`` while it
+    mutates ``flt``. Each tuple crosses to the JVM as list-column rows
+    (``pack_lists``) that are exploded there into ``out_schema``."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import BinaryType, StructField, StructType
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, LongType, StructField, StructType,
+    )
 
     from cuckoo_filter_spark.config import CuckooConfig
     from cuckoo_filter_spark.operators.membership import (
-        per_shard_capacity, shard_expr, shard_kernel,
+        ROUTED_CHUNK_ROWS, explode_lists, pack_lists, per_shard_capacity,
+        shard_expr, shard_kernel,
     )
 
     per_shard_cap = per_shard_capacity(capacity, num_shards)
     new_shard, kernel_cls, _ = shard_kernel(config or CuckooConfig())
     state_schema = StructType([StructField("blob", BinaryType())])
+    lists = [f for f in out_schema.fields if f.name != "shard"]
+    pack_schema = StructType([StructField("shard", LongType())] + [
+        StructField(f.name, ArrayType(f.dataType)) for f in lists
+    ])
+    names = [f.name for f in lists]
+    chunk_rows = ROUTED_CHUNK_ROWS
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
             flt = kernel_cls.from_bytes(bytes(state.get[0]))
         else:
             flt = new_shard(per_shard_cap)
-        yield from step(flt, int(key[0]), pdfs)
+        shard_id = int(key[0])
+        for arrays in step(flt, pdfs):
+            yield pack_lists(dict(zip(names, arrays)), chunk_rows,
+                             shard=shard_id)
         state.update((flt.to_bytes(),))
 
-    return (
-        stream_df.withColumn("__shard", shard_expr(key_col, num_shards))
+    packed = (
+        stream_df.filter(F.col(key_col).isNotNull())
+        .withColumn("__shard", shard_expr(key_col, num_shards))
         .groupBy("__shard")
         .applyInPandasWithState(
-            update, out_schema, state_schema, "append",
+            update, pack_schema, state_schema, "append",
             GroupStateTimeout.NoTimeout,
         )
     )
+    return explode_lists(packed, {n: n for n in out_schema.names})
 
 
 def stream_build_sharded(
@@ -99,7 +115,8 @@ def stream_build_sharded(
     filter blob per shard; every micro-batch inserts its shard's
     novel keys and emits ``(key, shard, fresh)`` where ``fresh`` is
     True for the first sighting of a key (set semantics: duplicates
-    and hash false-positives gate as seen). This is the streaming
+    and hash false-positives gate as seen). Rows with a null key are
+    dropped. This is the streaming
     complement of ``ShardedCuckooFilter.build`` — state never leaves
     the executors and is checkpointed by the streaming engine. The
     per-shard state kernel follows ``config.bucket_policy``
@@ -107,7 +124,6 @@ def stream_build_sharded(
     :func:`stream_apply_ops`.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StructField, StructType,
     )
@@ -120,7 +136,7 @@ def stream_build_sharded(
         StructField("fresh", BooleanType()),
     ])
 
-    def step(flt, shard_id, pdfs):
+    def step(flt, pdfs):
         for pdf in pdfs:
             raw = pdf[key_col].to_numpy(np.int64, copy=False)
             keys = keys_to_unsigned(raw)
@@ -135,9 +151,7 @@ def stream_build_sharded(
                 mask = np.zeros(len(novel), dtype=bool)
                 mask[first] = True
                 fresh[novel[~mask]] = False
-            yield pd.DataFrame({
-                key_col: raw, "shard": shard_id, "fresh": fresh,
-            })
+            yield raw, fresh
 
     return _sharded_state_stream(
         stream_df, key_col, capacity, num_shards, config, out_schema, step,
@@ -299,7 +313,7 @@ def stream_apply_ops(
     ``(key, op)`` with op in {'insert','delete'}; output is
     ``(key, op, shard, ok)``. A row whose op is anything else
     (another case, a typo, null) leaves the filter untouched and
-    comes back ``ok = false``.
+    comes back ``ok = false``; a row with a null key is dropped.
 
     Ordering: ops for one shard are applied in the order they are
     DELIVERED to the state function. When a micro-batch's ops for
@@ -347,7 +361,7 @@ def stream_apply_ops(
                 ok[b0:b1] = flt.delete_many(seg)
         return ok
 
-    def step(flt, shard_id, pdfs):
+    def step(flt, pdfs):
         frames = (pdf for pdf in pdfs if len(pdf))
         if seq_col is not None:
             # deterministic total order: gather the shard's batch and
@@ -360,10 +374,7 @@ def stream_apply_ops(
         for pdf in frames:
             raw = pdf[key_col].to_numpy(np.int64, copy=False)
             ops = pdf[op_col].to_numpy()
-            ok = _apply(flt, raw, ops)
-            yield pd.DataFrame({
-                key_col: raw, "op": ops, "shard": shard_id, "ok": ok,
-            })
+            yield raw, ops, _apply(flt, raw, ops)
 
     return _sharded_state_stream(
         stream_df, key_col, capacity, num_shards, config, out_schema, step,

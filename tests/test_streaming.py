@@ -674,3 +674,112 @@ def test_stream_apply_ops_concurrent_producers(spark, tmp_path):
     ) - sum((r.op == "delete" and r.ok) for r in rows)
     n_replay_net = sum(f.occupied for f in filters.values())
     assert n_stream_net == n_replay_net
+
+
+@pytest.mark.parametrize("op_stream", ["build", "apply_ops"])
+def test_stream_ops_drop_null_keys(spark, tmp_path, op_stream):
+    """A null key is no key: both stateful stream ops drop it before
+    sharding, so it is neither inserted nor emitted (it used to come
+    back, and be stored, as INT64_MIN, indistinguishable from a real
+    key of that value)."""
+    src_dir = str(tmp_path / "nullsrc")
+    spark.createDataFrame(
+        [(1, "insert"), (2, "insert"), (None, "insert"), (3, "insert")],
+        "key long, op string",
+    ).coalesce(1).write.parquet(src_dir)
+    stream = spark.readStream.schema("key long, op string").parquet(src_dir)
+    if op_stream == "build":
+        out = sm.stream_build_sharded(stream, "key", 64, 2, CFG)
+        flag = "fresh"
+    else:
+        out = sm.stream_apply_ops(stream, "key", "op", 64, 2, CFG)
+        flag = "ok"
+    name = f"null_keys_{op_stream}"
+    q = (
+        out.writeStream.format("memory").queryName(name)
+        .outputMode("append").trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "nullckpt"))
+        .start()
+    )
+    q.awaitTermination(180)
+    rows = spark.table(name).collect()
+    assert sorted(r.key for r in rows) == [1, 2, 3]
+    assert all(r[flag] for r in rows)
+
+
+def test_stream_apply_ops_restores_per_row_checkpoint(spark, tmp_path):
+    """A checkpoint written when the state function still returned one
+    row per op (the stateful operator's output was the flat
+    ``(key, op, shard, ok)``) restores under the list-column rows that
+    ``stream_apply_ops`` returns now: the state schema and grouping key
+    are unchanged, so deletes of keys inserted before the restart
+    succeed."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from cuckoo_filter_spark.core.cuckoo import CuckooFilter
+    from cuckoo_filter_spark.hashing import keys_to_unsigned
+    from cuckoo_filter_spark.operators.membership import (
+        per_shard_capacity, shard_expr,
+    )
+
+    capacity, num_shards = 4096, 4
+    per_shard_cap = per_shard_capacity(capacity, num_shards)
+
+    def per_row_inserts(key, pdfs, state):
+        # the per-row plumbing: a CuckooFilter blob per shard, one
+        # output row per op
+        if state.exists:
+            flt = CuckooFilter.from_bytes(bytes(state.get[0]))
+        else:
+            flt = CuckooFilter(per_shard_cap, CFG)
+        for pdf in pdfs:
+            raw = pdf["key"].to_numpy(np.int64, copy=False)
+            ok = flt.insert_many(keys_to_unsigned(raw))
+            yield pd.DataFrame({
+                "key": raw, "op": pdf["op"].to_numpy(),
+                "shard": int(key[0]), "ok": ok,
+            })
+        state.update((flt.to_bytes(),))
+
+    src_dir = str(tmp_path / "ckptsrc")
+    ckpt = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "ckptout")
+    schema = "key long, op string"
+    spark.range(0, 1000).select(
+        F.col("id").alias("key"), F.lit("insert").alias("op")
+    ).write.parquet(src_dir + "/b1")
+
+    def source():
+        return (spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", "1").parquet(src_dir + "/*"))
+
+    per_row = (
+        source().withColumn("__shard", shard_expr("key", num_shards))
+        .groupBy("__shard")
+        .applyInPandasWithState(
+            per_row_inserts, "key long, op string, shard long, ok boolean",
+            "blob binary", "append", GroupStateTimeout.NoTimeout,
+        )
+    )
+    _run_once(per_row, out_dir, ckpt)
+    run1 = spark.read.parquet(out_dir).collect()
+    assert len(run1) == 1000 and all(r.ok for r in run1)
+    run1_files = _parquet_parts(out_dir)
+
+    spark.range(0, 500).select(
+        F.col("id").alias("key"), F.lit("delete").alias("op")
+    ).write.parquet(src_dir + "/b2")
+    _run_once(
+        sm.stream_apply_ops(source(), "key", "op", capacity, num_shards, CFG),
+        out_dir, ckpt,
+    )
+    new_files = sorted(_parquet_parts(out_dir) - run1_files)
+    assert new_files, "restored query produced no output"
+    run2 = spark.read.parquet(*new_files).collect()
+    assert len(run2) == 500
+    assert {r.op for r in run2} == {"delete"} and all(r.ok for r in run2)
+    assert {(r.key, r.shard) for r in run2} == {
+        (r.key, r.shard) for r in run1 if r.key < 500
+    }
