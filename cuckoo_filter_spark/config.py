@@ -20,9 +20,6 @@ import numpy as np
 #: remapped to 1 (reference: ``bucket_policies.cuh:50-53``).
 EMPTY = 0
 
-#: Default xxhash64 seed for fingerprint/bucket derivation.
-FINGERPRINT_SEED = 0x9747B28C
-
 #: Salts for the JVM-parity chained hash family
 #: (``hashing.chained_hash``): H(x, salt) = XXH64(salt, XXH64(x, 42)).
 #: FP_SALT drives fingerprint + primary-bucket bits; DISP_SALT drives
@@ -117,5 +114,3 @@ class CuckooConfig:
         ``src/main.cu:113-126``)."""
         return 2.0 * self.bucket_size * load_factor / float(1 << self.bits_per_tag)
 
-
-DEFAULT_CONFIG = CuckooConfig()

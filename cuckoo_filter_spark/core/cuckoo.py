@@ -506,13 +506,7 @@ class CuckooFilter:
         vectorized over the batch — see :func:`probe_rows` — in
         cache-resident chunks.
         """
-        return self._contains_chunked(*self._key_cand(keys))
-
-    def contains_packed(self, packed: np.ndarray) -> np.ndarray:
-        """Membership from JVM-packed values (see :meth:`_packed_cand`)."""
-        return self._contains_chunked(*self._packed_cand(packed))
-
-    def _contains_chunked(self, n: int, cand) -> np.ndarray:
+        n, cand = self._key_cand(keys)
         out = np.empty(n, dtype=bool)
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
@@ -540,14 +534,7 @@ class CuckooFilter:
         2*bucket_size — size ``bucket_size`` >= half the largest
         expected multiplicity (a GQF counter has no such cap; it
         trades this for approximate membership on deletion)."""
-        return self._count_chunked(*self._key_cand(keys))
-
-    def count_packed(self, packed: np.ndarray) -> np.ndarray:
-        """Counting query from JVM-packed values (see
-        :meth:`_packed_cand`)."""
-        return self._count_chunked(*self._packed_cand(packed))
-
-    def _count_chunked(self, n: int, cand) -> np.ndarray:
+        n, cand = self._key_cand(keys)
         out = np.zeros(n, dtype=np.int64)
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
@@ -586,13 +573,7 @@ class CuckooFilter:
         retire their key immediately. Duplicate deletes consume one
         stored instance per round.
         """
-        return self._delete_chunked(*self._key_cand(keys))
-
-    def delete_packed(self, packed: np.ndarray) -> np.ndarray:
-        """Delete from JVM-packed values (see :meth:`_packed_cand`)."""
-        return self._delete_chunked(*self._packed_cand(packed))
-
-    def _delete_chunked(self, n: int, cand_fn) -> np.ndarray:
+        n, cand_fn = self._key_cand(keys)
         if n == 0:
             return np.zeros(0, dtype=bool)
         success = np.zeros(n, dtype=bool)
@@ -752,10 +733,10 @@ class CuckooFilter:
     # serialization (shard blob exchanged between Spark stages)
     # ------------------------------------------------------------------
 
-    #: Blob format version. v1 used the xxhash64+FINGERPRINT_SEED
-    #: family; v2 probes with the chained FP_SALT/DISP_SALT family,
-    #: so v1 blobs MUST be rejected (probing them with the new family
-    #: yields false negatives). v3 keeps the v2 hash family and adds
+    #: Blob format version. v1 used plain xxhash64 with a fixed
+    #: fingerprint seed; v2 probes with the chained FP_SALT/DISP_SALT
+    #: family, so v1 blobs MUST be rejected (probing them with the new
+    #: family yields false negatives). v3 keeps the v2 hash family and adds
     #: a 1-byte payload-layout flag after the header: 0 = dense
     #: bucket table, 1/2 = sparse (uint32/uint64 bucket indices +
     #: stored tags) — the format partial-aggregation blobs ship when

@@ -125,7 +125,7 @@ def chained_hash(keys: np.ndarray, salt: int) -> np.ndarray:
     ``XXH64(salt, seed=XXH64(key, 42))`` — exactly Spark's
     ``F.xxhash64(key_col, F.lit(salt).cast('long'))``, so the same
     value is computable JVM-side in whole-stage codegen (packed
-    builds and routed ops) and numpy-side (the kernel),
+    builds) and numpy-side (the kernel),
     bit-for-bit."""
     return xxhash64_const_vseed(salt, xxhash64_u64(keys, seed=42))
 
@@ -136,32 +136,6 @@ def chained_hash_expr(col, salt: int):
 
     signed = salt - (1 << 64) if salt >= (1 << 63) else salt
     return F.xxhash64(col, F.lit(signed).cast("long"))
-
-
-_M64 = (1 << 64) - 1
-
-
-def chained_hash_scalar(key: int, salt: int) -> int:
-    """Python-int mirror of :func:`chained_hash` (kick-chain tail)."""
-    h = xxhash64_u64_scalar(key, 42)
-    return xxhash64_u64_scalar(salt & _M64, h)
-
-
-def xxhash64_u64_scalar(key: int, seed: int = 0) -> int:
-    """Scalar python-int XXH64 for 8-byte inputs — bit-identical to
-    :func:`xxhash64_u64`; used in the (rare) per-key eviction loop
-    where numpy call overhead would dominate."""
-    h = (seed + 0x27D4EB2F165667C5 + 8) & _M64
-    k1 = (key * 0xC2B2AE3D27D4EB4F) & _M64
-    k1 = (((k1 << 31 | k1 >> 33) & _M64) * 0x9E3779B185EBCA87) & _M64
-    h ^= k1
-    h = (((h << 27 | h >> 37) & _M64) * 0x9E3779B185EBCA87 + 0x85EBCA77C2B2AE63) & _M64
-    h ^= h >> 33
-    h = (h * 0xC2B2AE3D27D4EB4F) & _M64
-    h ^= h >> 29
-    h = (h * 0x165667B19E3779F9) & _M64
-    h ^= h >> 32
-    return h
 
 
 def key_from_content(content: str) -> int:

@@ -134,8 +134,9 @@ class ShardKernel(NamedTuple):
     new: Callable[[int], object]
     #: the kernel class; ``cls.from_bytes`` decodes a shard blob
     cls: type
-    #: the kernel has the ``*_packed`` fast path fed by the JVM-side
-    #: hash chain (``hashing.packed_expr``)
+    #: the kernel can be built from candidates the JVM packs
+    #: (``hashing.packed_expr``, ``insert_packed``); the routed ops ship
+    #: keys either way
     packed: bool
 
 
@@ -146,7 +147,7 @@ def shard_kernel(cfg: CuckooConfig) -> ShardKernel:
     can pack. Offset runs on
     :class:`~cuckoo_filter_spark.core.offset.OffsetCuckooFilter`: its
     choice-bit fingerprint changes on relocation, so it has no JVM
-    packing twin and its ops ship the 8-byte keys."""
+    packing twin and its build ships the 8-byte keys."""
     if cfg.bucket_policy == "offset":
         from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
 
@@ -305,17 +306,16 @@ class DistributedCuckooFilter:
         key_col: str,
         capacity: int,
         config: Optional[CuckooConfig] = None,
-        fan_in: int = 8,
     ) -> "DistributedCuckooFilter":
         """Per-partition partial build + executor-side fan-in merge.
 
         No shuffle of keys: each input partition builds a partial
         filter of the FINAL geometry (merge requires identical
-        geometry), and only blobs move — first into ``fan_in``
-        executor-side merge tasks, then the ≤fan_in survivors to
-        the driver. ONE Spark job, all-Arrow (the old RDD
-        ``treeReduce`` cost a job per level). Equivalent dataflow to
-        the reference's per-GPU build + union
+        geometry), and only blobs move — first into
+        ``sketch_agg.MERGE_FAN_IN`` executor-side merge tasks, then
+        their survivors to the driver. ONE Spark job, all-Arrow (the
+        old RDD ``treeReduce`` cost a job per level). Equivalent
+        dataflow to the reference's per-GPU build + union
         (``CuckooFilterMultiGPU.cuh:335-363``). Delegates to the
         generic mergeable-sketch aggregation (``sketch_agg.
         aggregate_sketch``) — the cuckoo filter IS a sketch under
@@ -325,10 +325,7 @@ class DistributedCuckooFilter:
 
         cfg = config or CuckooConfig()
         return DistributedCuckooFilter(
-            aggregate_sketch(
-                df, key_col, lambda: CuckooFilter(capacity, cfg),
-                fan_in=fan_in,
-            )
+            aggregate_sketch(df, key_col, lambda: CuckooFilter(capacity, cfg))
         )
 
     # -- query ----------------------------------------------------------
@@ -360,18 +357,6 @@ def shard_expr(key_col: str, num_shards: int):
     """Shard router: JVM-side xxhash64 (seed 42) mod num_shards —
     independent of the fingerprint hash family (private seed)."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_shards)).cast("long")
-
-
-def _apply_op(flt, op: str, left: pd.DataFrame, key_col: str, packed: bool):
-    """Run batch ``op`` ('contains'/'count'/'delete') of a shard
-    kernel over one shard's routed rows: the ``*_packed`` fast path on
-    the JVM-packed ``__packed`` column when routed with it, else
-    ``*_many`` on the keys."""
-    if packed:
-        return getattr(flt, op + "_packed")(
-            left["__packed"].to_numpy(np.int64, copy=False)
-        )
-    return getattr(flt, op + "_many")(_keys_from_pdf(left, key_col))
 
 
 def _stacked_probe_udf(bc, nb: int, bs: int, dtype_name: str,
@@ -478,19 +463,16 @@ class ShardedCuckooFilter:
     num_shards: int
     config: CuckooConfig
     key_col: str = "key"
-    #: per-shard bucket count (known at build time); enables JVM-side
-    #: candidate packing for routed ops. None for externally loaded
-    #: shard sets.
+    #: per-shard bucket count (known at build time); sizes the XOR
+    #: broadcast guard and is saved in checkpoints. None for externally
+    #: loaded shard sets, whose count is read from a blob header.
     shard_num_buckets: Optional[int] = None
     #: broadcast-lane size guard: collecting + broadcasting every
     #: shard only makes sense while the whole filter fits the driver
     #: and executors comfortably. Past this many broadcast bytes
     #: (``_broadcast_bytes``) the broadcast lanes fall back to the
-    #: shard-routed ops (state stays on executors) with a warning —
-    #: or raise, see ``on_oversize_broadcast``.
+    #: shard-routed ops (state stays on executors) with a warning.
     max_broadcast_bytes: int = 512 << 20
-    #: "fallback" (default) routes the op instead; "raise" errors.
-    on_oversize_broadcast: str = "fallback"
     _bcast: object = None    # cached (broadcast, probe UDF)
     _blob_bytes: object = None  # cached total_blob_bytes()
 
@@ -770,9 +752,7 @@ class ShardedCuckooFilter:
         take the shard-routed lane instead (state stays on
         executors). Returns True when the broadcast may proceed —
         always once a broadcast cache exists (the bytes are already
-        shipped); on oversize either warns and returns False
-        (``on_oversize_broadcast == "fallback"``) or raises
-        (``"raise"``)."""
+        shipped); on oversize it warns and returns False."""
         if self._bcast is not None:
             return True
         if not self.shards.is_cached:
@@ -783,22 +763,13 @@ class ShardedCuckooFilter:
         size = self._broadcast_bytes()
         if size <= self.max_broadcast_bytes:
             return True
-        if self.on_oversize_broadcast == "raise":
-            raise ValueError(
-                f"{op}: filter state is {size >> 20} MiB to broadcast, over "
-                f"the {self.max_broadcast_bytes >> 20} MiB broadcast "
-                "guard — use the shard-routed op (state stays on "
-                "executors), or raise max_broadcast_bytes if the cluster "
-                "can take it"
-            )
         import warnings
 
         warnings.warn(
             f"{op}: filter state is {size >> 20} MiB to broadcast, over the "
             f"{self.max_broadcast_bytes >> 20} MiB broadcast guard; "
-            "falling back to the shard-routed lane (set "
-            "on_oversize_broadcast='raise' or raise max_broadcast_bytes "
-            "to override)",
+            "falling back to the shard-routed lane (raise "
+            "max_broadcast_bytes to override)",
             RuntimeWarning,
             stacklevel=3,
         )
@@ -806,35 +777,20 @@ class ShardedCuckooFilter:
 
     # -- routed batch ops -------------------------------------------------
 
-    @property
-    def _packed(self) -> bool:
-        """Routed ops ship the JVM-packed candidates (and the kernel
-        runs its ``*_packed`` fast path) instead of the raw keys."""
-        return (
-            self.shard_num_buckets is not None
-            and shard_kernel(self.config).packed
-        )
-
     def _route(self, queries: DataFrame, fn, schema: StructType) -> DataFrame:
         """Route query keys to their shard and run ``fn(key, probe
         rows, shard row)`` once per shard — the Spark expression of
         the reference's multisplit → all2all → local kernel round
         trip (``CuckooFilterMultiGPU.cuh:168-323``). Probe rows are
-        the key, its shard id (``__shard``) and, on the packed lane,
-        its JVM-packed candidates (``__packed``)."""
+        the key and its shard id (``__shard``), as the reference ships
+        only the keys; each shard kernel hashes them itself. Null keys
+        are dropped: ``xxhash64`` skips nulls, so one would route and
+        answer as a real key."""
         key_col = self.key_col
-        routed = queries.select(key_col)
-        if self._packed:
-            from cuckoo_filter_spark.hashing import packed_expr
-
-            cfg = self.config
-            routed = routed.withColumn(
-                "__packed",
-                packed_expr(key_col, self.shard_num_buckets, cfg.bits_per_tag,
-                            cfg.bucket_policy),
-            )
         return (
-            routed.withColumn("__shard", shard_expr(key_col, self.num_shards))
+            queries.select(key_col)
+            .filter(F.col(key_col).isNotNull())
+            .withColumn("__shard", shard_expr(key_col, self.num_shards))
             .groupBy("__shard")
             .cogroup(self.shards.groupBy(F.col("shard_id").alias("__shard")))
             .applyInPandas(fn, schema=schema)
@@ -849,7 +805,6 @@ class ShardedCuckooFilter:
         reference restores input offsets because its API is
         positional; ours is relational)."""
         key_col = self.key_col
-        packed = self._packed
         kernel_cls = shard_kernel(self.config).cls
 
         # one row per shard with list columns (exploded JVM-side):
@@ -867,7 +822,7 @@ class ShardedCuckooFilter:
                 res = np.zeros(len(left), dtype=res_np_dtype)
             else:
                 flt = kernel_cls.from_bytes(right["blob"].iloc[0])
-                res = _apply_op(flt, op, left, key_col, packed)
+                res = getattr(flt, op + "_many")(_keys_from_pdf(left, key_col))
             keys = left[key_col].to_numpy(np.int64, copy=False)
             return pack_lists({"__keys": keys, "__res": res}, chunk_rows)
 
@@ -996,7 +951,8 @@ class ShardedCuckooFilter:
         explode, and persisting the cogroup output caches only the
         shard rows. Multiset semantics for every kernel (Offset's
         choice-bit flips are handled by its core kernel). Null keys
-        are dropped before routing, so they neither remove nor count.
+        are dropped before routing (:meth:`_route`), so they neither
+        remove nor count.
 
         ``per_key=False`` mirrors the reference's delete contract
         exactly: ``deleteMany`` writes per-key outcomes into device
@@ -1010,7 +966,6 @@ class ShardedCuckooFilter:
         ``(None, new_filter)``; read the count with
         :meth:`delete_success_count`)."""
         key_col = self.key_col
-        packed = self._packed
         kernel_cls = shard_kernel(self.config).cls
 
         fields = list(_SHARD_SCHEMA.fields) + [
@@ -1028,10 +983,7 @@ class ShardedCuckooFilter:
             keys_arr = left[key_col].to_numpy(np.int64, copy=False)
             if len(right):
                 flt = kernel_cls.from_bytes(right["blob"].iloc[0])
-                if len(left):
-                    ok = _apply_op(flt, "delete", left, key_col, packed)
-                else:
-                    ok = np.zeros(0, dtype=bool)
+                ok = flt.delete_many(_keys_from_pdf(left, key_col))
                 out = {
                     "shard_id": [shard_id], "blob": [flt.to_bytes()],
                     "rows": [int(right["rows"].iloc[0])],
@@ -1052,9 +1004,7 @@ class ShardedCuckooFilter:
                 out["del_ok"] = [ok]
             return pd.DataFrame(out)
 
-        merged = self._route(
-            deletes.filter(F.col(key_col).isNotNull()), apply_delete, schema
-        ).persist()
+        merged = self._route(deletes, apply_delete, schema).persist()
         results = None
         if per_key:
             results = explode_lists(
@@ -1063,8 +1013,7 @@ class ShardedCuckooFilter:
         new_shards = merged.filter(F.col("blob").isNotNull()).select(
             *_SHARD_SCHEMA.names
         )
-        # shard geometry is unchanged by deletes — keep the packed
-        # JVM fast path alive on the returned filter
+        # shard geometry is unchanged by deletes
         out = ShardedCuckooFilter(
             new_shards, self.num_shards, self.config, key_col,
             shard_num_buckets=self.shard_num_buckets,

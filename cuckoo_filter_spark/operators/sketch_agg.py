@@ -25,6 +25,10 @@ from pyspark.sql import functions as F
 
 from cuckoo_filter_spark.hashing import keys_to_unsigned
 
+#: executor-side merge tasks between the per-partition partials and
+#: the driver in :func:`aggregate_sketch`
+MERGE_FAN_IN = 8
+
 
 def _column_values(pdf: pd.DataFrame, col: str, unsigned: bool) -> np.ndarray:
     if unsigned:
@@ -37,13 +41,12 @@ def aggregate_sketch(
     col: str,
     make_sketch: Callable[[], object],
     unsigned_keys: bool = True,
-    fan_in: int = 8,
 ):
     """Build one sketch over df[col]: partial per partition, then a
     two-stage merge entirely in the DataFrame API — partial blobs
-    are fanned into ``fan_in`` executor-side merge tasks and only
-    the ≤fan_in survivors reach the driver. ONE Spark job (the old
-    RDD ``treeReduce`` cost an extra job per level plus an
+    are fanned into ``MERGE_FAN_IN`` executor-side merge tasks and
+    only the ≤MERGE_FAN_IN survivors reach the driver. ONE Spark job
+    (the old RDD ``treeReduce`` cost an extra job per level plus an
     ``isEmpty`` job and bypassed Arrow). Returns the final
     deserialized sketch object."""
 
@@ -76,7 +79,7 @@ def aggregate_sketch(
     reduced = (
         df.select(col)
         .mapInPandas(partial, "blob binary")
-        .repartition(fan_in)
+        .repartition(MERGE_FAN_IN)
         .mapInPandas(merge_all, "blob binary")
         .collect()
     )

@@ -105,23 +105,3 @@ def test_multiset_delete_exact_counts(keys, dups, extra, cfg):
     n_unique = len(np.unique(arr))
     assert int(ok.sum()) == n_unique * dups
     assert f.occupied == 0 and f.count_occupied_slots() == 0
-
-
-@settings(max_examples=40, deadline=None)
-@given(keys=keys_st)
-def test_delete_packed_matches_delete_many(keys):
-    """The JVM-packed delete lane must remove exactly what the
-    key-hashing lane removes (same blob afterwards)."""
-    cfg = CuckooConfig(16, 4)
-    arr = np.array(keys, dtype=np.uint64)
-    f1 = CuckooFilter(2048, cfg)
-    f2 = CuckooFilter(2048, cfg)
-    if not f1.insert_many(arr).all():
-        return
-    f2.insert_many(arr)
-    i1, _, fp = f1.candidates(arr)
-    packed = (i1.astype(np.int64) << cfg.bits_per_tag) | fp.astype(np.int64)
-    ok1 = f1.delete_packed(packed)
-    ok2 = f2.delete_many(arr)
-    assert int(ok1.sum()) == int(ok2.sum())
-    assert f1.occupied == f2.occupied == 0
