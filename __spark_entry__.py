@@ -41,7 +41,7 @@ from cuckoo_filter_spark.operators.membership import (
     DistributedCuckooFilter, ShardedCuckooFilter,
 )
 from cuckoo_filter_spark.operators.sketch_agg import (
-    aggregate_sketch, grouped_sketch, grouped_sketch_partial,
+    aggregate_sketch, grouped_sketch_partial,
 )
 
 CFG = CuckooConfig(bits_per_tag=16, bucket_size=4)
@@ -191,8 +191,8 @@ def q_cuckoo_shard_metrics(spark, sf_dir):
 
 def q_cuckoo_contains_sql(spark, sf_dir):
     """Broadcast probe of the merged filter, keyed by document: the
-    blob is broadcast once and every task answers its rows with one
-    vectorized ``contains_many`` per Arrow batch. Zero false negatives
+    bucket table is broadcast once and every task answers its rows
+    with one vectorized probe per Arrow batch. Zero false negatives
     on all inserted keys; disjoint negatives almost all rejected."""
     docs = _docs(spark, sf_dir)
     n = docs.count()

@@ -69,33 +69,34 @@ def swar_params(bits_per_tag: int, bucket_size: int):
 
 
 def probe_rows(
-    buckets: np.ndarray, i1: np.ndarray, i2: np.ndarray, fp: np.ndarray,
-    bits_per_tag: int, out: np.ndarray | None = None,
+    buckets: np.ndarray, i1: np.ndarray, i2: np.ndarray, t1: np.ndarray,
+    t2: np.ndarray, out: np.ndarray | None = None,
 ) -> np.ndarray:
-    """Membership of ``fp[j]`` in row ``i1[j]`` or ``i2[j]`` of a
-    (N, bucket_size) tag array — SWAR zero-in-word bithack
-    (``CuckooFilter.cuh:290-346``) when the row is word-aligned,
-    equality broadcast otherwise. Shared by the filter's own
-    ``contains_many`` and the stacked-broadcast shard probe."""
-    res = out if out is not None else np.empty(len(fp), dtype=bool)
-    sw = swar_params(bits_per_tag, buckets.shape[1])
+    """Membership of tag ``t1[j]`` in row ``i1[j]`` or of ``t2[j]`` in
+    row ``i2[j]`` of a (N, bucket_size) tag array — SWAR zero-in-word
+    bithack (``CuckooFilter.cuh:290-346``) over lanes of the array's
+    dtype when the row is word-aligned, equality broadcast otherwise.
+    Shared by both kernels' ``contains_many`` and the stacked
+    broadcast probe."""
+    res = out if out is not None else np.empty(len(t1), dtype=bool)
+    sw = swar_params(8 * buckets.dtype.itemsize, buckets.shape[1])
     if sw:
         wpb, low, high = sw
         words = buckets.view(np.uint64).reshape(len(buckets), wpb)
-        rep = fp.astype(np.uint64) * low
+        rep1 = t1.astype(np.uint64) * low
+        rep2 = rep1 if t2 is t1 else t2.astype(np.uint64) * low
         hit = None
         with np.errstate(over="ignore"):
-            for idx in (i1, i2):
+            for idx, rep in ((i1, rep1), (i2, rep2)):
                 for j in range(wpb):
                     x = words[idx, j] ^ rep
                     h = ((x - low) & ~x & high) != 0
                     hit = h if hit is None else (hit | h)
         res[:] = hit
     else:
-        fpc = fp[:, None]
         np.logical_or(
-            (buckets[i1] == fpc).any(axis=1),
-            (buckets[i2] == fpc).any(axis=1),
+            (buckets[i1] == t1[:, None]).any(axis=1),
+            (buckets[i2] == t2[:, None]).any(axis=1),
             out=res,
         )
     return res
@@ -173,15 +174,15 @@ class CuckooFilter:
             return (h & self._mask).astype(idt)
         return (h % np.uint64(self.num_buckets // 2)).astype(idt)
 
-    def candidates(self, keys: np.ndarray) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(i1, i2, fp) for each uint64 key.
+    def candidates_from_hash(self, h: np.ndarray):
+        """(i1, i2, tag in i1, tag in i2) from the chained hash
+        ``h = chained_hash(key, FP_SALT)``; both tags are the key's fp.
 
         fp = upper-32-bits & tag_mask, 0 remapped to 1
         (bucket_policies.cuh:49-53). XOR policy: i1 = lower-32-bits
         & mask (:56-58), i2 = i1 ^ (h(fp) & mask) (:71-74). AddSub
         policy: i1 = lower-32-bits % (nb/2), block 0
         (bucket_policies.cuh:126-143)."""
-        h = chained_hash(keys, FP_SALT)
         fp = ((h >> np.uint64(32)) & np.uint64(self.config.tag_mask)).astype(
             self.config.tag_dtype
         )
@@ -194,7 +195,11 @@ class CuckooFilter:
             i1 = (
                 (h & np.uint64(0xFFFFFFFF)) % np.uint64(bpb)
             ).astype(idt)
-        i2 = self.alt_bucket(i1, fp)
+        return i1, self.alt_bucket(i1, fp), fp, fp
+
+    def candidates(self, keys: np.ndarray) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(i1, i2, fp) for each uint64 key (:meth:`candidates_from_hash`)."""
+        i1, i2, fp, _ = self.candidates_from_hash(chained_hash(keys, FP_SALT))
         return i1, i2, fp
 
     @property
@@ -511,10 +516,7 @@ class CuckooFilter:
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
             i1, i2, fp = cand(lo, hi)
-            probe_rows(
-                self.buckets, i1, i2, fp, self.config.bits_per_tag,
-                out=out[lo:hi],
-            )
+            probe_rows(self.buckets, i1, i2, fp, fp, out=out[lo:hi])
         return out
 
     def count_many(self, keys: np.ndarray) -> np.ndarray:

@@ -30,6 +30,7 @@ import struct
 import numpy as np
 
 from cuckoo_filter_spark.config import DISP_SALT, FP_SALT
+from cuckoo_filter_spark.core.cuckoo import probe_rows
 from cuckoo_filter_spark.hashing import chained_hash
 
 _MAGIC = b"OCKF"
@@ -86,10 +87,12 @@ class OffsetCuckooFilter:
 
     # -- addressing -----------------------------------------------------
 
-    def _candidates(self, keys: np.ndarray):
-        """(i1, i2, pure): primary/alternate buckets + pure fp
-        (``bucket_policies.cuh:266-287``)."""
-        h = chained_hash(np.ascontiguousarray(keys, dtype=np.uint64), FP_SALT)
+    def candidates_from_hash(self, h: np.ndarray):
+        """(i1, i2, tag in i1, tag in i2) from the chained hash
+        ``h = chained_hash(key, FP_SALT)``
+        (``bucket_policies.cuh:266-287``): the primary bucket holds the
+        pure fingerprint (choice bit 0), the alternate one
+        ``pure | choice bit``."""
         pure = ((h >> np.uint64(32)) & np.uint64(self._pure_mask)).astype(
             np.int64
         )
@@ -97,7 +100,14 @@ class OffsetCuckooFilter:
         i1 = ((h & np.uint64(0xFFFFFFFF)) % np.uint64(self.num_buckets)
               ).astype(np.int64)
         i2 = (i1 + self._offsets[pure]) % self.num_buckets
-        return i1, i2, pure
+        t1 = pure.astype(self.buckets.dtype)
+        return i1, i2, t1, t1 | self.buckets.dtype.type(self._choice_bit)
+
+    def _candidates(self, keys: np.ndarray):
+        """:meth:`candidates_from_hash` of each uint64 key."""
+        return self.candidates_from_hash(
+            chained_hash(np.ascontiguousarray(keys, dtype=np.uint64), FP_SALT)
+        )
 
     def alternate(self, bucket: int, tag: int) -> tuple[int, int]:
         """(alt_bucket, new_tag) with the choice bit flipped
@@ -162,21 +172,18 @@ class OffsetCuckooFilter:
         keys = np.ascontiguousarray(keys, dtype=np.uint64)
         n = len(keys)
         success = np.zeros(n, dtype=bool)
-        cb = self._choice_bit
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
-            i1, i2, pure = self._candidates(keys[lo:hi])
-            tags0 = pure.astype(self.buckets.dtype)           # choice=0
-            s = self._place(i1, tags0)
+            i1, i2, t1, t2 = self._candidates(keys[lo:hi])
+            s = self._place(i1, t1)
             rem = np.flatnonzero(~s)
             if rem.size:
-                tags1 = (pure[rem] | cb).astype(self.buckets.dtype)
-                s2 = self._place(i2[rem], tags1)
+                s2 = self._place(i2[rem], t2[rem])
                 s[rem[s2]] = True
                 for j in rem[~s2]:
                     # stuck: evict from the alternate bucket with the
                     # choice=1 tag (start of the DFS chain)
-                    if self._kick_chain(int(i2[j]), int(pure[j]) | cb):
+                    if self._kick_chain(int(i2[j]), int(t2[j])):
                         s[j] = True
             success[lo:hi] = s
         self.occupied += int(success.sum())
@@ -186,16 +193,10 @@ class OffsetCuckooFilter:
         keys = np.ascontiguousarray(keys, dtype=np.uint64)
         n = len(keys)
         out = np.empty(n, dtype=bool)
-        cb = self._choice_bit
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
-            i1, i2, pure = self._candidates(keys[lo:hi])
-            t0 = pure.astype(self.buckets.dtype)[:, None]
-            t1 = (pure | cb).astype(self.buckets.dtype)[:, None]
-            np.logical_or(
-                (self.buckets[i1] == t0).any(axis=1),
-                (self.buckets[i2] == t1).any(axis=1),
-                out=out[lo:hi],
+            probe_rows(
+                self.buckets, *self._candidates(keys[lo:hi]), out=out[lo:hi]
             )
         return out
 
@@ -205,12 +206,10 @@ class OffsetCuckooFilter:
         keys = np.ascontiguousarray(keys, dtype=np.uint64)
         n = len(keys)
         out = np.zeros(n, dtype=bool)
-        cb = self._choice_bit
-        i1a, i2a, purea = self._candidates(keys)
+        i1a, i2a, t1a, t2a = self._candidates(keys)
         for j in range(n):
             for bucket, tag in (
-                (int(i1a[j]), int(purea[j])),
-                (int(i2a[j]), int(purea[j]) | cb),
+                (int(i1a[j]), int(t1a[j])), (int(i2a[j]), int(t2a[j])),
             ):
                 f = int(self.fill[bucket])
                 row = self.buckets[bucket]
@@ -230,6 +229,14 @@ class OffsetCuckooFilter:
     # -- serialization (shard blob for the distributed path) -------------
 
     BLOB_VERSION = 2  # kept in lockstep with CuckooFilter.BLOB_VERSION
+    #: every blob starts with a fixed-size header
+    HEADER_BYTES = _HEADER.size
+
+    @staticmethod
+    def blob_num_buckets(header: bytes) -> int:
+        """Bucket count of a blob, read from its first
+        :attr:`HEADER_BYTES` alone."""
+        return _HEADER.unpack_from(header)[4]
 
     def to_bytes(self) -> bytes:
         hdr = _HEADER.pack(
@@ -241,6 +248,11 @@ class OffsetCuckooFilter:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "OffsetCuckooFilter":
+        if len(blob) < _HEADER.size:
+            raise ValueError(
+                f"offset blob of {len(blob)} bytes is shorter than its "
+                f"{_HEADER.size}-byte header"
+            )
         magic, ver, f, b, nb, cap, occ, kicks, fails, maxk = (
             _HEADER.unpack_from(blob)
         )

@@ -296,7 +296,7 @@ class DistributedCuckooFilter:
 
     def __init__(self, filter_: CuckooFilter):
         self.filter = filter_
-        self._bc = None
+        self._probe = None
 
     # -- build ----------------------------------------------------------
 
@@ -331,13 +331,17 @@ class DistributedCuckooFilter:
     # -- query ----------------------------------------------------------
 
     def contains_udf(self, spark: SparkSession):
-        """Vectorized membership UDF against the broadcast blob
+        """Vectorized membership against the broadcast bucket table
         (containsMany, ``CuckooFilter.cuh:518-523``): the sharded
-        filter's broadcast probe with this filter as its one shard, so
-        each task deserializes the blob once, not per batch."""
-        if self._bc is None:
-            self._bc = spark.sparkContext.broadcast({0: self.filter.to_bytes()})
-        return _per_shard_probe_udf(self._bc, 1, type(self.filter))
+        filter's broadcast probe (:func:`_stacked_probe_udf`) with this
+        filter as its one shard. Returns a Column function; a null key
+        answers NULL."""
+        if self._probe is None:
+            bc = spark.sparkContext.broadcast(self.filter.buckets.tobytes())
+            self._probe = _stacked_probe_udf(
+                bc, self.filter.num_buckets, 1, self.config
+            )
+        return self._probe
 
     def contains(self, df: DataFrame, key_col: str, out_col: str = "member") -> DataFrame:
         spark = df.sparkSession
@@ -359,94 +363,52 @@ def shard_expr(key_col: str, num_shards: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_shards)).cast("long")
 
 
-def _stacked_probe_udf(bc, nb: int, bs: int, dtype_name: str,
-                       num_shards: int, cfg: CuckooConfig):
-    """XOR broadcast probe over every shard's buckets stacked into ONE
-    (num_shards*nb, bs) array: shard s occupies bucket rows
-    [s*nb, (s+1)*nb), so a whole Arrow batch is answered in a single
-    vectorized pass — per-key shard routing (xxhash64 seed 42,
-    bit-exact with the JVM build-time router) just offsets the bucket
-    index by shard_id*nb."""
-    tag_mask = cfg.tag_mask
-    bits = cfg.bits_per_tag
+def _stacked_probe_udf(bc, nb: int, num_shards: int, cfg: CuckooConfig):
+    """The broadcast probe, as a Column function: every shard's buckets
+    stacked into ONE (num_shards*nb, bucket_size) array ``bc`` (shard s
+    occupies bucket rows [s*nb, (s+1)*nb)), so a whole Arrow batch is
+    answered in a single vectorized pass under any bucket policy. Per
+    key, the router hash (xxhash64 seed 42, bit-exact with the JVM
+    build-time router) picks the shard and, chained with FP_SALT, gives
+    the hash a geometry-only shard kernel (:func:`shard_kernel`'s
+    ``new(nb * bucket_size)``, the constructor resolved on the driver)
+    maps to the key's two rows and tags; the rows are then offset by
+    shard*nb. A null key answers NULL: it reaches the UDF as a stand-in
+    0 whose answer is discarded JVM-side."""
+    new_kernel = shard_kernel(cfg).new
+    bs = cfg.bucket_size
 
     @F.pandas_udf(BooleanType())
     def member(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from cuckoo_filter_spark.config import DISP_SALT, FP_SALT
-        from cuckoo_filter_spark.core.cuckoo import CuckooFilter, probe_rows
+        from cuckoo_filter_spark.config import FP_SALT
+        from cuckoo_filter_spark.core.cuckoo import probe_rows
         from cuckoo_filter_spark.hashing import (
-            chained_hash, xxhash64_u64, xxhash64_const_vseed,
+            xxhash64_const_vseed, xxhash64_u64,
         )
 
-        big = np.frombuffer(bc.value, dtype=np.dtype(dtype_name)).reshape(
+        kernel = new_kernel(nb * bs)
+        big = np.frombuffer(bc.value, dtype=kernel.buckets.dtype).reshape(
             -1, bs
         )
-        mask = np.uint64(nb - 1)
-        # L2-resident alt-displacement table (h(fp) & mask)
-        alt_tab = None
-        if bits <= 16:
-            all_fp = np.arange(1 << bits, dtype=np.uint64)
-            alt_tab = (chained_hash(all_fp, DISP_SALT) & mask).astype(
-                np.int64
-            )
-        CH = CuckooFilter.CHUNK
         for s in batches:
             keys = s.to_numpy(dtype=np.int64, copy=False).view(np.uint64)
             n = len(keys)
             res = np.empty(n, dtype=bool)
-            for lo in range(0, n, CH):
-                kc = keys[lo:lo + CH]
-                hr = xxhash64_u64(kc, seed=42)  # router hash
-                shard = (hr.view(np.int64) % num_shards).astype(np.int64)
-                h = xxhash64_const_vseed(FP_SALT, hr)
-                fp = ((h >> np.uint64(32)) & np.uint64(tag_mask)).astype(
-                    big.dtype
+            for lo in range(0, n, kernel.CHUNK):
+                hr = xxhash64_u64(keys[lo:lo + kernel.CHUNK], seed=42)
+                i1, i2, t1, t2 = kernel.candidates_from_hash(
+                    xxhash64_const_vseed(FP_SALT, hr)
                 )
-                fp[fp == 0] = 1
-                i1 = (h & mask).astype(np.int64)
-                if alt_tab is not None:
-                    alt = alt_tab[fp.astype(np.int64)]
-                else:
-                    alt = (
-                        chained_hash(fp.astype(np.uint64), DISP_SALT)
-                        & mask
-                    ).astype(np.int64)
-                base = shard * nb
+                base = (hr.view(np.int64) % num_shards) * nb
                 probe_rows(
-                    big, base + i1, base + (i1 ^ alt), fp, bits,
-                    out=res[lo:lo + len(kc)],
+                    big, base + i1, base + i2, t1, t2,
+                    out=res[lo:lo + len(hr)],
                 )
             yield pd.Series(res)
 
-    return member
-
-
-def _per_shard_probe_udf(bc, num_shards: int, kernel_cls: type):
-    """Broadcast probe over a ``{shard_id: blob}`` broadcast: each
-    task decodes every shard once, routes its keys to their shard
-    locally and probes each shard's kernel — any bucket policy. The
-    merged filter's ``contains_udf`` is its one-shard case."""
-
-    @F.pandas_udf(BooleanType())
-    def member(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from cuckoo_filter_spark.hashing import xxhash64_u64
-
-        filters = {
-            sid: kernel_cls.from_bytes(b) for sid, b in bc.value.items()
-        }
-        for s in batches:
-            keys = s.to_numpy(np.int64, copy=False).view(np.uint64)
-            sids = xxhash64_u64(keys, seed=42).view(np.int64) % num_shards
-            res = np.zeros(len(keys), dtype=bool)
-            for sid, pos, sk in _group_by_shard(
-                sids, np.arange(len(keys)), keys
-            ):
-                flt = filters.get(sid)
-                if flt is not None:
-                    res[pos] = flt.contains_many(sk)
-            yield pd.Series(res)
-
-    return member
+    return lambda key: F.when(
+        key.isNotNull(), member(F.coalesce(key, F.lit(0)))
+    )
 
 
 @dataclass
@@ -463,7 +425,7 @@ class ShardedCuckooFilter:
     num_shards: int
     config: CuckooConfig
     key_col: str = "key"
-    #: per-shard bucket count (known at build time); sizes the XOR
+    #: per-shard bucket count (known at build time); sizes the
     #: broadcast guard and is saved in checkpoints. None for externally
     #: loaded shard sets, whose count is read from a blob header.
     shard_num_buckets: Optional[int] = None
@@ -728,21 +690,27 @@ class ShardedCuckooFilter:
             )
         return self._blob_bytes
 
+    def _num_buckets(self) -> int:
+        """Per-shard bucket count: :attr:`shard_num_buckets`, else read
+        from one blob header through the shard kernel (1 when there
+        are no shards)."""
+        if self.shard_num_buckets is not None:
+            return self.shard_num_buckets
+        cls = shard_kernel(self.config).cls
+        row = self.shards.select(
+            F.substring("blob", 1, cls.HEADER_BYTES)
+        ).first()
+        return 1 if row is None else cls.blob_num_buckets(bytes(row[0]))
+
     def _broadcast_bytes(self) -> int:
-        """Bytes :meth:`contains_broadcast` ships. XOR broadcasts the
-        dense stacked table (:meth:`_stacked_buckets`), which the
-        sparse blobs of lightly loaded shards under-state several
-        times over; the other policies broadcast the blobs."""
+        """Bytes :meth:`contains_broadcast` ships: the dense stacked
+        table (:meth:`_stacked_buckets`), which the sparse blobs of
+        lightly loaded shards under-state several times over."""
         cfg = self.config
-        if cfg.bucket_policy != "xor":
-            return self.total_blob_bytes()
-        nb = self.shard_num_buckets
-        if nb is None:
-            header = self.shards.select(
-                F.substring("blob", 1, CuckooFilter.HEADER_BYTES)
-            ).first()[0]
-            nb = CuckooFilter.blob_num_buckets(bytes(header))
-        return self.num_shards * nb * cfg.bucket_size * cfg.tag_dtype.itemsize
+        return (
+            self.num_shards * self._num_buckets() * cfg.bucket_size
+            * cfg.tag_dtype.itemsize
+        )
 
     def _broadcast_guard(self, op: str) -> bool:
         """Broadcast-lane size guard. Collecting + broadcasting every
@@ -841,14 +809,15 @@ class ShardedCuckooFilter:
         """Routed membership with the broadcast lanes' output shape
         (all query columns kept + out_col) — the oversize fallback:
         probe the distinct keys through the shard-routed lane, then
-        join the answers back onto the full query rows."""
+        left-join the answers back onto the full query rows, so a null
+        key keeps its row and answers NULL."""
         probes = queries.select(
             F.col(key_col).alias(self.key_col)
         ).distinct()
         res = self._routed(probes, "contains", out_col)
         if self.key_col != key_col:
             res = res.withColumnRenamed(self.key_col, key_col)
-        return queries.join(res, key_col)
+        return queries.join(res, key_col, "left")
 
     def counts(self, queries: DataFrame, out_col: str = "count") -> DataFrame:
         """Batched exact counting query, shard-routed (key → stored
@@ -872,17 +841,20 @@ class ShardedCuckooFilter:
     def _stacked_buckets(self) -> np.ndarray:
         """Collect every shard and stack their bucket arrays into ONE
         (num_shards*nb, bucket_size) array on the driver: shard s
-        occupies bucket rows [s*nb, (s+1)*nb)."""
-        kernel_cls = shard_kernel(self.config).cls
+        occupies bucket rows [s*nb, (s+1)*nb); absent shards stay
+        empty."""
+        cfg = self.config
+        kernel_cls = shard_kernel(cfg).cls
         filters = {
             r.shard_id: kernel_cls.from_bytes(bytes(r.blob))
-            for r in self.shards.collect()
+            for r in self.shards.select("shard_id", "blob").collect()
         }
-        any_f = next(iter(filters.values()))
-        nb = any_f.num_buckets
+        nb = (
+            next(iter(filters.values())).num_buckets if filters
+            else self._num_buckets()
+        )
         big = np.zeros(
-            (self.num_shards * nb, any_f.buckets.shape[1]),
-            dtype=any_f.buckets.dtype,
+            (self.num_shards * nb, cfg.bucket_size), dtype=cfg.tag_dtype
         )
         for sid, f in filters.items():
             if f.num_buckets != nb:
@@ -894,43 +866,30 @@ class ShardedCuckooFilter:
         self, queries: DataFrame, key_col: str | None = None,
         out_col: str = "member",
     ) -> DataFrame:
-        """Zero-shuffle membership: the shard state is broadcast and
-        each task routes its keys to their shard locally. For XOR all
-        shard buckets are stacked into ONE array so a whole Arrow
-        batch is answered in a single vectorized pass
-        (:func:`_stacked_probe_udf`); other policies broadcast the
-        shard blobs and probe each shard's kernel
-        (:func:`_per_shard_probe_udf`). The broadcast is built once
-        and cached on the instance — shards are immutable (delete
-        returns a NEW ShardedCuckooFilter). Use when the total filter
-        size is broadcastable (it is whenever the merged filter would
-        be); :meth:`contains` is the shuffle-routed alternative for
-        filters too big to ship, and the lane this falls back to past
-        :attr:`max_broadcast_bytes`. Appends `out_col` to the query
-        DataFrame (all columns kept).
+        """Zero-shuffle membership: every shard's buckets are stacked
+        into ONE table, broadcast, and each task answers a whole Arrow
+        batch in a single vectorized pass, routing its keys to their
+        shard locally (:func:`_stacked_probe_udf`, any bucket policy).
+        The broadcast is built once and cached on the instance — shards
+        are immutable (delete returns a NEW ShardedCuckooFilter). Use
+        when the total filter size is broadcastable (it is whenever
+        the merged filter would be); :meth:`contains` is the
+        shuffle-routed alternative for filters too big to ship, and
+        the lane this falls back to past :attr:`max_broadcast_bytes`.
+        Appends `out_col` to the query DataFrame (all columns kept); a
+        null key answers NULL.
         """
         key_col = key_col or self.key_col
         if not self._broadcast_guard("contains_broadcast"):
             return self._routed_with_columns(queries, key_col, out_col)
         if self._bcast is None:
-            sc = queries.sparkSession.sparkContext
-            if self.config.bucket_policy == "xor":
-                # stack ONCE on the driver; workers view the broadcast
-                # bytes zero-copy, nothing O(filter-size) per task
-                big = self._stacked_buckets()
-                bc = sc.broadcast(big.tobytes())
-                member = _stacked_probe_udf(
-                    bc, len(big) // self.num_shards, big.shape[1],
-                    big.dtype.name, self.num_shards, self.config,
-                )
-            else:
-                bc = sc.broadcast({
-                    int(r.shard_id): bytes(r.blob)
-                    for r in self.shards.select("shard_id", "blob").collect()
-                })
-                member = _per_shard_probe_udf(
-                    bc, self.num_shards, shard_kernel(self.config).cls
-                )
+            # stack ONCE on the driver; workers view the broadcast
+            # bytes zero-copy, nothing O(filter-size) per task
+            big = self._stacked_buckets()
+            bc = queries.sparkSession.sparkContext.broadcast(big.tobytes())
+            member = _stacked_probe_udf(
+                bc, len(big) // self.num_shards, self.num_shards, self.config
+            )
             self._bcast = (bc, member)
         return queries.withColumn(out_col, self._bcast[1](F.col(key_col)))
 

@@ -196,7 +196,7 @@ def exact_quantiles_grouped(
     qs_f = [float(q) for q in qs]
     n_levels = max_retries + 1
 
-    def merge_and_bracket(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_and_bracket(key, pdf):
         sk = KLLSketch.from_bytes(pdf["blob"].iloc[0])
         for b in pdf["blob"].iloc[1:]:
             sk.merge_in_place(KLLSketch.from_bytes(b))

@@ -296,7 +296,7 @@ def cosine_pairs_ge(
     precision 1, recall set by parameters).
     """
 
-    def pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pairs(key, pdf):
         m = _normalize(_matrix(pdf[vec_col]).astype(np.float64))
         ids = pdf[id_col].to_numpy()
         sims = m @ m.T
@@ -324,7 +324,7 @@ def cosine_pairs_ge(
                 f"raise/disable max_exact_rows deliberately."
             )
 
-    def tile_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def tile_pairs(key, pdf):
         bi, bj = int(key[0]), int(key[1])
         if bi == bj:
             return pairs(key, pdf)

@@ -6,8 +6,9 @@ inside ``mapInPandas`` (zero shuffle — Spark's partial-aggregation
 shape, cf. the reference's block-reduce-then-atomic in
 ``CuckooFilter.cuh:1122-1140``), then an executor-side
 ``treeReduce`` of serialized states, exactly the mergeable-UDAF
-contract the north_rule asks for. A grouped variant runs one
-sketch per key via ``applyInPandas`` (single hash Exchange).
+contract the north_rule asks for. The grouped variant builds one
+partial sketch per (partition, key) and merges each key's blobs via
+``applyInPandas``.
 
 All sketches expose ``add_many(np.ndarray)``, ``merge_in_place``,
 ``to_bytes``/``from_bytes``; keys are int64 columns (reinterpreted
@@ -91,36 +92,6 @@ def aggregate_sketch(
     return acc
 
 
-def grouped_sketch(
-    df: DataFrame,
-    group_cols: list[str],
-    col: str,
-    make_sketch: Callable[[], object],
-    finisher: Callable[[object], dict],
-    finisher_schema: str,
-    unsigned_keys: bool = True,
-) -> DataFrame:
-    """One sketch per group; ``finisher`` maps the sketch to output
-    columns (e.g. {'est': hll.estimate()}). Single shuffle on the
-    group keys; map-side pre-aggregation happens naturally because
-    applyInPandas streams each group's Arrow batches through one
-    sketch."""
-
-    out_schema = (
-        ", ".join(f"{c} string" for c in group_cols) + ", " + finisher_schema
-    )
-
-    def per_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = make_sketch()
-        vals = _column_values(pdf.dropna(subset=[col]), col, unsigned_keys)
-        sk.add_many(vals)
-        row = {c: [k] for c, k in zip(group_cols, key)}
-        row.update({k: [v] for k, v in finisher(sk).items()})
-        return pd.DataFrame(row)
-
-    return df.groupBy(*group_cols).applyInPandas(per_group, schema=out_schema)
-
-
 def grouped_sketch_partial(
     df: DataFrame,
     group_cols: list[str],
@@ -138,7 +109,7 @@ def grouped_sketch_partial(
     with NO shuffle — a hot group (30% of a 100 TB table) spreads
     over every input partition instead of landing on one task —
     and stage 2 shuffles only the tiny serialized blobs to merge
-    per group. Same results as :func:`grouped_sketch` (merge
+    per group. Same results as one sketch per whole group (merge
     associativity), different physical plan.
 
     With ``keyed=True``, ``make_sketch(key_tuple)`` is called with
@@ -187,7 +158,7 @@ def grouped_sketch_partial(
         partial, schema=partial_schema
     )
 
-    def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_group(key, pdf):
         sk = cls.from_bytes(pdf["blob"].iloc[0])
         for b in pdf["blob"].iloc[1:]:
             sk.merge_in_place(cls.from_bytes(b))

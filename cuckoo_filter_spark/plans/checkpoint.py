@@ -37,6 +37,7 @@ def _lineage(
         "num_shards": num_shards,
         "bits_per_tag": config.bits_per_tag,
         "bucket_size": config.bucket_size,
+        "bucket_policy": config.bucket_policy,
         "shard_num_buckets": shard_num_buckets,
         "input": input_desc,
         "version": 2,

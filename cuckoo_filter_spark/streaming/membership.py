@@ -24,13 +24,10 @@ def stream_membership(
     out_col: str = "member",
 ) -> DataFrame:
     """Annotate a streaming DataFrame with cuckoo membership. The
-    filter blob is broadcast once; the same vectorized pandas UDF
+    filter's bucket table is broadcast once; the same vectorized probe
     used in batch runs per micro-batch (stateless, so any output
     mode works)."""
-    spark = stream_df.sparkSession
-    return stream_df.withColumn(
-        out_col, filt.contains_udf(spark)(F.col(key_col))
-    )
+    return filt.contains(stream_df, key_col, out_col)
 
 
 def stream_novel_keys(
@@ -184,11 +181,11 @@ def stream_sketch_window(
 ):
     """Watermarked per-window sketch rollup — one mergeable sketch
     per event-time tumbling window, finalized by the watermark
-    (the streaming complement of ``grouped_sketch``; state pattern
+    (the streaming complement of ``grouped_sketch_partial``; state pattern
     cf. the long-lived IPC filter, ``CuckooFilterIPC.cuh:190-199``).
 
     The sketch and its output columns are pluggable like
-    ``grouped_sketch``'s: the default is an HLL p=14 emitting
+    ``grouped_sketch_partial``'s: the default is an HLL p=14 emitting
     ``distinct_est``; pass ``make_sketch`` plus a ``finisher``
     (sketch → {col: value}) and ``finisher_schema`` (DDL string) for
     any other sketch — e.g. a Misra-Gries summary emitting the

@@ -75,8 +75,9 @@ def main():
     probe = filt.contains_broadcast(keys, "key")
     sections.append((
         "Stacked-broadcast contains: scan → ArrowEvalPython, no "
-        "Exchange; the filter rides a broadcast variable, shard "
-        "routing is recomputed worker-side (bit-exact router).",
+        "Exchange; the stacked bucket table rides a broadcast variable, "
+        "shard routing is recomputed worker-side (bit-exact router), "
+        "and the CASE WHEN answers a null key NULL.",
         cap_explain(probe),
     ))
 

@@ -79,3 +79,22 @@ def test_lineage_mismatch_forces_full_rebuild(spark, repo_df, tmp_path_factory):
     _, lineage = read_checkpoint(spark, path)
     assert lineage["input"] == "NEW-INPUT"
     assert rebuilt.total_occupied() == N
+
+
+def test_lineage_records_bucket_policy(spark, tmp_path_factory):
+    """Two policies with the same per-shard bucket count (512 here)
+    must not share a checkpoint: the addsub build must not come back
+    holding the xor shards written before it."""
+    from cuckoo_filter_spark.core.cuckoo import CuckooFilter
+
+    path = str(tmp_path_factory.mktemp("ckpt") / "policy")
+    keys = spark.range(0, 20_000).withColumnRenamed("id", "key")
+    for policy in ("xor", "addsub"):
+        cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy=policy)
+        filt = build_resumable(spark, keys, "key", 8030, 4, path, cfg)
+        assert filt.shard_num_buckets == 512
+        stored = {
+            CuckooFilter.from_bytes(bytes(r.blob)).config.bucket_policy
+            for r in filt.shards.select("blob").collect()
+        }
+        assert stored == {policy}

@@ -390,3 +390,33 @@ def test_routed_ops_skip_null_probes(spark, policy):
     assert dict(outcomes.collect()) == {1: True, 3: False}
     after.release()
     sharded.shards.unpersist()
+
+
+@pytest.mark.parametrize(
+    "lane", ["xor", "addsub", "offset", "merged", "fallback"]
+)
+def test_broadcast_null_probe_answers_null(spark, lane):
+    """Every broadcast lane, and the routed fallback past the broadcast
+    guard, keeps a null probe's row and answers it NULL."""
+    import warnings
+
+    policy = lane if lane in ("xor", "addsub", "offset") else "xor"
+    cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy=policy)
+    build = spark.createDataFrame([(1,), (2,), (None,)], "key long")
+    probes = spark.createDataFrame([(1,), (None,), (3,)], "key long")
+    if lane == "merged":
+        out = DistributedCuckooFilter.build(build, "key", 1000, cfg).contains(
+            probes, "key"
+        )
+    else:
+        sharded = ShardedCuckooFilter.build(build, "key", 1000, 2, cfg)
+        if lane == "fallback":
+            object.__setattr__(sharded, "max_broadcast_bytes", 0)
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)
+            out = sharded.contains_broadcast(probes)
+    rows = out.collect()
+    assert len(rows) == 3
+    assert dict((r.key, r.member) for r in rows) == {
+        1: True, None: None, 3: False,
+    }

@@ -119,6 +119,8 @@ def test_offset_serialization_roundtrip():
         OffsetCuckooFilter.from_bytes(bad_nb)
     with pytest.raises(ValueError, match="tags"):
         OffsetCuckooFilter.from_bytes(blob[:-2 * flt.bucket_size])
+    with pytest.raises(ValueError, match="header"):
+        OffsetCuckooFilter.from_bytes(b"OCKF\x02")
 
 
 def test_sharded_offset_filter_spark(spark):

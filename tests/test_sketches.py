@@ -202,7 +202,9 @@ def test_kll_merge_within_bound():
 
 
 def test_spark_sketch_aggregation(spark):
-    from cuckoo_filter_spark.operators.sketch_agg import aggregate_sketch, grouped_sketch
+    from cuckoo_filter_spark.operators.sketch_agg import (
+        aggregate_sketch, grouped_sketch_partial,
+    )
     from cuckoo_filter_spark.sources.repo_table import synthetic_repo_files
     from pyspark.sql import functions as F
 
@@ -225,7 +227,7 @@ def test_spark_sketch_aggregation(spark):
     assert abs(hll.estimate() - spark_est) / true_distinct < 0.05
 
     # grouped: distinct files per lang via HLL vs exact
-    g = grouped_sketch(
+    g = grouped_sketch_partial(
         df, ["lang"], "key", lambda: HyperLogLog(14),
         lambda sk: {"est": int(round(sk.estimate()))}, "est long",
     )
@@ -252,12 +254,11 @@ def test_spark_tdigest_vs_exact(spark, sf_dir):
 
 def test_grouped_sketch_partial_matches_direct(spark, sf_dir):
     """Skew-proof two-stage grouped sketching produces identical
-    estimates to the single-Exchange variant (merge associativity)."""
+    estimates to one local sketch per group over all its keys (merge
+    associativity)."""
     from cuckoo_filter_spark.core.hll import HyperLogLog
-    from cuckoo_filter_spark.operators.sketch_agg import (
-        grouped_sketch, grouped_sketch_partial,
-    )
-    from cuckoo_filter_spark.hashing import content_key_expr
+    from cuckoo_filter_spark.hashing import content_key_expr, keys_to_unsigned
+    from cuckoo_filter_spark.operators.sketch_agg import grouped_sketch_partial
     from pyspark.sql import functions as F
 
     docs = (
@@ -265,13 +266,46 @@ def test_grouped_sketch_partial_matches_direct(spark, sf_dir):
         .withColumn("key", content_key_expr(F.col("text")))
     )
     fin = lambda sk: {"est": int(round(sk.estimate()))}
-    a = grouped_sketch(
+    got = grouped_sketch_partial(
         docs, ["lang"], "key", lambda: HyperLogLog(12), fin, "est long"
     ).collect()
-    b = grouped_sketch_partial(
-        docs, ["lang"], "key", lambda: HyperLogLog(12), fin, "est long"
-    ).collect()
-    assert {(r.lang, r.est) for r in a} == {(r.lang, r.est) for r in b}
+    local = docs.select("lang", "key").toPandas().dropna()
+    want = set()
+    for lang, g in local.groupby("lang"):
+        sk = HyperLogLog(12)
+        sk.add_many(keys_to_unsigned(g["key"].to_numpy(np.int64)))
+        want.add((str(lang), fin(sk)["est"]))
+    assert {(r.lang, r.est) for r in got} == want
+
+
+def test_grouped_applies_raise_no_type_hint_warning(spark):
+    """The grouped pandas functions carry no type hints PySpark cannot
+    read, so building their plans warns nothing."""
+    import warnings
+
+    from cuckoo_filter_spark.operators.quantiles import exact_quantiles_grouped
+    from cuckoo_filter_spark.operators.similarity import cosine_pairs_ge
+    from cuckoo_filter_spark.operators.sketch_agg import grouped_sketch_partial
+
+    df = spark.createDataFrame(
+        [("a", 1, 1.0), ("a", 2, 2.0), ("b", 3, 3.0)], "g string, k long, v double"
+    )
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0], 0), (2, [1.0, 0.1], 0)],
+        "vec_id long, embedding array<double>, b int",
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        grouped_sketch_partial(
+            df, ["g"], "k", lambda: HyperLogLog(10),
+            lambda sk: {"est": int(sk.estimate())}, "est long",
+        )
+        exact_quantiles_grouped(df, "g", "v", [0.5])
+        cosine_pairs_ge(vecs, 0.9)
+        cosine_pairs_ge(vecs, 0.9, block_col="b")
+    assert not [
+        w for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]
 
 
 def test_tdigest_merge_order_invariance():
