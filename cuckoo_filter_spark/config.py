@@ -59,8 +59,8 @@ class CuckooConfig:
     #: (bucket_policies.cuh:14-84); 'addsub' — two-block add/sub
     #: displacement, any even bucket count (ASCF paper,
     #: bucket_policies.cuh:96-182); 'offset' — choice-bit offset
-    #: displacement, exact bucket count (bucket_policies.cuh:190-351),
-    #: run by ``core.offset.OffsetCuckooFilter``, not ``CuckooFilter``.
+    #: displacement, exact bucket count (bucket_policies.cuh:190-351).
+    #: All three run on ``core.cuckoo.CuckooFilter``.
     bucket_policy: str = "xor"
 
     def __post_init__(self) -> None:
@@ -80,7 +80,8 @@ class CuckooConfig:
                 "bucket_policy must be 'xor', 'addsub' or 'offset'"
             )
         if self.bucket_policy == "offset" and self.bits_per_tag > 16:
-            # the offset kernel's eager 2^(f-1)-entry offset table
+            # Offset runs on the kernel's 2^f-entry displacement
+            # table, the only path its tests cover
             raise ValueError("bucket_policy 'offset' needs bits_per_tag <= 16")
 
     @property

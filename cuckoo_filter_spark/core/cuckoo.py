@@ -11,8 +11,13 @@ same capability surface as the reference GPU kernels:
 * batch contains — ``CuckooFilter.cuh:518-523,1088-1098,1143-1155``
 * batch delete (multiset semantics) — ``CuckooFilter.cuh:536-548,
   805-848,1106-1116,1157-1183``
-* XOR alt-bucket policy (fp from upper hash bits, i1 from lower,
-  i2 = i1 ^ (h(fp) & mask)) — ``bucket_policies.cuh:14-84``
+* bucket policies as a strategy of one kernel, as the reference's
+  one ``CuckooFilter`` template takes ``AltBucketPolicy`` as a
+  parameter: XOR (fp from upper hash bits, i1 from lower,
+  i2 = i1 ^ (h(fp) & mask)) — ``bucket_policies.cuh:14-84``; AddSub
+  (two blocks, add/sub displacement) — ``:96-182``; Offset (exact
+  bucket count, choice-bit fingerprint flipped on relocation) —
+  ``:190-351``
 * merge (union of same-geometry filters by re-inserting every
   stored fingerprint at its bucket or alt bucket) — generalizes the
   reference's disjoint multi-GPU union
@@ -52,7 +57,7 @@ _MAGIC = b"CKFS"
 #: failures, inserts
 _HEADER = struct.Struct("<4sBBHBB6xQQQQQQ")
 _POLICIES = ("dfs", "bfs")
-_BUCKET_POLICIES = ("xor", "addsub")
+_BUCKET_POLICIES = ("xor", "addsub", "offset")
 
 
 def swar_params(bits_per_tag: int, bucket_size: int):
@@ -76,8 +81,7 @@ def probe_rows(
     row ``i2[j]`` of a (N, bucket_size) tag array — SWAR zero-in-word
     bithack (``CuckooFilter.cuh:290-346``) over lanes of the array's
     dtype when the row is word-aligned, equality broadcast otherwise.
-    Shared by both kernels' ``contains_many`` and the stacked
-    broadcast probe."""
+    Shared by ``contains_many`` and the stacked broadcast probe."""
     res = out if out is not None else np.empty(len(t1), dtype=bool)
     sw = swar_params(8 * buckets.dtype.itemsize, buckets.shape[1])
     if sw:
@@ -118,17 +122,10 @@ class CuckooFilter:
     CHUNK = 65536
 
     def __init__(self, capacity: int, config: CuckooConfig | None = None):
-        self.config = config or CuckooConfig()
-        if self.config.bucket_policy not in _BUCKET_POLICIES:
-            raise ValueError(
-                f"bucket_policy {self.config.bucket_policy!r} runs on its "
-                "own kernel (core.offset.OffsetCuckooFilter)"
-            )
-        self.capacity = int(capacity)
-        self.num_buckets = self.config.num_buckets_for(capacity)
-        self._mask = np.uint64(self.num_buckets - 1)
+        cfg = config or CuckooConfig()
+        self._set_geometry(cfg, capacity, cfg.num_buckets_for(capacity))
         self.buckets = np.zeros(
-            (self.num_buckets, self.config.bucket_size), dtype=self.config.tag_dtype
+            (self.num_buckets, cfg.bucket_size), dtype=cfg.tag_dtype
         )
         # bucket_size <= 127 always, so one byte per bucket keeps the
         # fill vector 8x smaller in cache than int64
@@ -137,95 +134,121 @@ class CuckooFilter:
         self.kicks = 0      # eviction count metric
         self.failures = 0   # inserts dropped after max_kicks
         self.inserts = 0    # attempted inserts
-        self._alt_tab = None  # lazy h(fp) displacement table (f<=16)
+
+    def _set_geometry(
+        self, config: CuckooConfig, capacity: int, num_buckets: int
+    ) -> None:
+        """Config, capacity, bucket count and empty lazy caches — shared
+        by ``__init__`` and :meth:`from_bytes`."""
+        self.config = config
+        self.capacity = int(capacity)
+        self.num_buckets = num_buckets
+        self._mask = np.uint64(num_buckets - 1)
+        self._alt_tab = None  # lazy per-tag displacement table (f<=16)
         self._claim = None    # lazy per-bucket claim scratch (insert)
         self._win_scratch = None  # lazy per-bucket winner scratch (delete)
 
     # ------------------------------------------------------------------
-    # addressing (XorAltBucketPolicy, bucket_policies.cuh:14-84)
+    # addressing (bucket_policies.cuh:14-351)
     # ------------------------------------------------------------------
 
-    def _fp_hash(self, fp: np.ndarray) -> np.ndarray:
-        """h(fp) used for the alternate-bucket XOR displacement —
-        the chained JVM-parity family (``hashing.chained_hash``)."""
-        return chained_hash(fp.astype(np.uint64), DISP_SALT)
+    def _displacement_of(self, tags: np.ndarray) -> np.ndarray:
+        """Alt-bucket displacement per stored tag, from the chained
+        JVM-parity hash family (``hashing.chained_hash``): XOR
+        ``h(fp) & mask``, AddSub ``h(fp) % (nb/2)``, Offset
+        ``h(pure fp) % nb`` with 0 remapped to 1 (the choice bit is
+        not hashed, ``bucket_policies.cuh:249-252``)."""
+        tags = np.asarray(tags).astype(np.uint64)
+        policy = self.config.bucket_policy
+        if policy == "offset":
+            pure = tags & np.uint64(self.config.tag_mask >> 1)
+            d = chained_hash(pure, DISP_SALT) % np.uint64(self.num_buckets)
+            d[d == 0] = 1
+        elif policy == "xor":
+            d = chained_hash(tags, DISP_SALT) & self._mask
+        else:
+            bpb = np.uint64(self.num_buckets // 2)
+            d = chained_hash(tags, DISP_SALT) % bpb
+        return d.astype(self._index_dtype)
 
-    def _displacement(self, fp: np.ndarray) -> np.ndarray:
-        """Alt-bucket displacement per fingerprint: ``h(fp) & mask``
-        (xor policy) or ``h(fp) % (nb/2)`` (addsub), via a
-        precomputed 2^f-entry gather table when f <= 16 — the table
-        is L2-resident (<=512 KB) and replaces a full avalanche hash
-        per probe/insert/delete."""
-        idt = self._index_dtype
+    def _displacement(self, tags: np.ndarray) -> np.ndarray:
+        """:meth:`_displacement_of` via a precomputed 2^f-entry gather
+        table when f <= 16 — the table is L2-resident (<=256 KB) and
+        replaces a full avalanche hash per probe/insert/delete."""
         if self.config.bits_per_tag <= 16:
             if self._alt_tab is None:
-                all_fp = np.arange(
-                    1 << self.config.bits_per_tag, dtype=np.uint64
+                self._alt_tab = self._displacement_of(
+                    np.arange(1 << self.config.bits_per_tag, dtype=np.uint64)
                 )
-                h = chained_hash(all_fp, DISP_SALT)
-                if self.config.bucket_policy == "xor":
-                    self._alt_tab = (h & self._mask).astype(idt)
-                else:
-                    bpb = self.num_buckets // 2
-                    self._alt_tab = (h % np.uint64(bpb)).astype(idt)
-            return self._alt_tab[fp.astype(np.int64)]
-        h = self._fp_hash(np.asarray(fp))
-        if self.config.bucket_policy == "xor":
-            return (h & self._mask).astype(idt)
-        return (h % np.uint64(self.num_buckets // 2)).astype(idt)
+            return self._alt_tab[tags.astype(np.int64)]
+        return self._displacement_of(tags)
 
     def candidates_from_hash(self, h: np.ndarray):
         """(i1, i2, tag in i1, tag in i2) from the chained hash
-        ``h = chained_hash(key, FP_SALT)``; both tags are the key's fp.
+        ``h = chained_hash(key, FP_SALT)``.
 
-        fp = upper-32-bits & tag_mask, 0 remapped to 1
-        (bucket_policies.cuh:49-53). XOR policy: i1 = lower-32-bits
-        & mask (:56-58), i2 = i1 ^ (h(fp) & mask) (:71-74). AddSub
-        policy: i1 = lower-32-bits % (nb/2), block 0
-        (bucket_policies.cuh:126-143)."""
-        fp = ((h >> np.uint64(32)) & np.uint64(self.config.tag_mask)).astype(
-            self.config.tag_dtype
-        )
+        XOR and AddSub store one tag in either bucket: fp =
+        upper-32-bits & tag_mask, 0 remapped to 1
+        (bucket_policies.cuh:49-53); XOR i1 = lower-32-bits & mask
+        (:56-58), AddSub i1 = lower-32-bits % (nb/2), block 0
+        (:126-143). Offset masks fp to f-1 bits (choice bit 0) and takes
+        i1 = lower-32-bits % nb (:266-287). (i2, tag in i2) is
+        :meth:`relocate` of (i1, fp)."""
+        cfg = self.config
+        offset = cfg.bucket_policy == "offset"
+        fp_mask = (cfg.tag_mask >> 1) if offset else cfg.tag_mask
+        fp = ((h >> np.uint64(32)) & np.uint64(fp_mask)).astype(cfg.tag_dtype)
         fp[fp == EMPTY] = 1
         idt = self._index_dtype
-        if self.config.bucket_policy == "xor":
+        if cfg.bucket_policy == "xor":
             i1 = (h & self._mask).astype(idt)
         else:
-            bpb = self.num_buckets // 2
-            i1 = (
-                (h & np.uint64(0xFFFFFFFF)) % np.uint64(bpb)
-            ).astype(idt)
-        return i1, self.alt_bucket(i1, fp), fp, fp
+            nb = self.num_buckets if offset else self.num_buckets // 2
+            i1 = ((h & np.uint64(0xFFFFFFFF)) % np.uint64(nb)).astype(idt)
+        i2, t2 = self.relocate(i1, fp)
+        return i1, i2, fp, t2
 
     def candidates(self, keys: np.ndarray) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(i1, i2, fp) for each uint64 key (:meth:`candidates_from_hash`)."""
+        """(i1, i2, tag in i1) for each uint64 key
+        (:meth:`candidates_from_hash`)."""
         i1, i2, fp, _ = self.candidates_from_hash(chained_hash(keys, FP_SALT))
         return i1, i2, fp
 
     @property
     def _index_dtype(self):
         """int32 bucket indices while they fit — halves the sort and
-        gather traffic in the hot paths."""
-        return np.int32 if self.num_buckets <= (1 << 31) else np.int64
+        gather traffic in the hot paths. Offset's forward move
+        ``i + d`` reaches ``2·nb`` before its modulo."""
+        span = self.num_buckets
+        if self.config.bucket_policy == "offset":
+            span *= 2
+        return np.int32 if span <= (1 << 31) else np.int64
 
-    def alt_bucket(self, idx: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        """XOR: i ^ (h(fp) & mask) — self-inverse
-        (bucket_policies.cuh:71-74). AddSub: block 0 adds
-        h(fp) % (nb/2) and moves to block 1, block 1 subtracts and
-        moves back — also an involution (bucket_policies.cuh:
-        156-166)."""
+    def relocate(self, idx: np.ndarray, tag: np.ndarray):
+        """(other bucket, tag stored there) for a tag stored in bucket
+        ``idx``. XOR: i ^ (h(fp) & mask) — self-inverse
+        (bucket_policies.cuh:71-74). AddSub: block 0 adds h(fp) % (nb/2)
+        and moves to block 1, block 1 subtracts and moves back — also
+        an involution (:156-166). Both keep the tag (the same object).
+        Offset: choice bit 0 moves forward by the pure fingerprint's
+        offset mod nb, choice bit 1 back, and the choice bit flips
+        (:296-345) — an involution on (bucket, tag) pairs."""
         idx = np.asarray(idx)
         if idx.dtype.kind != "i":
             idx = idx.astype(self._index_dtype)
-        d = self._displacement(np.asarray(fp))
-        if self.config.bucket_policy == "xor":
-            return idx ^ d
-        bpb = self.num_buckets // 2
-        return np.where(
-            idx < bpb,
-            ((idx + d) % bpb) + bpb,
-            (idx - d) % bpb,
-        )
+        d = self._displacement(np.asarray(tag))
+        policy = self.config.bucket_policy
+        if policy == "xor":
+            return idx ^ d, tag
+        if policy == "addsub":
+            bpb = self.num_buckets // 2
+            return np.where(
+                idx < bpb, ((idx + d) % bpb) + bpb, (idx - d) % bpb
+            ), tag
+        choice = tag.dtype.type(1 << (self.config.bits_per_tag - 1))
+        back = (tag & choice) != 0
+        other = np.where(back, idx - d, idx + d) % self.num_buckets
+        return other, tag ^ choice
 
     # ------------------------------------------------------------------
     # insert
@@ -288,9 +311,8 @@ class CuckooFilter:
         n = len(cur)
         placed = np.zeros(n, dtype=bool)
         vict = self.buckets[cur[:, None], np.arange(c)[None, :]]  # (n, c)
-        valt = self.alt_bucket(
-            np.repeat(cur, c), vict.ravel()
-        ).reshape(n, c)
+        valt, vtag = self.relocate(np.repeat(cur, c), vict.ravel())
+        valt, vtag = valt.reshape(n, c), vtag.reshape(n, c)
         room = self.fill[valt] < b
         has = room.any(axis=1)
         idx = np.flatnonzero(has)
@@ -307,8 +329,7 @@ class CuckooFilter:
         claim[cb] = seq
         win = claim[cb] == seq
         act, aslot = idx[win], choice[win]
-        victims = self.buckets[cur[act], aslot].copy()
-        ok = self._place_batch(valt[act, aslot], victims)
+        ok = self._place_batch(valt[act, aslot], vtag[act, aslot])
         moved = act[ok]
         self.buckets[cur[moved], aslot[ok]] = tags[moved]
         placed[moved] = True
@@ -316,7 +337,7 @@ class CuckooFilter:
         return placed
 
     def _kick_insert_batch(
-        self, i1: np.ndarray, i2: np.ndarray, fp: np.ndarray
+        self, i1: np.ndarray, i2: np.ndarray, t1: np.ndarray, t2: np.ndarray
     ) -> np.ndarray:
         """Vectorized eviction: all stuck keys run their DFS kick
         chains in lock-step rounds. Each round every pending key
@@ -330,9 +351,10 @@ class CuckooFilter:
         Evictions never free slots and placements never target full
         buckets, so concurrent-round actions commute.
         """
-        n = len(fp)
-        cur = np.where((fp & 1).astype(bool), i1, i2).astype(np.int64)
-        tag = fp.astype(self.config.tag_dtype).copy()
+        n = len(t1)
+        first = (t1 & 1).astype(bool)
+        cur = np.where(first, i1, i2).astype(np.int64)
+        tag = np.where(first, t1, t2).astype(self.config.tag_dtype)
         kicks_done = np.zeros(n, dtype=np.int64)
         success = np.zeros(n, dtype=bool)
         pending = np.arange(n)
@@ -368,10 +390,9 @@ class CuckooFilter:
             aslot = slot[win]
             victims = self.buckets[cur[act], aslot].copy()
             self.buckets[cur[act], aslot] = tag[act]
-            tag[act] = victims
             kicks_done[act] += 1
             self.kicks += len(act)
-            cur[act] = self.alt_bucket(cur[act], victims)
+            cur[act], tag[act] = self.relocate(cur[act], victims)
             placed = self._place_batch(cur[act], tag[act])
             success[act[placed]] = True
             # drop finished + exhausted chains
@@ -394,8 +415,10 @@ class CuckooFilter:
         maxk = self.config.max_kicks
         buckets = self.buckets
         fill = self.fill
-        xor_policy = self.config.bucket_policy == "xor"
-        bpb = self.num_buckets // 2
+        policy = self.config.bucket_policy
+        nb = self.num_buckets
+        bpb = nb // 2
+        choice = 1 << (self.config.bits_per_tag - 1)
         tab = None
         if self.config.bits_per_tag <= 16:
             self._displacement(np.array([1], dtype=np.uint64))  # build table
@@ -417,8 +440,11 @@ class CuckooFilter:
                 d = int(tab[tag])
             else:
                 d = int(self._displacement(np.array([tag], dtype=np.uint64))[0])
-            if xor_policy:
+            if policy == "xor":
                 cur = cur ^ d
+            elif policy == "offset":
+                cur = (cur - d if tag & choice else cur + d) % nb
+                tag ^= choice
             elif cur < bpb:
                 cur = ((cur + d) % bpb) + bpb
             else:
@@ -428,16 +454,18 @@ class CuckooFilter:
 
     def _key_cand(self, keys: np.ndarray):
         """``(n, cand)`` for uint64 keys: ``cand(lo, hi)`` hashes one
-        chunk to its (i1, i2, fp)."""
+        chunk to its (i1, i2, t1, t2) (:meth:`candidates_from_hash`)."""
         keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        return len(keys), lambda lo, hi: self.candidates(keys[lo:hi])
+        return len(keys), lambda lo, hi: self.candidates_from_hash(
+            chained_hash(keys[lo:hi], FP_SALT)
+        )
 
     def _packed_cand(self, packed: np.ndarray):
         """``(n, cand)`` for JVM-packed ``(i1 << bits_per_tag) | fp``
         values (the pack-kernel layout of ``insertManySorted``,
         ``CuckooFilter.cuh:1185-1207``): the hashing already happened
         in whole-stage codegen, so ``cand(lo, hi)`` only splits the
-        value and derives i2."""
+        value and derives (i2, t2)."""
         packed = np.ascontiguousarray(packed, dtype=np.int64)
         cfg = self.config
 
@@ -445,7 +473,8 @@ class CuckooFilter:
             pc = packed[lo:hi]
             fp = (pc & cfg.tag_mask).astype(cfg.tag_dtype)
             i1 = (pc >> cfg.bits_per_tag).astype(self._index_dtype)
-            return i1, self.alt_bucket(i1, fp), fp
+            i2, t2 = self.relocate(i1, fp)
+            return i1, i2, fp, t2
 
         return len(packed), cand
 
@@ -466,29 +495,24 @@ class CuckooFilter:
             return np.zeros(0, dtype=bool)
         success = np.zeros(n, dtype=bool)
         resid: list[np.ndarray] = []
-        res_i1: list[np.ndarray] = []
-        res_i2: list[np.ndarray] = []
-        res_fp: list[np.ndarray] = []
+        res_cand: list[tuple] = []
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
-            i1, i2, fp = cand(lo, hi)
-            s = self._place_batch(i1, fp)
+            i1, i2, t1, t2 = cand(lo, hi)
+            s = self._place_batch(i1, t1)
             rem = np.flatnonzero(~s)
             if rem.size:
-                s2 = self._place_batch(i2[rem], fp[rem])
+                s2 = self._place_batch(i2[rem], t2[rem])
                 s[rem[s2]] = True
                 stuck = rem[~s2]
                 if stuck.size:
                     resid.append(stuck + lo)
-                    res_i1.append(i1[stuck])
-                    res_i2.append(i2[stuck])
-                    res_fp.append(fp[stuck])
+                    res_cand.append(tuple(a[stuck] for a in (i1, i2, t1, t2)))
             success[lo:hi] = s
         if resid:
             idxs = np.concatenate(resid)
             success[idxs] = self._kick_insert_batch(
-                np.concatenate(res_i1), np.concatenate(res_i2),
-                np.concatenate(res_fp),
+                *(np.concatenate(a) for a in zip(*res_cand))
             )
         self.occupied += int(success.sum())
         return success
@@ -515,8 +539,7 @@ class CuckooFilter:
         out = np.empty(n, dtype=bool)
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
-            i1, i2, fp = cand(lo, hi)
-            probe_rows(self.buckets, i1, i2, fp, fp, out=out[lo:hi])
+            probe_rows(self.buckets, *cand(lo, hi), out=out[lo:hi])
         return out
 
     def count_many(self, keys: np.ndarray) -> np.ndarray:
@@ -540,21 +563,20 @@ class CuckooFilter:
         out = np.zeros(n, dtype=np.int64)
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
-            i1, i2, fp = cand(lo, hi)
-            self._count_rows(i1, i2, fp, out[lo:hi])
+            self._count_rows(*cand(lo, hi), out[lo:hi])
         return out
 
     def _count_rows(
-        self, i1: np.ndarray, i2: np.ndarray, fp: np.ndarray,
-        out: np.ndarray,
+        self, i1: np.ndarray, i2: np.ndarray, t1: np.ndarray,
+        t2: np.ndarray, out: np.ndarray,
     ) -> None:
-        """out[j] = multiplicity of fp[j] in buckets i1[j] ∪ i2[j]
-        (i2 == i1 counted once — XOR displacement of 0 aliases the
-        pair)."""
-        fpc = fp[:, None]
-        c1 = (self.buckets[i1] == fpc).sum(axis=1)
-        c2 = (self.buckets[i2] == fpc).sum(axis=1)
-        np.add(c1, np.where(i1 == i2, 0, c2), out=out, casting="unsafe")
+        """out[j] = occurrences of t1[j] in bucket i1[j] plus of t2[j]
+        in bucket i2[j], the pair counted once when it aliases
+        (i1 == i2 and t1 == t2 — an XOR displacement of 0)."""
+        c1 = (self.buckets[i1] == t1[:, None]).sum(axis=1)
+        c2 = (self.buckets[i2] == t2[:, None]).sum(axis=1)
+        alias = (i1 == i2) & (t1 == t2)
+        np.add(c1, np.where(alias, 0, c2), out=out, casting="unsafe")
 
     # ------------------------------------------------------------------
     # delete
@@ -567,7 +589,7 @@ class CuckooFilter:
         1157-1183``; ``tests/test_cuckoo_filter.cu:324-344``).
 
         Fully vectorized in lock-step rounds: each round picks one
-        representative per pending (i1, fp) group, probes both
+        representative per pending (i1, t1) group, probes both
         buckets, and clears one matching slot per touched bucket
         (first toucher wins; the rest retry next round, exactly the
         serialization the reference's CAS race performs). A miss is
@@ -581,8 +603,9 @@ class CuckooFilter:
         success = np.zeros(n, dtype=bool)
         for clo in range(0, n, self.CHUNK):
             chi = min(clo + self.CHUNK, n)
-            i1, i2, fp = cand_fn(clo, chi)
-            packed = (i1.astype(np.uint64) << np.uint64(32)) | fp.astype(
+            i1, i2, t1, t2 = cand_fn(clo, chi)
+            # (i1, t1) fixes (i2, t2) under every policy
+            packed = (i1.astype(np.uint64) << np.uint64(32)) | t1.astype(
                 np.uint64
             )
             # ONE sort per chunk: `alive` holds original positions in
@@ -599,13 +622,13 @@ class CuckooFilter:
                 firsts[0] = True
                 np.not_equal(pk[1:], pk[:-1], out=firsts[1:])
                 reps = sa[firsts]  # first pending instance per group
-                b1, f = i1[reps], fp[reps]
-                m1 = self.buckets[b1] == f[:, None]
+                b1 = i1[reps]
+                m1 = self.buckets[b1] == t1[reps][:, None]
                 has1 = m1.any(axis=1)
                 # probe the alternate bucket only for primary misses
                 miss1 = np.flatnonzero(~has1)
                 b2m = i2[reps[miss1]]
-                m2 = self.buckets[b2m] == f[miss1][:, None]
+                m2 = self.buckets[b2m] == t2[reps[miss1]][:, None]
                 has2 = m2.any(axis=1)
                 found = has1.copy()
                 found[miss1] = has2
@@ -697,13 +720,14 @@ class CuckooFilter:
 
     def merge_in_place(self, other: "CuckooFilter") -> "CuckooFilter":
         """Fold ``other`` into ``self`` by re-inserting every stored
-        fingerprint at its current bucket or that bucket's alt —
-        valid because the XOR displacement is self-inverse, so a tag
-        seen in bucket i belongs to pair {i, alt(i, tag)} regardless
-        of which was its i1. Membership answers are invariant to the
-        merge order as long as no insert fails (tests assert this
-        across random orderings). Generalizes the disjoint multi-GPU
-        union (``CuckooFilterMultiGPU.cuh:558-565``)."""
+        tag at its current bucket or at :meth:`relocate` of it —
+        valid because every policy's relocation is an involution, so
+        a tag seen in bucket i belongs to the pair {(i, tag),
+        relocate(i, tag)} regardless of which was its i1. Membership
+        answers are invariant to the merge order as long as no insert
+        fails (tests assert this across random orderings).
+        Generalizes the disjoint multi-GPU union
+        (``CuckooFilterMultiGPU.cuh:558-565``)."""
         same_geom = (
             self.num_buckets == other.num_buckets
             and self.config.bits_per_tag == other.config.bits_per_tag
@@ -714,16 +738,17 @@ class CuckooFilter:
             raise ValueError("can only merge filters with identical geometry")
         bi, slot = np.nonzero(other.buckets)
         tags = other.buckets[bi, slot]
-        alt = self.alt_bucket(bi.astype(np.int64), tags)
-        success = self._place_batch(bi.astype(np.int64), tags)
+        bi = bi.astype(np.int64)
+        alt, atags = self.relocate(bi, tags)
+        success = self._place_batch(bi, tags)
         rem = ~success
         if rem.any():
-            success[rem] = self._place_batch(alt[rem], tags[rem])
+            success[rem] = self._place_batch(alt[rem], atags[rem])
             rem = ~success
         if rem.any():
             idxs = np.flatnonzero(rem)
             success[idxs] = self._kick_insert_batch(
-                bi[idxs].astype(np.int64), alt[idxs], tags[idxs]
+                bi[idxs], alt[idxs], tags[idxs], atags[idxs]
             )
         self.occupied += int(success.sum())
         self.inserts += other.inserts
@@ -821,10 +846,7 @@ class CuckooFilter:
             bucket_policy=_BUCKET_POLICIES[bpol],
         )
         flt = cls.__new__(cls)
-        flt.config = cfg
-        flt.capacity = cap
-        flt.num_buckets = nb
-        flt._mask = np.uint64(nb - 1)
+        flt._set_geometry(cfg, cap, nb)
         layout, off = blob[_HEADER.size], _HEADER.size + 1
         tag_size = np.dtype(cfg.tag_dtype).itemsize
         if layout == cls._LAYOUT_DENSE:
@@ -881,9 +903,6 @@ class CuckooFilter:
         else:
             raise ValueError(f"cuckoo blob has unknown layout {layout}")
         flt.fill = np.count_nonzero(flt.buckets, axis=1).astype(np.int8)
-        flt._alt_tab = None
-        flt._claim = None
-        flt._win_scratch = None
         flt.occupied, flt.kicks, flt.failures, flt.inserts = occ, kicks, fails, inserts
         return flt
 

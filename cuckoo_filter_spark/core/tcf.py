@@ -99,7 +99,7 @@ class TwoChoiceFilter(CuckooFilter):
     # ------------------------------------------------------------------
 
     def _two_choice_place(
-        self, i1: np.ndarray, i2: np.ndarray, fp: np.ndarray
+        self, i1: np.ndarray, i2: np.ndarray, t1: np.ndarray, t2: np.ndarray
     ) -> np.ndarray:
         """Vectorized two-choice placement. Each round every pending
         key targets its currently-less-full open candidate and races
@@ -108,7 +108,7 @@ class TwoChoiceFilter(CuckooFilter):
         and retry, keys with both candidates full retire as failures.
         Terminates because every round either places a key or fills
         a bucket (guarded at 2×bucket_size+2 rounds)."""
-        n = len(fp)
+        n = len(t1)
         success = np.zeros(n, dtype=bool)
         if n == 0:
             return success
@@ -126,10 +126,11 @@ class TwoChoiceFilter(CuckooFilter):
             if not pending.size:
                 break
             p1, p2, f1, f2 = p1[open_], p2[open_], f1[open_], f2[open_]
-            target = np.where(
-                f1 >= b, p2, np.where(f2 >= b, p1, np.where(f2 < f1, p2, p1))
+            second = (f1 >= b) | ((f2 < b) & (f2 < f1))
+            ok = self._place_batch(
+                np.where(second, p2, p1),
+                np.where(second, t2[pending], t1[pending]),
             )
-            ok = self._place_batch(target, fp[pending])
             success[pending[ok]] = True
             pending = pending[~ok]
         return success
@@ -156,11 +157,11 @@ class TwoChoiceFilter(CuckooFilter):
         sub = min(self.CHUNK, max(1024, self.num_buckets // 2))
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
-            i1, i2, fp = cand(lo, hi)
+            c = cand(lo, hi)
             for slo in range(0, hi - lo, sub):
                 shi = min(slo + sub, hi - lo)
                 success[lo + slo:lo + shi] = self._two_choice_place(
-                    i1[slo:shi], i2[slo:shi], fp[slo:shi]
+                    *(a[slo:shi] for a in c)
                 )
         n_ok = int(success.sum())
         self.occupied += n_ok
@@ -171,9 +172,9 @@ class TwoChoiceFilter(CuckooFilter):
 
     def merge_in_place(self, other: "CuckooFilter") -> "TwoChoiceFilter":
         """Fold ``other`` into ``self`` by two-choice re-placement of
-        every stored tag at its pair ``{i, alt(i, tag)}`` — no kick
-        fallback (the type has no eviction); both-full tags count as
-        failures. At the sized load (≤0.85 usable, and callers
+        every stored tag at its pair ``{(i, tag), relocate(i, tag)}``
+        — no kick fallback (the type has no eviction); both-full tags
+        count as failures. At the sized load (≤0.85 usable, and callers
         typically well below) merges place every tag regardless of
         partition ordering — associativity is asserted in tests.
 
@@ -196,8 +197,8 @@ class TwoChoiceFilter(CuckooFilter):
         bi, slot = np.nonzero(other.buckets)
         tags = other.buckets[bi, slot]
         bi = bi.astype(np.int64)
-        alt = self.alt_bucket(bi, tags)
-        ok = self._two_choice_place(bi, alt, tags)
+        alt, atags = self.relocate(bi, tags)
+        ok = self._two_choice_place(bi, alt, tags, atags)
         n_ok = int(ok.sum())
         dropped = len(tags) - n_ok
         if dropped:

@@ -155,7 +155,8 @@ def packed_expr(key_col, num_buckets: int, bits_per_tag: int,
     (``CuckooFilter.cuh:1185-1207``). ``fp`` and the primary bucket
     ``i1`` are the same arithmetic ``CuckooFilter.candidates`` runs in
     numpy (``bucket_policies.cuh:45-74`` for XOR, ``:126-143`` for
-    AddSub), expressed as whole-stage-codegen JVM expressions via the
+    AddSub, ``:266-287`` for Offset, whose fp keeps choice bit 0),
+    expressed as whole-stage-codegen JVM expressions via the
     chained hash family — bit-exact with the kernel (verified in
     tests). Consumed by ``CuckooFilter.insert_packed`` so shard builds
     ship pre-hashed candidates instead of raw keys."""
@@ -163,16 +164,18 @@ def packed_expr(key_col, num_buckets: int, bits_per_tag: int,
 
     from cuckoo_filter_spark.config import FP_SALT
 
-    tag_mask = (1 << bits_per_tag) - 1
+    fp_bits = bits_per_tag - 1 if policy == "offset" else bits_per_tag
+    tag_mask = (1 << fp_bits) - 1
     h = chained_hash_expr(F.col(key_col) if isinstance(key_col, str) else key_col,
                           FP_SALT)
     fp_raw = F.shiftrightunsigned(h, 32).bitwiseAND(F.lit(tag_mask))
     # fp must stay LongType: xxhash64's 4-byte int path differs
     fp = F.when(fp_raw == 0, F.lit(1)).otherwise(fp_raw).cast("long")
-    if policy == "addsub":
-        # i1 = (h & 0xFFFFFFFF) % (nb/2): the low-32 slice is
-        # non-negative, so signed pmod == unsigned mod
-        i1 = F.pmod(h.bitwiseAND(F.lit(0xFFFFFFFF)), F.lit(num_buckets // 2))
+    if policy in ("addsub", "offset"):
+        # i1 = (h & 0xFFFFFFFF) % (nb/2) (AddSub) or % nb (Offset): the
+        # low-32 slice is non-negative, so signed pmod == unsigned mod
+        span = num_buckets // 2 if policy == "addsub" else num_buckets
+        i1 = F.pmod(h.bitwiseAND(F.lit(0xFFFFFFFF)), F.lit(span))
     else:
         i1 = h.bitwiseAND(F.lit(num_buckets - 1))
     return F.shiftleft(i1, bits_per_tag).bitwiseOR(fp)

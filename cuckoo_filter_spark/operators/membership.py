@@ -17,10 +17,11 @@ shapes:
   the multi-GPU layout (``CuckooFilterMultiGPU.cuh:44-51,168-323``:
   partition → all-to-all → local op). Spark's Exchange IS the
   multisplit+all2all. This is the 10^12-key path: state never
-  concentrates on one node. The per-shard kernel follows
-  ``CuckooConfig.bucket_policy`` (:func:`shard_kernel`), as the
-  reference's one ``CuckooFilter`` template takes its bucket policy
-  as a parameter (``bucket_policies.cuh:14-351``).
+  concentrates on one node. Every shard is a
+  :class:`~cuckoo_filter_spark.core.cuckoo.CuckooFilter` of
+  ``CuckooConfig.bucket_policy``, as the reference's one
+  ``CuckooFilter`` template takes its bucket policy as a parameter
+  (``bucket_policies.cuh:14-351``).
 
 Scale notes (100 TB / 1000 executors):
 * build is map-side only in merged mode — no shuffle of raw keys;
@@ -40,7 +41,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import Callable, Iterator, NamedTuple, Optional
+from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
@@ -127,42 +128,6 @@ def _keys_from_pdf(pdf: pd.DataFrame, col: str) -> np.ndarray:
     return keys_to_unsigned(pdf[col].to_numpy(dtype=np.int64, copy=False))
 
 
-class ShardKernel(NamedTuple):
-    """The per-shard filter kernel of one bucket policy."""
-
-    #: ``new(capacity)`` makes an empty shard filter
-    new: Callable[[int], object]
-    #: the kernel class; ``cls.from_bytes`` decodes a shard blob
-    cls: type
-    #: the kernel can be built from candidates the JVM packs
-    #: (``hashing.packed_expr``, ``insert_packed``); the routed ops ship
-    #: keys either way
-    packed: bool
-
-
-def shard_kernel(cfg: CuckooConfig) -> ShardKernel:
-    """Per-shard kernel for ``cfg.bucket_policy`` — the reference's
-    ``AltBucketPolicy`` template parameter as a runtime choice. XOR
-    and AddSub run on :class:`CuckooFilter`, whose candidates the JVM
-    can pack. Offset runs on
-    :class:`~cuckoo_filter_spark.core.offset.OffsetCuckooFilter`: its
-    choice-bit fingerprint changes on relocation, so it has no JVM
-    packing twin and its build ships the 8-byte keys."""
-    if cfg.bucket_policy == "offset":
-        from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
-
-        def new(capacity: int):
-            return OffsetCuckooFilter(
-                capacity, bits_per_tag=cfg.bits_per_tag,
-                bucket_size=cfg.bucket_size, max_kicks=cfg.max_kicks,
-            )
-
-        return ShardKernel(new, OffsetCuckooFilter, False)
-    return ShardKernel(
-        lambda capacity: CuckooFilter(capacity, cfg), CuckooFilter, True
-    )
-
-
 def _group_by_shard(sids: np.ndarray, *arrays: np.ndarray):
     """Yield ``(shard id, *arrays restricted to that shard)`` once per
     distinct shard id in ``sids``; rows keep their input order within
@@ -177,21 +142,21 @@ def _group_by_shard(sids: np.ndarray, *arrays: np.ndarray):
         yield (int(ss[b0]), *(a[b0:b1] for a in grouped))
 
 
-def _shard_rows(parts, new_shard, insert: str):
-    """Fill one new filter per shard from ``(shard ids, values)``
-    batches with ``insert`` (a kernel method name); yield one
+def _shard_rows(parts, per_shard_cap: int, cfg: CuckooConfig):
+    """Fill one new filter per shard from ``(shard ids, packed
+    candidates)`` batches with ``insert_packed``; yield one
     ``_SHARD_SCHEMA`` row dict per shard."""
     per_shard: dict[int, list[np.ndarray]] = {}
     for sids, vals in parts:
         for sid, chunk in _group_by_shard(sids, vals):
             per_shard.setdefault(sid, []).append(chunk)
     for sid, chunks in per_shard.items():
-        flt = new_shard()
+        flt = CuckooFilter(per_shard_cap, cfg)
         rows = 0
         inserted = 0
         for chunk in chunks:
             rows += len(chunk)
-            inserted += int(getattr(flt, insert)(chunk).sum())
+            inserted += int(flt.insert_packed(chunk).sum())
         yield {
             "shard_id": [sid],
             "blob": [flt.to_bytes()],
@@ -227,9 +192,7 @@ def _arrow_shard_builder(
                         rb.column(1).to_numpy(zero_copy_only=False),
                     )
 
-        for row in _shard_rows(
-            parts(), lambda: CuckooFilter(per_shard_cap, cfg), "insert_packed"
-        ):
+        for row in _shard_rows(parts(), per_shard_cap, cfg):
             yield pa.RecordBatch.from_pydict(row)
 
     return build_shards
@@ -370,12 +333,10 @@ def _stacked_probe_udf(bc, nb: int, num_shards: int, cfg: CuckooConfig):
     answered in a single vectorized pass under any bucket policy. Per
     key, the router hash (xxhash64 seed 42, bit-exact with the JVM
     build-time router) picks the shard and, chained with FP_SALT, gives
-    the hash a geometry-only shard kernel (:func:`shard_kernel`'s
-    ``new(nb * bucket_size)``, the constructor resolved on the driver)
+    the hash a geometry-only ``CuckooFilter(nb * bucket_size, cfg)``
     maps to the key's two rows and tags; the rows are then offset by
     shard*nb. A null key answers NULL: it reaches the UDF as a stand-in
     0 whose answer is discarded JVM-side."""
-    new_kernel = shard_kernel(cfg).new
     bs = cfg.bucket_size
 
     @F.pandas_udf(BooleanType())
@@ -386,7 +347,7 @@ def _stacked_probe_udf(bc, nb: int, num_shards: int, cfg: CuckooConfig):
             xxhash64_const_vseed, xxhash64_u64,
         )
 
-        kernel = new_kernel(nb * bs)
+        kernel = CuckooFilter(nb * bs, cfg)
         big = np.frombuffer(bc.value, dtype=kernel.buckets.dtype).reshape(
             -1, bs
         )
@@ -417,8 +378,8 @@ class ShardedCuckooFilter:
 
     ``shards`` schema: (shard_id, blob, rows, inserted, kicks,
     failures). State stays distributed; queries and deletes shuffle
-    only their 8-byte keys to the owning shard. The per-shard kernel
-    follows ``config.bucket_policy`` (:func:`shard_kernel`).
+    only their 8-byte keys to the owning shard. Each shard is a
+    ``CuckooFilter`` of ``config.bucket_policy``.
     """
 
     shards: DataFrame
@@ -448,20 +409,14 @@ class ShardedCuckooFilter:
     ) -> "ShardedCuckooFilter":
         """Shuffled build: one hash Exchange sends each key to its
         shard's partition, where one Python stage fills the shard
-        filters. When the kernel has the packed fast path the whole
-        hash chain runs JVM-side: the Exchange carries
-        ``(shard << (f+log2(nb))) | (i1 << f) | fp`` in a SINGLE long
+        filters. The whole hash chain runs JVM-side: the Exchange
+        carries ``(shard << (f+log2(nb))) | (i1 << f) | fp`` in a SINGLE long
         (:func:`_packed_keys`), so the shuffled UnsafeRow is one field
         (16 bytes) instead of two (24 bytes), and the Python stage is
         pure placement (``insert_packed``) — same filters bit-for-bit
-        as the key-shipping build (chained hash family parity).
-        Otherwise (Offset) the Exchange carries the 8-byte keys
-        (:meth:`_build_keys`)."""
+        as ``insert_many`` of the same keys (chained hash family
+        parity)."""
         cfg = config or CuckooConfig()
-        if not shard_kernel(cfg).packed:
-            return ShardedCuckooFilter._build_keys(
-                df, key_col, capacity, num_shards, cfg
-            )
         per_shard_cap = per_shard_capacity(capacity, num_shards)
         frame, shard_shift = _packed_keys(
             df, key_col, num_shards, per_shard_cap, cfg
@@ -469,48 +424,6 @@ class ShardedCuckooFilter:
         shards = frame.mapInArrow(
             _arrow_shard_builder(per_shard_cap, cfg, shard_shift),
             schema=_SHARD_SCHEMA,
-        )
-        return ShardedCuckooFilter(
-            shards, num_shards, cfg, key_col,
-            shard_num_buckets=cfg.num_buckets_for(per_shard_cap),
-        )
-
-    @staticmethod
-    def _build_keys(
-        df: DataFrame, key_col: str, capacity: int, num_shards: int,
-        cfg: CuckooConfig,
-    ) -> "ShardedCuckooFilter":
-        """Key-shipping build, for any kernel: the Exchange carries
-        ONLY the 8-byte key and each shard filter runs ``insert_many``
-        on its keys. Null keys are dropped, as in :func:`_packed_keys`."""
-        per_shard_cap = per_shard_capacity(capacity, num_shards)
-        new = shard_kernel(cfg).new
-
-        def build_shards(batches: "Iterator[pd.DataFrame]"):
-            # one partition may hold several shards (hash of the shard
-            # id decides placement); group pandas-side — this avoids
-            # the sort groupBy().applyInPandas() would inject, so the
-            # Exchange is the only data movement; the shard id is
-            # recomputed from the key in numpy (bit-exact with the JVM
-            # router).
-            from cuckoo_filter_spark.hashing import xxhash64_u64
-
-            def parts():
-                for pdf in batches:
-                    keys = _keys_from_pdf(pdf, key_col)
-                    sids = xxhash64_u64(keys, seed=42).view(np.int64)
-                    yield sids % num_shards, keys
-
-            for row in _shard_rows(
-                parts(), lambda: new(per_shard_cap), "insert_many"
-            ):
-                yield pd.DataFrame(row)
-
-        shards = (
-            df.select(F.col(key_col))
-            .filter(F.col(key_col).isNotNull())
-            .repartition(num_shards, shard_expr(key_col, num_shards))
-            .mapInPandas(build_shards, schema=_SHARD_SCHEMA)
         )
         return ShardedCuckooFilter(
             shards, num_shards, cfg, key_col,
@@ -559,9 +472,13 @@ class ShardedCuckooFilter:
         shipped to the placement workers — the default
         ``write_bucketed_keys`` output when shard+bucket+tag fit in
         62 bits), or the two-column ``(__shard, __packed)`` fallback.
-        Tasks may mix shards; the builder groups arrow-side, so
-        file/task alignment is a performance knob, not a correctness
-        requirement.
+        Tasks may mix shards, since the builder groups arrow-side, but
+        no shard may be split across tasks: each task builds its own
+        filter per shard id, so a shard cut in two comes back as two
+        partial rows, of which the probes read one (false negatives).
+        Read the table with :meth:`read_bucketed_keys`, which scans
+        every file as one split; at default split sizes Spark cuts any
+        file with several row groups past ``maxPartitionBytes``.
 
         The packed layout is only decodable with the write-time
         parameters — a mismatched ``capacity``/``num_shards``/
@@ -640,7 +557,11 @@ class ShardedCuckooFilter:
         frame, shard_shift = _packed_keys(
             df, key_col, num_shards, per_shard_cap, cfg
         )
-        frame.write.mode("overwrite").parquet(path)
+        # one file per shard partition (build_bucketed needs every
+        # shard whole in one file), whatever the session's file cap
+        frame.write.mode("overwrite").option("maxRecordsPerFile", 0).parquet(
+            path
+        )
         write_json_sidecar(
             df.sparkSession, path, ShardedCuckooFilter.LAYOUT_SIDECAR,
             ShardedCuckooFilter._layout_payload(
@@ -649,31 +570,15 @@ class ShardedCuckooFilter:
         )
 
     @staticmethod
-    def read_bucketed_keys(
-        spark: SparkSession, path: str, target_splits: Optional[int] = None,
-    ) -> DataFrame:
-        """Read a :meth:`write_bucketed_keys` table with scan
-        parallelism matched to the cluster.
+    def read_bucketed_keys(spark: SparkSession, path: str) -> DataFrame:
+        """Read a :meth:`write_bucketed_keys` table as exactly one scan
+        split per file (:func:`~cuckoo_filter_spark.sources.parquet_io.
+        read_split_per_file`). Each shard's keys live in one file, so
+        every shard lands whole in one :meth:`build_bucketed` task —
+        a correctness requirement, not a tuning choice."""
+        from cuckoo_filter_spark.sources.parquet_io import read_split_per_file
 
-        ``build_bucketed`` is a pure scan → per-task placement (no
-        Exchange), so its parallelism IS the file-split count. At
-        deployment scale (≥128 MB row groups) the default
-        ``spark.sql.files.maxPartitionBytes`` already yields a split
-        per core; but a bucketed table whose per-shard files are
-        small (a fresh ingest, a low-cardinality corpus, local
-        testing) gets coalesced into a handful of splits — a 100 MB
-        table in 2.4 MB files packs into ~3 tasks under the 128 MB
-        default + 4 MB open cost, serializing the whole placement
-        stage. This helper sizes ``maxPartitionBytes`` /
-        ``openCostInBytes`` on the session so the scan yields
-        ``>= min(target_splits, number of files)`` splits, then
-        returns the reader (see
-        :func:`cuckoo_filter_spark.sources.parquet_io.read_matched_splits`
-        for the conf mechanics).
-        """
-        from cuckoo_filter_spark.sources.parquet_io import read_matched_splits
-
-        return read_matched_splits(spark, path, target_splits)
+        return read_split_per_file(spark, path)
 
     def persist(self) -> "ShardedCuckooFilter":
         self.shards = self.shards.persist()
@@ -692,15 +597,15 @@ class ShardedCuckooFilter:
 
     def _num_buckets(self) -> int:
         """Per-shard bucket count: :attr:`shard_num_buckets`, else read
-        from one blob header through the shard kernel (1 when there
-        are no shards)."""
+        from one blob header (1 when there are no shards)."""
         if self.shard_num_buckets is not None:
             return self.shard_num_buckets
-        cls = shard_kernel(self.config).cls
         row = self.shards.select(
-            F.substring("blob", 1, cls.HEADER_BYTES)
+            F.substring("blob", 1, CuckooFilter.HEADER_BYTES)
         ).first()
-        return 1 if row is None else cls.blob_num_buckets(bytes(row[0]))
+        if row is None:
+            return 1
+        return CuckooFilter.blob_num_buckets(bytes(row[0]))
 
     def _broadcast_bytes(self) -> int:
         """Bytes :meth:`contains_broadcast` ships: the dense stacked
@@ -773,7 +678,6 @@ class ShardedCuckooFilter:
         reference restores input offsets because its API is
         positional; ours is relational)."""
         key_col = self.key_col
-        kernel_cls = shard_kernel(self.config).cls
 
         # one row per shard with list columns (exploded JVM-side):
         # the Python→JVM boundary carries num_shards rows, not
@@ -789,7 +693,7 @@ class ShardedCuckooFilter:
             if len(left) == 0 or len(right) == 0:
                 res = np.zeros(len(left), dtype=res_np_dtype)
             else:
-                flt = kernel_cls.from_bytes(right["blob"].iloc[0])
+                flt = CuckooFilter.from_bytes(right["blob"].iloc[0])
                 res = getattr(flt, op + "_many")(_keys_from_pdf(left, key_col))
             keys = left[key_col].to_numpy(np.int64, copy=False)
             return pack_lists({"__keys": keys, "__res": res}, chunk_rows)
@@ -827,12 +731,7 @@ class ShardedCuckooFilter:
         are multiset (each duplicate occupies a slot), this returns
         the per-key instance count, and multiset deletes decrement
         it. Over-counts only on full fingerprint+bucket-pair
-        collisions (probability ≈ the membership FPR). XOR/AddSub
-        kernels only."""
-        if self.config.bucket_policy == "offset":
-            raise NotImplementedError(
-                "the Offset kernel has no counting query"
-            )
+        collisions (probability ≈ the membership FPR)."""
         return self._routed(
             queries, "count", out_col,
             res_spark_type=LongType(), res_np_dtype=np.int64,
@@ -844,9 +743,8 @@ class ShardedCuckooFilter:
         occupies bucket rows [s*nb, (s+1)*nb); absent shards stay
         empty."""
         cfg = self.config
-        kernel_cls = shard_kernel(cfg).cls
         filters = {
-            r.shard_id: kernel_cls.from_bytes(bytes(r.blob))
+            r.shard_id: CuckooFilter.from_bytes(bytes(r.blob))
             for r in self.shards.select("shard_id", "blob").collect()
         }
         nb = (
@@ -908,8 +806,7 @@ class ShardedCuckooFilter:
         nullable object columns dominated delete wall time). The
         per-key result DataFrame is recovered with a codegen'd
         explode, and persisting the cogroup output caches only the
-        shard rows. Multiset semantics for every kernel (Offset's
-        choice-bit flips are handled by its core kernel). Null keys
+        shard rows. Multiset semantics under every bucket policy. Null keys
         are dropped before routing (:meth:`_route`), so they neither
         remove nor count.
 
@@ -925,7 +822,6 @@ class ShardedCuckooFilter:
         ``(None, new_filter)``; read the count with
         :meth:`delete_success_count`)."""
         key_col = self.key_col
-        kernel_cls = shard_kernel(self.config).cls
 
         fields = list(_SHARD_SCHEMA.fields) + [
             StructField("n_ok", LongType())
@@ -941,7 +837,7 @@ class ShardedCuckooFilter:
             shard_id = int(key[0])
             keys_arr = left[key_col].to_numpy(np.int64, copy=False)
             if len(right):
-                flt = kernel_cls.from_bytes(right["blob"].iloc[0])
+                flt = CuckooFilter.from_bytes(right["blob"].iloc[0])
                 ok = flt.delete_many(_keys_from_pdf(left, key_col))
                 out = {
                     "shard_id": [shard_id], "blob": [flt.to_bytes()],

@@ -40,7 +40,9 @@ def _lineage(
         "bucket_policy": config.bucket_policy,
         "shard_num_buckets": shard_num_buckets,
         "input": input_desc,
-        "version": 2,
+        # 3: Offset shards are CKFS blobs of the one CuckooFilter
+        # kernel; older checkpoints rebuild once
+        "version": 3,
     }, sort_keys=True)
 
 

@@ -1,7 +1,8 @@
 """Parquet scan helpers.
 
 ``read_matched_splits`` sizes the file-split confs so a scan yields
-roughly one split per core before reading. At deployment scale
+roughly one split per core before reading; ``read_split_per_file``
+sizes them so every file is exactly one split. At deployment scale
 (≥128 MB row groups) Spark's defaults already do this; the knob
 matters for small-file layouts — a freshly bucketed table, a
 low-cardinality corpus, local benchmarking — where the default
@@ -19,15 +20,20 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Hadoop Path) of ``path`` — any scheme."""
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(sc._jsc.hadoopConfiguration()), jpath
+
+
 def write_json_sidecar(
     spark: SparkSession, table_path: str, name: str, payload: dict
 ) -> None:
     """Write a small JSON metadata file inside a table directory via
     the Hadoop FileSystem API — works on any scheme (file/hdfs/s3a),
     unlike driver-local ``open()``."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{name}")
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, jpath = _fs_path(spark, f"{table_path}/{name}")
     out = fs.create(jpath, True)
     try:
         out.write(bytearray(json.dumps(payload, indent=1).encode("utf-8")))
@@ -40,9 +46,7 @@ def read_json_sidecar(
 ) -> Optional[dict]:
     """Read a JSON sidecar written by :func:`write_json_sidecar`;
     None if absent."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{name}")
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, jpath = _fs_path(spark, f"{table_path}/{name}")
     if not fs.exists(jpath):
         return None
     stream = fs.open(jpath)
@@ -50,19 +54,18 @@ def read_json_sidecar(
         # py4j passes Python bytearrays by value, so stream.read(buf)
         # can't return data — have the JVM drain the stream instead
         data = bytes(
-            jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+            spark.sparkContext._jvm.org.apache.commons.io.IOUtils
+            .toByteArray(stream)
         )
     finally:
         stream.close()
     return json.loads(data.decode("utf-8"))
 
 
-def read_matched_splits(
-    spark: SparkSession, path: str, target_splits: Optional[int] = None,
-) -> DataFrame:
+def read_matched_splits(spark: SparkSession, path: str) -> DataFrame:
     """Read parquet with ``spark.sql.files.maxPartitionBytes`` /
     ``openCostInBytes`` sized so the scan yields
-    ``>= min(target_splits, number of files)`` splits.
+    ``>= min(defaultParallelism, number of files)`` splits.
 
     The two confs are session-level (Spark has no per-relation split
     size) and are captured when the scan plans its partitions, so
@@ -74,10 +77,8 @@ def read_matched_splits(
     Splits never go below 1 MB: below parquet row-group granularity
     extra splits are empty tasks.
     """
-    target = target_splits or spark.sparkContext.defaultParallelism
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    target = spark.sparkContext.defaultParallelism
+    fs, jpath = _fs_path(spark, path)
     total = fs.getContentSummary(jpath).getLength()
     split = min(
         128 << 20, max(1 << 20, int(total / max(target, 1)))
@@ -85,4 +86,22 @@ def read_matched_splits(
     open_cost = (4 << 20) if split >= (128 << 20) else min(split // 4, 1 << 20)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
+    return spark.read.parquet(path)
+
+
+def read_split_per_file(spark: SparkSession, path: str) -> DataFrame:
+    """Read parquet with exactly one split per file, whatever the file
+    and row-group sizes: ``spark.sql.files.maxPartitionBytes`` and
+    ``openCostInBytes`` are both set to the largest file's length, so
+    no file is cut (a file splits only past ``maxPartitionBytes``) and
+    no two files share a split (each file adds the open cost to its
+    split's size). Like :func:`read_matched_splits`, the confs are
+    session-level and set before the reader is returned."""
+    fs, jpath = _fs_path(spark, path)
+    files = fs.listFiles(jpath, True)
+    largest = 1
+    while files.hasNext():
+        largest = max(largest, files.next().getLen())
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(largest))
+    spark.conf.set("spark.sql.files.openCostInBytes", str(largest))
     return spark.read.parquet(path)

@@ -49,9 +49,8 @@ def _sharded_state_stream(
 ):
     """The state plumbing both stateful cuckoo stream ops share: rows
     with a non-null key go to ``shard_expr`` groups, each group's state
-    is one ``blob binary`` row holding its shard filter (new when
-    absent, its kernel following ``config.bucket_policy`` via
-    ``operators.membership.shard_kernel``), and ``step(flt, pdfs)``
+    is one ``blob binary`` row holding its shard ``CuckooFilter`` (new
+    when absent), and ``step(flt, pdfs)``
     yields, per input chunk of one micro-batch, a tuple of per-row
     arrays for the ``out_schema`` fields other than ``shard`` while it
     mutates ``flt``. Each tuple crosses to the JVM as list-column rows
@@ -62,13 +61,14 @@ def _sharded_state_stream(
     )
 
     from cuckoo_filter_spark.config import CuckooConfig
+    from cuckoo_filter_spark.core.cuckoo import CuckooFilter
     from cuckoo_filter_spark.operators.membership import (
         ROUTED_CHUNK_ROWS, explode_lists, pack_lists, per_shard_capacity,
-        shard_expr, shard_kernel,
+        shard_expr,
     )
 
     per_shard_cap = per_shard_capacity(capacity, num_shards)
-    new_shard, kernel_cls, _ = shard_kernel(config or CuckooConfig())
+    cfg = config or CuckooConfig()
     state_schema = StructType([StructField("blob", BinaryType())])
     lists = [f for f in out_schema.fields if f.name != "shard"]
     pack_schema = StructType([StructField("shard", LongType())] + [
@@ -79,9 +79,9 @@ def _sharded_state_stream(
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
-            flt = kernel_cls.from_bytes(bytes(state.get[0]))
+            flt = CuckooFilter.from_bytes(bytes(state.get[0]))
         else:
-            flt = new_shard(per_shard_cap)
+            flt = CuckooFilter(per_shard_cap, cfg)
         shard_id = int(key[0])
         for arrays in step(flt, pdfs):
             yield pack_lists(dict(zip(names, arrays)), chunk_rows,
@@ -115,10 +115,9 @@ def stream_build_sharded(
     and hash false-positives gate as seen). Rows with a null key are
     dropped. This is the streaming
     complement of ``ShardedCuckooFilter.build`` — state never leaves
-    the executors and is checkpointed by the streaming engine. The
-    per-shard state kernel follows ``config.bucket_policy``
-    (``operators.membership.shard_kernel``), as in
-    :func:`stream_apply_ops`.
+    the executors and is checkpointed by the streaming engine. Each
+    shard's state is a ``CuckooFilter`` of ``config.bucket_policy``, as
+    in :func:`stream_apply_ops`.
     """
     import numpy as np
     from pyspark.sql.types import (
@@ -324,12 +323,10 @@ def stream_apply_ops(
     regardless of partition layout. Consecutive same-op runs are
     applied as one vectorized kernel call either way.
 
-    The per-shard state kernel follows ``config.bucket_policy``
-    (``operators.membership.shard_kernel``, as for
-    ``ShardedCuckooFilter``): XOR and AddSub state is a
-    :class:`~cuckoo_filter_spark.core.cuckoo.CuckooFilter`, Offset
-    state an ``OffsetCuckooFilter`` — all three bucket policies share
-    the same streaming surface."""
+    Each shard's state is a
+    :class:`~cuckoo_filter_spark.core.cuckoo.CuckooFilter` of
+    ``config.bucket_policy``, as for ``ShardedCuckooFilter``, so all
+    three bucket policies share the same streaming surface."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (

@@ -98,3 +98,32 @@ def test_lineage_records_bucket_policy(spark, tmp_path_factory):
             for r in filt.shards.select("blob").collect()
         }
         assert stored == {policy}
+
+
+def test_pre_change_lineage_rebuilds(spark, tmp_path_factory):
+    """A checkpoint whose lineage predates Offset shards becoming CKFS
+    blobs of the one kernel (lineage version 2: its Offset shards are
+    ``OCKF`` blobs, which no longer decode) is rebuilt once, not
+    loaded."""
+    from cuckoo_filter_spark.operators.membership import (
+        _SHARD_SCHEMA, per_shard_capacity,
+    )
+    from cuckoo_filter_spark.plans.checkpoint import _lineage
+
+    path = str(tmp_path_factory.mktemp("ckpt") / "old_lineage")
+    cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy="offset")
+    keys = spark.range(0, 5_000).withColumnRenamed("id", "key")
+    snb = cfg.num_buckets_for(per_shard_capacity(8_000, 4))
+    old = json.loads(_lineage(4, cfg, "", snb))
+    old["version"] = 2
+    stale = spark.createDataFrame(
+        [(s, b"OCKF\x02" + bytes(58), 0, 0, 0, 0) for s in range(4)],
+        _SHARD_SCHEMA,
+    )
+    stale.withColumn(
+        "lineage", F.lit(json.dumps(old, sort_keys=True))
+    ).write.parquet(path)
+    filt = build_resumable(spark, keys, "key", 8_000, 4, path, cfg)
+    assert filt.contains(keys).filter(~F.col("member")).count() == 0
+    _, lineage = read_checkpoint(spark, path)
+    assert lineage["version"] == 3

@@ -46,13 +46,18 @@ def test_key_invariant_vs_hashlib(repo_df):
 
 
 def test_merged_zero_false_negatives(spark, repo_df, merged):
-    # AddSub at a non-pow2 bucket count (7,500) rides the same check
-    addsub = DistributedCuckooFilter.build(
-        repo_df, "key", 30_000,
-        CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy="addsub"),
-    )
-    assert addsub.filter.num_buckets == 7_500
-    for filt in (merged, addsub):
+    # AddSub and Offset at a non-pow2 bucket count (7,500) ride the
+    # same check
+    others = [
+        DistributedCuckooFilter.build(
+            repo_df, "key", 30_000,
+            CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy=p),
+        )
+        for p in ("addsub", "offset")
+    ]
+    for filt in others:
+        assert filt.filter.num_buckets == 7_500
+    for filt in (merged, *others):
         out = filt.contains(repo_df.select("key"), "key")
         n_found = out.filter(F.col("member")).count()
         assert n_found == N_ROWS
@@ -311,13 +316,17 @@ def test_routed_chunked_output_rows(spark, repo_df, monkeypatch):
 
 
 @pytest.mark.parametrize("policy", ["xor", "addsub", "offset"])
-def test_lanes_agree_per_bucket_policy(spark, repo_df, monkeypatch, policy):
+def test_lanes_agree_per_bucket_policy(
+    spark, repo_df, monkeypatch, tmp_path, split_confs, local_shards, policy
+):
     """Every lane of the sharded filter gives the same answers under
     each bucket policy: routed and broadcast contains agree per key
-    on mixed positives and negatives (routed output chunked small),
-    both delete modes remove the same keys, a delete that touches
-    only some shards keeps every shard and its rows, and no key that
-    was not deleted goes missing."""
+    on mixed positives and negatives (routed output chunked small) and
+    with one local numpy filter per shard, routed counts agree with it
+    too, the bucketed build holds the same shards, both delete modes
+    remove the same keys, a delete that touches only some shards keeps
+    every shard and its rows, and no key that was not deleted goes
+    missing."""
     from cuckoo_filter_spark.operators import membership as mem
 
     monkeypatch.setattr(mem, "ROUTED_CHUNK_ROWS", 257)
@@ -336,6 +345,33 @@ def test_lanes_agree_per_bucket_policy(spark, repo_df, monkeypatch, policy):
     assert routed.exceptAll(bcast).count() == 0
     assert bcast.exceptAll(routed).count() == 0
     assert routed.join(keys, "key").filter(~F.col("member")).count() == 0
+
+    # the same answers as a numpy filter per shard (no insert fails,
+    # so insertion order cannot show)
+    local = local_shards(
+        [r.key for r in keys.collect()], CAPACITY, 8, cfg
+    )
+    got = routed.join(sharded.counts(mixed), "key").collect()
+    probe_keys = [r.key for r in got]
+    want = local.answer("contains", probe_keys).tolist()
+    assert [r.member for r in got] == want
+    assert [r["count"] for r in got] == local.answer("count", probe_keys).tolist()
+    assert min(r["count"] for r in got if r.member) >= 1
+
+    # the bucketed build holds the same shards and answers the same
+    path = str(tmp_path / "bucketed")
+    ShardedCuckooFilter.write_bucketed_keys(repo_df, "key", CAPACITY, 8, path, cfg)
+    bucketed = ShardedCuckooFilter.build_bucketed(
+        ShardedCuckooFilter.read_bucketed_keys(spark, path), CAPACITY, 8, cfg,
+        path=path,
+    )
+    stats = ["shard_id", "rows", "inserted"]
+    assert sorted(bucketed.shards.select(stats).collect()) == sorted(
+        sharded.shards.select(stats).collect()
+    )
+    by_bucketed = bucketed.contains(mixed).select("key", "member")
+    assert by_bucketed.exceptAll(routed).count() == 0
+    assert routed.exceptAll(by_bucketed).count() == 0
 
     # F.xxhash64 is the seed-42 router hash: this keeps shards 0 and 4
     part = keys.filter(F.pmod(F.xxhash64("key"), 4) == 0)
@@ -383,9 +419,8 @@ def test_routed_ops_skip_null_probes(spark, policy):
     sharded = ShardedCuckooFilter.build(build, "key", 1000, 2, cfg).persist()
     member = dict(sharded.contains(probes).collect())
     assert sorted(member) == [1, 3] and member[1] is True
-    if policy != "offset":  # the Offset kernel has no counting query
-        counts = dict(sharded.counts(probes).collect())
-        assert sorted(counts) == [1, 3] and counts[1] == 1
+    counts = dict(sharded.counts(probes).collect())
+    assert sorted(counts) == [1, 3] and counts[1] == 1
     outcomes, after = sharded.delete(probes)
     assert dict(outcomes.collect()) == {1: True, 3: False}
     after.release()

@@ -1,15 +1,19 @@
 """OffsetAltBucketPolicy parity (bucket_policies.cuh:190-351):
 choice-bit fingerprints, exact (non-pow2) bucket counts, symmetric
-forward/backward displacement."""
+forward/backward displacement — a bucket policy of ``CuckooFilter``."""
 
 import numpy as np
 import pytest
 
 from cuckoo_filter_spark.config import CuckooConfig
-from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
+from cuckoo_filter_spark.core.cuckoo import CuckooFilter
 
 OFFSET_CFG = CuckooConfig(bits_per_tag=16, bucket_size=4,
                           bucket_policy="offset")
+
+
+def _offset(capacity):
+    return CuckooFilter(capacity, OFFSET_CFG)
 
 
 def _keys(n, seed=42):
@@ -19,39 +23,41 @@ def _keys(n, seed=42):
 
 
 def test_non_pow2_bucket_count():
-    f = OffsetCuckooFilter(10_000, bucket_size=4)
+    f = _offset(10_000)
     assert f.num_buckets == 2500  # exact ceil, not rounded to 4096
 
 
 def test_zero_false_negatives_and_fpr():
     keys = _keys(50_000)
-    flt = OffsetCuckooFilter(70_000)
+    flt = _offset(70_000)
     s = flt.insert_many(keys)
     assert s.mean() > 0.999
     assert flt.contains_many(keys)[s].all()
     neg = _keys(50_000, seed=9) | np.uint64(1 << 63)
     fpr = flt.contains_many(neg).mean()
     # epsilon = 2 b alpha / 2^(f-1) (choice bit costs one fp bit)
-    alpha = flt.load_factor()
-    eps = 2 * flt.bucket_size * alpha / (1 << (flt.bits_per_tag - 1))
+    alpha = flt.slot_load_factor()
+    cfg = flt.config
+    eps = 2 * cfg.bucket_size * alpha / (1 << (cfg.bits_per_tag - 1))
     assert fpr <= 3 * eps + 1e-3
 
 
 def test_alternate_is_involution():
-    flt = OffsetCuckooFilter(1000)
+    flt = _offset(1000)
+    choice = 1 << (OFFSET_CFG.bits_per_tag - 1)
     rng = np.random.default_rng(1)
-    for _ in range(200):
-        b = int(rng.integers(0, flt.num_buckets))
-        tag = int(rng.integers(1, flt._choice_bit))  # choice=0 tag
-        b2, t2 = flt.alternate(b, tag)
-        b3, t3 = flt.alternate(b2, t2)
-        assert (b3, t3) == (b, tag)  # back where we started
-        assert t2 == tag | flt._choice_bit  # choice bit flipped
+    b = rng.integers(0, flt.num_buckets, 200).astype(np.int32)
+    tag = rng.integers(1, choice, 200).astype(np.uint16)  # choice=0 tags
+    b2, t2 = flt.relocate(b, tag)
+    b3, t3 = flt.relocate(b2, t2)
+    assert (b3 == b).all() and (t3 == tag).all()  # back where we started
+    assert (t2 == tag | choice).all()  # choice bit flipped
+    assert (b2 != b).all()  # offsets are never zero
 
 
 def test_high_load_insert_with_kicks():
-    flt = OffsetCuckooFilter(20_000)
-    n = int(flt.num_buckets * flt.bucket_size * 0.95)
+    flt = _offset(20_000)
+    n = int(flt.slot_capacity * 0.95)
     keys = _keys(n, seed=5)
     s = flt.insert_many(keys)
     assert s.mean() >= 0.99  # >=99% at 0.95 load (test_cuckoo_filter.cu:135)
@@ -62,7 +68,7 @@ def test_high_load_insert_with_kicks():
 
 def test_delete_semantics():
     keys = _keys(10_000, seed=3)
-    flt = OffsetCuckooFilter(16_000)
+    flt = _offset(16_000)
     flt.insert_many(keys)
     evens = keys[::2]
     odds = keys[1::2]
@@ -74,53 +80,57 @@ def test_delete_semantics():
 
 
 def test_offset_parameter_guards():
-    """Regression (ADVICE r1): wide tags would eagerly allocate a
-    2^(f-1)-entry offset table (~17 GB at f=32) and big buckets
-    overflow the int8 fill vector — both must be rejected."""
-    import pytest
-
-    from cuckoo_filter_spark.core.offset import OffsetCuckooFilter
-
-    with pytest.raises(ValueError, match="bits_per_tag"):
-        OffsetCuckooFilter(1024, bits_per_tag=32)
-    with pytest.raises(ValueError, match="bucket_size"):
-        OffsetCuckooFilter(1024, bucket_size=128)
+    """Regression (ADVICE r1): wide Offset tags and big buckets (which
+    overflow the int8 fill vector) must be rejected; an accepted
+    Offset config runs Offset addressing, not XOR's."""
     with pytest.raises(ValueError, match="bits_per_tag"):
         CuckooConfig(bits_per_tag=32, bucket_policy="offset")
-    # the XOR/AddSub kernel must not silently run offset addressing
-    from cuckoo_filter_spark.core.cuckoo import CuckooFilter
-
-    with pytest.raises(ValueError, match="offset"):
-        CuckooFilter(1024, OFFSET_CFG)
+    with pytest.raises(ValueError, match="bucket_size"):
+        CuckooConfig(bucket_size=128, bucket_policy="offset")
+    flt = CuckooFilter(1000, OFFSET_CFG)
+    assert flt.num_buckets == 250  # exact, not the XOR policy's 256
+    keys = _keys(500)
+    i1, _, t1 = flt.candidates(keys)
+    assert (t1 < (1 << 15)).all()  # choice bit 0 in the primary bucket
 
 
 def test_offset_serialization_roundtrip():
-    flt = OffsetCuckooFilter(20_000)
+    """Offset shards are CKFS blobs, dense or sparse, and round-trip
+    exactly; a blob of the retired ``OCKF`` format raises."""
+    import struct
+
+    flt = _offset(20_000)
     keys = _keys(12_000)
     flt.insert_many(keys)
-    back = OffsetCuckooFilter.from_bytes(flt.to_bytes())
-    assert back.occupied == flt.occupied
-    assert np.array_equal(back.buckets, flt.buckets)
-    assert (back.contains_many(keys) == flt.contains_many(keys)).all()
-    import pytest
+    sparse = _offset(20_000)
+    sparse.insert_many(keys[:500])
+    for f, layout in ((flt, CuckooFilter._LAYOUT_DENSE),
+                      (sparse, CuckooFilter._LAYOUT_SPARSE32)):
+        blob = f.to_bytes()
+        assert blob[:4] == b"CKFS" and blob[CuckooFilter.HEADER_BYTES] == layout
+        back = CuckooFilter.from_bytes(blob)
+        assert back.config == f.config
+        assert back.occupied == f.occupied
+        assert np.array_equal(back.buckets, f.buckets)
+        assert (back.contains_many(keys) == f.contains_many(keys)).all()
+        assert back.delete_many(keys[:100]).all()
 
     blob = flt.to_bytes()
     stale = blob[:4] + bytes([1]) + blob[5:]
     with pytest.raises(ValueError, match="version"):
-        OffsetCuckooFilter.from_bytes(stale)
-    # corrupt blobs raise even under python -O: a bucket count that
-    # disagrees with the capacity, and a truncated tag payload
-    from cuckoo_filter_spark.core.offset import _HEADER
-
-    hdr = list(_HEADER.unpack_from(blob))
-    hdr[4] += 1  # num_buckets
-    bad_nb = _HEADER.pack(*hdr) + blob[_HEADER.size:]
-    with pytest.raises(ValueError, match="buckets"):
-        OffsetCuckooFilter.from_bytes(bad_nb)
-    with pytest.raises(ValueError, match="tags"):
-        OffsetCuckooFilter.from_bytes(blob[:-2 * flt.bucket_size])
+        CuckooFilter.from_bytes(stale)
+    with pytest.raises(ValueError, match="expected"):
+        CuckooFilter.from_bytes(blob[:-2 * OFFSET_CFG.bucket_size])
     with pytest.raises(ValueError, match="header"):
-        OffsetCuckooFilter.from_bytes(b"OCKF\x02")
+        CuckooFilter.from_bytes(b"CKFS\x03")
+    # the retired OCKF layout: magic, version 2, f, b, pad, num_buckets,
+    # capacity, occupied, kicks, failures, max_kicks, then dense tags
+    ockf = struct.pack(
+        "<4sBBH8xQQQQQQ", b"OCKF", 2, 16, 4, flt.num_buckets, 20_000,
+        flt.occupied, 0, 0, 500,
+    ) + flt.buckets.tobytes()
+    with pytest.raises(ValueError, match="bad cuckoo filter blob"):
+        CuckooFilter.from_bytes(ockf)
 
 
 def test_sharded_offset_filter_spark(spark):

@@ -65,22 +65,26 @@ def _executed_plan(df) -> str:
 
 @pytest.fixture(scope="module")
 def shape_filter(spark, tmp_path_factory):
+    """The probe keys and, per bucket policy, a bucketed table and its
+    config."""
     from pyspark.sql import functions as F
 
     from cuckoo_filter_spark.config import CuckooConfig
     from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
-    cfg = CuckooConfig(bits_per_tag=16, bucket_size=4)
     keys = spark.range(0, 4000).select((F.col("id") * 7919).alias("key"))
-    path = str(tmp_path_factory.mktemp("plan_shape") / "bucketed")
-    ShardedCuckooFilter.write_bucketed_keys(keys, "key", 6000, 4, path, cfg)
-    return keys, path, cfg
+    tables = {}
+    for policy in ("xor", "addsub", "offset"):
+        cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy=policy)
+        path = str(tmp_path_factory.mktemp(f"plan_shape_{policy}") / "bucketed")
+        ShardedCuckooFilter.write_bucketed_keys(keys, "key", 6000, 4, path, cfg)
+        tables[policy] = (path, cfg)
+    return keys, tables
 
 
-def _shape_op(spark, shape_filter, op):
+def _shape_op(spark, keys, path, cfg, op):
     from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
 
-    keys, path, cfg = shape_filter
     if op == "build_bucketed":
         return ShardedCuckooFilter.build_bucketed(
             spark.read.parquet(path), 6000, 4, cfg, path=path
@@ -102,18 +106,22 @@ def _shape_op(spark, shape_filter, op):
 )
 def test_sharded_op_plan_shape(spark, shape_filter, op):
     """The executed plan of each benchmarked sharded-filter op keeps
-    its shape: the shuffled build is one hash Exchange feeding the
-    Arrow placement stage, the bucketed build and the broadcast probe
-    move no rows, and the routed ops are one co-grouped apply."""
-    plan = _executed_plan(_shape_op(spark, shape_filter, op))
-    if op == "build":
-        assert plan.count("Exchange hashpartitioning") == 1, plan
-        assert re.search(
-            r"MapInArrow[^\n]*\n\s*\+- Exchange hashpartitioning", plan
-        ), plan
-    elif op == "build_bucketed":
-        assert "Exchange" not in plan and "MapInArrow" in plan, plan
-    elif op == "contains_broadcast":
-        assert "Exchange" not in plan and "ArrowEvalPython" in plan, plan
-    else:
-        assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    its shape under every bucket policy: the shuffled build is one
+    hash Exchange feeding the Arrow placement stage, the bucketed build
+    and the broadcast probe move no rows, and the routed ops are one
+    co-grouped apply."""
+    keys, tables = shape_filter
+    for policy, (path, cfg) in tables.items():
+        plan = _executed_plan(_shape_op(spark, keys, path, cfg, op))
+        msg = f"{policy}:\n{plan}"
+        if op == "build":
+            assert plan.count("Exchange hashpartitioning") == 1, msg
+            assert re.search(
+                r"MapInArrow[^\n]*\n\s*\+- Exchange hashpartitioning", plan
+            ), msg
+        elif op == "build_bucketed":
+            assert "Exchange" not in plan and "MapInArrow" in plan, msg
+        elif op == "contains_broadcast":
+            assert "Exchange" not in plan and "ArrowEvalPython" in plan, msg
+        else:
+            assert plan.count("FlatMapCoGroupsInPandas") == 1, msg

@@ -14,11 +14,16 @@ from cuckoo_filter_spark.core.cuckoo import CuckooFilter
 from cuckoo_filter_spark.hashing import (
     chained_hash, chained_hash_expr, keys_to_unsigned, packed_expr,
 )
-from cuckoo_filter_spark.operators.membership import ShardedCuckooFilter
+from cuckoo_filter_spark.operators.membership import (
+    ShardedCuckooFilter, per_shard_capacity,
+)
 
 CFG = CuckooConfig(bits_per_tag=16, bucket_size=4)
 ADDSUB_CFG = CuckooConfig(bits_per_tag=16, bucket_size=4,
                           bucket_policy="addsub")
+OFFSET_CFG = CuckooConfig(bits_per_tag=16, bucket_size=4,
+                          bucket_policy="offset")
+POLICY_CFG = {"xor": CFG, "addsub": ADDSUB_CFG, "offset": OFFSET_CFG}
 
 
 @pytest.fixture(scope="module")
@@ -44,15 +49,16 @@ def test_chained_hash_jvm_parity(spark, keys_df):
         assert np.array_equal(np.sort(got), np.sort(want))
 
 
-@pytest.mark.parametrize("policy", ["xor", "addsub"])
+@pytest.mark.parametrize("policy", ["xor", "addsub", "offset"])
 def test_packed_expr_matches_kernel(spark, keys_df, policy):
     """JVM packed candidates ``(i1 << f) | fp`` == numpy kernel
     candidates per key. AddSub runs at a non-pow2 bucket count
-    (1,500), where its primary bucket is a mod, not a bit mask."""
+    (1,500) and Offset at an odd one (1,501), where the primary
+    bucket is a mod, not a bit mask; Offset's fp has f-1 bits."""
     df, keys = keys_df
-    flt = CuckooFilter(6000, CFG if policy == "xor" else ADDSUB_CFG)
-    if policy == "addsub":
-        assert flt.num_buckets == 1500
+    flt = CuckooFilter(6000 if policy != "offset" else 6004, POLICY_CFG[policy])
+    if policy != "xor":
+        assert flt.num_buckets == {"addsub": 1500, "offset": 1501}[policy]
     i1n, _, fpn = flt.candidates(keys_to_unsigned(keys))
     f = CFG.bits_per_tag
     packed = packed_expr("key", flt.num_buckets, f, policy)
@@ -63,15 +69,34 @@ def test_packed_expr_matches_kernel(spark, keys_df, policy):
         assert by_key[int(k)] == (int(i1) << f) | int(fp)
 
 
-def test_packed_build_matches_key_build(spark, keys_df):
+def _assert_matches_local(sharded, keys, capacity, local_shards):
+    """Every shard of ``sharded`` holds what ``insert_many`` of its keys
+    gives a numpy filter: same shard ids, rows, occupancy and bucket
+    count, and the same contains and count answers on the keys plus as
+    many negatives."""
+    local = local_shards(keys, capacity, sharded.num_shards, sharded.config)
+    probes = keys_to_unsigned(np.concatenate([keys, keys ^ (1 << 62)]))
+    rows = sharded.shards.collect()
+    assert sorted(r.shard_id for r in rows) == sorted(local.filters)
+    for r in rows:
+        flt = CuckooFilter.from_bytes(bytes(r.blob))
+        want = local.filters[r.shard_id]
+        assert flt.config == want.config
+        assert (r.rows, r.inserted, flt.num_buckets, flt.failures) == (
+            want.inserts, want.occupied, want.num_buckets, 0
+        )
+        assert np.array_equal(
+            flt.contains_many(probes), want.contains_many(probes)
+        )
+        assert np.array_equal(flt.count_many(probes), want.count_many(probes))
+
+
+def test_packed_build_matches_key_build(spark, keys_df, local_shards):
+    """The JVM-packed build holds the filters ``insert_many`` of each
+    shard's keys builds in numpy (chained hash family parity)."""
     df, keys = keys_df
     a = ShardedCuckooFilter.build(df, "key", 6000, 8, CFG)
-    b = ShardedCuckooFilter._build_keys(df, "key", 6000, 8, CFG)
-    blobs_a = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
-               for r in a.shards.collect()}
-    blobs_b = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
-               for r in b.shards.collect()}
-    assert blobs_a == blobs_b  # bit-identical filters
+    _assert_matches_local(a, keys, 6000, local_shards)
 
 
 def test_bucketed_build_matches(spark, keys_df, tmp_path):
@@ -81,57 +106,89 @@ def test_bucketed_build_matches(spark, keys_df, tmp_path):
     bucketed = spark.read.parquet(path)
     a = ShardedCuckooFilter.build_bucketed(bucketed, 6000, 8, CFG)
     b = ShardedCuckooFilter.build(df, "key", 6000, 8, CFG)
-    blobs_a = {r.shard_id: bytes(r.blob) for r in a.shards.collect()}
-    blobs_b = {r.shard_id: bytes(r.blob) for r in b.shards.collect()}
-    assert set(blobs_a) == set(blobs_b)
+    ids_a = [r.shard_id for r in a.shards.collect()]
+    ids_b = [r.shard_id for r in b.shards.collect()]
+    # one row per shard id: a shard built by two tasks would come back
+    # as two partial rows
+    assert sorted(ids_a) == sorted(set(ids_a)) == sorted(ids_b)
     # same keys per shard -> same occupancy; layout may differ with
     # input order, so compare membership, not bytes
     out = a.contains_broadcast(df, "key")
     assert out.filter(~F.col("member")).count() == 0
 
 
-def test_read_bucketed_keys_split_parallelism(spark, keys_df, tmp_path):
-    """A small-file bucketed table must scan with ~one split per
-    file, not the 2-3 splits the default 128 MB maxPartitionBytes +
-    4 MB openCostInBytes would coalesce it into — build_bucketed's
+def _n_files(path):
+    import os
+
+    return len([p for p in os.listdir(path) if p.endswith(".parquet")])
+
+
+def test_read_bucketed_keys_split_parallelism(
+    spark, keys_df, tmp_path, split_confs
+):
+    """A small-file bucketed table scans as exactly one split per file,
+    not the 2-3 splits the default 128 MB maxPartitionBytes + 4 MB
+    openCostInBytes would coalesce it into — build_bucketed's
     placement parallelism IS the split count (no Exchange)."""
     df, keys = keys_df
     path = str(tmp_path / "bucketed_split")
     ShardedCuckooFilter.write_bucketed_keys(df, "key", 6000, 8, path, CFG)
-    n_files = len(
-        [p for p in __import__("os").listdir(path) if p.endswith(".parquet")]
+    bucketed = ShardedCuckooFilter.read_bucketed_keys(spark, path)
+    assert bucketed.rdd.getNumPartitions() == _n_files(path)
+    a = ShardedCuckooFilter.build_bucketed(bucketed, 6000, 8, CFG)
+    out = a.contains_broadcast(df, "key")
+    assert out.filter(~F.col("member")).count() == 0
+
+
+def test_bucketed_build_keeps_multi_row_group_shards_whole(
+    spark, tmp_path, split_confs
+):
+    """A shard file of several parquet row groups is still built by ONE
+    task: read_bucketed_keys scans every file as one split, so
+    build_bucketed returns one row per shard and routed contains finds
+    every key. Had the scan cut a file, each piece would build its own
+    partial filter under the same shard id and the probes would read
+    only one of them (false negatives)."""
+    path = str(tmp_path / "bucketed_row_groups")
+    keys = spark.range(0, 400_000).select(
+        (F.col("id") * 7919 + 13).alias("key")
     )
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    prev_open = spark.conf.get("spark.sql.files.openCostInBytes")
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    prev_block = hconf.get("parquet.block.size")
+    hconf.set("parquet.block.size", str(256 << 10))
     try:
-        bucketed = ShardedCuckooFilter.read_bucketed_keys(
-            spark, path, target_splits=64
+        ShardedCuckooFilter.write_bucketed_keys(
+            keys, "key", 800_000, 4, path, CFG
         )
-        got = bucketed.rdd.getNumPartitions()
-        assert got >= min(n_files, 64), (got, n_files)
-        # the filter built from the matched-split read is unchanged
-        a = ShardedCuckooFilter.build_bucketed(bucketed, 6000, 8, CFG)
-        out = a.contains_broadcast(df, "key")
-        assert out.filter(~F.col("member")).count() == 0
     finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
-        spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
+        if prev_block is None:
+            hconf.unset("parquet.block.size")
+        else:
+            hconf.set("parquet.block.size", prev_block)
+    table = ShardedCuckooFilter.read_bucketed_keys(spark, path)
+    assert table.rdd.getNumPartitions() == _n_files(path)
+    filt = ShardedCuckooFilter.build_bucketed(
+        table, 800_000, 4, CFG, path=path
+    ).persist()
+    ids = [r.shard_id for r in filt.shards.select("shard_id").collect()]
+    assert sorted(ids) == [0, 1, 2, 3]
+    assert filt.contains(keys).filter(~F.col("member")).count() == 0
+    filt.shards.unpersist()
 
 
-def test_packed_build_matches_key_build_addsub(spark, keys_df):
-    """AddSub policy through the JVM-packed lane: i1 = low-32 %
-    (nb/2) in codegen (bucket_policies.cuh:126-143), alt bucket
-    resolved numpy-side — bit-identical to the key-shipping build."""
+def test_packed_build_matches_key_build_addsub(spark, keys_df, local_shards):
+    """AddSub and Offset through the JVM-packed lane: i1 = low-32 %
+    (nb/2) or % nb in codegen (bucket_policies.cuh:126-143, 266-287),
+    (i2, t2) resolved numpy-side — the same filters as ``insert_many``
+    of each shard's keys."""
     df, keys = keys_df
-    a = ShardedCuckooFilter.build(df, "key", 6000, 8, ADDSUB_CFG)
-    b = ShardedCuckooFilter._build_keys(df, "key", 6000, 8, ADDSUB_CFG)
-    blobs_a = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
-               for r in a.shards.collect()}
-    blobs_b = {r.shard_id: (bytes(r.blob), r.rows, r.inserted)
-               for r in b.shards.collect()}
-    assert blobs_a == blobs_b
-    # the packed build records the per-shard bucket count
-    assert a.shard_num_buckets is not None
+    for cfg in (ADDSUB_CFG, OFFSET_CFG):
+        a = ShardedCuckooFilter.build(df, "key", 6000, 8, cfg)
+        _assert_matches_local(a, keys, 6000, local_shards)
+        # the packed build records the per-shard bucket count
+        assert a.shard_num_buckets == cfg.num_buckets_for(
+            per_shard_capacity(6000, 8)
+        )
 
 
 def test_addsub_routed_contains_delete(spark, keys_df):

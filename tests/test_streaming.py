@@ -225,8 +225,9 @@ def test_stream_apply_ops_seq_order(spark, tmp_path):
 def test_stream_apply_ops_offset_policy(spark, tmp_path):
     """All three bucket policies share the streaming op-stream
     surface: the same mixed insert/delete run as
-    test_stream_apply_ops, with OffsetCuckooFilter state (choice-bit
-    fingerprints, non-pow2 bucket counts) chosen by the config."""
+    test_stream_apply_ops, with Offset-policy CuckooFilter state
+    (choice-bit fingerprints, non-pow2 bucket counts) chosen by the
+    config."""
     src_dir = str(tmp_path / "offsetopsrc")
     (
         spark.range(0, 1000)
