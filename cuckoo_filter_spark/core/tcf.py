@@ -135,34 +135,38 @@ class TwoChoiceFilter(CuckooFilter):
             pending = pending[~ok]
         return success
 
-    def _insert_chunked(self, n: int, cand) -> np.ndarray:
-        """Same chunked driver as the cuckoo core but the residual
-        stage is the *other candidate via two-choice*, never a kick
-        chain — both-full keys fail (bulk_insert misses counter).
-
-        Placement runs in sub-batches of ~half the bucket count:
-        the less-full decision is made against fills at most
+    def _place_refreshed(
+        self, i1: np.ndarray, i2: np.ndarray, t1: np.ndarray, t2: np.ndarray
+    ) -> np.ndarray:
+        """:meth:`_two_choice_place` in sub-batches of ~half the bucket
+        count: the less-full decision is made against fills at most
         num_buckets/2 keys stale, which preserves the power-of-two-
-        choices balance (with whole-chunk staleness the first chunk
+        choices balance (with whole-batch staleness the first batch
         sees all-zero fills, every key picks i1, and the filter
         degenerates to single-choice hashing — measured 241/8192
         buckets full at 0.76 overall load; with sub-batch refresh,
         zero). Which bucket a tag lands in is invisible to
         contains/delete/merge — both candidates are always probed —
         so this is purely a balance/capacity concern."""
-        self.inserts += n
-        if n == 0:
-            return np.zeros(0, dtype=bool)
-        success = np.zeros(n, dtype=bool)
+        success = np.zeros(len(t1), dtype=bool)
         sub = min(self.CHUNK, max(1024, self.num_buckets // 2))
+        for lo in range(0, len(t1), sub):
+            hi = lo + sub
+            success[lo:hi] = self._two_choice_place(
+                i1[lo:hi], i2[lo:hi], t1[lo:hi], t2[lo:hi]
+            )
+        return success
+
+    def _insert_chunked(self, n: int, cand) -> np.ndarray:
+        """Same chunked driver as the cuckoo core but the residual
+        stage is the *other candidate via two-choice*
+        (:meth:`_place_refreshed`), never a kick chain — both-full
+        keys fail (bulk_insert misses counter)."""
+        self.inserts += n
+        success = np.zeros(n, dtype=bool)
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
-            c = cand(lo, hi)
-            for slo in range(0, hi - lo, sub):
-                shi = min(slo + sub, hi - lo)
-                success[lo + slo:lo + shi] = self._two_choice_place(
-                    *(a[slo:shi] for a in c)
-                )
+            success[lo:hi] = self._place_refreshed(*cand(lo, hi))
         n_ok = int(success.sum())
         self.occupied += n_ok
         self.failures += n - n_ok
@@ -172,7 +176,8 @@ class TwoChoiceFilter(CuckooFilter):
 
     def merge_in_place(self, other: "CuckooFilter") -> "TwoChoiceFilter":
         """Fold ``other`` into ``self`` by two-choice re-placement of
-        every stored tag at its pair ``{(i, tag), relocate(i, tag)}``
+        every stored tag at its pair ``{(i, tag), relocate(i, tag)}``,
+        with the fill refresh inserts use (:meth:`_place_refreshed`)
         — no kick fallback (the type has no eviction); both-full tags
         count as failures. At the sized load (≤0.85 usable, and callers
         typically well below) merges place every tag regardless of
@@ -198,7 +203,7 @@ class TwoChoiceFilter(CuckooFilter):
         tags = other.buckets[bi, slot]
         bi = bi.astype(np.int64)
         alt, atags = self.relocate(bi, tags)
-        ok = self._two_choice_place(bi, alt, tags, atags)
+        ok = self._place_refreshed(bi, alt, tags, atags)
         n_ok = int(ok.sum())
         dropped = len(tags) - n_ok
         if dropped:

@@ -44,9 +44,10 @@ from dataclasses import dataclass
 from typing import Iterator, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, BinaryType, BooleanType, LongType, StructField, StructType,
 )
@@ -64,35 +65,6 @@ def per_shard_capacity(capacity: int, num_shards: int) -> int:
     """Key capacity of each shard filter of a ``capacity``-key filter
     split ``num_shards`` ways, with the :data:`OVERPROVISION` slack."""
     return int(math.ceil(capacity / num_shards * OVERPROVISION))
-
-
-#: routed-lane output rows carry at most this many keys per Arrow
-#: list: one row per shard is fine at 10^5 keys/shard, but at genome
-#: scale (10^7+ keys/shard) a single multi-megaword array row
-#: stresses the JVM GC (GCLocker retries observed at 2^28 slots x 2n
-#: probes) — chunked rows explode to the same relation
-ROUTED_CHUNK_ROWS = 1 << 20
-
-
-def pack_lists(lists: dict, chunk_rows: int, **scalars) -> pd.DataFrame:
-    """Per-row numpy results as list-column rows: each array of
-    ``lists`` is cut into chunks of ``chunk_rows`` (callers pass
-    :data:`ROUTED_CHUNK_ROWS` as read when the plan is built), one row
-    per chunk, and each ``scalars`` value repeats on every row. The
-    Python→JVM boundary then carries a row per chunk, not per key;
-    :func:`explode_lists` restores the flat relation JVM-side."""
-    n = len(next(iter(lists.values())))
-    bounds = range(0, n, chunk_rows)
-    # dtype=object, NOT the float64 pandas default for empty columns:
-    # Arrow cannot convert float64 to a list output type (hit whenever
-    # a shard receives zero keys)
-    out = {
-        name: pd.Series([a[lo: lo + chunk_rows] for lo in bounds], dtype=object)
-        for name, a in lists.items()
-    }
-    for name, value in scalars.items():
-        out[name] = np.full(len(bounds), value)
-    return pd.DataFrame(out)
 
 
 def explode_lists(packed: DataFrame, columns: dict) -> DataFrame:
@@ -124,8 +96,18 @@ _SHARD_SCHEMA = StructType([
 ])
 
 
-def _keys_from_pdf(pdf: pd.DataFrame, col: str) -> np.ndarray:
-    return keys_to_unsigned(pdf[col].to_numpy(dtype=np.int64, copy=False))
+def _shard_record(sid: int, flt: Optional[CuckooFilter], rows: int) -> dict:
+    """Shard ``sid``'s ``_SHARD_SCHEMA`` row as one-element columns:
+    its filter ``flt`` and the ``rows`` fed to it. A shard with no
+    filter (``flt`` None) has no blob and zero counters."""
+    return {
+        "shard_id": [sid],
+        "blob": [None if flt is None else flt.to_bytes()],
+        "rows": [rows],
+        "inserted": [0 if flt is None else flt.occupied],
+        "kicks": [0 if flt is None else flt.kicks],
+        "failures": [0 if flt is None else flt.failures],
+    }
 
 
 def _group_by_shard(sids: np.ndarray, *arrays: np.ndarray):
@@ -145,26 +127,16 @@ def _group_by_shard(sids: np.ndarray, *arrays: np.ndarray):
 def _shard_rows(parts, per_shard_cap: int, cfg: CuckooConfig):
     """Fill one new filter per shard from ``(shard ids, packed
     candidates)`` batches with ``insert_packed``; yield one
-    ``_SHARD_SCHEMA`` row dict per shard."""
+    :func:`_shard_record` per shard."""
     per_shard: dict[int, list[np.ndarray]] = {}
     for sids, vals in parts:
         for sid, chunk in _group_by_shard(sids, vals):
             per_shard.setdefault(sid, []).append(chunk)
     for sid, chunks in per_shard.items():
         flt = CuckooFilter(per_shard_cap, cfg)
-        rows = 0
-        inserted = 0
         for chunk in chunks:
-            rows += len(chunk)
-            inserted += int(flt.insert_packed(chunk).sum())
-        yield {
-            "shard_id": [sid],
-            "blob": [flt.to_bytes()],
-            "rows": [rows],
-            "inserted": [inserted],
-            "kicks": [flt.kicks],
-            "failures": [flt.failures],
-        }
+            flt.insert_packed(chunk)
+        yield _shard_record(sid, flt, sum(map(len, chunks)))
 
 
 def _arrow_shard_builder(
@@ -178,8 +150,6 @@ def _arrow_shard_builder(
     columns (__shard, __packed)."""
 
     def build_shards(batches):
-        import pyarrow as pa
-
         def parts():
             for rb in batches:
                 if shard_shift is not None:
@@ -339,8 +309,8 @@ def _stacked_probe_udf(bc, nb: int, num_shards: int, cfg: CuckooConfig):
     0 whose answer is discarded JVM-side."""
     bs = cfg.bucket_size
 
-    @F.pandas_udf(BooleanType())
-    def member(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.arrow_udf(BooleanType())
+    def member(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         from cuckoo_filter_spark.config import FP_SALT
         from cuckoo_filter_spark.core.cuckoo import probe_rows
         from cuckoo_filter_spark.hashing import (
@@ -351,8 +321,8 @@ def _stacked_probe_udf(bc, nb: int, num_shards: int, cfg: CuckooConfig):
         big = np.frombuffer(bc.value, dtype=kernel.buckets.dtype).reshape(
             -1, bs
         )
-        for s in batches:
-            keys = s.to_numpy(dtype=np.int64, copy=False).view(np.uint64)
+        for arr in batches:
+            keys = keys_to_unsigned(arr.to_numpy())
             n = len(keys)
             res = np.empty(n, dtype=bool)
             for lo in range(0, n, kernel.CHUNK):
@@ -365,7 +335,7 @@ def _stacked_probe_udf(bc, nb: int, num_shards: int, cfg: CuckooConfig):
                     big, base + i1, base + i2, t1, t2,
                     out=res[lo:lo + len(hr)],
                 )
-            yield pd.Series(res)
+            yield pa.array(res)
 
     return lambda key: F.when(
         key.isNotNull(), member(F.coalesce(key, F.lit(0)))
@@ -651,22 +621,22 @@ class ShardedCuckooFilter:
     # -- routed batch ops -------------------------------------------------
 
     def _route(self, queries: DataFrame, fn, schema: StructType) -> DataFrame:
-        """Route query keys to their shard and run ``fn(key, probe
-        rows, shard row)`` once per shard — the Spark expression of
-        the reference's multisplit → all2all → local kernel round
-        trip (``CuckooFilterMultiGPU.cuh:168-323``). Probe rows are
-        the key and its shard id (``__shard``), as the reference ships
-        only the keys; each shard kernel hashes them itself. Null keys
-        are dropped: ``xxhash64`` skips nulls, so one would route and
-        answer as a real key."""
+        """Route query keys to their shard and run ``fn`` once per
+        shard on its probe rows and shard row as Arrow tables (the
+        ``applyInArrow`` cogroup contract) — the Spark
+        expression of the reference's multisplit → all2all → local
+        kernel round trip (``CuckooFilterMultiGPU.cuh:168-323``). Probe
+        rows are the key and its shard id (``__shard``), as the
+        reference ships only the keys; each shard kernel hashes them
+        itself. Null keys all route to one shard group (``xxhash64`` of
+        a null is its seed); ``fn`` must not answer them as keys."""
         key_col = self.key_col
         return (
             queries.select(key_col)
-            .filter(F.col(key_col).isNotNull())
             .withColumn("__shard", shard_expr(key_col, self.num_shards))
             .groupBy("__shard")
             .cogroup(self.shards.groupBy(F.col("shard_id").alias("__shard")))
-            .applyInPandas(fn, schema=schema)
+            .applyInArrow(fn, schema=schema)
         )
 
     def _routed(
@@ -674,34 +644,27 @@ class ShardedCuckooFilter:
         res_spark_type=BooleanType(), res_np_dtype=bool,
     ) -> DataFrame:
         """Shard-routed batch query (``op`` is 'contains' or 'count').
-        Results come back keyed (no order restoration needed — the
-        reference restores input offsets because its API is
-        positional; ours is relational)."""
+        Results come back keyed, one flat Arrow row per probe (no order
+        restoration needed — the reference restores input offsets
+        because its API is positional; ours is relational). A null
+        probe answers NULL."""
         key_col = self.key_col
-
-        # one row per shard with list columns (exploded JVM-side):
-        # the Python→JVM boundary carries num_shards rows, not
-        # num_keys rows
-        pack_schema = StructType([
-            StructField("__keys", ArrayType(LongType())),
-            StructField("__res", ArrayType(res_spark_type)),
+        schema = StructType([
+            StructField(key_col, LongType()), StructField(out_col, res_spark_type),
         ])
 
-        chunk_rows = ROUTED_CHUNK_ROWS
+        def probe(left: pa.Table, right: pa.Table) -> pa.Table:
+            keys = left.column(key_col)
+            res = np.zeros(len(keys), dtype=res_np_dtype)
+            if len(keys) and right.num_rows:
+                flt = CuckooFilter.from_bytes(right.column("blob")[0].as_py())
+                res = getattr(flt, op + "_many")(
+                    keys_to_unsigned(keys.fill_null(0).to_numpy())
+                )
+            null = keys.is_null().to_numpy()
+            return pa.table({key_col: keys, out_col: pa.array(res, mask=null)})
 
-        def probe(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if len(left) == 0 or len(right) == 0:
-                res = np.zeros(len(left), dtype=res_np_dtype)
-            else:
-                flt = CuckooFilter.from_bytes(right["blob"].iloc[0])
-                res = getattr(flt, op + "_many")(_keys_from_pdf(left, key_col))
-            keys = left[key_col].to_numpy(np.int64, copy=False)
-            return pack_lists({"__keys": keys, "__res": res}, chunk_rows)
-
-        return explode_lists(
-            self._route(queries, probe, pack_schema),
-            {key_col: "__keys", out_col: "__res"},
-        )
+        return self._route(queries, probe, schema)
 
     def contains(self, queries: DataFrame, out_col: str = "member") -> DataFrame:
         """Batched membership, shard-routed (returns key → bool)."""
@@ -807,8 +770,7 @@ class ShardedCuckooFilter:
         per-key result DataFrame is recovered with a codegen'd
         explode, and persisting the cogroup output caches only the
         shard rows. Multiset semantics under every bucket policy. Null keys
-        are dropped before routing (:meth:`_route`), so they neither
-        remove nor count.
+        are dropped before routing, so they neither remove nor count.
 
         ``per_key=False`` mirrors the reference's delete contract
         exactly: ``deleteMany`` writes per-key outcomes into device
@@ -832,34 +794,30 @@ class ShardedCuckooFilter:
                 StructField("del_ok", ArrayType(BooleanType())),
             ]
         schema = StructType(fields)
+        arrow_schema = to_arrow_schema(schema)
 
-        def apply_delete(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            shard_id = int(key[0])
-            keys_arr = left[key_col].to_numpy(np.int64, copy=False)
-            if len(right):
-                flt = CuckooFilter.from_bytes(right["blob"].iloc[0])
-                ok = flt.delete_many(_keys_from_pdf(left, key_col))
-                out = {
-                    "shard_id": [shard_id], "blob": [flt.to_bytes()],
-                    "rows": [int(right["rows"].iloc[0])],
-                    "inserted": [flt.occupied],
-                    "kicks": [flt.kicks], "failures": [flt.failures],
-                }
+        def apply_delete(key, left: pa.Table, right: pa.Table) -> pa.Table:
+            keys = left.column(key_col).to_numpy()
+            if right.num_rows:
+                flt = CuckooFilter.from_bytes(right.column("blob")[0].as_py())
+                ok = flt.delete_many(keys_to_unsigned(keys))
+                out = _shard_record(
+                    key[0].as_py(), flt, right.column("rows")[0].as_py()
+                )
             else:
                 # keys routed to a shard that never existed: all
                 # misses, no blob row (filtered out of new_shards below)
-                ok = np.zeros(len(keys_arr), dtype=bool)
-                out = {
-                    "shard_id": [shard_id], "blob": [None], "rows": [0],
-                    "inserted": [0], "kicks": [0], "failures": [0],
-                }
+                ok = np.zeros(len(keys), dtype=bool)
+                out = _shard_record(key[0].as_py(), None, 0)
             out["n_ok"] = [int(ok.sum())]
             if per_key:
-                out["del_keys"] = [keys_arr]
+                out["del_keys"] = [keys]
                 out["del_ok"] = [ok]
-            return pd.DataFrame(out)
+            return pa.table(out, schema=arrow_schema)
 
-        merged = self._route(deletes, apply_delete, schema).persist()
+        merged = self._route(
+            deletes.filter(F.col(key_col).isNotNull()), apply_delete, schema
+        ).persist()
         results = None
         if per_key:
             results = explode_lists(

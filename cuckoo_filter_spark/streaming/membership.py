@@ -11,10 +11,42 @@ of the batch dedup operators.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cuckoo_filter_spark.operators.membership import DistributedCuckooFilter
+
+#: stream-op output rows carry at most this many keys per Arrow list:
+#: one row per shard and input chunk is fine at 10^5 keys/shard, but
+#: at genome scale (10^7+ keys/shard) a single multi-megaword array
+#: row stresses the JVM GC (GCLocker retries were observed with such
+#: rows at 2^28 slots) — chunked rows explode to the same relation
+STREAM_CHUNK_ROWS = 1 << 20
+
+
+def pack_lists(lists: dict, chunk_rows: int, **scalars) -> pd.DataFrame:
+    """Per-row numpy results as list-column rows: each array of
+    ``lists`` is cut into chunks of ``chunk_rows`` (callers pass
+    :data:`STREAM_CHUNK_ROWS` as read when the plan is built), one row
+    per chunk, and each ``scalars`` value repeats on every row. The
+    Python→JVM boundary of ``applyInPandasWithState``, which has no
+    Arrow form, then carries a row per chunk, not per key;
+    :func:`~cuckoo_filter_spark.operators.membership.explode_lists`
+    restores the flat relation JVM-side."""
+    n = len(next(iter(lists.values())))
+    bounds = range(0, n, chunk_rows)
+    # dtype=object, NOT the float64 pandas default for empty columns:
+    # Arrow cannot convert float64 to a list output type (hit whenever
+    # a shard receives zero keys)
+    out = {
+        name: pd.Series([a[lo: lo + chunk_rows] for lo in bounds], dtype=object)
+        for name, a in lists.items()
+    }
+    for name, value in scalars.items():
+        out[name] = np.full(len(bounds), value)
+    return pd.DataFrame(out)
 
 
 def stream_membership(
@@ -63,8 +95,7 @@ def _sharded_state_stream(
     from cuckoo_filter_spark.config import CuckooConfig
     from cuckoo_filter_spark.core.cuckoo import CuckooFilter
     from cuckoo_filter_spark.operators.membership import (
-        ROUTED_CHUNK_ROWS, explode_lists, pack_lists, per_shard_capacity,
-        shard_expr,
+        explode_lists, per_shard_capacity, shard_expr,
     )
 
     per_shard_cap = per_shard_capacity(capacity, num_shards)
@@ -75,7 +106,7 @@ def _sharded_state_stream(
         StructField(f.name, ArrayType(f.dataType)) for f in lists
     ])
     names = [f.name for f in lists]
-    chunk_rows = ROUTED_CHUNK_ROWS
+    chunk_rows = STREAM_CHUNK_ROWS
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
@@ -119,7 +150,6 @@ def stream_build_sharded(
     shard's state is a ``CuckooFilter`` of ``config.bucket_policy``, as
     in :func:`stream_apply_ops`.
     """
-    import numpy as np
     from pyspark.sql.types import (
         BooleanType, LongType, StructField, StructType,
     )
@@ -199,8 +229,6 @@ def stream_sketch_window(
     bounded by the number of open windows — not by key cardinality,
     which is the point of the sketch at 100 TB/day rates.
     """
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
         BinaryType, LongType, StructField, StructType,
@@ -327,8 +355,6 @@ def stream_apply_ops(
     :class:`~cuckoo_filter_spark.core.cuckoo.CuckooFilter` of
     ``config.bucket_policy``, as for ``ShardedCuckooFilter``, so all
     three bucket policies share the same streaming surface."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType,
     )

@@ -130,10 +130,10 @@ def main():
     sections.append((
         "Routed counting query (round 4, GQF parity): the same "
         "cogroup dataflow as routed contains — ONE Exchange of "
-        "8-byte keys to their owning shard, FlatMapCoGroupsInPandas "
-        "emits one row per shard with (keys, counts) list columns, "
-        "codegen'd explode recovers per-key rows. Exact stored "
-        "multiplicity, state never leaves executors.",
+        "8-byte keys to their owning shard, FlatMapCoGroupsInArrow "
+        "returns one flat (key, count) Arrow row per probe, no "
+        "Generate. Exact stored multiplicity, state never leaves "
+        "executors.",
         cap_explain(cnts),
     ))
 
@@ -159,7 +159,7 @@ def main():
 
     del_res, newf = filt.delete(keys.limit(1000))
     sections.append((
-        "Sharded delete results (round 2): FlatMapCoGroupsInPandas "
+        "Sharded delete results (round 2): FlatMapCoGroupsInArrow "
         "emits ONE row per shard (blob + Arrow list columns); the "
         "per-key result frame is recovered by a codegen'd "
         "Generate explode(arrays_zip(...)) — the Python-JVM "

@@ -285,51 +285,17 @@ def test_broadcast_guard_raises_and_falls_back(spark, repo_df):
     assert_falls_back(loaded)
 
 
-def test_routed_chunked_output_rows(spark, repo_df, monkeypatch):
-    """At genome scale one list row per shard becomes a multi-
-    megaword JVM allocation; the routed lane must chunk its output
-    rows (ROUTED_CHUNK_ROWS) without changing the exploded relation.
-    Shrink the cap so every shard spans several chunks."""
-    from cuckoo_filter_spark.operators import membership as mem
-
-    monkeypatch.setattr(mem, "ROUTED_CHUNK_ROWS", 257)
-    sharded = ShardedCuckooFilter.build(repo_df, "key", CAPACITY, 4, CFG)
-    probes = repo_df.select("key")
-    res = sharded.contains(probes)
-    # one output row per probe key, all members (zero FN)
-    assert res.count() == N_ROWS
-    assert res.filter(~F.col("member")).count() == 0
-
-    # ADVICE r4: aggregate counts can hide a chunking bug that
-    # mis-keys rows or swaps an equal number of FP/FN answers —
-    # assert PER-KEY agreement with the broadcast lane over a mixed
-    # positive/negative probe set (negatives from a disjoint seed)
-    mixed = probes.unionByName(
-        synthetic_repo_files(
-            repo_df.sparkSession, 5_000, num_partitions=4, seed=4242
-        ).select("key")
-    ).distinct()
-    routed = sharded.contains(mixed).select("key", "member")
-    bcast = sharded.contains_broadcast(mixed, "key").select("key", "member")
-    assert routed.exceptAll(bcast).count() == 0
-    assert bcast.exceptAll(routed).count() == 0
-
-
 @pytest.mark.parametrize("policy", ["xor", "addsub", "offset"])
 def test_lanes_agree_per_bucket_policy(
-    spark, repo_df, monkeypatch, tmp_path, split_confs, local_shards, policy
+    spark, repo_df, tmp_path, split_confs, local_shards, policy
 ):
     """Every lane of the sharded filter gives the same answers under
     each bucket policy: routed and broadcast contains agree per key
-    on mixed positives and negatives (routed output chunked small) and
-    with one local numpy filter per shard, routed counts agree with it
+    on mixed positives and negatives and with one local numpy filter per shard, routed counts agree with it
     too, the bucketed build holds the same shards, both delete modes
     remove the same keys, a delete that touches only some shards keeps
     every shard and its rows, and no key that was not deleted goes
     missing."""
-    from cuckoo_filter_spark.operators import membership as mem
-
-    monkeypatch.setattr(mem, "ROUTED_CHUNK_ROWS", 257)
     cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy=policy)
     sharded = ShardedCuckooFilter.build(
         repo_df, "key", CAPACITY, 8, cfg
@@ -409,18 +375,21 @@ def test_sharded_build_and_delete_skip_null_keys(spark, policy):
 
 
 @pytest.mark.parametrize("policy", ["xor", "addsub", "offset"])
-def test_routed_ops_skip_null_probes(spark, policy):
-    """A null probe gets no output row from the routed ops, as build
-    and delete skip null keys: it must not come back as key INT64_MIN,
-    which a real key can hold."""
+def test_routed_null_probe_answers_null(spark, policy):
+    """The routed probes keep a null probe's row and answer it NULL, as
+    the broadcast lanes do: it must not come back as key INT64_MIN,
+    which a real key can hold. Delete skips null keys, so its per-key
+    outcomes have no null row."""
     cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy=policy)
     build = spark.createDataFrame([(1,), (2,)], "key long")
     probes = spark.createDataFrame([(1,), (None,), (3,)], "key long")
     sharded = ShardedCuckooFilter.build(build, "key", 1000, 2, cfg).persist()
-    member = dict(sharded.contains(probes).collect())
-    assert sorted(member) == [1, 3] and member[1] is True
-    counts = dict(sharded.counts(probes).collect())
-    assert sorted(counts) == [1, 3] and counts[1] == 1
+    rows = sharded.contains(probes).collect()
+    assert len(rows) == 3
+    assert dict(rows) == {1: True, None: None, 3: False}
+    rows = sharded.counts(probes).collect()
+    assert len(rows) == 3
+    assert dict(rows) == {1: 1, None: None, 3: 0}
     outcomes, after = sharded.delete(probes)
     assert dict(outcomes.collect()) == {1: True, 3: False}
     after.release()

@@ -23,10 +23,10 @@ import __spark_entry__ as entry_mod
 
 FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin")
 
-# a FlatMapGroupsInPandas/FlatMapCoGroupsInPandas whose input exchange
-# is SinglePartition == all rows in one python task
+# a FlatMap(Co)Groups(InPandas|InArrow) whose input exchange is
+# SinglePartition == all rows in one python task
 _SINGLE_GROUP = re.compile(
-    r"FlatMapGroups?(?:Co)?(?:Groups)?InPandas[^\n]*\n"
+    r"FlatMap(?:Co)?Groups?In(?:Pandas|Arrow)[^\n]*\n"
     r"(?:[^\n]*\n){0,3}?[^\n]*Exchange SinglePartition"
 )
 
@@ -108,8 +108,9 @@ def test_sharded_op_plan_shape(spark, shape_filter, op):
     """The executed plan of each benchmarked sharded-filter op keeps
     its shape under every bucket policy: the shuffled build is one
     hash Exchange feeding the Arrow placement stage, the bucketed build
-    and the broadcast probe move no rows, and the routed ops are one
-    co-grouped apply."""
+    and the broadcast probe (an Arrow UDF) move no rows, and the routed
+    ops are one Arrow co-grouped apply whose flat rows need no
+    explode."""
     keys, tables = shape_filter
     for policy, (path, cfg) in tables.items():
         plan = _executed_plan(_shape_op(spark, keys, path, cfg, op))
@@ -124,4 +125,7 @@ def test_sharded_op_plan_shape(spark, shape_filter, op):
         elif op == "contains_broadcast":
             assert "Exchange" not in plan and "ArrowEvalPython" in plan, msg
         else:
-            assert plan.count("FlatMapCoGroupsInPandas") == 1, msg
+            assert plan.count("FlatMapCoGroupsInArrow") == 1, msg
+            assert "FlatMapCoGroupsInPandas" not in plan, msg
+            if op == "contains":
+                assert "Generate" not in plan, msg

@@ -708,6 +708,51 @@ def test_stream_ops_drop_null_keys(spark, tmp_path, op_stream):
     assert all(r[flag] for r in rows)
 
 
+@pytest.mark.parametrize("op_stream", ["build", "apply_ops"])
+def test_stream_ops_chunked_output_rows(spark, tmp_path, monkeypatch, op_stream):
+    """Both stateful stream ops cut each shard's output into list rows
+    of at most ``STREAM_CHUNK_ROWS`` keys (``pack_lists``) and explode
+    them JVM-side. With the cap at 257, each shard's ~500 rows span
+    several list rows, and the exploded output is the same multiset
+    as at the default cap."""
+    import numpy as np
+
+    assert len(sm.pack_lists({"k": np.arange(600)}, 257, shard=3)) == 3
+    src_dir = str(tmp_path / "chunksrc")
+    spark.range(0, 2200).select(
+        (F.col("id") % 2000).alias("key"),
+        F.when(F.col("id") < 2000, F.lit("insert"))
+        .otherwise(F.lit("delete")).alias("op"),
+        F.col("id").alias("seq"),
+    ).coalesce(1).write.parquet(src_dir)
+
+    def run(tag):
+        stream = spark.readStream.schema(
+            "key long, op string, seq long"
+        ).parquet(src_dir)
+        if op_stream == "build":
+            out = sm.stream_build_sharded(stream, "key", 4096, 4, CFG)
+        else:
+            out = sm.stream_apply_ops(
+                stream, "key", "op", 4096, 4, CFG, seq_col="seq"
+            )
+        name = f"chunked_{op_stream}_{tag}"
+        q = (
+            out.writeStream.format("memory").queryName(name)
+            .outputMode("append").trigger(availableNow=True)
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
+            .start()
+        )
+        q.awaitTermination(180)
+        return sorted(tuple(r) for r in spark.table(name).collect())
+
+    default = run("default")
+    monkeypatch.setattr(sm, "STREAM_CHUNK_ROWS", 257)
+    chunked = run("small")
+    assert len(default) == 2200
+    assert chunked == default
+
+
 def test_stream_apply_ops_restores_per_row_checkpoint(spark, tmp_path):
     """A checkpoint written when the state function still returned one
     row per op (the stateful operator's output was the flat

@@ -108,6 +108,28 @@ def test_merge_associativity_any_order():
     assert len(set(results)) == 1
 
 
+def test_merge_places_what_inserts_place():
+    """Merging partials loses no tag at a load where inserting the same
+    keys directly loses none: the merge re-places tags with the same
+    sub-batched fill refresh as inserts, not in one stale batch."""
+    import warnings
+
+    rng = np.random.default_rng(11)
+    keys = rng.integers(0, 1 << 62, 190_000, dtype=np.int64).astype(np.uint64)
+    direct = TwoChoiceFilter(200_000)
+    assert direct.insert_many(keys).all()
+    merged = TwoChoiceFilter(200_000)
+    merged.insert_many(keys[:90_000])
+    part = TwoChoiceFilter(200_000)
+    part.insert_many(keys[90_000:])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        merged.merge_in_place(part)
+    assert merged.failures == 0
+    assert merged.occupied == len(keys)
+    assert merged.contains_many(keys).all()
+
+
 def test_blob_cross_class_rejection():
     f = TwoChoiceFilter(1000)
     c = CuckooFilter(1000)
