@@ -16,6 +16,7 @@ import struct
 
 import numpy as np
 
+from cuckoo_filter_spark.core._codec import unpack_arrays, unpack_header
 from cuckoo_filter_spark.hashing import xxhash64_u64
 
 _S1, _S2 = 0x6C62272E, 0x2545F491
@@ -82,10 +83,10 @@ class BloomFilter:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "BloomFilter":
-        magic, k, m, n = _HEADER.unpack_from(blob)
-        if magic != _MAGIC:
-            raise ValueError("bad bloom blob")
+        k, m, n = unpack_header(_HEADER, _MAGIC, blob, "bloom")
         f = cls.__new__(cls)
         f.num_bits, f.num_hashes, f.n_added = m, k, n
-        f.words = np.frombuffer(blob, np.uint64, offset=_HEADER.size).copy()
+        (f.words,) = unpack_arrays(
+            blob, _HEADER.size, "bloom", (np.uint64, (m + 63) // 64)
+        )
         return f

@@ -16,6 +16,7 @@ import struct
 
 import numpy as np
 
+from cuckoo_filter_spark.core._codec import unpack_arrays, unpack_header
 from cuckoo_filter_spark.hashing import xxhash64_u64
 
 _SEED_BASE = 0x7A3C9B15
@@ -80,12 +81,9 @@ class CountMinSketch:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "CountMinSketch":
-        magic, d, w, total = _HEADER.unpack_from(blob)
-        if magic != _MAGIC:
-            raise ValueError("bad CMS blob")
+        d, w, total = unpack_header(_HEADER, _MAGIC, blob, "CMS")
         s = cls.__new__(cls)
         s.depth, s.width, s.total = d, w, total
-        s.table = (
-            np.frombuffer(blob, np.int64, offset=_HEADER.size).reshape(d, w).copy()
-        )
+        (table,) = unpack_arrays(blob, _HEADER.size, "CMS", (np.int64, d * w))
+        s.table = table.reshape(d, w)
         return s

@@ -121,6 +121,10 @@ class CuckooFilter:
     #: saturate the memory bus and kill multi-core scaling.
     CHUNK = 65536
 
+    #: remap a zero displacement to 1 under every bucket policy, so
+    #: each tag's two candidate buckets differ (Offset always does)
+    REMAP_ZERO_DISPLACEMENT = False
+
     def __init__(self, capacity: int, config: CuckooConfig | None = None):
         cfg = config or CuckooConfig()
         self._set_geometry(cfg, capacity, cfg.num_buckets_for(capacity))
@@ -139,7 +143,12 @@ class CuckooFilter:
         self, config: CuckooConfig, capacity: int, num_buckets: int
     ) -> None:
         """Config, capacity, bucket count and empty lazy caches — shared
-        by ``__init__`` and :meth:`from_bytes`."""
+        by ``__init__`` and :meth:`from_bytes`, before any table is
+        allocated. i1 takes the low 32 hash bits, so past 2^32 buckets
+        the rest would never be primaries (AddSub, Offset) or i1 would
+        correlate with the fingerprint (XOR): refused."""
+        if num_buckets > 1 << 32:
+            raise ValueError(f"{num_buckets} buckets exceed 2^32")
         self.config = config
         self.capacity = int(capacity)
         self.num_buckets = num_buckets
@@ -156,19 +165,22 @@ class CuckooFilter:
         """Alt-bucket displacement per stored tag, from the chained
         JVM-parity hash family (``hashing.chained_hash``): XOR
         ``h(fp) & mask``, AddSub ``h(fp) % (nb/2)``, Offset
-        ``h(pure fp) % nb`` with 0 remapped to 1 (the choice bit is
-        not hashed, ``bucket_policies.cuh:249-252``)."""
+        ``h(pure fp) % nb`` (the choice bit is not hashed,
+        ``bucket_policies.cuh:249-252``). A zero displacement is
+        remapped to 1 under Offset and when the class sets
+        :attr:`REMAP_ZERO_DISPLACEMENT`."""
         tags = np.asarray(tags).astype(np.uint64)
         policy = self.config.bucket_policy
         if policy == "offset":
             pure = tags & np.uint64(self.config.tag_mask >> 1)
             d = chained_hash(pure, DISP_SALT) % np.uint64(self.num_buckets)
-            d[d == 0] = 1
         elif policy == "xor":
             d = chained_hash(tags, DISP_SALT) & self._mask
         else:
             bpb = np.uint64(self.num_buckets // 2)
             d = chained_hash(tags, DISP_SALT) % bpb
+        if policy == "offset" or self.REMAP_ZERO_DISPLACEMENT:
+            d[d == 0] = 1
         return d.astype(self._index_dtype)
 
     def _displacement(self, tags: np.ndarray) -> np.ndarray:
@@ -489,6 +501,23 @@ class CuckooFilter:
         """Insert from JVM-packed values (see :meth:`_packed_cand`)."""
         return self._insert_chunked(*self._packed_cand(packed))
 
+    def _place_pair(
+        self, i1: np.ndarray, i2: np.ndarray, t1: np.ndarray, t2: np.ndarray
+    ) -> np.ndarray:
+        """Placement policy: ``t1[j]`` in bucket ``i1[j]``, else
+        ``t2[j]`` in ``i2[j]``; returns the placed mask."""
+        s = self._place_batch(i1, t1)
+        rem = np.flatnonzero(~s)
+        if rem.size:
+            s[rem[self._place_batch(i2[rem], t2[rem])]] = True
+        return s
+
+    def _evict(
+        self, i1: np.ndarray, i2: np.ndarray, t1: np.ndarray, t2: np.ndarray
+    ) -> np.ndarray:
+        """Eviction policy for what :meth:`_place_pair` left."""
+        return self._kick_insert_batch(i1, i2, t1, t2)
+
     def _insert_chunked(self, n: int, cand) -> np.ndarray:
         self.inserts += n
         if n == 0:
@@ -498,20 +527,16 @@ class CuckooFilter:
         res_cand: list[tuple] = []
         for lo in range(0, n, self.CHUNK):
             hi = min(lo + self.CHUNK, n)
-            i1, i2, t1, t2 = cand(lo, hi)
-            s = self._place_batch(i1, t1)
-            rem = np.flatnonzero(~s)
-            if rem.size:
-                s2 = self._place_batch(i2[rem], t2[rem])
-                s[rem[s2]] = True
-                stuck = rem[~s2]
-                if stuck.size:
-                    resid.append(stuck + lo)
-                    res_cand.append(tuple(a[stuck] for a in (i1, i2, t1, t2)))
+            c = cand(lo, hi)
+            s = self._place_pair(*c)
+            stuck = np.flatnonzero(~s)
+            if stuck.size:
+                resid.append(stuck + lo)
+                res_cand.append(tuple(a[stuck] for a in c))
             success[lo:hi] = s
         if resid:
             idxs = np.concatenate(resid)
-            success[idxs] = self._kick_insert_batch(
+            success[idxs] = self._evict(
                 *(np.concatenate(a) for a in zip(*res_cand))
             )
         self.occupied += int(success.sum())
@@ -720,34 +745,29 @@ class CuckooFilter:
 
     def merge_in_place(self, other: "CuckooFilter") -> "CuckooFilter":
         """Fold ``other`` into ``self`` by re-inserting every stored
-        tag at its current bucket or at :meth:`relocate` of it —
-        valid because every policy's relocation is an involution, so
-        a tag seen in bucket i belongs to the pair {(i, tag),
-        relocate(i, tag)} regardless of which was its i1. Membership
-        answers are invariant to the merge order as long as no insert
-        fails (tests assert this across random orderings).
+        tag at its current bucket or at :meth:`relocate` of it,
+        through the placement and eviction policies inserts use
+        (:meth:`_place_pair`, :meth:`_evict`) — valid because every
+        policy's relocation is an involution, so a tag seen in bucket
+        i belongs to the pair {(i, tag), relocate(i, tag)} regardless
+        of which was its i1. Membership answers are invariant to the
+        merge order as long as no insert fails (tests assert this
+        across random orderings).
         Generalizes the disjoint multi-GPU union
         (``CuckooFilterMultiGPU.cuh:558-565``)."""
-        same_geom = (
-            self.num_buckets == other.num_buckets
-            and self.config.bits_per_tag == other.config.bits_per_tag
-            and self.config.bucket_size == other.config.bucket_size
-            and self.config.bucket_policy == other.config.bucket_policy
-        )
-        if not same_geom:
+        a, b = self.config, other.config
+        if (self.num_buckets, a.bits_per_tag, a.bucket_size, a.bucket_policy) != (
+            other.num_buckets, b.bits_per_tag, b.bucket_size, b.bucket_policy
+        ):
             raise ValueError("can only merge filters with identical geometry")
         bi, slot = np.nonzero(other.buckets)
         tags = other.buckets[bi, slot]
         bi = bi.astype(np.int64)
         alt, atags = self.relocate(bi, tags)
-        success = self._place_batch(bi, tags)
-        rem = ~success
-        if rem.any():
-            success[rem] = self._place_batch(alt[rem], atags[rem])
-            rem = ~success
-        if rem.any():
-            idxs = np.flatnonzero(rem)
-            success[idxs] = self._kick_insert_batch(
+        success = self._place_pair(bi, alt, tags, atags)
+        idxs = np.flatnonzero(~success)
+        if idxs.size:
+            success[idxs] = self._evict(
                 bi[idxs], alt[idxs], tags[idxs], atags[idxs]
             )
         self.occupied += int(success.sum())
@@ -765,12 +785,12 @@ class CuckooFilter:
     #: family, so v1 blobs MUST be rejected (probing them with the new
     #: family yields false negatives). v3 keeps the v2 hash family and adds
     #: a 1-byte payload-layout flag after the header: 0 = dense
-    #: bucket table, 1/2 = sparse (uint32/uint64 bucket indices +
-    #: stored tags) — the format partial-aggregation blobs ship when
-    #: the table is mostly empty. Nothing writes v2, so only v3 is
-    #: read.
+    #: bucket table, 1 = sparse (uint32 bucket indices + stored tags)
+    #: — the format partial-aggregation blobs ship when the table is
+    #: mostly empty. Nothing writes v2 or layout 2 (uint64 indices:
+    #: a filter holds at most 2^32 buckets), so neither is read.
     BLOB_VERSION = 3
-    _LAYOUT_DENSE, _LAYOUT_SPARSE32, _LAYOUT_SPARSE64 = 0, 1, 2
+    _LAYOUT_DENSE, _LAYOUT_SPARSE32 = 0, 1
     #: every blob starts with a fixed-size header
     HEADER_BYTES = _HEADER.size
 
@@ -797,21 +817,14 @@ class CuckooFilter:
             self.failures, self.inserts,
         )
         stored = self.count_occupied_slots()
-        idx_dtype = np.uint32 if self.num_buckets <= 0xFFFFFFFF else np.uint64
-        tag_bytes = self.buckets.dtype.itemsize
-        sparse_cost = 8 + stored * (np.dtype(idx_dtype).itemsize + tag_bytes)
+        sparse_cost = 8 + stored * (4 + self.buckets.dtype.itemsize)
         if sparse_cost < self.buckets.nbytes:
             bi, slot = np.nonzero(self.buckets)
-            layout = (
-                self._LAYOUT_SPARSE32
-                if idx_dtype is np.uint32
-                else self._LAYOUT_SPARSE64
-            )
             return (
                 hdr
-                + bytes([layout])
+                + bytes([self._LAYOUT_SPARSE32])
                 + struct.pack("<Q", stored)
-                + bi.astype(idx_dtype).tobytes()
+                + bi.astype(np.uint32).tobytes()
                 + self.buckets[bi, slot].tobytes()
             )
         return hdr + bytes([self._LAYOUT_DENSE]) + self.buckets.tobytes()
@@ -860,24 +873,20 @@ class CuckooFilter:
                 .reshape(nb, b)
                 .copy()
             )
-        elif layout in (cls._LAYOUT_SPARSE32, cls._LAYOUT_SPARSE64):
-            idx_dtype = (
-                np.uint32 if layout == cls._LAYOUT_SPARSE32 else np.uint64
-            )
-            idx_size = np.dtype(idx_dtype).itemsize
+        elif layout == cls._LAYOUT_SPARSE32:
             if len(blob) - off < 8:
                 raise ValueError("sparse cuckoo blob has no stored count")
             (stored,) = struct.unpack_from("<Q", blob, off)
             off += 8
-            if stored * (idx_size + tag_size) != len(blob) - off:
+            if stored * (4 + tag_size) != len(blob) - off:
                 raise ValueError(
                     f"sparse cuckoo blob lists {stored} tags but its "
                     f"payload is {len(blob) - off} bytes"
                 )
             bi = np.frombuffer(
-                blob, dtype=idx_dtype, count=stored, offset=off
+                blob, dtype=np.uint32, count=stored, offset=off
             ).astype(np.int64)
-            off += stored * idx_size
+            off += stored * 4
             tags = np.frombuffer(
                 blob, dtype=cfg.tag_dtype, count=stored, offset=off
             )

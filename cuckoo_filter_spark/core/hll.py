@@ -15,6 +15,7 @@ import struct
 
 import numpy as np
 
+from cuckoo_filter_spark.core._codec import unpack_arrays, unpack_header
 from cuckoo_filter_spark.hashing import xxhash64_u64
 
 HLL_SEED = 0x1F0D3F77
@@ -94,9 +95,7 @@ class HyperLogLog:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "HyperLogLog":
-        magic, p = _HEADER.unpack_from(blob)
-        if magic != _MAGIC:
-            raise ValueError("bad HLL blob")
+        (p,) = unpack_header(_HEADER, _MAGIC, blob, "HLL")
         h = cls(p)
-        h.registers = np.frombuffer(blob, np.uint8, offset=_HEADER.size).copy()
+        (h.registers,) = unpack_arrays(blob, _HEADER.size, "HLL", (np.uint8, h.m))
         return h

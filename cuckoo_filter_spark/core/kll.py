@@ -14,11 +14,17 @@ cross-check role).
 
 from __future__ import annotations
 
-import pickle
+import struct
 
 import numpy as np
 
+from cuckoo_filter_spark.core._codec import unpack_arrays, unpack_header
+
 _C = 2.0 / 3.0
+#: magic, k, n, coin counter, level count, total stored items; then
+#: the uint64 level lengths and the float64 items, level by level
+_HEADER = struct.Struct("<4sQQQQQ")
+_MAGIC = b"KLLS"
 
 
 class KLLSketch:
@@ -109,17 +115,26 @@ class KLLSketch:
         idx = int(np.searchsorted(v, x, side="right"))
         return float(cum[idx - 1] / cum[-1]) if idx else 0.0
 
-    # blobs: KLL state is ragged; pickle of plain numpy arrays is the
-    # pragmatic wire format (no custom classes inside)
     def to_bytes(self) -> bytes:
-        return pickle.dumps(
-            {"k": self.k, "n": self.n, "ctr": self._coin_ctr, "levels": self.levels},
-            protocol=4,
+        lengths = np.array([len(b) for b in self.levels], dtype=np.uint64)
+        return (
+            _HEADER.pack(
+                _MAGIC, self.k, self.n, self._coin_ctr, len(self.levels),
+                int(lengths.sum()),
+            )
+            + lengths.tobytes()
+            + np.concatenate(self.levels).tobytes()
         )
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "KLLSketch":
-        d = pickle.loads(blob)
-        s = cls(d["k"])
-        s.n, s._coin_ctr, s.levels = d["n"], d["ctr"], d["levels"]
+        k, n, ctr, depth, items = unpack_header(_HEADER, _MAGIC, blob, "KLL")
+        lengths, values = unpack_arrays(
+            blob, _HEADER.size, "KLL", (np.uint64, depth), (np.float64, items)
+        )
+        if depth == 0 or int(lengths.sum()) != items:
+            raise ValueError("bad KLL blob: level lengths do not sum to n")
+        s = cls(k)
+        s.n, s._coin_ctr = n, ctr
+        s.levels = np.split(values, np.cumsum(lengths[:-1].astype(np.int64)))
         return s

@@ -35,6 +35,8 @@ import struct
 
 import numpy as np
 
+from cuckoo_filter_spark.core._codec import unpack_arrays, unpack_header
+
 _HEADER = struct.Struct("<4sQQQQ")
 _MAGIC = b"MGS1"
 
@@ -127,16 +129,11 @@ class MisraGries:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "MisraGries":
-        magic, cap, n, total, shed = _HEADER.unpack_from(data, 0)
-        if magic != _MAGIC:
-            raise ValueError("bad MisraGries blob")
+        cap, n, total, shed = unpack_header(_HEADER, _MAGIC, data, "MisraGries")
         sk = cls(cap)
-        off = _HEADER.size
-        sk.keys = np.frombuffer(data, dtype=np.uint64, count=n, offset=off).copy()
-        off += 8 * n
-        sk.counts = np.frombuffer(
-            data, dtype=np.int64, count=n, offset=off
-        ).copy()
+        sk.keys, sk.counts = unpack_arrays(
+            data, _HEADER.size, "MisraGries", (np.uint64, n), (np.int64, n)
+        )
         sk.total = total
         sk.shed = shed
         return sk

@@ -1,34 +1,25 @@
 """Two-choice filter (TCF) — the reference's third comparison
-baseline (bulk-tcf: wired via ``subprojects/tcf.wrap`` and driven in
-``/root/reference/benchmark/fpr_benchmark.cu:182-233``, delete/insert
-comparisons in ``load_factor_benchmark.cu`` / ``kmer_benchmark.cu``).
+baseline (bulk-tcf, driven in ``benchmark/fpr_benchmark.cu:182-233``).
 
-Semantics reproduced from the benchmark harness's contract:
-
-* blocked fingerprint store (16-bit tags), two candidate buckets per
-  key, the key lands in the **less-full** of the two — the classic
-  power-of-two-choices balance, which is the entire trick: no
-  eviction chains, every insert touches at most two buckets;
+* two candidate buckets per key; the key lands in the **less-full**
+  of the two — power-of-two-choices balance, no eviction chains;
 * an insert **fails immediately** when both candidates are full (the
-  reference surfaces this as the ``d_misses`` counter of
-  ``bulk_insert`` and sizes capacity at 0.85 usable slots,
-  ``fpr_benchmark.cu:189-192``);
-* query probes both buckets; delete removes one stored instance
-  (multiset, like the cuckoo filter).
+  ``d_misses`` counter of ``bulk_insert``), so capacity is sized at
+  0.85 usable slots (``fpr_benchmark.cu:189-192``);
+* query probes both buckets; delete removes one stored instance.
 
-Addressing reuses the partial-key XOR scheme shared with
-:class:`~cuckoo_filter_spark.core.cuckoo.CuckooFilter` (alt bucket
-derivable from ``(bucket, tag)``), which keeps the TCF *mergeable*:
-a stored tag seen in bucket ``i`` belongs to pair ``{i, alt(i,
-tag)}``, so same-geometry partials combine by two-choice re-placement
-— the same mergeable-UDAF contract every other sketch in the library
-satisfies. Everything except the placement policy (probe SWAR,
-delete rounds, serialization, metrics) is inherited from the cuckoo
-core; the blob header records the no-eviction policy so round-trips
-preserve the type's invariant.
+Two-choice placement is a policy of the one cuckoo kernel
+(:class:`~cuckoo_filter_spark.core.cuckoo.CuckooFilter`): this class
+overrides only its placement hook (``_place_pair``), its eviction hook
+(``_evict``, which places nothing) and its zero-displacement remap.
+The insert and merge drivers, probe, delete and codec are the
+kernel's, and its partial-key addressing keeps the TCF mergeable. Its
+own blob magic keeps round-trips in the type.
 """
 
 from __future__ import annotations
+
+import warnings
 
 import numpy as np
 
@@ -59,6 +50,15 @@ class TwoChoiceFilter(CuckooFilter):
     #: (ε = 2bα/2^f grows with b), which is exactly the regime the
     #: reference's FPR comparison shows TCF losing (fpr_benchmark.cu).
 
+    #: Zero displacements (probability 1/num_buckets per tag) are
+    #: remapped to 1 so every key truly has TWO candidate buckets —
+    #: without eviction a degenerate i2 == i1 key has a single bucket
+    #: and fails as soon as it fills (measured: ~5e-5 of inserts at
+    #: 0.76 load before the remap, zero after). ``d → max(d, 1)``
+    #: preserves the xor involution (same d both directions), so
+    #: probe/delete/merge stay consistent.
+    REMAP_ZERO_DISPLACEMENT = True
+
     def __init__(self, capacity: int, config: CuckooConfig | None = None):
         cfg = config or CuckooConfig(bits_per_tag=16, bucket_size=32)
         sized = int(np.ceil(capacity / TCF_CAPACITY_FACTOR))
@@ -67,32 +67,7 @@ class TwoChoiceFilter(CuckooFilter):
         # cannot represent (index 1 would be out of bounds)
         sized = max(sized, 2 * cfg.bucket_size)
         super().__init__(sized, cfg)
-        assert self.num_buckets >= 2
         self.capacity = int(capacity)
-
-    # ------------------------------------------------------------------
-    # addressing: distinct candidate buckets, always
-    # ------------------------------------------------------------------
-
-    def _displacement(self, fp: np.ndarray) -> np.ndarray:
-        """Zero displacements (h(fp) & mask == 0, probability
-        1/num_buckets per tag) are remapped to 1 so every key truly
-        has TWO candidate buckets — without eviction a degenerate
-        i2 == i1 key has a single bucket and fails as soon as it
-        fills (measured: ~5e-5 of inserts at 0.76 load before the
-        remap, zero after). ``d → max(d, 1)`` preserves the xor
-        involution (same d both directions), so probe/delete/merge
-        stay consistent."""
-        if self.config.bits_per_tag <= 16:
-            if self._alt_tab is None:
-                super()._displacement(
-                    np.zeros(1, dtype=self.config.tag_dtype)
-                )  # builds + caches the table
-                self._alt_tab[self._alt_tab == 0] = 1
-            return self._alt_tab[fp.astype(np.int64)]
-        d = super()._displacement(fp)
-        d[d == 0] = 1
-        return d
 
     # ------------------------------------------------------------------
     # placement: less-full of two candidates, no eviction
@@ -105,15 +80,12 @@ class TwoChoiceFilter(CuckooFilter):
         key targets its currently-less-full open candidate and races
         through the claim-scatter (the serial analog of the
         reference's per-slot CAS); losers observe the updated fills
-        and retry, keys with both candidates full retire as failures.
+        and retry, keys with both candidates full stay unplaced.
         Terminates because every round either places a key or fills
         a bucket (guarded at 2×bucket_size+2 rounds)."""
-        n = len(t1)
-        success = np.zeros(n, dtype=bool)
-        if n == 0:
-            return success
+        success = np.zeros(len(t1), dtype=bool)
         b = self.config.bucket_size
-        pending = np.arange(n)
+        pending = np.arange(len(t1))
         for _ in range(2 * b + 2):
             if not pending.size:
                 break
@@ -135,11 +107,12 @@ class TwoChoiceFilter(CuckooFilter):
             pending = pending[~ok]
         return success
 
-    def _place_refreshed(
+    def _place_pair(
         self, i1: np.ndarray, i2: np.ndarray, t1: np.ndarray, t2: np.ndarray
     ) -> np.ndarray:
-        """:meth:`_two_choice_place` in sub-batches of ~half the bucket
-        count: the less-full decision is made against fills at most
+        """The kernel's placement policy, made two-choice:
+        :meth:`_two_choice_place` in sub-batches of ~half the bucket
+        count, so the less-full decision is made against fills at most
         num_buckets/2 keys stale, which preserves the power-of-two-
         choices balance (with whole-batch staleness the first batch
         sees all-zero fills, every key picks i1, and the filter
@@ -157,55 +130,27 @@ class TwoChoiceFilter(CuckooFilter):
             )
         return success
 
-    def _insert_chunked(self, n: int, cand) -> np.ndarray:
-        """Same chunked driver as the cuckoo core but the residual
-        stage is the *other candidate via two-choice*
-        (:meth:`_place_refreshed`), never a kick chain — both-full
-        keys fail (bulk_insert misses counter)."""
-        self.inserts += n
-        success = np.zeros(n, dtype=bool)
-        for lo in range(0, n, self.CHUNK):
-            hi = min(lo + self.CHUNK, n)
-            success[lo:hi] = self._place_refreshed(*cand(lo, hi))
-        n_ok = int(success.sum())
-        self.occupied += n_ok
-        self.failures += n - n_ok
-        return success
-
-    # the BFS/DFS eviction entry points are unreachable here.
+    def _evict(
+        self, i1: np.ndarray, i2: np.ndarray, t1: np.ndarray, t2: np.ndarray
+    ) -> np.ndarray:
+        """No eviction: a tag whose candidates are both full fails
+        (bulk_insert's misses counter)."""
+        self.failures += len(t1)
+        return np.zeros(len(t1), dtype=bool)
 
     def merge_in_place(self, other: "CuckooFilter") -> "TwoChoiceFilter":
-        """Fold ``other`` into ``self`` by two-choice re-placement of
-        every stored tag at its pair ``{(i, tag), relocate(i, tag)}``,
-        with the fill refresh inserts use (:meth:`_place_refreshed`)
-        — no kick fallback (the type has no eviction); both-full tags
-        count as failures. At the sized load (≤0.85 usable, and callers
-        typically well below) merges place every tag regardless of
+        """The kernel's merge through the two-choice hooks: no kick
+        fallback, so both-full tags count as failures. At the sized
+        load (≤0.85 usable) merges place every tag regardless of
         partition ordering — associativity is asserted in tests.
-
-        A dropped tag would break the type's zero-false-negative
-        contract silently, so placement failure raises a
-        ``RuntimeWarning`` here in addition to moving ``failures`` —
-        distributed builds (``aggregate_sketch``) must end with
-        ``filter.failures == 0`` for membership to be trusted, as
+        A dropped tag would silently break the type's
+        zero-false-negative contract, so it also raises a
+        ``RuntimeWarning``: distributed builds (``aggregate_sketch``)
+        must end with ``filter.failures == 0``, as
         ``q_tcf_membership`` asserts."""
-        import warnings
-
-        same_geom = (
-            self.num_buckets == other.num_buckets
-            and self.config.bits_per_tag == other.config.bits_per_tag
-            and self.config.bucket_size == other.config.bucket_size
-            and self.config.bucket_policy == other.config.bucket_policy
-        )
-        if not same_geom:
-            raise ValueError("can only merge filters with identical geometry")
-        bi, slot = np.nonzero(other.buckets)
-        tags = other.buckets[bi, slot]
-        bi = bi.astype(np.int64)
-        alt, atags = self.relocate(bi, tags)
-        ok = self._place_refreshed(bi, alt, tags, atags)
-        n_ok = int(ok.sum())
-        dropped = len(tags) - n_ok
+        before = self.failures
+        super().merge_in_place(other)
+        dropped = self.failures - before - other.failures
         if dropped:
             warnings.warn(
                 f"TwoChoiceFilter.merge_in_place dropped {dropped} tag(s) "
@@ -215,9 +160,6 @@ class TwoChoiceFilter(CuckooFilter):
                 RuntimeWarning,
                 stacklevel=2,
             )
-        self.occupied += n_ok
-        self.inserts += other.inserts
-        self.failures += other.failures + dropped
         return self
 
     # ------------------------------------------------------------------

@@ -18,6 +18,8 @@ import struct
 
 import numpy as np
 
+from cuckoo_filter_spark.core._codec import unpack_arrays, unpack_header
+
 _HEADER = struct.Struct("<4sdQd")
 _MAGIC = b"TDGS"
 
@@ -117,15 +119,11 @@ class TDigest:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "TDigest":
-        magic, delta, n, _ = _HEADER.unpack_from(blob)
-        if magic != _MAGIC:
-            raise ValueError("bad tdigest blob")
+        delta, n, _ = unpack_header(_HEADER, _MAGIC, blob, "tdigest")
         t = cls(delta)
-        off = _HEADER.size
-        mm = np.frombuffer(blob, np.float64, count=2, offset=off)
+        mm, t.means, t.weights = unpack_arrays(
+            blob, _HEADER.size, "tdigest",
+            (np.float64, 2), (np.float64, n), (np.float64, n),
+        )
         t._min, t._max = float(mm[0]), float(mm[1])
-        off += 16
-        t.means = np.frombuffer(blob, np.float64, count=n, offset=off).copy()
-        off += 8 * n
-        t.weights = np.frombuffer(blob, np.float64, count=n, offset=off).copy()
         return t

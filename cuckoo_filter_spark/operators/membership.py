@@ -147,11 +147,14 @@ def _arrow_shard_builder(
     Arrow in/out — no pandas boxing on the hot path. With
     ``shard_shift`` the input is ONE column carrying
     ``(shard << shard_shift) | (i1 << f) | fp``; otherwise two
-    columns (__shard, __packed)."""
+    columns (__shard, __packed). A null raises ``ValueError``: a
+    schema column the scanned files lack reads as null."""
 
     def build_shards(batches):
         def parts():
             for rb in batches:
+                if any(c.null_count for c in rb.columns):
+                    raise ValueError(f"null in key columns {rb.schema.names}")
                 if shard_shift is not None:
                     v = rb.column(0).to_numpy(zero_copy_only=False)
                     local_mask = np.int64((1 << shard_shift) - 1)
@@ -542,13 +545,33 @@ class ShardedCuckooFilter:
     @staticmethod
     def read_bucketed_keys(spark: SparkSession, path: str) -> DataFrame:
         """Read a :meth:`write_bucketed_keys` table as exactly one scan
-        split per file (:func:`~cuckoo_filter_spark.sources.parquet_io.
-        read_split_per_file`). Each shard's keys live in one file, so
-        every shard lands whole in one :meth:`build_bucketed` task —
-        a correctness requirement, not a tuning choice."""
-        from cuckoo_filter_spark.sources.parquet_io import read_split_per_file
+        split per file, so every shard lands whole in one
+        :meth:`build_bucketed` task (a correctness requirement): the
+        session's ``maxPartitionBytes`` and ``openCostInBytes`` are
+        set to the largest file's length, so no file is cut and no two
+        share a split. The layout sidecar gives the schema, so no
+        schema-inference job runs; a table without one is inferred."""
+        from cuckoo_filter_spark.sources.parquet_io import (
+            fs_path, read_json_sidecar,
+        )
 
-        return read_split_per_file(spark, path)
+        fs, jpath = fs_path(spark, path)
+        files = fs.listFiles(jpath, True)
+        largest = 1
+        while files.hasNext():
+            largest = max(largest, files.next().getLen())
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(largest))
+        spark.conf.set("spark.sql.files.openCostInBytes", str(largest))
+        layout = read_json_sidecar(
+            spark, path, ShardedCuckooFilter.LAYOUT_SIDECAR
+        )
+        reader = spark.read
+        if layout is not None:
+            reader = reader.schema(
+                "__packed bigint" if layout["layout"] == "packed1"
+                else "__shard bigint, __packed bigint"
+            )
+        return reader.parquet(path)
 
     def persist(self) -> "ShardedCuckooFilter":
         self.shards = self.shards.persist()

@@ -1,8 +1,9 @@
 """Parquet scan helpers.
 
 ``read_matched_splits`` sizes the file-split confs so a scan yields
-roughly one split per core before reading; ``read_split_per_file``
-sizes them so every file is exactly one split. At deployment scale
+roughly one split per core before reading
+(``ShardedCuckooFilter.read_bucketed_keys`` sizes them so every file
+is exactly one split). At deployment scale
 (≥128 MB row groups) Spark's defaults already do this; the knob
 matters for small-file layouts — a freshly bucketed table, a
 low-cardinality corpus, local benchmarking — where the default
@@ -20,7 +21,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _fs_path(spark: SparkSession, path: str):
+def fs_path(spark: SparkSession, path: str):
     """(Hadoop FileSystem, Hadoop Path) of ``path`` — any scheme."""
     sc = spark.sparkContext
     jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
@@ -33,7 +34,7 @@ def write_json_sidecar(
     """Write a small JSON metadata file inside a table directory via
     the Hadoop FileSystem API — works on any scheme (file/hdfs/s3a),
     unlike driver-local ``open()``."""
-    fs, jpath = _fs_path(spark, f"{table_path}/{name}")
+    fs, jpath = fs_path(spark, f"{table_path}/{name}")
     out = fs.create(jpath, True)
     try:
         out.write(bytearray(json.dumps(payload, indent=1).encode("utf-8")))
@@ -46,7 +47,7 @@ def read_json_sidecar(
 ) -> Optional[dict]:
     """Read a JSON sidecar written by :func:`write_json_sidecar`;
     None if absent."""
-    fs, jpath = _fs_path(spark, f"{table_path}/{name}")
+    fs, jpath = fs_path(spark, f"{table_path}/{name}")
     if not fs.exists(jpath):
         return None
     stream = fs.open(jpath)
@@ -78,7 +79,7 @@ def read_matched_splits(spark: SparkSession, path: str) -> DataFrame:
     extra splits are empty tasks.
     """
     target = spark.sparkContext.defaultParallelism
-    fs, jpath = _fs_path(spark, path)
+    fs, jpath = fs_path(spark, path)
     total = fs.getContentSummary(jpath).getLength()
     split = min(
         128 << 20, max(1 << 20, int(total / max(target, 1)))
@@ -86,22 +87,4 @@ def read_matched_splits(spark: SparkSession, path: str) -> DataFrame:
     open_cost = (4 << 20) if split >= (128 << 20) else min(split // 4, 1 << 20)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
-    return spark.read.parquet(path)
-
-
-def read_split_per_file(spark: SparkSession, path: str) -> DataFrame:
-    """Read parquet with exactly one split per file, whatever the file
-    and row-group sizes: ``spark.sql.files.maxPartitionBytes`` and
-    ``openCostInBytes`` are both set to the largest file's length, so
-    no file is cut (a file splits only past ``maxPartitionBytes``) and
-    no two files share a split (each file adds the open cost to its
-    split's size). Like :func:`read_matched_splits`, the confs are
-    session-level and set before the reader is returned."""
-    fs, jpath = _fs_path(spark, path)
-    files = fs.listFiles(jpath, True)
-    largest = 1
-    while files.hasNext():
-        largest = max(largest, files.next().getLen())
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(largest))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(largest))
     return spark.read.parquet(path)

@@ -4,6 +4,8 @@ statistical FPR gate from src/main.cu:113-126. No Spark here — the
 per-partition kernel must be correct standalone first (SURVEY §7.1).
 """
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -302,7 +304,7 @@ def test_blob_sparse_roundtrip_and_size():
     keys = rand_keys(4000)
     f.insert_many(keys)
     blob = f.to_bytes()
-    assert blob[_HEADER_SIZE] in (1, 2)  # sparse layout chosen
+    assert blob[_HEADER_SIZE] == 1  # sparse layout chosen
     dense_bytes = f.buckets.nbytes
     assert len(blob) * 5 <= dense_bytes
     g = CuckooFilter.from_bytes(blob)
@@ -376,6 +378,34 @@ def test_blob_corruption_rejected(defect):
     tags."""
     with pytest.raises(ValueError, match="cuckoo blob"):
         CuckooFilter.from_bytes(_corrupt(defect))
+
+
+def test_sparse64_layout_rejected():
+    """No filter holds more than 2^32 buckets, so nothing writes the
+    uint64-index sparse layout (byte 2); a blob that claims it is
+    refused like any unknown layout."""
+    f = CuckooFilter(200_000, CuckooConfig(16, 4))
+    f.insert_many(rand_keys(4000))
+    head, bi, tags = _sparse_parts(f.to_bytes())
+    head = head[:_HEADER_SIZE] + bytes([2]) + head[_HEADER_SIZE + 1:]
+    blob = head + bi.astype(np.uint64).tobytes() + tags
+    with pytest.raises(ValueError, match="unknown layout 2"):
+        CuckooFilter.from_bytes(blob)
+
+
+def test_geometry_bounded_by_32_bit_bucket_hash():
+    """i1 comes from the low 32 hash bits, so a filter past 2^32
+    buckets is refused before its table is allocated — from a
+    constructor and from a blob header alike."""
+    with pytest.raises(ValueError, match="2\\^32"):
+        CuckooFilter((1 << 32) * 4 + 8, CuckooConfig(bucket_policy="addsub"))
+    f = CuckooFilter(1024, CuckooConfig())
+    f.insert_many(rand_keys(100))
+    blob = bytearray(f.to_bytes())
+    struct.pack_into("<Q", blob, 16, (1 << 32) + 2)  # num_buckets field
+    assert CuckooFilter.blob_num_buckets(bytes(blob)) == (1 << 32) + 2
+    with pytest.raises(ValueError, match="2\\^32"):
+        CuckooFilter.from_bytes(bytes(blob))
 
 
 def test_count_many_multiset(config):

@@ -359,6 +359,71 @@ def test_lanes_agree_per_bucket_policy(
     sharded.shards.unpersist()
 
 
+@pytest.mark.parametrize("policy", ["xor", "offset"])
+def test_two_column_layout_matches_packed(
+    spark, repo_df, tmp_path, split_confs, monkeypatch, policy,
+):
+    """The two-column ``(__shard, __packed)`` layout, chosen only when
+    shard+bucket+tag exceed 62 bits (f=32 past 2^30 buckets), builds
+    the same shard blobs and answers the same as the one-long layout:
+    shuffled and bucketed builds, routed and broadcast contains, and
+    delete. Forced at test size by making the shift unavailable."""
+    from cuckoo_filter_spark.operators import membership
+
+    cfg = CuckooConfig(bits_per_tag=16, bucket_size=4, bucket_policy=policy)
+    keys = repo_df.select("key")
+    probes = keys.unionByName(
+        synthetic_repo_files(spark, 2_000, num_partitions=4, seed=99)
+        .select("key")
+    )
+    part = keys.filter(F.pmod(F.xxhash64("key"), 4) == 0)
+
+    def blobs(filt):
+        return sorted(
+            (r.shard_id, bytes(r.blob))
+            for r in filt.shards.select("shard_id", "blob").collect()
+        )
+
+    def answers(df, col):
+        return sorted(tuple(r) for r in df.select("key", col).collect())
+
+    def run(tag):
+        built = ShardedCuckooFilter.build(repo_df, "key", CAPACITY, 8, cfg)
+        path = str(tmp_path / tag)
+        ShardedCuckooFilter.write_bucketed_keys(
+            repo_df, "key", CAPACITY, 8, path, cfg
+        )
+        table = ShardedCuckooFilter.read_bucketed_keys(spark, path)
+        bucketed = ShardedCuckooFilter.build_bucketed(
+            table, CAPACITY, 8, cfg, path=path
+        )
+        _, after = built.delete(part, per_key=False)
+        out = {
+            "occupied": built.metrics().collect()[0]["occupied"],
+            "built": blobs(built),
+            "bucketed": blobs(bucketed),
+            "routed": answers(bucketed.contains(probes), "member"),
+            "broadcast": answers(
+                built.contains_broadcast(probes, "key"), "member"
+            ),
+            "deleted": after.delete_success_count(),
+            "after": blobs(after),
+        }
+        after.release()
+        built.release()
+        return table.columns, out
+
+    packed_cols, packed = run("packed")
+    monkeypatch.setattr(membership, "_packed_shard_shift", lambda *a: None)
+    two_cols, two = run("two_col")
+    assert packed_cols == ["__packed"]
+    assert two_cols == ["__shard", "__packed"]
+    assert packed["occupied"] == N_ROWS
+    assert packed["built"] == packed["bucketed"]
+    assert packed["deleted"] == part.count()
+    assert two == packed
+
+
 @pytest.mark.parametrize("policy", ["xor", "addsub", "offset"])
 def test_sharded_build_and_delete_skip_null_keys(spark, policy):
     """A null key is not a key: the sharded build does not insert it

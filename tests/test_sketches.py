@@ -11,6 +11,7 @@ from cuckoo_filter_spark.core.bloom import BloomFilter
 from cuckoo_filter_spark.core.countmin import CountMinSketch
 from cuckoo_filter_spark.core.hll import HyperLogLog
 from cuckoo_filter_spark.core.kll import KLLSketch
+from cuckoo_filter_spark.core.misra_gries import MisraGries
 from cuckoo_filter_spark.core.tdigest import TDigest
 
 RNG = np.random.default_rng(42)
@@ -19,6 +20,68 @@ RNG = np.random.default_rng(42)
 def split_parts(arr, n_parts, seed=0):
     idx = np.random.default_rng(seed).permutation(len(arr))
     return np.array_split(arr[idx], n_parts)
+
+
+# ---------------------------------------------------------- blob codec
+
+
+def _filled(name):
+    keys = np.random.default_rng(3).integers(1, 2**40, 5000, dtype=np.uint64)
+    values = keys.astype(np.float64)
+    if name == "bloom":
+        sk = BloomFilter(5000)
+    elif name == "cms":
+        sk = CountMinSketch(eps=0.01)
+    elif name == "hll":
+        sk = HyperLogLog(p=14)
+    elif name == "kll":
+        sk = KLLSketch(k=64)
+        keys = values
+    elif name == "mg":
+        sk = MisraGries(64)
+    else:
+        sk = TDigest()
+        keys = values
+    sk.add_many(keys)
+    return sk
+
+
+class _Runs:
+    """Pickles to a call of ``os.mkdir(path)``: decoding it with
+    ``pickle.loads`` would create the directory."""
+
+    def __init__(self, path):
+        self.path = path
+
+    def __reduce__(self):
+        import os
+
+        return os.mkdir, (str(self.path),)
+
+
+@pytest.mark.parametrize("name", ["bloom", "cms", "hll", "kll", "mg", "tdigest"])
+def test_sketch_decoder_rejects_bad_blob(name, tmp_path):
+    """Sketch blobs come back from tables, checkpoints and stream
+    state: a truncated blob, a wrong magic and (for KLL, whose blobs
+    were pickles) a pickle payload each raise ValueError, and no
+    decoder runs a pickled callable."""
+    import pickle
+
+    sk = _filled(name)
+    cls = type(sk)
+    blob = sk.to_bytes()
+    rt = cls.from_bytes(blob)
+    assert rt.to_bytes() == blob
+    bad = [blob[: len(blob) // 2], blob[:-8], blob[:3], b"XXXX" + blob[4:]]
+    if name == "kll":
+        bad.append(pickle.dumps(_Runs(tmp_path / "ran"), protocol=4))
+        bad.append(pickle.dumps(
+            {"k": sk.k, "n": sk.n, "ctr": 0, "levels": sk.levels}, protocol=4
+        ))
+    for b in bad:
+        with pytest.raises(ValueError):
+            cls.from_bytes(b)
+    assert not (tmp_path / "ran").exists()
 
 
 # ----------------------------------------------------------------- HLL

@@ -140,6 +140,38 @@ def test_read_bucketed_keys_split_parallelism(
     assert out.filter(~F.col("member")).count() == 0
 
 
+def test_read_bucketed_keys_runs_no_job(spark, keys_df, tmp_path, split_confs):
+    """The layout sidecar gives the table's schema, so reading a
+    bucketed table plans no schema-inference job (a one-task footer
+    read that costs more driver CPU than the read itself)."""
+    df, _ = keys_df
+    path = str(tmp_path / "bucketed_no_job")
+    ShardedCuckooFilter.write_bucketed_keys(df, "key", 6000, 8, path, CFG)
+    sc = spark.sparkContext
+    sc.setJobGroup("read_bucketed_keys_no_job", "schema from the sidecar")
+    try:
+        table = ShardedCuckooFilter.read_bucketed_keys(spark, path)
+        jobs = sc.statusTracker().getJobIdsForGroup("read_bucketed_keys_no_job")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert table.columns == ["__packed"]
+    assert table.count() == len(keys_df[1])
+
+
+def test_shard_builder_rejects_null_key_column():
+    """A schema column the scanned files lack reads as null; the
+    placement worker refuses it instead of placing garbage tags."""
+    import pyarrow as pa
+
+    from cuckoo_filter_spark.operators.membership import _arrow_shard_builder
+
+    rb = pa.record_batch({"__packed": pa.array([5, None], pa.int64())})
+    with pytest.raises(ValueError, match="null"):
+        list(_arrow_shard_builder(1000, CFG, 20)([rb]))
+
+
 def test_bucketed_build_keeps_multi_row_group_shards_whole(
     spark, tmp_path, split_confs
 ):
